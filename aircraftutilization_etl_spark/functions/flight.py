@@ -3,8 +3,9 @@
 The reference implements these as per-row Python ``apply(axis=1)`` kernels
 (src/plugins/scripts/complete_flights/transformers.py:37-81,136-143) —
 an interpreted per-row loop that is its dominant cost at scale. Here each
-kernel is a single ``when()`` chain: whole-stage-codegen'd, vectorized,
-zero Python on the hot path (SURVEY.md §2.7, §4.3).
+kernel is a single ``when()`` chain over the source-schema columns:
+whole-stage-codegen'd, vectorized, zero Python on the hot path
+(SURVEY.md §2.7, §4.3).
 
 Null semantics are matched deliberately (SURVEY.md §4.4.2): a SQL-null
 comparison yields null, which ``when`` treats as false — the same outcome
@@ -18,26 +19,16 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def is_takeoff_expr(
-    is_first_contact: Column | str = "is_first_contact",
-    vertical_rate: Column | str = "vertical_rate",
-) -> Column:
+def is_takeoff_expr() -> Column:
     """Takeoff predicate.
 
     Reference ``_is_takeoff`` (complete_flights/transformers.py:37-42):
     first contact this cycle AND climbing.
     """
-    ifc = F.col(is_first_contact) if isinstance(is_first_contact, str) else is_first_contact
-    vr = F.col(vertical_rate) if isinstance(vertical_rate, str) else vertical_rate
-    return (ifc == F.lit(True)) & (vr > 0)
+    return (F.col("is_first_contact") == F.lit(True)) & (F.col("vertical_rate") > 0)
 
 
-def is_landing_expr(
-    last_contact: Column | str = "last_contact",
-    vertical_rate: Column | str = "vertical_rate",
-    velocity: Column | str = "velocity",
-    flight_trajectory: Column | str = "flight_trajectory",
-) -> Column:
+def is_landing_expr() -> Column:
     """Landing predicate.
 
     Reference ``_is_landing`` (complete_flights/transformers.py:44-63):
@@ -45,28 +36,20 @@ def is_landing_expr(
     and either (descending AND slow) or stopped/unknown velocity.
     ``pd.isna`` checks become ``isNull()``.
     """
-    lc = F.col(last_contact) if isinstance(last_contact, str) else last_contact
-    vr = F.col(vertical_rate) if isinstance(vertical_rate, str) else vertical_rate
-    vel = F.col(velocity) if isinstance(velocity, str) else velocity
-    traj = (
-        F.col(flight_trajectory)
-        if isinstance(flight_trajectory, str)
-        else flight_trajectory
-    )
+    vr = F.col("vertical_rate")
+    vel = F.col("velocity")
     return (
-        (lc != 0)
+        (F.col("last_contact") != 0)
         & ((vr == 0) | vr.isNull())
-        & (((traj == "descend") & (vel < 10)) | (vel == 0) | vel.isNull())
+        & (
+            ((F.col("flight_trajectory") == "descend") & (vel < 10))
+            | (vel == 0)
+            | vel.isNull()
+        )
     )
 
 
-def flight_status_expr(
-    is_first_contact: Column | str = "is_first_contact",
-    vertical_rate: Column | str = "vertical_rate",
-    last_contact: Column | str = "last_contact",
-    velocity: Column | str = "velocity",
-    flight_trajectory: Column | str = "flight_trajectory",
-) -> Column:
+def flight_status_expr() -> Column:
     """U1 — status classification in {takeoff, landing, other}.
 
     Reference ``_determine_flight_status``
@@ -74,19 +57,13 @@ def flight_status_expr(
     everything else is 'other'.
     """
     return (
-        F.when(is_takeoff_expr(is_first_contact, vertical_rate), F.lit("takeoff"))
-        .when(
-            is_landing_expr(last_contact, vertical_rate, velocity, flight_trajectory),
-            F.lit("landing"),
-        )
+        F.when(is_takeoff_expr(), F.lit("takeoff"))
+        .when(is_landing_expr(), F.lit("landing"))
         .otherwise(F.lit("other"))
     )
 
 
-def flight_trajectory_expr(
-    vertical_rate: Column | str = "vertical_rate",
-    flight_trajectory: Column | str = "flight_trajectory",
-) -> Column:
+def flight_trajectory_expr() -> Column:
     """U2 — trajectory in {climb, descend, other}; descend is sticky.
 
     Reference ``_determine_flight_trajectory``
@@ -94,28 +71,20 @@ def flight_trajectory_expr(
     both comparisons and falls to 'other' unless the prior trajectory was
     'descend' — identical to the pandas NaN behaviour.
     """
-    vr = F.col(vertical_rate) if isinstance(vertical_rate, str) else vertical_rate
-    traj = (
-        F.col(flight_trajectory)
-        if isinstance(flight_trajectory, str)
-        else flight_trajectory
-    )
+    vr = F.col("vertical_rate")
     return (
         F.when(vr > 0, F.lit("climb"))
-        .when((vr < 0) | (traj == "descend"), F.lit("descend"))
+        .when((vr < 0) | (F.col("flight_trajectory") == "descend"), F.lit("descend"))
         .otherwise(F.lit("other"))
     )
 
 
-def flight_duration_minutes_expr(
-    last_contact: Column | str = "last_contact",
-    takeoff_at: Column | str = "takeoff_at",
-) -> Column:
+def flight_duration_minutes_expr() -> Column:
     """U3 — flight duration: ceil((last_contact − takeoff_at) / 60) minutes.
 
     Reference ``get_flight_duration_minutes``
     (complete_flights/transformers.py:136-143).
     """
-    lc = F.col(last_contact) if isinstance(last_contact, str) else last_contact
-    to = F.col(takeoff_at) if isinstance(takeoff_at, str) else takeoff_at
-    return F.ceil((lc - to) / F.lit(60.0)).cast("int")
+    return F.ceil(
+        (F.col("last_contact") - F.col("takeoff_at")) / F.lit(60.0)
+    ).cast("int")

@@ -34,6 +34,10 @@ from .sources.sinks import append_facts
 
 logger = logging.getLogger(__name__)
 
+# retained state generations: enough to debug/time-travel recent cycles
+# while bounding storage under the 5-minute cadence
+KEEP_GENERATIONS = 5
+
 
 class FlightPipeline:
     """One engine instance = one state root + one facts path."""
@@ -44,15 +48,11 @@ class FlightPipeline:
         state_root: str,
         facts_path: str,
         metadata_path: str,
-        keep_generations: int = 5,
     ) -> None:
         self.spark = spark
         self.state = StateStore(spark, state_root, SOURCE_SCHEMA)
         self.facts_path = facts_path
         self.metadata_path = metadata_path
-        # retained state generations: enough to debug/time-travel recent
-        # cycles while bounding storage under the 5-minute cadence
-        self.keep_generations = keep_generations
         # per-cycle row counts from the last run_complete_flights, filled
         # by Observation metrics riding the write actions (no count jobs)
         self.last_metrics: dict[str, int] = {}
@@ -73,7 +73,7 @@ class FlightPipeline:
         prior = self.state.read()
         merged = merge_states(states, prior, now_epoch=now_epoch)
         version = self.state.commit(merged)
-        self.state.vacuum(keep=self.keep_generations)
+        self.state.vacuum(keep=KEEP_GENERATIONS)
         return version
 
     def run_complete_flights(self) -> bool:
@@ -119,7 +119,7 @@ class FlightPipeline:
                 batch_id=source_version or "genesis",
             )
             self.state.commit(active)
-            self.state.vacuum(keep=self.keep_generations)
+            self.state.vacuum(keep=KEEP_GENERATIONS)
             self.last_metrics = {
                 "n_complete": obs_complete.get["n"],
                 "n_active": obs_active.get["n"],

@@ -16,7 +16,6 @@ reference S8 is boto3 session wiring we deliberately do not port).
 from __future__ import annotations
 
 import json
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,6 +23,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..schemas import empty_df, require_columns
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(fs, jvm_path)``: the Hadoop FileSystem serving ``path`` and the
+    JVM ``Path`` for it — file:// and s3a:// alike. The one entry point
+    engine code uses into the Hadoop FS API."""
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
+    conf = spark._jsc.hadoopConfiguration()  # noqa: SLF001
+    return jvm_path.getFileSystem(conf), jvm_path
 
 
 def read_parquet_or_empty(
@@ -35,8 +43,7 @@ def read_parquet_or_empty(
     empty case is shape-identical (reference s3.py:98-101,
     opensky/transformers.py:62-63).
     """
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    fs, jvm_path = hadoop_fs(spark, path)
     if not fs.exists(jvm_path):
         return empty_df(spark, schema)
     return spark.read.schema(schema).parquet(path)
@@ -67,8 +74,7 @@ def read_parquet_evolved(
     pruning and predicate pushdown still reach the scan because the
     projection is a plain select over the merged relation.
     """
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    fs, jvm_path = hadoop_fs(spark, path)
     if not fs.exists(jvm_path):
         return empty_df(spark, target)
     merged = spark.read.option("mergeSchema", "true").parquet(path)
@@ -107,14 +113,8 @@ class StateStore:
         self.root = root.rstrip("/")
         self.schema = schema
 
-    # -- hadoop fs helpers (work for file:// and s3a:// alike) ----------
-    def _fs_and_path(self, path: str):
-        jvm_path = self.spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
-        fs = jvm_path.getFileSystem(self.spark._jsc.hadoopConfiguration())  # noqa: SLF001
-        return fs, jvm_path
-
     def _read_manifest(self) -> str | None:
-        fs, mpath = self._fs_and_path(f"{self.root}/{self.MANIFEST}")
+        fs, mpath = hadoop_fs(self.spark, f"{self.root}/{self.MANIFEST}")
         if not fs.exists(mpath):
             return None
         stream = fs.open(mpath)
@@ -127,10 +127,10 @@ class StateStore:
         return json.loads(data.decode("utf-8"))["version"]
 
     def _write_manifest(self, version: str) -> None:
-        fs, mpath = self._fs_and_path(f"{self.root}/{self.MANIFEST}")
+        fs, mpath = hadoop_fs(self.spark, f"{self.root}/{self.MANIFEST}")
         tmp = f"{self.root}/{self.MANIFEST}.tmp-{uuid.uuid4().hex}"
-        fs_tmp, tpath = self._fs_and_path(tmp)
-        out = fs_tmp.create(tpath, True)
+        _, tpath = hadoop_fs(self.spark, tmp)
+        out = fs.create(tpath, True)
         try:
             out.write(json.dumps({"version": version}).encode("utf-8"))
         finally:
@@ -153,6 +153,22 @@ class StateStore:
             fs.delete(mpath, False)
             fs.rename(tpath, mpath)
 
+    def _generations(self) -> list[tuple[int, str]]:
+        """``(mtime, name)`` of every ``v_*`` generation under the root."""
+        fs, rpath = hadoop_fs(self.spark, self.root)
+        if not fs.exists(rpath):
+            return []
+        out = []
+        for status in fs.listStatus(rpath):
+            name = status.getPath().getName()
+            if name.startswith("v_"):
+                out.append((status.getModificationTime(), name))
+        return out
+
+    def _read_generation(self, version: str) -> DataFrame:
+        df = self.spark.read.schema(self.schema).parquet(f"{self.root}/{version}")
+        return require_columns(df, [f.name for f in self.schema.fields])
+
     # -- public API -----------------------------------------------------
     def read(self) -> DataFrame:
         """Current state generation, or a typed empty frame if none.
@@ -167,8 +183,7 @@ class StateStore:
         version = self.current_version()
         if version is None:
             return empty_df(self.spark, self.schema)
-        df = self.spark.read.schema(self.schema).parquet(f"{self.root}/{version}")
-        return require_columns(df, [f.name for f in self.schema.fields])
+        return self._read_generation(version)
 
     def read_version(self, version: str) -> DataFrame:
         """Time travel: read a specific retained state generation.
@@ -181,15 +196,13 @@ class StateStore:
         generations (operators/warehouse.snapshot_diff), or re-derive a
         sink batch id.
         """
-        if version not in self.versions():
+        retained = self.versions()
+        if version not in retained:
             raise ValueError(
                 f"unknown or vacuumed state generation {version!r}; "
-                f"retained: {self.versions()}"
+                f"retained: {retained}"
             )
-        df = self.spark.read.schema(self.schema).parquet(
-            f"{self.root}/{version}"
-        )
-        return require_columns(df, [f.name for f in self.schema.fields])
+        return self._read_generation(version)
 
     def current_version(self) -> str | None:
         """Resolved current generation (manifest, else crash-recovery
@@ -197,21 +210,8 @@ class StateStore:
         a replay against the same generation re-derives the same id."""
         version = self._read_manifest()
         if version is None:
-            version = self._newest_generation()
+            version = max(self._generations(), default=(0, None))[1]
         return version
-
-    def _newest_generation(self) -> str | None:
-        fs, rpath = self._fs_and_path(self.root)
-        if not fs.exists(rpath):
-            return None
-        newest: tuple[int, str] | None = None
-        for status in fs.listStatus(rpath):
-            name = status.getPath().getName()
-            if name.startswith("v_"):
-                key = (status.getModificationTime(), name)
-                if newest is None or key > newest:
-                    newest = key
-        return newest[1] if newest else None
 
     def commit(self, df: DataFrame) -> str:
         """Write ``df`` as the next generation and flip the manifest."""
@@ -221,33 +221,19 @@ class StateStore:
         return version
 
     def versions(self) -> list[str]:
-        fs, rpath = self._fs_and_path(self.root)
-        if not fs.exists(rpath):
-            return []
-        out = []
-        for status in fs.listStatus(rpath):
-            name = status.getPath().getName()
-            if name.startswith("v_"):
-                out.append(name)
-        return sorted(out)
+        return sorted(name for _, name in self._generations())
 
     def vacuum(self, keep: int = 2) -> None:
-        """Drop all but the newest ``keep`` generations (by mtime)."""
-        fs, _ = self._fs_and_path(self.root)
-        current = self._read_manifest()
-        stats = []
-        for status in fs.listStatus(self._fs_and_path(self.root)[1]):
-            name = status.getPath().getName()
-            if name.startswith("v_") and name != current:
-                stats.append((status.getModificationTime(), name))
-        stats.sort(reverse=True)
-        for _, name in stats[max(keep - 1, 0):]:
-            fs.delete(self._fs_and_path(f"{self.root}/{name}")[1], True)
-
-
-def local_path(path: str) -> str:
-    """Normalize a filesystem path for local testing."""
-    return path if "://" in path else f"file://{os.path.abspath(path)}"
+        """Drop all but the newest ``keep`` generations (by mtime). The
+        current generation always survives — including the
+        crash-recovered one a root without a manifest resolves to."""
+        current = self.current_version()
+        stale = sorted(
+            (g for g in self._generations() if g[1] != current), reverse=True
+        )
+        for _, name in stale[max(keep - 1, 0):]:
+            fs, vpath = hadoop_fs(self.spark, f"{self.root}/{name}")
+            fs.delete(vpath, True)
 
 
 def compact_parquet(
@@ -275,8 +261,11 @@ def compact_parquet(
     orchestrator's housekeeping slot while no reader is scheduled —
     the same slot as ``retention_purge``.
     """
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    fs, jvm_path = hadoop_fs(spark, path)
+    tmp = f"{path.rstrip('/')}__compacting"
+    old = f"{path.rstrip('/')}__precompact"
+    _, tmp_path = hadoop_fs(spark, tmp)
+    _, old_path = hadoop_fs(spark, old)
     # crash recovery: a prior run may have died mid-swap. Three cases:
     #  - __precompact exists and path is missing → died between the two
     #    renames: restore the original.
@@ -284,27 +273,15 @@ def compact_parquet(
     #    before cleanup: the published layout is live, drop the stale
     #    staging copy (it would make our own stage-aside rename fail).
     #  - __compacting leftover → incomplete write, always safe to drop.
-    pre_path = spark._jvm.org.apache.hadoop.fs.Path(  # noqa: SLF001
-        f"{path.rstrip('/')}__precompact"
-    )
-    if fs.exists(pre_path):
+    if fs.exists(old_path):
         if not fs.exists(jvm_path):
-            if not fs.rename(pre_path, jvm_path):
-                raise IOError(
-                    f"compaction: could not restore {pre_path} to {path}"
-                )
+            if not fs.rename(old_path, jvm_path):
+                raise IOError(f"compaction: could not restore {old} to {path}")
         else:
-            fs.delete(pre_path, True)
-    stale_tmp = spark._jvm.org.apache.hadoop.fs.Path(  # noqa: SLF001
-        f"{path.rstrip('/')}__compacting"
-    )
-    if fs.exists(stale_tmp):
-        fs.delete(stale_tmp, True)
-    statuses = [
-        s
-        for s in fs.listStatus(jvm_path)
-        if s.isFile() and s.getPath().getName().endswith(".parquet")
-    ]
+            fs.delete(old_path, True)
+    if fs.exists(tmp_path):
+        fs.delete(tmp_path, True)
+    statuses = _parquet_files(fs, jvm_path)
     files_before = len(statuses)
     total_bytes = sum(s.getLen() for s in statuses)
     n_out = max(1, -(-total_bytes // max(1, target_file_bytes)))
@@ -314,12 +291,8 @@ def compact_parquet(
             "files_after": files_before,
             "bytes": total_bytes,
         }
-    tmp = f"{path.rstrip('/')}__compacting"
-    old = f"{path.rstrip('/')}__precompact"
     df = spark.read.parquet(path)
     df.repartition(int(n_out)).write.mode("overwrite").parquet(tmp)
-    tmp_path = spark._jvm.org.apache.hadoop.fs.Path(tmp)  # noqa: SLF001
-    old_path = spark._jvm.org.apache.hadoop.fs.Path(old)  # noqa: SLF001
     if not fs.rename(jvm_path, old_path):
         raise IOError(f"compaction: could not stage {path} aside")
     if not fs.rename(tmp_path, jvm_path):
@@ -327,13 +300,16 @@ def compact_parquet(
         fs.rename(old_path, jvm_path)
         raise IOError(f"compaction: could not publish {tmp}")
     fs.delete(old_path, True)
-    after = [
+    return {
+        "files_before": files_before,
+        "files_after": len(_parquet_files(fs, jvm_path)),
+        "bytes": total_bytes,
+    }
+
+
+def _parquet_files(fs, jvm_path) -> list:
+    return [
         s
         for s in fs.listStatus(jvm_path)
         if s.isFile() and s.getPath().getName().endswith(".parquet")
     ]
-    return {
-        "files_before": files_before,
-        "files_after": len(after),
-        "bytes": total_bytes,
-    }

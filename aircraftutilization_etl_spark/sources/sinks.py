@@ -23,29 +23,31 @@ import logging
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .parquet_io import hadoop_fs
+
 logger = logging.getLogger(__name__)
 
 RETENTION_DAYS = 365  # reference db.py:43,52 (expireAfterSeconds = 365 d)
 PARTITION_COLUMN = "landed_date"
+TIME_FIELD = "landed_at"  # sink key with icao24: the reference timeField
 
 
 def append_facts(
-    df: DataFrame,
-    path: str,
-    time_field: str = "landed_at",
-    batch_id: str | None = None,
-    dedupe: bool = True,
+    df: DataFrame, path: str, batch_id: str | None = None
 ) -> bool:
     """Exactly-once append of completed-flight facts, partitioned by
     landing date.
 
     Returns False (and logs) on an empty batch instead of writing —
-    reference db.py:63-66. The isEmpty() check is a cheap limit-1 job.
+    reference db.py:63-66. Emptiness falls out of the touched landing
+    dates the replay guard needs anyway: one global aggregate, no
+    separate isEmpty() job. Being a full pass, it also completes any
+    Observation riding on ``df`` with the batch's true row count.
 
     Exactly-once: a crash between the fact append and the state-manifest
     flip re-runs the batch against the old state generation, re-deriving
     the same completed flights. Before writing, the batch is anti-joined
-    on the sink key (icao24, ``time_field``) against the rows already in
+    on the sink key (icao24, ``landed_at``) against the rows already in
     its own target date partitions, so replays append nothing. The guard
     scan is partition-pruned to the touched dates (a landing batch
     touches ~today) and column-pruned to the two key columns — O(recent
@@ -63,33 +65,30 @@ def append_facts(
     scan together; the sink assumes the reference's single-writer
     orchestration cadence (orchestration.py serializes the DAG).
     """
-    if df.isEmpty():
+    out = df.withColumn(PARTITION_COLUMN, F.to_date(F.col(TIME_FIELD)))
+    # a global aggregate, not distinct(): on empty input AQE would prune
+    # distinct's shuffle and drop an Observation riding on ``df``
+    n_rows, touched = out.agg(
+        F.count(F.lit(1)), F.collect_set(PARTITION_COLUMN)
+    ).first()
+    if n_rows == 0:
         logger.warning("Empty complete flights dataframe")
         return False
-    out = df.withColumn(PARTITION_COLUMN, F.to_date(F.col(time_field)))
     if batch_id is not None:
         out = out.withColumn("batch_id", F.lit(batch_id))
-    if dedupe and _path_exists(df.sparkSession, path):
-        touched = [
-            r[0] for r in out.select(PARTITION_COLUMN).distinct().collect()
-        ]
+    fs, jvm_path = hadoop_fs(df.sparkSession, path)
+    if fs.exists(jvm_path):
         existing = (
             df.sparkSession.read.parquet(path)
             .filter(F.col(PARTITION_COLUMN).isin(touched))
-            .select("icao24", time_field)
+            .select("icao24", TIME_FIELD)
         )
-        out = out.join(existing, on=["icao24", time_field], how="left_anti")
+        out = out.join(existing, on=["icao24", TIME_FIELD], how="left_anti")
         if out.isEmpty():
             logger.warning("All facts already present (replayed batch)")
             return False
     out.write.mode("append").partitionBy(PARTITION_COLUMN).parquet(path)
     return True
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-    return fs.exists(jvm_path)
 
 
 def retention_purge(
@@ -105,8 +104,7 @@ def retention_purge(
     """
     now = now or dt.datetime.now(dt.timezone.utc)
     cutoff = (now - dt.timedelta(days=retention_days)).date()
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    fs, jvm_path = hadoop_fs(spark, path)
     if not fs.exists(jvm_path):
         return []
     dropped = []

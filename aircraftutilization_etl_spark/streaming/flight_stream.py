@@ -460,94 +460,3 @@ def run_flight_stream(
         writer = writer.trigger(processingTime=processing_interval)
     return writer.start()
 
-
-# --- transformWithState variant -----------------------------------------
-#
-# Spark 4's arbitrary-stateful API (SPARK-46815): typed state variables +
-# explicit timers on a StatefulProcessor, replacing the single opaque
-# state row of applyInPandasWithState. Same session semantics, same
-# shared fold_events kernel — this variant exists because it is the API
-# long-running production state should target: it requires the RocksDB
-# state store provider (incremental checkpoints, state not bounded by
-# executor heap) and supports independent timers per key.
-
-from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
-    ExpiredTimerInfo,
-    StatefulProcessor,
-    StatefulProcessorHandle,
-    TimerValues,
-)
-
-
-class FlightSessionProcessor(StatefulProcessor):
-    """Per-aircraft session kernel on the transformWithState API.
-
-    State: one ValueState row (SESSION_STATE_SCHEMA). TTL: a processing
-    -time timer re-armed on every update; expiry = F1 silent eviction,
-    mirroring ``_update_session``'s hasTimedOut branch.
-    """
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._handle = handle
-        self._session = handle.getValueState(
-            "session", SESSION_STATE_SCHEMA
-        )
-
-    def handleInputRows(
-        self, key, rows, timerValues: TimerValues
-    ) -> Iterator[pd.DataFrame]:
-        session = (
-            tuple(self._session.get()) if self._session.exists() else None
-        )
-        events: list[tuple[int, float, float]] = []
-        for pdf in rows:
-            for r in pdf.itertuples(index=False):
-                events.append(
-                    (r.last_contact, r.velocity, r.vertical_rate)
-                )
-        events.sort(key=lambda t: t[0])  # replay in event order
-        emissions, session = fold_events(events, session)
-
-        # re-arm the TTL timer (one live timer per key)
-        for ts in self._handle.listTimers():
-            self._handle.deleteTimer(ts)
-        if session is None:
-            self._session.clear()
-        else:
-            self._session.update(session)
-            self._handle.registerTimer(
-                timerValues.getCurrentProcessingTimeInMs() + TTL_MS
-            )
-        if emissions:
-            yield _emissions_pdf(key[0], emissions)
-
-    def handleExpiredTimer(
-        self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-    ) -> Iterator[pd.DataFrame]:
-        # F1 — silent eviction, no emission
-        self._session.clear()
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
-
-def completed_flights_stream_tws(states_stream: DataFrame) -> DataFrame:
-    """:func:`completed_flights_stream` on transformWithStateInPandas.
-
-    Requires the RocksDB state store provider
-    (``session.build_session(streaming=True)`` configures it) — the
-    right trade at scale: per-key state and timers live off-heap with
-    incremental delta checkpoints instead of full-snapshot HDFS state.
-    Runtime also needs the ``protobuf`` package (Spark's Python
-    state-server protocol); environments without it use
-    :func:`completed_flights_stream`, which is semantically identical
-    (both wrap the same ``fold_events`` kernel). Equivalence test:
-    tests/test_tws_stream.py (skipped where protobuf is absent).
-    """
-    return states_stream.groupBy("icao24").transformWithStateInPandas(
-        FlightSessionProcessor(),
-        outputStructType=COMPLETED_SCHEMA,
-        outputMode="append",
-        timeMode="ProcessingTime",
-    )

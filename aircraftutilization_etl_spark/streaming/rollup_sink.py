@@ -32,6 +32,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.warehouse import merge_rollups, partial_rollup
+from ..sources.parquet_io import hadoop_fs
 
 BASE_EPOCH = -1  # compacted base partial
 
@@ -100,8 +101,7 @@ def compact_rollup(spark: SparkSession, path: str, spec: RollupSpec) -> int:
     sink already implies (same single-writer contract as the state
     store's generation swap). Returns the number of epochs folded.
     """
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    fs, jvm_path = hadoop_fs(spark, path)
     if not fs.exists(jvm_path):
         return 0
     epochs = []
@@ -115,42 +115,22 @@ def compact_rollup(spark: SparkSession, path: str, spec: RollupSpec) -> int:
     merged = read_rollup(spark, path, spec)
     staged = f"{path}/epoch={BASE_EPOCH}__staged"
     merged.write.mode("overwrite").parquet(staged)
-    base = spark._jvm.org.apache.hadoop.fs.Path(  # noqa: SLF001
-        f"{path}/epoch={BASE_EPOCH}"
-    )
+    _, base = hadoop_fs(spark, f"{path}/epoch={BASE_EPOCH}")
     if fs.exists(base):
         fs.delete(base, True)
-    fs.rename(
-        spark._jvm.org.apache.hadoop.fs.Path(staged), base  # noqa: SLF001
-    )
+    fs.rename(hadoop_fs(spark, staged)[1], base)
     for e in live:
         if e <= BASE_EPOCH - 1:
             # an erasure epoch: its id must stay on the applied ledger
             # even though the directory is about to fold away
-            fs.mkdirs(
-                spark._jvm.org.apache.hadoop.fs.Path(  # noqa: SLF001
-                    _erasure_marker(path, BASE_EPOCH - 1 - e)
-                )
-            )
-        fs.delete(
-            spark._jvm.org.apache.hadoop.fs.Path(  # noqa: SLF001
-                f"{path}/epoch={e}"
-            ),
-            True,
-        )
+            marker = _erasure_marker(path, BASE_EPOCH - 1 - e)
+            fs.mkdirs(hadoop_fs(spark, marker)[1])
+        fs.delete(hadoop_fs(spark, f"{path}/epoch={e}")[1], True)
     return len(live)
 
 
 ERASURE_EPOCH_BASE = -2  # erasure partials live at epoch = -2 - erasure_id
 _ERASURE_LEDGER = "__erasures"  # applied-id markers, outside the epoch glob
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
-    return (
-        jvm_path.getFileSystem(spark._jsc.hadoopConfiguration()),  # noqa: SLF001
-        spark._jvm.org.apache.hadoop.fs.Path,  # noqa: SLF001
-    )
 
 
 def _erasure_marker(path: str, erasure_id: int) -> str:
@@ -191,10 +171,10 @@ def apply_erasure(
         raise ValueError("erasure_id must be >= 0")
     from pyspark.sql import functions as F
 
-    spark = erased_rows.sparkSession
-    fs, jpath = _fs(spark, path)
-    marker = _erasure_marker(path, erasure_id)
-    if fs.exists(jpath(marker)):
+    fs, marker = hadoop_fs(
+        erased_rows.sparkSession, _erasure_marker(path, erasure_id)
+    )
+    if fs.exists(marker):
         return  # already applied (possibly folded into the base)
     partial = partial_rollup(
         erased_rows, spec.keys, spec.sums, (), (), spec.count_col
@@ -207,7 +187,7 @@ def apply_erasure(
     negated.write.mode("overwrite").parquet(
         f"{path}/epoch={ERASURE_EPOCH_BASE - erasure_id}"
     )
-    fs.mkdirs(jpath(marker))
+    fs.mkdirs(marker)
 
 
 def read_rollup_live(

@@ -11,13 +11,11 @@ reappearing after landing, missing-from-batch cycles, null measures.
 Two layers:
 - the FOLD test drives the shared ``fold_events`` kernel directly
   (fast, no streaming engine);
-- the THREE-BACKEND test (VERDICT r5 #7) runs the same sequences
-  through the real Structured Streaming engine under each state
-  backend — applyInPandasWithState (processing-time), the event-time
-  watermark kernel, and transformWithStateInPandas — one parameterized
-  test proving all three equivalent to the batch pipeline on the same
-  sequences (the TWS leg skips where protobuf is absent, the same
-  gate-if-unavailable policy as test_tws_stream.py).
+- the BACKEND test (VERDICT r5 #7) runs the same sequences through
+  the real Structured Streaming engine under each stream kernel —
+  applyInPandasWithState (processing-time) and the event-time
+  watermark kernel — one parameterized test proving both equivalent
+  to the batch pipeline on the same sequences.
 
 TTL eviction is IN scope (r6): extended sequences routinely out-gap the
 20-minute TTL, and that is deliberate — seed 1234's >TTL-gap-then-return
@@ -28,7 +26,6 @@ pass; a gap failure here means the parity rule regressed.
 
 from __future__ import annotations
 
-import importlib.util
 import os
 import random
 
@@ -50,7 +47,6 @@ from aircraftutilization_etl_spark.schemas import (
 from aircraftutilization_etl_spark.streaming.flight_stream import (
     completed_flights_stream,
     completed_flights_stream_event_time,
-    completed_flights_stream_tws,
     fold_events,
 )
 
@@ -210,20 +206,15 @@ def test_untimestamped_return_after_ttl_gap_cannot_change_emissions(spark):
     assert dur == -(-(t5 - t3) // 60)
 
 
-# --- three-backend equivalence (VERDICT r5 #7) ---------------------------
+# --- stream-backend equivalence (VERDICT r5 #7) -------------------------
 
 TTL_S = 20 * 60
-_HAS_PROTOBUF = (
-    importlib.util.find_spec("google") is not None
-    and importlib.util.find_spec("google.protobuf") is not None
-)
 
 KERNELS = {
     "apply_in_pandas": completed_flights_stream,
     "event_time": lambda s: completed_flights_stream_event_time(
         s, lateness="10 minutes"
     ),
-    "tws": completed_flights_stream_tws,
 }
 
 
@@ -233,8 +224,8 @@ def _run_stream(spark, tmp_path, batches, kernel_name, expected_rows):
     dummy key let the event-time kernel seal and drain every real
     packet (first flush advances the watermark past last_event + TTL,
     second fires the event-time timers); the flush key never takes off
-    so it can't emit, and it is harmless to the other two backends —
-    every backend consumes the IDENTICAL input.
+    so it can't emit, and it is harmless to the processing-time
+    backend — every backend consumes the IDENTICAL input.
 
     Termination: keys with live sessions hold ProcessingTimeTimeout /
     event-time timers, and a stateful availableNow query keeps running
@@ -300,30 +291,7 @@ def _run_stream(spark, tmp_path, batches, kernel_name, expected_rows):
 @pytest.mark.parametrize("kernel_name", sorted(KERNELS))
 @pytest.mark.parametrize("seed", [7, 1234])
 def test_three_stream_backends_match_batch(spark, tmp_path, seed, kernel_name):
-    if kernel_name == "tws" and not _HAS_PROTOBUF:
-        pytest.skip("transformWithState needs protobuf (not installed)")
     rng = random.Random(seed)
     batches, got_batch = _nonvacuous_batches(spark, rng)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    if kernel_name == "tws":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    try:
-        got_stream = _run_stream(
-            spark, tmp_path, batches, kernel_name, len(got_batch)
-        )
-    finally:
-        if kernel_name == "tws":
-            if prev is None:
-                spark.conf.unset(
-                    "spark.sql.streaming.stateStore.providerClass"
-                )
-            else:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev
-                )
+    got_stream = _run_stream(spark, tmp_path, batches, kernel_name, len(got_batch))
     assert got_stream == got_batch

@@ -6,9 +6,12 @@ paths are local Hadoop-FS paths, the same code path as s3a:// URIs.
 """
 
 import datetime as dt
+import inspect
+import pathlib
 
 import pytest
 
+import aircraftutilization_etl_spark
 from aircraftutilization_etl_spark.errors import InvalidSource
 from aircraftutilization_etl_spark.schemas import (
     SOURCE_SCHEMA,
@@ -17,6 +20,7 @@ from aircraftutilization_etl_spark.schemas import (
 )
 from aircraftutilization_etl_spark.sources.parquet_io import (
     StateStore,
+    hadoop_fs,
     read_parquet_or_empty,
 )
 from aircraftutilization_etl_spark.sources.sinks import append_facts, retention_purge
@@ -97,11 +101,56 @@ def test_state_store_recovers_from_missing_manifest(spark, tmp_path):
     assert store.read().first()["last_contact"] == 2
 
 
+def test_vacuum_keeps_crash_recovered_generation(spark, tmp_path):
+    """Without a manifest the current generation is the newest ``v_*``
+    one; vacuum must protect it exactly like a manifest entry instead
+    of deleting every generation."""
+    root = tmp_path / "state"
+    store = StateStore(spark, str(root), SOURCE_SCHEMA)
+    for i in range(3):
+        store.commit(
+            spark.createDataFrame(
+                [("x", i, 0.0, 0.0, 0, i, None, True)], SOURCE_SCHEMA
+            )
+        )
+    (root / StateStore.MANIFEST).unlink()
+    current = store.current_version()
+    last_contact = store.read().first()["last_contact"]
+    store.vacuum(keep=1)
+    assert store.versions() == [current]
+    assert store.current_version() == current
+    assert [r["last_contact"] for r in store.read().collect()] == [last_contact]
+
+
 def test_append_facts_skips_empty(spark, tmp_path):
     from aircraftutilization_etl_spark.schemas import COMPLETE_FLIGHTS_SCHEMA
 
-    path = str(tmp_path / "facts")
-    assert append_facts(empty_df(spark, COMPLETE_FLIGHTS_SCHEMA), path) is False
+    path = tmp_path / "facts"
+    empty = empty_df(spark, COMPLETE_FLIGHTS_SCHEMA)
+    assert append_facts(empty, str(path)) is False
+    # an empty batch against an existing sink writes nothing either
+    facts = spark.createDataFrame(
+        [("aaa111", 10, dt.datetime(2026, 8, 1, 12), None, None, None, None, None, None)],
+        COMPLETE_FLIGHTS_SCHEMA,
+    )
+    assert append_facts(facts, str(path)) is True
+    files = sorted(path.rglob("*.parquet"))
+    assert append_facts(empty, str(path)) is False
+    assert sorted(path.rglob("*.parquet")) == files
+
+
+def test_get_file_system_has_one_call_site():
+    """Every Hadoop-FS lookup in the package goes through ``hadoop_fs``."""
+    package = pathlib.Path(aircraftutilization_etl_spark.__file__).parent
+    sites = [
+        (str(p.relative_to(package)), n)
+        for p in sorted(package.rglob("*.py"))
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if "getFileSystem" in line
+    ]
+    assert len(sites) == 1, sites
+    assert sites[0][0] == "sources/parquet_io.py"
+    assert "getFileSystem" in inspect.getsource(hadoop_fs)
 
 
 def test_append_facts_partitions_by_date_and_ttl(spark, tmp_path):

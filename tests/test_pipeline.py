@@ -7,7 +7,7 @@ and the inactivity eviction.
 """
 
 from aircraftutilization_etl_spark.errors import InvalidResponseError
-from aircraftutilization_etl_spark.pipeline import FlightPipeline
+from aircraftutilization_etl_spark.pipeline import KEEP_GENERATIONS, FlightPipeline
 from aircraftutilization_etl_spark.sources.rest import states_response_to_df
 
 import pytest
@@ -154,7 +154,7 @@ def test_state_generations_stay_bounded(pipeline):
             payload(vector("aaa111", t, 100.0, 0.0)), now_epoch=t
         )
         pipeline.run_complete_flights()
-    assert len(pipeline.state.versions()) <= pipeline.keep_generations
+    assert len(pipeline.state.versions()) <= KEEP_GENERATIONS
 
 
 def test_absent_aircraft_keeps_state_until_ttl(pipeline, spark):
@@ -178,14 +178,17 @@ def test_absent_aircraft_keeps_state_until_ttl(pipeline, spark):
     assert ids == {"aaa111"}
 
 
-def test_cycle_metrics_via_observation(pipeline, spark, tmp_path):
+def test_cycle_metrics_via_observation(pipeline):
     """run_complete_flights publishes per-cycle row counts from
-    Observation metrics riding the write actions — no extra count jobs."""
-    _drive_to_landing(pipeline, tmp_path)
-    # batch 4: slow + level after descend -> landing completes the flight
-    t3 = T0 + 900
-    pipeline.run_active_flights(
-        payload(vector("ab1234", t3, 5.0, 0.0)), now_epoch=t3
-    )
-    pipeline.run_complete_flights()
-    assert pipeline.last_metrics == {"n_complete": 1, "n_active": 0}
+    Observation metrics riding the write actions — no extra count jobs.
+    A multi-landing cycle counts every landing, not just the rows a
+    limit-1 emptiness probe would scan."""
+    fleet = [f"ab{i:04d}" for i in range(6)]
+    arc = [(80.0, 9.0), (240.0, 0.5), (80.0, -5.0), (5.0, 0.0)]
+    for i, (v, vr) in enumerate(arc):
+        t = T0 + 300 * i
+        pipeline.run_active_flights(
+            payload(*(vector(icao, t, v, vr) for icao in fleet)), now_epoch=t
+        )
+        pipeline.run_complete_flights()
+    assert pipeline.last_metrics == {"n_complete": len(fleet), "n_active": 0}
