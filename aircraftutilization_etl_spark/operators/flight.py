@@ -161,11 +161,13 @@ def transform_complete(classified_complete: DataFrame, metadata: DataFrame) -> D
     Reference ``_transform_complete`` (complete_flights/transformers.py:
     123-153): F2 keep rows with an observed takeoff, P7 3-column
     projection, U3 duration, T2 epoch→UTC timestamp, P6 drop inputs, then
-    J2 left-join the aircraft dimension (:108-121) — a classic
-    broadcast-hash dimension join (the metadata table is ~500k rows /
-    ~50 MB, SURVEY.md §4.3) — and T3 parse ``built`` (yyyy-MM-dd → null on
-    failure, matching the strict-variant command script
-    src/commands/built_string_to_dt.py:69-75).
+    J2/T3 (:func:`enrich_completed`) against the dimension rows of this
+    cycle's landing keys only. The aircraft table is ~500k rows
+    (SURVEY.md §4.3) against a few hundred landings per cycle, so it is
+    first semi-joined with the broadcast landing keys and only that
+    remainder is broadcast; an equi-join never matches a null key and a
+    semi-join keeps each dimension row once, so the enriched rows equal
+    the unpruned join's, duplicate and absent keys included.
     """
     complete = classified_complete.filter(F.col("takeoff_at") != 0).select(
         "icao24", "takeoff_at", "last_contact"
@@ -177,14 +179,32 @@ def transform_complete(classified_complete: DataFrame, metadata: DataFrame) -> D
         "landed_at", F.timestamp_seconds(F.col("last_contact"))
     )
     complete = complete.drop("takeoff_at", "last_contact")
-    complete = complete.join(F.broadcast(metadata), on="icao24", how="left")
+    landed = metadata.join(
+        F.broadcast(complete.select("icao24")), on="icao24", how="left_semi"
+    )
+    return enrich_completed(complete, landed)
+
+
+def enrich_completed(completed: DataFrame, metadata: DataFrame) -> DataFrame:
+    """J2/T3 — completed flights → facts, shared by the batch cycle and
+    the stream.
+
+    J2 left-joins the aircraft dimension (complete_flights/
+    transformers.py:108-121) as a broadcast-hash join, then T3 parses
+    ``built`` (yyyy-MM-dd → null on failure, matching the strict-variant
+    command script src/commands/built_string_to_dt.py:69-75). The batch
+    cycle passes the dimension pruned to its landing keys; the stream
+    passes the whole table, because Spark rejects a left-semi join whose
+    right side is streaming.
+    """
+    out = completed.join(F.broadcast(metadata), on="icao24", how="left")
     # C5 (NaN→None) is a no-op in Spark: nulls are native (SURVEY.md §2.5).
-    complete = complete.withColumn(
+    out = out.withColumn(
         # try_to_timestamp: invalid strings -> null under ANSI mode too,
         # matching the reference's try/except -> None
         "built", F.try_to_timestamp(F.col("built"), F.lit("yyyy-MM-dd"))
     )
-    return complete.select(
+    return out.select(
         "icao24",
         "flight_duration_minutes",
         "landed_at",
@@ -202,9 +222,7 @@ def classify_and_split(source: DataFrame, metadata: DataFrame) -> TransformedFli
 
     Reference ``CompleteFlightsETL._transform``
     (complete_flights/transformers.py:155-171): F3 disjoint split on
-    flight_status. The classified frame feeds both branches, so callers
-    executing both outputs should ``.cache()`` it (pipeline.py does);
-    each row lands on exactly one side.
+    flight_status; each row lands on exactly one side.
     """
     classified = classify_flights(source)
     active = classified.filter(F.col(FLIGHT_STATUS_COLUMN) != "landing")

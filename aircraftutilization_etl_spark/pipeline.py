@@ -81,8 +81,10 @@ class FlightPipeline:
 
         Reference CompleteFlightsETL.etl
         (complete_flights/transformers.py:180-187). The classified frame
-        fans out to two outputs, so the branch point is cached for the
-        duration of the two actions.
+        fans out to two outputs, each written by one action: the fact
+        append (which evaluates its batch once, see ``append_facts``)
+        and the state commit. Nothing is cached here — each branch
+        feeds exactly one action.
 
         Cycle metrics (completed/active row counts) ride the write
         actions via ``Observation`` — accumulator-backed, so no extra
@@ -108,22 +110,18 @@ class FlightPipeline:
         active = flights.active.observe(
             obs_active, F.count(F.lit(1)).alias("n")
         )
-        active.cache()
-        try:
-            # facts first, state last (see module docstring); the batch
-            # id is the SOURCE generation, so a crash-replay of this
-            # cycle re-derives the same id and the sink guard holds
-            append_facts(
-                complete,
-                self.facts_path,
-                batch_id=source_version or "genesis",
-            )
-            self.state.commit(active)
-            self.state.vacuum(keep=KEEP_GENERATIONS)
-            self.last_metrics = {
-                "n_complete": obs_complete.get["n"],
-                "n_active": obs_active.get["n"],
-            }
-        finally:
-            active.unpersist()
+        # facts first, state last (see module docstring); the batch id
+        # is the SOURCE generation, so a crash-replay of this cycle
+        # re-derives the same id and the sink guard holds
+        append_facts(
+            complete,
+            self.facts_path,
+            batch_id=source_version or "genesis",
+        )
+        self.state.commit(active)
+        self.state.vacuum(keep=KEEP_GENERATIONS)
+        self.last_metrics = {
+            "n_complete": obs_complete.get["n"],
+            "n_active": obs_active.get["n"],
+        }
         return True

@@ -39,39 +39,18 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from ..errors import InvalidResponseError
 from ..schemas import STATES_SCHEMA
-
-N_STATE_COLUMNS = len(STATES_SCHEMA.fields)
-
-
-def _payload_rows(payload: dict) -> list[tuple]:
-    """S2 shape validation: the ``states`` array → typed tuples
-    (reference opensky/transformers.py:40-47)."""
-    try:
-        states = payload["states"]
-    except (KeyError, TypeError) as exc:
-        raise InvalidResponseError(str(exc)) from exc
-    rows = []
-    for vector in states or []:
-        if len(vector) != N_STATE_COLUMNS:
-            raise InvalidResponseError(
-                f"state vector arity {len(vector)} != {N_STATE_COLUMNS}"
-            )
-        rows.append(tuple(vector))
-    return rows
+from .rest import OpenSkyClient, state_vectors
 
 
 def _load_payload_file(path: str) -> list[tuple]:
     with open(path, encoding="utf-8") as f:
-        return _payload_rows(json.load(f))
+        return state_vectors(json.load(f))
 
 
 def _poll_live(options: dict) -> list[tuple]:
-    from .rest import OpenSkyClient
-
     client = OpenSkyClient(options.get("username"), options.get("password"))
-    return _payload_rows(client.get_states())
+    return state_vectors(client.get_states())
 
 
 class OpenSkyBatchReader(DataSourceReader):

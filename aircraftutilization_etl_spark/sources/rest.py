@@ -8,9 +8,11 @@ table, KeyError/ValueError → InvalidResponseError. Reference S3
 (client.py:37-41): the ~500k-row aircraft-database CSV.
 
 Spark has no native REST source; the poll is driver-side (the payload is
-one ~10⁴-row snapshot — not a distributable read) and becomes a DataFrame
-via createDataFrame with the explicit schema. The streaming path wraps the
-same poll in a rate-limited generator feeding the micro-batch pipeline.
+one ~10⁴-row snapshot — not a distributable read). The snapshot becomes a
+DataFrame through Arrow: one typed column per schema field, handed to the
+JVM as record batches, so no Python worker touches the rows and no action
+re-unpickles them. ``state_vectors`` is the one shape validator; the
+``opensky`` data source (sources/opensky_datasource.py) uses it too.
 ``requests`` is import-gated: the engine works without it (tests inject
 responses).
 """
@@ -19,7 +21,10 @@ from __future__ import annotations
 
 import logging
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import BooleanType, DoubleType, IntegerType, StringType
 
 from ..errors import InvalidCredentials, InvalidResponseError
 from ..schemas import STATES_SCHEMA
@@ -36,6 +41,11 @@ OPENSKY_AIRCRAFT_DB_URL = (
     "https://opensky-network.org/datasets/metadata/aircraftDatabase.csv"
 )
 REQUEST_TIMEOUT_SECONDS = 5  # reference client.py:25
+N_STATE_COLUMNS = len(STATES_SCHEMA.fields)
+# The one Python type each field type takes, matched exactly (a bool is no
+# int, an int no float) — what ``createDataFrame(rows, STATES_SCHEMA)``
+# accepts.
+_PY_TYPES = {IntegerType: int, DoubleType: float, BooleanType: bool, StringType: str}
 
 
 class OpenSkyClient:
@@ -59,26 +69,67 @@ class OpenSkyClient:
         return response.json()
 
 
-def states_response_to_df(spark: SparkSession, payload: dict) -> DataFrame:
-    """S2 — JSON→table normalization with shape validation.
+def state_vectors(payload: dict) -> list[tuple]:
+    """S2 shape validation: the ``states`` array → 17-element tuples.
 
-    The 17-element state vectors become typed rows; a missing ``states``
-    key or wrong-arity rows raise InvalidResponseError (reference
-    opensky/transformers.py:40-47).
+    A missing or non-iterable ``states`` and wrong-arity vectors raise
+    InvalidResponseError (reference opensky/transformers.py:40-47); a
+    null ``states`` is an empty snapshot.
     """
     try:
-        states = payload["states"]
+        rows = [tuple(vector) for vector in payload["states"] or []]
     except (KeyError, TypeError) as exc:
-        raise InvalidResponseError(str(exc)) from exc
-    n_cols = len(STATES_SCHEMA.fields)
-    rows = []
-    for vector in states or []:
-        if len(vector) != n_cols:
+        raise InvalidResponseError(f"malformed states payload: {exc!r}") from exc
+    for row in rows:
+        if len(row) != N_STATE_COLUMNS:
             raise InvalidResponseError(
-                f"state vector arity {len(vector)} != {n_cols}"
+                f"state vector arity {len(row)} != {N_STATE_COLUMNS}"
             )
-        rows.append(tuple(vector))
-    return spark.createDataFrame(rows, STATES_SCHEMA)
+    return rows
+
+
+def _as_string(value):
+    """A string field's value as the row path stores it: booleans as
+    Spark prints them, other non-strings (numbers, arrays, objects) as
+    ``str()``."""
+    if value is None or type(value) is str:
+        return value
+    if type(value) is bool:
+        return "true" if value else "false"
+    return str(value)
+
+
+def _arrow_column(values: tuple, field) -> pa.Array:
+    py_type = _PY_TYPES[type(field.dataType)]
+    wrong = set(map(type, values)) - {py_type, type(None)}
+    if wrong and py_type is str:
+        values = [_as_string(v) for v in values]
+    elif wrong:
+        raise InvalidResponseError(
+            f"field {field.name} ({field.dataType.simpleString()}) got "
+            + ", ".join(sorted(t.__name__ for t in wrong))
+        )
+    try:
+        return pa.array(values, type=to_arrow_type(field.dataType))
+    except (OverflowError, pa.ArrowException) as exc:  # int32 range
+        raise InvalidResponseError(f"field {field.name}: {exc}") from exc
+
+
+def states_response_to_df(spark: SparkSession, payload: dict) -> DataFrame:
+    """S2 — JSON→table normalization with shape and type validation.
+
+    The state vectors become one Arrow column per ``STATES_SCHEMA``
+    field. Every payload ``createDataFrame(rows, STATES_SCHEMA)`` accepts
+    gives the same rows; every one it rejects (a wrong value type, an
+    epoch outside int32) raises InvalidResponseError instead.
+    """
+    rows = state_vectors(payload)
+    columns = list(zip(*rows)) or [()] * N_STATE_COLUMNS
+    table = pa.Table.from_arrays(
+        [_arrow_column(c, f) for c, f in zip(columns, STATES_SCHEMA.fields)],
+        names=STATES_SCHEMA.names,
+    )
+    return spark.createDataFrame(table, STATES_SCHEMA)
 
 
 def read_aircraft_database_csv(spark: SparkSession, path: str) -> DataFrame:

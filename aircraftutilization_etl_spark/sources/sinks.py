@@ -20,7 +20,7 @@ from __future__ import annotations
 import datetime as dt
 import logging
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .parquet_io import hadoop_fs
@@ -39,21 +39,28 @@ def append_facts(
     landing date.
 
     Returns False (and logs) on an empty batch instead of writing —
-    reference db.py:63-66. Emptiness falls out of the touched landing
-    dates the replay guard needs anyway: one global aggregate, no
-    separate isEmpty() job. Being a full pass, it also completes any
-    Observation riding on ``df`` with the batch's true row count.
+    reference db.py:63-66.
+
+    One pass over the batch: the date-stamped batch is persisted for the
+    duration of the call, so its lineage (for the pipeline: the state
+    scan, classify and the dimension join) runs once, in the global
+    aggregate that yields both the row count and the touched landing
+    dates; the write reads the cached rows. Being a full pass, that
+    aggregate also completes any Observation riding on ``df`` with the
+    batch's true row count.
 
     Exactly-once: a crash between the fact append and the state-manifest
     flip re-runs the batch against the old state generation, re-deriving
-    the same completed flights. Before writing, the batch is anti-joined
-    on the sink key (icao24, ``landed_at``) against the rows already in
-    its own target date partitions, so replays append nothing. The guard
-    scan is partition-pruned to the touched dates (a landing batch
-    touches ~today) and column-pruned to the two key columns — O(recent
-    partitions), not O(sink). ``batch_id`` (the source state generation)
-    is stamped as a lineage column so operators can attribute rows to
-    the run that produced them.
+    the same completed flights. The write anti-joins the batch on the
+    sink key (icao24, ``landed_at``) against the rows already in its own
+    target date partitions, so replays append nothing. That guard scan
+    runs once, inside the write, partition-pruned to the touched dates (a
+    landing batch touches ~today) and column-pruned to the two key
+    columns — O(recent partitions), not O(sink). An Observation on the
+    written rows tells a fully replayed batch (0 rows appended; a
+    partitioned append of no rows writes no file) from a real append.
+    ``batch_id`` (the source state generation) is stamped as a lineage
+    column so operators can attribute rows to the run that produced them.
 
     Atomicity note: parquet append commits per task-file (in-flight
     ``_temporary`` output is invisible to readers), so a crash exposes
@@ -61,34 +68,41 @@ def append_facts(
     tops up exactly on replay, including batches straddling multiple
     date partitions (tests/test_io.py::
     test_append_facts_replay_straddling_partial_write). The residual
-    window is CONCURRENT identical appends racing past the pre-write
-    scan together; the sink assumes the reference's single-writer
+    window is CONCURRENT identical appends racing past the guard scan
+    together; the sink assumes the reference's single-writer
     orchestration cadence (orchestration.py serializes the DAG).
     """
     out = df.withColumn(PARTITION_COLUMN, F.to_date(F.col(TIME_FIELD)))
-    # a global aggregate, not distinct(): on empty input AQE would prune
-    # distinct's shuffle and drop an Observation riding on ``df``
-    n_rows, touched = out.agg(
-        F.count(F.lit(1)), F.collect_set(PARTITION_COLUMN)
-    ).first()
-    if n_rows == 0:
-        logger.warning("Empty complete flights dataframe")
-        return False
     if batch_id is not None:
         out = out.withColumn("batch_id", F.lit(batch_id))
-    fs, jvm_path = hadoop_fs(df.sparkSession, path)
-    if fs.exists(jvm_path):
-        existing = (
-            df.sparkSession.read.parquet(path)
-            .filter(F.col(PARTITION_COLUMN).isin(touched))
-            .select("icao24", TIME_FIELD)
-        )
-        out = out.join(existing, on=["icao24", TIME_FIELD], how="left_anti")
-        if out.isEmpty():
+    out.persist()
+    try:
+        # a global aggregate, not distinct(): on empty input AQE would
+        # prune distinct's shuffle and drop an Observation riding on ``df``
+        n_rows, touched = out.agg(
+            F.count(F.lit(1)), F.collect_set(PARTITION_COLUMN)
+        ).first()
+        if n_rows == 0:
+            logger.warning("Empty complete flights dataframe")
+            return False
+        fresh = out
+        fs, jvm_path = hadoop_fs(df.sparkSession, path)
+        if fs.exists(jvm_path):
+            existing = (
+                df.sparkSession.read.parquet(path)
+                .filter(F.col(PARTITION_COLUMN).isin(touched))
+                .select("icao24", TIME_FIELD)
+            )
+            fresh = out.join(existing, on=["icao24", TIME_FIELD], how="left_anti")
+        written = Observation("appended_facts")
+        fresh = fresh.observe(written, F.count(F.lit(1)).alias("n"))
+        fresh.write.mode("append").partitionBy(PARTITION_COLUMN).parquet(path)
+        if written.get["n"] == 0:
             logger.warning("All facts already present (replayed batch)")
             return False
-    out.write.mode("append").partitionBy(PARTITION_COLUMN).parquet(path)
-    return True
+        return True
+    finally:
+        out.unpersist()
 
 
 def retention_purge(

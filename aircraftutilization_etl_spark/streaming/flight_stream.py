@@ -60,7 +60,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..operators.flight import INACTIVITY_MAX_MINUTES
+from ..operators.flight import INACTIVITY_MAX_MINUTES, enrich_completed
 
 TTL_S = INACTIVITY_MAX_MINUTES * 60
 TTL_MS = TTL_S * 1000
@@ -399,27 +399,6 @@ def fold_completed_batch(src: DataFrame) -> DataFrame:
 
     return src.groupBy("icao24").applyInPandas(
         fold, schema=COMPLETED_SCHEMA
-    )
-
-
-def enrich_completed(completed: DataFrame, metadata: DataFrame) -> DataFrame:
-    """J2/T3 on the stream: stream-static broadcast left join with the
-    aircraft dimension + built parse — identical output shape to the
-    batch ``transform_complete`` (operators/flight.py)."""
-    out = completed.join(F.broadcast(metadata), on="icao24", how="left")
-    out = out.withColumn(
-        "built", F.try_to_timestamp(F.col("built"), F.lit("yyyy-MM-dd"))
-    )
-    return out.select(
-        "icao24",
-        "flight_duration_minutes",
-        "landed_at",
-        "registration",
-        "model",
-        "manufacturer_icao",
-        "owner",
-        "operator",
-        "built",
     )
 
 

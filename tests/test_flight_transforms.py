@@ -15,6 +15,7 @@ canonically sorted — SURVEY.md §5a):
 import datetime as dt
 
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from aircraftutilization_etl_spark.operators.flight import (
     classify_and_split,
@@ -30,6 +31,7 @@ from aircraftutilization_etl_spark.schemas import (
     METADATA_SCHEMA,
     SOURCE_SCHEMA,
 )
+from tests.conftest import rows_sorted
 
 NOW = 1712340000  # deterministic injected "now" (SURVEY.md §7 hard part 4)
 
@@ -232,6 +234,46 @@ def test_transform_complete_unparseable_built_is_null(spark):
     row = transform_complete(landing, metadata).first().asDict()
     assert row["built"] is None
     assert row["model"] == "B737"
+
+
+def test_transform_complete_pruned_dimension_equals_full_join(spark):
+    """J2 broadcasts only the landing keys' dimension rows; that must not
+    change a single fact row — a duplicated dimension key still fans
+    out, a null-key dimension row still never matches, a landing with no
+    dimension row (or a null key) still gets nulls."""
+    landing = make_source(
+        spark,
+        [
+            dict(icao24=icao, last_contact=1712338215, velocity=0.0,
+                 vertical_rate=0.0, takeoff_at=1712329013 + i,
+                 flight_last_contact=1712338215, flight_trajectory="descend",
+                 is_first_contact=False)
+            for i, icao in enumerate(["dup001", "one002", "zzz999", "one002", None])
+        ],
+    ).selectExpr("*", "'landing' AS flight_status")
+    metadata = spark.createDataFrame(
+        [
+            ("dup001", "D-AAAA", "A320", "AIRBUS", "o1", "op1", "2001-01-01"),
+            ("dup001", "D-BBBB", "A321", "AIRBUS", "o2", "op2", "not-a-date"),
+            ("one002", "G-CCCC", "B738", "BOEING", "o3", "op3", "2010-05-06"),
+            (None, "N-NULL", "C172", "CESSNA", "o4", "op4", "1999-09-09"),
+            ("far003", "F-DDDD", "E190", "EMBRAER", "o5", "op5", "2015-07-08"),
+        ],
+        METADATA_SCHEMA,
+    )
+    got = transform_complete(landing, metadata)
+    facts = transform_complete(landing, spark.createDataFrame([], METADATA_SCHEMA))
+    full = (
+        facts.select("icao24", "flight_duration_minutes", "landed_at")
+        .join(F.broadcast(metadata), on="icao24", how="left")
+        .withColumn("built", F.try_to_timestamp(F.col("built"), F.lit("yyyy-MM-dd")))
+        .select(*got.columns)
+    )
+    assert rows_sorted(got) == rows_sorted(full)
+    by_key = [r["icao24"] for r in got.collect()]
+    assert sorted(by_key, key=str) == sorted(
+        ["dup001", "dup001", "one002", "one002", "zzz999", None], key=str
+    )
 
 
 def test_classify_and_split_disjoint(spark):

@@ -139,6 +139,52 @@ def test_append_facts_skips_empty(spark, tmp_path):
     assert sorted(path.rglob("*.parquet")) == files
 
 
+def test_append_facts_evaluates_batch_once(spark, tmp_path):
+    """The batch's lineage runs once per append — the aggregate and the
+    guarded write share one cached evaluation — and the cache is
+    released afterwards, on the replay path too."""
+    from pyspark.sql import functions as F
+
+    from aircraftutilization_etl_spark.schemas import COMPLETE_FLIGHTS_SCHEMA
+
+    path = tmp_path / "facts"
+    day = dt.datetime(2026, 8, 1, 12)
+    seed = spark.createDataFrame(
+        [("zzz000", 5, day, None, None, None, None, None, None)],
+        COMPLETE_FLIGHTS_SCHEMA,
+    )
+    assert append_facts(seed, str(path)) is True
+    spark.catalog.clearCache()  # other tests' caches are not this test's
+    cache = spark._jsparkSession.sharedState().cacheManager()  # noqa: SLF001
+
+    n = 40
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def counted(seconds):
+        calls.add(1)
+        return seconds
+
+    batch = spark.createDataFrame(
+        [
+            (f"a{i:05d}", i, day + dt.timedelta(minutes=i), None, None, None, None, None, None)
+            for i in range(n)
+        ],
+        COMPLETE_FLIGHTS_SCHEMA,
+    ).withColumn(  # the sink key: every action on the batch needs it
+        "landed_at", F.timestamp_seconds(counted(F.unix_seconds("landed_at")))
+    )
+    assert append_facts(batch, str(path)) is True
+    assert calls.value == n
+    assert cache.isEmpty()
+
+    files = sorted(path.rglob("*.parquet"))
+    assert append_facts(batch, str(path)) is False  # replayed batch
+    assert sorted(path.rglob("*.parquet")) == files
+    assert cache.isEmpty()
+    assert spark.read.parquet(str(path)).count() == n + 1
+
+
 def test_get_file_system_has_one_call_site():
     """Every Hadoop-FS lookup in the package goes through ``hadoop_fs``."""
     package = pathlib.Path(aircraftutilization_etl_spark.__file__).parent

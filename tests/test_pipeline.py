@@ -6,8 +6,11 @@ lifecycle (SURVEY.md §3) including the takeoff→cruise→landing session arc
 and the inactivity eviction.
 """
 
+from pyspark.errors import PySparkTypeError, PySparkValueError
+
 from aircraftutilization_etl_spark.errors import InvalidResponseError
 from aircraftutilization_etl_spark.pipeline import KEEP_GENERATIONS, FlightPipeline
+from aircraftutilization_etl_spark.schemas import STATES_SCHEMA
 from aircraftutilization_etl_spark.sources.rest import states_response_to_df
 
 import pytest
@@ -42,6 +45,53 @@ def test_states_payload_validation(spark):
         states_response_to_df(spark, {"time": 1})
     with pytest.raises(InvalidResponseError):
         states_response_to_df(spark, {"states": [[1, 2, 3]]})
+
+
+def _odd(field: int, value):
+    """A well-formed vector with one field replaced."""
+    v = list(vector("ab1234", T0, 80.0, 1.0))
+    v[field] = value
+    return v
+
+
+# Odd but plausible feed vectors: JSON numbers, booleans and arrays where
+# the schema wants another type, an out-of-range epoch, all-null fields,
+# null and empty snapshots.
+ODD_PAYLOADS = {
+    "int_velocity": {"states": [_odd(9, 0)]},
+    "str_last_contact": {"states": [_odd(4, "5")]},
+    "float_time_position": {"states": [_odd(3, 1.5)]},
+    "bool_position_source": {"states": [_odd(16, True)]},
+    "int32_overflow_time_position": {"states": [_odd(3, 2**31)]},
+    "int_callsign": {"states": [_odd(1, 42)]},
+    "float_callsign": {"states": [_odd(1, 1e20)]},
+    "bool_callsign": {"states": [_odd(1, False)]},
+    "list_sensors": {"states": [_odd(12, [1, 2])]},
+    "object_squawk": {"states": [_odd(14, {"a": [1, None]})]},
+    "all_null": {"states": [["ab1234"] + [None] * 16, [None] * 17]},
+    "bad_after_good": {"states": [_odd(9, 1.0), _odd(9, 1)]},
+    "states_none": {"states": None},
+    "states_empty": {"states": []},
+}
+
+
+@pytest.mark.parametrize("name", sorted(ODD_PAYLOADS))
+def test_states_ingest_matches_row_path(spark, name):
+    """The Arrow ingest against the row path it replaced,
+    ``createDataFrame(rows, STATES_SCHEMA)``: a payload the row path
+    takes gives the same rows, one it rejects raises
+    InvalidResponseError."""
+    payload = ODD_PAYLOADS[name]
+    rows = [tuple(v) for v in payload["states"] or []]
+    try:
+        want = spark.createDataFrame(rows, STATES_SCHEMA).collect()
+    except (PySparkTypeError, PySparkValueError):
+        with pytest.raises(InvalidResponseError):
+            states_response_to_df(spark, payload)
+    else:
+        got = states_response_to_df(spark, payload)
+        assert got.schema == STATES_SCHEMA
+        assert got.collect() == want
 
 
 def test_full_session_arc(pipeline, spark, tmp_path):

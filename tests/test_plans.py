@@ -70,6 +70,23 @@ def test_flight_transform_is_pure_jvm(spark):
         for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
             assert marker not in plan
     assert "BroadcastHashJoin" in plan_of(flights.complete)
+    # the dimension is pruned to the landing keys before its broadcast:
+    # a LeftSemi join sits under the enrichment's broadcast join
+    tree = plan_of(flights.complete, "simple").splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    top = next(
+        i for i, line in enumerate(tree)
+        if "BroadcastHashJoin" in line and "LeftOuter" in line
+    )
+    below = []
+    for line in tree[top + 1:]:
+        if depth(line) <= depth(tree[top]):
+            break
+        below.append(line)
+    assert any("LeftSemi" in line for line in below), "\n".join(tree)
 
 
 def test_dimension_join_broadcasts(spark):
