@@ -37,15 +37,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .distribute import CORPUS_CACHE, ensure_scan_parallelism, shuffle_width
 from .text import words_expr
-
-# Corpus-scale kernel caches declare the serialized spill-to-disk level
-# instead of the deserialized heap default (r12, VERDICT r11 #3 /
-# guide §5): identical bytes at bench scale, no storage-memory thrash
-# at 100 TB.
-from pyspark import StorageLevel
-
-CORPUS_CACHE = StorageLevel.MEMORY_AND_DISK
 
 HASH_BITS = 12
 N_BUCKETS = 1 << HASH_BITS
@@ -73,8 +66,6 @@ def hashed_features(
     (totals aggregation + counts re-exchange for the join) — net one
     exchange fewer for identical rows."""
     from pyspark.sql.window import Window
-
-    from .distribute import ensure_scan_parallelism
 
     # the explode+md5 feature pass is per-row hash work over the raw
     # text — spread an under-partitioned scan first (r11 opt; profiled
@@ -231,10 +222,7 @@ def train_logreg_hashed(
     seq = next(_TRAIN_SEQ)
     base_view = f"__clf_base_{seq}"
     w_view = f"__clf_w_{seq}"
-    try:
-        nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    except ValueError:  # e.g. "auto" on AQE-managed deployments
-        nparts = spark.sparkContext.defaultParallelism
+    nparts = shuffle_width(spark)
     lab = labels.select(
         F.col(id_col),
         (F.col(label_col).cast("long") * F.lit(MICRO)).alias("__ym"),

@@ -33,21 +33,12 @@ Scale shape (the part that must survive 100 TB):
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .distribute import ensure_scan_parallelism
+from .distribute import CORPUS_CACHE, ensure_scan_parallelism
 from .similarity import quantize_embeddings
-
-# Quantized code frames are corpus-scale (one row — or m subvector
-# rows — per vector), so their kernel caches declare the serialized
-# spill-to-disk level instead of the deserialized heap default
-# (r12, VERDICT r11 #3 / guide §5); at bench scale the columnar cache
-# batches are byte arrays either way, at 100 TB this stops the cache
-# from thrashing executor storage memory.
-CORPUS_CACHE = StorageLevel.MEMORY_AND_DISK
 
 
 def _int_array_lit(values) -> str:

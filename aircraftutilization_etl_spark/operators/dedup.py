@@ -29,23 +29,17 @@ Scale design (the point of these operators at 100 TB):
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .distribute import (
+    CORPUS_CACHE,
+    MODEL_CACHE,
+    ensure_scan_parallelism,
+    shuffle_width,
+)
 from .skew import chunked_self_pairs
 from .text import fingerprint_expr, words_expr
-
-# Storage levels by size class (r12, VERDICT r11 #3 / guide §5): the
-# default persist() level (MEMORY_AND_DISK_DESER) holds deserialized
-# batch objects on the executor heap — fine for model/band-sized
-# frames, but a corpus-scale cache (shingle rows/arrays, signature
-# matrices: BIGGER than the text itself) competing with execution
-# memory at 100 TB is exactly the thrash guide §5 warns about.
-# Corpus-scale persists therefore declare MEMORY_AND_DISK (serialized
-# batches, spill to disk); band/model-sized ones stay deserialized in
-# memory, now explicitly.
-CORPUS_CACHE = StorageLevel.MEMORY_AND_DISK
 
 SHINGLE_N = 3
 MINHASH_K = 16  # 16 hash functions → 4 bands × 4 rows
@@ -57,7 +51,6 @@ def with_shingle_array(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    distribute: bool = True,
 ) -> DataFrame:
     """(id, shingles) — the distinct word-``SHINGLE_N``-grams of each
     document as one array column, one row per document.
@@ -67,8 +60,8 @@ def with_shingle_array(
     the word array is computed once per row, and the shingle lambda only
     slices it.
 
-    ``distribute`` repartitions on the id BEFORE the compute-heavy
-    projections: it moves raw text bytes (the smallest the data will
+    The frame is repartitioned on the id BEFORE the compute-heavy
+    projections: that moves raw text bytes (the smallest the data will
     ever be) instead of the 16-hash signature matrix, spreads the
     shingle/hash work across all cores even when the scan is a single
     small file, and the id-hash partitioning then satisfies the
@@ -83,15 +76,7 @@ def with_shingle_array(
     shingle pass single-task). The pinned width is the configured
     shuffle parallelism — exactly what the exchange would use anyway.
     """
-    if distribute:
-        spark = df.sparkSession
-        try:
-            nparts = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "200")
-            )
-        except ValueError:
-            nparts = spark.sparkContext.defaultParallelism
-        df = df.repartition(nparts, F.col(id_col))
+    df = df.repartition(shuffle_width(df.sparkSession), F.col(id_col))
     w = df.select(F.col(id_col), words_expr(text_col).alias("__words"))
     shingle_list = F.transform(
         F.sequence(F.lit(0), F.size(F.col("__words")) - SHINGLE_N),
@@ -335,9 +320,7 @@ def lsh_candidate_pairs(shingled: DataFrame, id_col: str = "doc_id") -> DataFram
     """
     # band-sized (4 narrow rows/doc): deserialized memory is the
     # right class — declared explicitly (VERDICT r11 #3)
-    banded = lsh_bands(shingled, id_col).persist(
-        StorageLevel.MEMORY_AND_DISK_DESER
-    )
+    banded = lsh_bands(shingled, id_col).persist(MODEL_CACHE)
     return (
         _chunked_pair_join(
             banded,
@@ -545,8 +528,6 @@ def with_simhash(
     under-partitioned small file would serialize them on one core —
     spread the raw text first (r11 opt; no-op at corpus scale).
     """
-    from .distribute import ensure_scan_parallelism
-
     df = ensure_scan_parallelism(df, id_col)
     if bits <= 32:
         hashed = df.select(

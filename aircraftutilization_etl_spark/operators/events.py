@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .distribute import scan_spread_width
+
 
 def sessionize(
     df: DataFrame,
@@ -173,18 +175,13 @@ def cooccurrence_pairs(
     # folds the post-aggregation side to ONE partition — and the
     # |vocabulary|² pair explode (the expensive per-row kernel) then
     # runs single-task (profiled: ~1 s single-task stages inside
-    # q_graph_pagerank). The spread is CONDITIONAL on the same
-    # input-size estimate ensure_scan_parallelism uses: at corpus
-    # scale the post-shuffle side is already wide and no extra
+    # q_graph_pagerank). The spread is sized by the INPUT's scans: at
+    # corpus scale the post-shuffle side is already wide and no extra
     # exchange is added, preserving the map-side partial aggregation
     # contract above untouched either way.
-    from .distribute import _estimated_scan_splits
-
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    est = _estimated_scan_splits(df)
-    if est is not None and est < target:
-        sets = sets.repartition(target, F.col(key))
+    width = scan_spread_width(df)
+    if width is not None:
+        sets = sets.repartition(width, F.col(key))
     lhs = sets.select(F.explode("__items").alias("item_a"), "__items")
     pairs = lhs.select(
         "item_a",

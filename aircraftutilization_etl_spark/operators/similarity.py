@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .distribute import ensure_scan_parallelism
+
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
@@ -83,17 +85,6 @@ def _collect_matrix(df: DataFrame, id_col: str, vec_col: str):
         return ids, np.zeros((0, 0), dtype=np.float64)
     mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
     return ids, mat
-
-
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Round-robin repartition when the scan is under-partitioned (a
-    small file reads as one task, serializing the GEMM); at real corpus
-    scale the scan already has ≥ defaultParallelism partitions and this
-    is a no-op."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def _normalize(mat: np.ndarray) -> np.ndarray:
@@ -165,7 +156,7 @@ def cosine_topk(
         return queries.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, cosine double, rank int"
         )
-    scored = _ensure_parallelism(corpus.select(id_col, vec_col)).mapInPandas(
+    scored = ensure_scan_parallelism(corpus.select(id_col, vec_col)).mapInPandas(
         _score_against(qids, _normalize(qmat), id_col, vec_col, partial_k=k),
         _SCORE_SCHEMA,
     )
@@ -541,7 +532,7 @@ def cosine_best_match(
                 }
             )
 
-    cand = _ensure_parallelism(corpus.select(id_col, vec_col)).mapInPandas(
+    cand = ensure_scan_parallelism(corpus.select(id_col, vec_col)).mapInPandas(
         fn, "vec_id long, ref_id long, cosine_raw double"
     )
     w = Window.partitionBy("vec_id").orderBy(

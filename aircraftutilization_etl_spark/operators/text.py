@@ -11,17 +11,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-# Corpus-scale kernel caches declare the serialized spill-to-disk level
-# instead of the deserialized heap default (r12, VERDICT r11 #3 /
-# guide §5): identical bytes at bench scale, no storage-memory thrash
-# at 100 TB.
-from pyspark import StorageLevel
-
-CORPUS_CACHE = StorageLevel.MEMORY_AND_DISK
 from pyspark.sql.window import Window
 
 from ..functions.localrel import inline_values_df
+from .distribute import CORPUS_CACHE, ensure_scan_parallelism
 
 # BPE-ish pre-tokenizer: letter runs, digit runs, or single non-space —
 # the same regex DuckDB's RE2 and Java's regex engine agree on.
@@ -1261,14 +1254,8 @@ def skipgram_pairs(
     # Distribute the pair generation (r11 opt): the per-row window
     # algebra below is interpreted higher-order-function work (~0.7 ms
     # per document), and a small corpus scans as ONE task (profiled:
-    # a 1.4 s single-task stage at sf0.1). When the scan is
-    # under-partitioned, spread the raw text across the cluster first —
-    # at real corpus scale the scan already has >= defaultParallelism
-    # splits and this is a no-op (the _ensure_parallelism discipline of
-    # operators/similarity).
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target, F.col(id_col))
+    # a 1.4 s single-task stage at sf0.1).
+    df = ensure_scan_parallelism(df, id_col)
     w = df.select(F.col(id_col), words_expr(text_col).alias("__words"))
     pairs = F.flatten(
         F.transform(

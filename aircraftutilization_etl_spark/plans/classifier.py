@@ -12,9 +12,9 @@ Lloyd replay (plans/clustering.py) and the BPE merge replay.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
+from ..operators.distribute import CORPUS_CACHE
 from .catalog import query, table
 
 CLF_ITERATIONS = 6
@@ -171,7 +171,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # again — without this the explode/hash/aggregate feature build
     # runs twice per query (measured ~3 s each at sf0.1).
     # corpus-scale feature rows: serialized + spill (VERDICT r11 #3)
-    feats = hashed_features(d).persist(StorageLevel.MEMORY_AND_DISK)
+    feats = hashed_features(d).persist(CORPUS_CACHE)
     w, b, _losses = train_logreg_hashed(
         feats, labels, iterations=CLF_ITERATIONS, lr=CLF_LR
     )

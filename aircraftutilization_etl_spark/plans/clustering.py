@@ -9,13 +9,13 @@ formulated on the int8 grid (see operators/clustering.py).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.clustering import kmeans_int8
 from ..operators.dedup import duplicate_clusters
+from ..operators.distribute import CORPUS_CACHE, MODEL_CACHE
 from ..operators.similarity import cosine_pairs, cosine_topk, ivf_topk
 from .catalog import query, table
 from .similarity import _COSINE_SQL, N_QUERIES, NEAR_DUP_COSINE, TOP_K
@@ -1511,11 +1511,11 @@ def q_emb_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
         # (queries x k)-sized: deserialized memory is the right class,
         # declared explicitly (VERDICT r11 #3)
-        .persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        .persist(MODEL_CACHE)
     )
     _, scodes, encoded, books = _pq_pipeline(spark, sf_dir)
     # corpus-scale (one codes row per vector): serialized + spill
-    encoded = encoded.persist(StorageLevel.MEMORY_AND_DISK)
+    encoded = encoded.persist(CORPUS_CACHE)
     corpus_cells, cents = kmeans_int8(
         e, k=K_CLUSTERS, iterations=KMEANS_ITERS, return_model=True
     )

@@ -23,6 +23,7 @@ from ..functions.flight import (
     flight_status_expr,
     flight_trajectory_expr,
 )
+from ..operators.distribute import shuffle_width
 from .catalog import query, table
 
 _SOURCE_LIKE_SQL = """
@@ -336,11 +337,7 @@ def q_stream_flight_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same configured shuffle width the exchange would use anyway —
     # keeps the fold parallel; this replaces (not adds to) the window's
     # own exchange, so the one-exchange plan pin still holds.
-    try:
-        nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    except ValueError:
-        nparts = spark.sparkContext.defaultParallelism
-    keyed = keyed.repartition(nparts, "icao24")
+    keyed = keyed.repartition(shuffle_width(spark), "icao24")
     w_sec = Window.partitionBy("icao24").orderBy("__sec", "event_id")
     ranked = keyed.withColumn("__rn", F.row_number().over(w_sec))
     step = (

@@ -3,10 +3,10 @@
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark import StorageLevel
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.distribute import MODEL_CACHE
 from ..operators.similarity import (
     cosine_expr,
     cosine_pairs,
@@ -891,7 +891,7 @@ def q_emb_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("simq_u"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        .persist(MODEL_CACHE)
     )
     vecs = e.select(
         F.col("vec_id").alias("__vid"),
@@ -926,7 +926,7 @@ def q_emb_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("sim_u"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        .persist(MODEL_CACHE)
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score_hu"), "neighbor_id"

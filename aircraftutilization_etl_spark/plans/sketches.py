@@ -24,10 +24,10 @@ Partial-aggregation plan shape is pinned by tests/test_plans.py.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from ..functions.localrel import inline_values_df
+from ..operators.distribute import MODEL_CACHE
 from .catalog import query, table
 
 
@@ -218,7 +218,7 @@ def q_sketch_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.hll_sketch_agg("user_id").alias("sk"),
             F.count_distinct("user_id").alias("nd"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        .persist(MODEL_CACHE)
     )
     # One broadcast join per side, INNER like the oracle's JOIN nd — a
     # pair whose type is absent from the data yields no row on either

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from .operators.distribute import SHUFFLE_PARTITIONS
+
 RECOMMENDED = {
     # AQE: runtime join demotion, partition coalescing, skew-join splits
     "spark.sql.adaptive.enabled": "true",
@@ -83,9 +85,7 @@ def build_session(
     for k, v in conf.items():
         builder = builder.config(k, v)
     if shuffle_partitions is not None:
-        builder = builder.config(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
+        builder = builder.config(SHUFFLE_PARTITIONS, str(shuffle_partitions))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

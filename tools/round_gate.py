@@ -10,7 +10,8 @@ Runs, in order, failing fast:
    zero-row tables: no exception, populated-identical schema);
 4. the one-row and degenerate-text cross-engine stars (rebuilt
    deterministically by tools/make_degenerate_stars.py, then the full
-   oracle gate pointed at .one_sf and .degen_sf — both expect 224/224;
+   oracle gate pointed at .one_sf and .degen_sf — every catalog query
+   is expected to pass on both;
    these two shapes caught 6 real bugs in round 8, VERDICT r8 #5);
 5. the content-hash snapshot (tools/snapshot_query_hashes.py) that lets
    the verification-priority ordering tie the driver's next
@@ -82,7 +83,8 @@ def main() -> int:
     if not args.skip_stars:
         # one-row and degenerate-text cross-engine stars: rebuilt from
         # --schema-from each gate run (deterministic: orderBy id), then
-        # the full oracle gate against each — 224/224 expected on both
+        # the full oracle gate against each — every catalog query is
+        # expected to pass on both
         # (the 4 ROLLUP/CUBE empty divergences only exist on ZERO rows)
         run(
             "build degenerate stars",
