@@ -15,7 +15,7 @@ every operator Spark-first:
                    UDFs on the hot path).
 - ``operators``  — DataFrame->DataFrame transforms: the flight-session core,
                    plus the scale surface (dedup, similarity, text analysis,
-                   as-of join, sessionization).
+                   sessionization, range joins).
 - ``plans``      — the relational query catalog exercised by the correctness
                    harness (__spark_entry__.queries()).
 - ``streaming``  — Structured Streaming variant of the flight-session

@@ -387,10 +387,6 @@ def predict(
     )
 
 
-def sigmoid(z: float) -> float:
-    return 1.0 / (1.0 + math.exp(-z))
-
-
 def naive_bayes_confusion(
     df: DataFrame,
     label_col: str = "lang",

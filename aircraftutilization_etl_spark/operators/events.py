@@ -1,11 +1,10 @@
-"""Event-stream operators: sessionization and as-of join.
+"""Event-stream operators: sessionization, range joins and time-series
+rollups.
 
 These are the reusable batch forms of the reference's hand-rolled
 stateful stream concepts (SURVEY.md §2.9): session assembly with a gap
-timeout (F1) and "most recent prior fact" lookups. Spark has no native
-as-of join (§2.4 gap list); the union-and-last-value formulation here is
-one shuffle + one ordered window — it never materializes candidate
-pairs, unlike a range-join probe.
+timeout (F1), bucketed range joins, resampling, EWMA, OHLC bars,
+attribution, co-occurrence and CUSUM change detection.
 """
 
 from __future__ import annotations
@@ -80,73 +79,6 @@ def range_join_bucketed(
         (rt >= lt - width * 1_000_000) & (rt <= lt + width * 1_000_000)
     )
     return joined.drop("__bucket")
-
-
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    ts_col: str = "ts",
-    value_cols: tuple[str, ...] | None = None,
-    inclusive: bool = True,
-) -> DataFrame:
-    """pandas ``merge_asof``-style join: each left row gets the right
-    side's most recent values at-or-before (``inclusive``) / strictly
-    before its timestamp, per ``on`` key.
-
-    Plan: tag sides → union → last(ignorenulls) over an ordered window →
-    keep left rows. One shuffle on the key, no pair explosion — the
-    scalable as-of formulation (a range join would score every candidate
-    pair). Right values come back as ``asof_<name>``; rows with no prior
-    right match hold nulls.
-
-    Determinism: when several right rows share the same (key, ts), the
-    window's final tie-break is a per-(key, ts) sequence ordered by the
-    value columns themselves, so last() always carries the row that
-    sorts greatest — stable across runs and partitionings (pandas
-    ``merge_asof`` takes the last *input-order* row; Spark frames have
-    no input order, so value-order is the deterministic analogue).
-    """
-    if value_cols is None:
-        value_cols = tuple(
-            c for c in right.columns if c not in (on, ts_col)
-        )
-    # side ordering at equal timestamps decides inclusivity:
-    # right-before-left (0 < 1) + frame ..-1  -> right@ts == left@ts counts
-    # left-before-right (0 < 1 flipped)       -> strictly-before semantics
-    right_side, left_side = (0, 1) if inclusive else (1, 0)
-    l_tagged = left.withColumn("__side", F.lit(left_side)).withColumn(
-        "__rseq", F.lit(0)
-    )
-    w_seq = Window.partitionBy(on, ts_col).orderBy(
-        *[F.col(c) for c in value_cols]
-    )
-    r_tagged = right.select(
-        F.col(on),
-        F.col(ts_col),
-        F.lit(right_side).alias("__side"),
-        F.row_number().over(w_seq).alias("__rseq"),
-        *[F.col(c).alias(f"asof_{c}") for c in value_cols],
-    )
-    unioned = l_tagged.unionByName(r_tagged, allowMissingColumns=True)
-    w = (
-        Window.partitionBy(on)
-        .orderBy(ts_col, "__side", "__rseq")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    carried = unioned.select(
-        "*",
-        *[
-            F.last(f"asof_{c}", ignorenulls=True).over(w).alias(f"__carry_{c}")
-            for c in value_cols
-        ],
-    )
-    out = carried.filter(F.col("__side") == left_side)
-    for c in value_cols:
-        out = out.withColumn(f"asof_{c}", F.col(f"__carry_{c}")).drop(
-            f"__carry_{c}"
-        )
-    return out.drop("__side", "__rseq")
 
 
 def cooccurrence_pairs(
@@ -516,68 +448,6 @@ def multi_touch_attribution(
             "touch_ts",
             "n_touches",
             "credit_cents",
-        )
-    )
-
-
-def ohlc_partial(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    value_col: str,
-    bucket: str = "hour",
-    tie_col: str = "event_id",
-) -> DataFrame:
-    """MERGEABLE form of the OHLC bar: open/close travel as whole
-    (ts, tie, value) structs under MIN/MAX — struct comparison is
-    lexicographic, so the minimum struct IS the earliest observation
-    and two partials merge by plain struct min/max. This is what lets
-    OHLC ride the epoch-partial streaming sink (rollup_sink) and
-    hierarchical rollups: order-dependent aggregates made associative
-    by carrying their ordering key.
-    """
-    return (
-        df.select(
-            F.col(key_col),
-            F.date_trunc(bucket, F.col(ts_col)).alias("bucket"),
-            F.struct(
-                F.col(ts_col).alias("ts"),
-                F.col(tie_col).alias("tie"),
-                F.col(value_col).alias("v"),
-            ).alias("__obs"),
-            F.col(value_col),
-        )
-        .groupBy(key_col, "bucket")
-        .agg(
-            F.min("__obs").alias("open_s"),
-            F.max("__obs").alias("close_s"),
-            F.max(value_col).alias("high"),
-            F.min(value_col).alias("low"),
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        )
-    )
-
-
-def merge_ohlc(partials: DataFrame, key_col: str) -> DataFrame:
-    """Fold OHLC partials (any batch split of the stream) into final
-    bars — same output contract as ohlc_bars."""
-    return (
-        partials.groupBy(key_col, "bucket")
-        .agg(
-            F.min("open_s").alias("open_s"),
-            F.max("close_s").alias("close_s"),
-            F.max("high").alias("high"),
-            F.min("low").alias("low"),
-            F.sum("n_events").cast("bigint").alias("n_events"),
-        )
-        .select(
-            key_col,
-            "bucket",
-            F.col("open_s.v").alias("open"),
-            "high",
-            "low",
-            F.col("close_s.v").alias("close"),
-            "n_events",
         )
     )
 

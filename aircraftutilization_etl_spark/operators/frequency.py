@@ -164,10 +164,11 @@ def count_min_cells(
     width: int = CMS_WIDTH,
 ) -> DataFrame:
     """The pre-aggregation (depth, col) cell stream — one row per input
-    row per sketch row. Exposed separately so streaming maintenance can
-    route cells through a mergeable count rollup (the epoch-partial
-    sink): CMS increments are counts, so a replay-idempotent count
-    rollup keyed by (depth, col) IS an incrementally-maintained CMS."""
+    row per sketch row. Exposed separately so incremental maintenance
+    can route cells through a mergeable count rollup
+    (``warehouse.partial_rollup``/``merge_rollups``): CMS increments are
+    counts, so a count rollup keyed by (depth, col) IS an
+    incrementally-maintained CMS."""
     return df.select(
         F.posexplode(
             F.array(*[_cms_col(F.col(key_col), i, width) for i in range(depth)])

@@ -1,6 +1,6 @@
-"""Scale patterns: salted skew joins and bucketed co-located joins.
+"""Scale patterns: salted skew joins and Bloom-filter join pruning.
 
-These are the two levers SURVEY.md §4.3 and the 100 TB design brief call
+These are two levers SURVEY.md §4.3 and the 100 TB design brief call
 out beyond what AQE gives for free:
 
 - **Salting** defeats hot-key skew that AQE's skew-join splitting can't
@@ -8,16 +8,14 @@ out beyond what AQE gives for free:
   build row per split). The salted join spreads each hot key over
   ``n_salts`` sub-keys and replicates the small side once per salt —
   result-identical to the plain join, verified by oracle.
-- **Bucketing** pre-shuffles fact tables at write time: two tables
-  bucketed on the same key with the same bucket count join with ZERO
-  exchanges at read time — the shuffle is paid once at ingest, amortized
-  over every downstream join (the Spark answer to the co-located-join
-  requirement).
+- **Bloom pruning** cuts a huge probe side before its shuffle with a
+  few-KB bit array over the selective build side's keys; the exact
+  join afterwards removes the false positives.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -61,37 +59,6 @@ def salted_join(
     )
     joined = left.join(right, on=[on, "__salt"], how=how)
     return joined.drop("__salt")
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int,
-    sort_col: str | None = None,
-) -> None:
-    """Persist as a bucketed (and optionally sorted) table — the one-time
-    shuffle that co-locates every future join/agg on ``bucket_col``."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table)
-
-
-def colocated_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str
-) -> DataFrame:
-    """Join two same-bucketed tables — with matching bucketing the plan
-    contains no Exchange (verified by tests/test_scale.py).
-
-    The merge hint pins the sort-merge strategy bucketing feeds: for a
-    small table the planner would pick broadcast and skip the bucketed
-    scan ("Bucketed: false"), hiding exactly the property this operator
-    exists to exploit at fact-table scale.
-    """
-    return spark.table(left_table).hint("merge").join(
-        spark.table(right_table), on=on
-    )
 
 
 # --- Bloom-filter join pruning -------------------------------------------

@@ -29,8 +29,9 @@ tables alone.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 # Public-suffix snapshot (bundled, offline): second-level suffixes
 # under which the registrable domain takes THREE labels. A handful of
@@ -165,82 +166,6 @@ def synthetic_url_expr(
     )
 
 
-def _split_url(url: Column) -> dict[str, Column]:
-    """Scheme/host/port/path/query pieces of an absolute URL column.
-
-    Pure split_part/substring surgery (one pass, codegen-friendly, no
-    regex backtracking): fragment first, then query, then authority,
-    then host:port — the grammar's own precedence, so each delimiter
-    is interpreted only in the region where it is legal.
-    """
-    scheme_raw = F.split_part(url, F.lit("://"), F.lit(1))
-    rest = F.substring(
-        url, F.length(scheme_raw) + 4, F.length(url)
-    )
-    nofrag = F.split_part(rest, F.lit("#"), F.lit(1))
-    qstr = F.split_part(nofrag, F.lit("?"), F.lit(2))
-    authpath = F.split_part(nofrag, F.lit("?"), F.lit(1))
-    auth = F.split_part(authpath, F.lit("/"), F.lit(1))
-    path = F.substring(
-        authpath, F.length(auth) + 1, F.length(authpath)
-    )
-    return {
-        "scheme": F.lower(scheme_raw),
-        "host_raw": F.lower(F.split_part(auth, F.lit(":"), F.lit(1))),
-        "port": F.split_part(auth, F.lit(":"), F.lit(2)),
-        "path": path,
-        "query": qstr,
-    }
-
-
-def canonical_url_expr(url: Column) -> Column:
-    """Canonical form of an absolute URL column.
-
-    Rules (each replayed independently by the SQL oracle):
-    1. scheme and host lowercased;
-    2. one leading ``www.`` label stripped from the host;
-    3. default ports dropped (``:80`` for http, ``:443`` for https),
-       any other explicit port kept;
-    4. fragment dropped;
-    5. tracking query params dropped (``utm_*``, ``fbclid``, ``gclid``,
-       ``ref``), surviving params kept IN ORIGINAL ORDER (no resort —
-       two URLs differing in real-param order are genuinely different
-       resources more often than not);
-    6. one trailing slash stripped from a non-root path.
-
-    Scale: a per-row projection over codegen string primitives — no
-    UDF, no shuffle, linear in bytes; at 100 TB this runs inside the
-    scan stage of whatever consumer follows.
-    """
-    p = _split_url(url)
-    host = F.when(
-        p["host_raw"].startswith("www."),
-        F.substring(p["host_raw"], 5, F.length(p["host_raw"])),
-    ).otherwise(p["host_raw"])
-    port_c = F.when(
-        (p["port"] == "")
-        | ((p["scheme"] == "http") & (p["port"] == "80"))
-        | ((p["scheme"] == "https") & (p["port"] == "443")),
-        F.lit(""),
-    ).otherwise(F.concat(F.lit(":"), p["port"]))
-    path_c = F.when(
-        p["path"].endswith("/") & (F.length(p["path"]) > 1),
-        F.substring(p["path"], 1, F.length(p["path"]) - 1),
-    ).otherwise(p["path"])
-    keep = F.filter(
-        F.split(p["query"], "&"),
-        lambda x: (x != "")
-        & ~x.startswith("utm_")
-        & ~x.startswith("fbclid=")
-        & ~x.startswith("gclid=")
-        & ~x.startswith("ref="),
-    )
-    query_c = F.when(
-        F.size(keep) > 0, F.concat(F.lit("?"), F.array_join(keep, "&"))
-    ).otherwise(F.lit(""))
-    return F.concat(p["scheme"], F.lit("://"), host, port_c, path_c, query_c)
-
-
 def with_url_columns(
     df,
     doc_id: str = "doc_id",
@@ -251,7 +176,7 @@ def with_url_columns(
 ):
     """``df`` + (url, canonical_url, domain) via LAYERED projections.
 
-    The single-expression forms below are correct but, composed
+    Single-expression canonical/domain forms are correct but, composed
     (canonical(synthetic(url)) + domain(synthetic(url))), they inline
     the synthetic-URL subtree into every one of its ~20 references —
     the optimized plan for the straightforward composition measured
@@ -265,10 +190,9 @@ def with_url_columns(
     the derivation stays compact even when Catalyst inlines it
     wholesale into a pushed-down predicate. Pushing the domain filter
     into the scan is exactly right at 100 TB (blocked rows never leave
-    the map stage); it just has to be a compact expression. Same rows,
-    same values as the single-expression forms — the fixture pins
-    assert all derivations agree (tests/test_url_fixtures.py) and the
-    DuckDB oracles pin the values.
+    the map stage); it just has to be a compact expression. The
+    hand-written fixtures and their SQL replay pin the rules
+    (tests/test_url_fixtures.py) and the DuckDB oracles pin the values.
     """
     key = _memo_key(df, "synthetic", doc_id, source, url_col)
     url = _EXPR_MEMO.get(key)
@@ -291,7 +215,24 @@ def with_canonical_columns(
     """``df`` (already carrying ``url_col``) + canonical_url + domain —
     the canonicalization stage of :func:`with_url_columns`, exposed so
     literal-URL fixtures and real URL columns use the identical layered
-    derivation."""
+    derivation.
+
+    Canonical form (each rule replayed independently by the SQL oracle):
+    1. scheme and host lowercased;
+    2. one leading ``www.`` label stripped from the host;
+    3. default ports dropped (``:80`` for http, ``:443`` for https),
+       any other explicit port kept;
+    4. fragment dropped;
+    5. tracking query params dropped (``utm_*``, ``fbclid``, ``gclid``,
+       ``ref``), surviving params kept IN ORIGINAL ORDER (no resort —
+       two URLs differing in real-param order are genuinely different
+       resources more often than not);
+    6. one trailing slash stripped from a non-root path.
+
+    Registrable domain: the last two host labels, or three when the
+    two-label tail is a bundled public-suffix entry
+    (MULTI_LABEL_SUFFIXES); single-label hosts pass through unchanged.
+    """
     key = _memo_key(df, "canon", url_col, canonical_col, domain_col)
     layers = _EXPR_MEMO.get(key)
     if layers is None:
@@ -393,24 +334,31 @@ def _canon_layer_exprs(
     return l1_exprs, l2_exprs, l3_exprs
 
 
-def registrable_domain_expr(url: Column) -> Column:
-    """Registrable domain of an absolute URL column: the last two host
-    labels, or three when the two-label tail is a bundled public-suffix
-    entry (MULTI_LABEL_SUFFIXES). ``www.`` and any other subdomains
-    never change it. Single-label hosts (``localhost``) pass through
-    unchanged. Null-safe under ANSI mode: out-of-range label reads use
-    ``F.get`` (0-based, returns NULL) rather than negative
-    ``element_at``.
+def domain_admission_batch(
+    docs: DataFrame,
+    cap: int,
+    domain_col: str = "domain",
+    id_col: str = "doc_id",
+    ts_col: str = "ts",
+) -> DataFrame:
+    """First-come admission: the first ``cap`` documents per domain in
+    (ts, id) order — the rule an ingest pipeline can decide per arrival.
+
+    Scale: the rn <= cap filter on a constant lowers to the map-side
+    WindowGroupLimit (the q_domain_caps plan shape), so a head domain
+    costs a top-k heap per task, never a full per-domain sort.
     """
-    p = _split_url(url)
-    labels = F.split(p["host_raw"], r"\.")
-    n = F.size(labels)
-    last2 = F.concat_ws(".", F.get(labels, n - 2), F.get(labels, n - 1))
-    last3 = F.concat_ws(".", F.get(labels, n - 3), last2)
+    if cap < 1:
+        raise ValueError(f"cap must be >= 1, got {cap}")
+    w = Window.partitionBy(F.col(domain_col)).orderBy(
+        F.col(ts_col), F.col(id_col)
+    )
     return (
-        F.when(n <= 1, p["host_raw"])
-        .when(
-            (n >= 3) & last2.isin(*MULTI_LABEL_SUFFIXES), last3
+        docs.select(
+            F.col(domain_col).alias("domain"),
+            F.col(id_col).alias("doc_id"),
+            F.col(ts_col).alias("ts"),
         )
-        .otherwise(last2)
+        .withColumn("admitted_rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("admitted_rank") <= cap)
     )

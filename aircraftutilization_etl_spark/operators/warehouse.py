@@ -174,23 +174,6 @@ def with_zvalue(
     return df.withColumn(out, F.expr(zvalue_sql(col_a, col_b)))
 
 
-def zorder_repartition(
-    df: DataFrame, col_a: str, col_b: str, n_files: int
-) -> DataFrame:
-    """Range-repartition by z-value — the write-path layout step.
-
-    Each output partition (→ file) covers a contiguous z-range, i.e. a
-    bounded rectangle stack in (a, b); parquet min/max stats on BOTH
-    columns then prune scans with predicates on either. Range boundaries
-    come from Spark's reservoir sampling, so file SIZES are balanced but
-    boundaries are not bit-deterministic — fine for a layout (contents
-    are, placement tolerance isn't semantic). Cost: one pass + one range
-    shuffle, the same as any sorted write.
-    """
-    z = with_zvalue(df, col_a, col_b)
-    return z.repartitionByRange(n_files, F.col("zval"))
-
-
 def zorder_bucket_stats(
     df: DataFrame, col_a: str, col_b: str, bucket_shift: int = 24
 ) -> DataFrame:
@@ -227,7 +210,7 @@ def snapshot_diff(
     Null-safe per-column comparison (``eqNullSafe``: null==null is
     unchanged, null→value is a change). One full-outer join on the key
     is the whole cost — both sides shuffle once; at 100 TB co-located
-    or bucketed snapshots make it exchange-free (see colocated_join).
+    or bucketed snapshots make it exchange-free.
     """
     o = old.select(key_col, *compare_cols).alias("o")
     n = new.select(key_col, *compare_cols).alias("n")

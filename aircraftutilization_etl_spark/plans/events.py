@@ -3,8 +3,7 @@
 The reference's hand-rolled stateful stream (SURVEY.md §2.9) is, in batch
 form, exactly these shapes: session assembly with a gap timeout, window
 bucketing, and as-of ("most recent prior event") lookups. They run on the
-synthetic ``events`` table; the Structured Streaming variants live in
-``streaming/``.
+synthetic ``events`` table.
 """
 
 from __future__ import annotations

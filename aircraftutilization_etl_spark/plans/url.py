@@ -24,7 +24,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.url import MULTI_LABEL_SUFFIXES, with_url_columns
+from ..operators.url import (
+    MULTI_LABEL_SUFFIXES,
+    domain_admission_batch,
+    with_url_columns,
+)
 from .catalog import query, table
 from .quota import budget_allocate
 
@@ -432,19 +436,14 @@ def q_domain_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_domain_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-order per-domain admission: the first DOMAIN_CAP documents
-    of each registrable domain in arrival (doc_id) order — the batch
-    twin of ``streaming.curation_stream.domain_admission_stream``
-    (first-come semantics an ingest pipeline can actually decide,
-    vs q_domain_caps' whole-corpus md5 rank), catalog-exposed so the
-    streaming member's admission rule is itself DuckDB-oracled.
+    of each registrable domain in arrival (doc_id) order — first-come
+    semantics an ingest pipeline can actually decide, vs q_domain_caps'
+    whole-corpus md5 rank.
 
     Scale: q_domain_caps' exact plan — one per-domain window whose
     rn <= k constant filter lowers to the map-side WindowGroupLimit
-    (top-k heap per task, never a full per-domain sort); the streaming
-    form replaces the window with one carried long per domain.
+    (top-k heap per task, never a full per-domain sort).
     """
-    from ..streaming.curation_stream import domain_admission_batch
-
     d = _cdocs(spark, sf_dir).select("doc_id", "domain")
     return (
         domain_admission_batch(d, DOMAIN_CAP, ts_col="doc_id")

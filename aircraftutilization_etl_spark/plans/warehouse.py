@@ -180,9 +180,9 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked bit for bit.
 
     Scale: the z-value is a per-row integer projection (codegen, zero
-    cost at scan); the audit is one groupBy on the bucket prefix. The
-    write path (``zorder_repartition``) adds only a range shuffle —
-    the cost of any sorted write.
+    cost at scan); the audit is one groupBy on the bucket prefix. A
+    z-ordered write (range-repartition on the z-value) adds only a
+    range shuffle — the cost of any sorted write.
     """
     li = table(spark, sf_dir, "lineitem")
     return zorder_bucket_stats(li, "l_partkey", "l_suppkey", 12)

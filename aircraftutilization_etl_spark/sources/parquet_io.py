@@ -19,7 +19,6 @@ import json
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..schemas import empty_df, require_columns
@@ -47,47 +46,6 @@ def read_parquet_or_empty(
     if not fs.exists(jvm_path):
         return empty_df(spark, schema)
     return spark.read.schema(schema).parquet(path)
-
-
-def read_parquet_evolved(
-    spark: SparkSession, path: str, target: StructType
-) -> DataFrame:
-    """Schema-evolution-tolerant scan: parquet written across schema
-    generations (columns ADDED or RETIRED over time) reads back as ONE
-    frame in the target schema — the long-lived-sink reality the
-    strict reader above can't serve, because passing an explicit
-    schema makes old files silently yield nulls for absent columns
-    with no way to also drop retired ones.
-
-    Mechanics: scan with mergeSchema (footer-union of all file
-    schemas), then project to ``target`` — columns absent from every
-    file materialize as typed nulls, present columns CAST to the
-    target type (so the TARGET may widen uniformly, e.g. int files
-    read as a bigint column), and retired columns drop. Files must
-    agree on a stored column's physical type — parquet schema merge
-    rejects per-file type drift (int here, bigint there), which is a
-    WRITER bug this reader deliberately surfaces rather than papers
-    over. Missing path → typed empty frame, same as
-    read_parquet_or_empty.
-
-    Scale note: mergeSchema reads file FOOTERS, not data; column
-    pruning and predicate pushdown still reach the scan because the
-    projection is a plain select over the merged relation.
-    """
-    fs, jvm_path = hadoop_fs(spark, path)
-    if not fs.exists(jvm_path):
-        return empty_df(spark, target)
-    merged = spark.read.option("mergeSchema", "true").parquet(path)
-    have = {f.name for f in merged.schema.fields}
-    cols = [
-        (
-            F.col(f.name).cast(f.dataType)
-            if f.name in have
-            else F.lit(None).cast(f.dataType)
-        ).alias(f.name)
-        for f in target.fields
-    ]
-    return merged.select(*cols)
 
 
 class StateStore:
@@ -234,82 +192,3 @@ class StateStore:
         for _, name in stale[max(keep - 1, 0):]:
             fs, vpath = hadoop_fs(self.spark, f"{self.root}/{name}")
             fs.delete(vpath, True)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict[str, int]:
-    """Compact a parquet directory's small files toward
-    ``target_file_bytes`` per file; returns {files_before, files_after,
-    bytes}.
-
-    THE steady-state maintenance job of any high-cadence sink: a
-    5-minute append cadence writes ~288 small files/day/partition, and
-    at 100 TB the scan's task count (and the namenode/listing load)
-    grows with file count, not data size. Compaction rewrites the
-    directory as ceil(bytes / target) files via a round-robin
-    repartition and swaps it in with a rename pair. The swap is NOT
-    atomic: between staging the original aside and publishing the
-    compacted layout there is a brief window with nothing at ``path``
-    (concurrent readers can see FileNotFound). A crash inside that
-    window leaves the data intact under ``<path>__precompact``; the
-    next invocation detects the leftover and restores it before
-    compacting, so the job is safe to re-run after any crash. For a
-    window-free swap, run it against object stores / HDFS from the
-    orchestrator's housekeeping slot while no reader is scheduled —
-    the same slot as ``retention_purge``.
-    """
-    fs, jvm_path = hadoop_fs(spark, path)
-    tmp = f"{path.rstrip('/')}__compacting"
-    old = f"{path.rstrip('/')}__precompact"
-    _, tmp_path = hadoop_fs(spark, tmp)
-    _, old_path = hadoop_fs(spark, old)
-    # crash recovery: a prior run may have died mid-swap. Three cases:
-    #  - __precompact exists and path is missing → died between the two
-    #    renames: restore the original.
-    #  - __precompact and path both exist → died after publish but
-    #    before cleanup: the published layout is live, drop the stale
-    #    staging copy (it would make our own stage-aside rename fail).
-    #  - __compacting leftover → incomplete write, always safe to drop.
-    if fs.exists(old_path):
-        if not fs.exists(jvm_path):
-            if not fs.rename(old_path, jvm_path):
-                raise IOError(f"compaction: could not restore {old} to {path}")
-        else:
-            fs.delete(old_path, True)
-    if fs.exists(tmp_path):
-        fs.delete(tmp_path, True)
-    statuses = _parquet_files(fs, jvm_path)
-    files_before = len(statuses)
-    total_bytes = sum(s.getLen() for s in statuses)
-    n_out = max(1, -(-total_bytes // max(1, target_file_bytes)))
-    if files_before <= n_out:
-        return {
-            "files_before": files_before,
-            "files_after": files_before,
-            "bytes": total_bytes,
-        }
-    df = spark.read.parquet(path)
-    df.repartition(int(n_out)).write.mode("overwrite").parquet(tmp)
-    if not fs.rename(jvm_path, old_path):
-        raise IOError(f"compaction: could not stage {path} aside")
-    if not fs.rename(tmp_path, jvm_path):
-        # roll back: restore the original directory
-        fs.rename(old_path, jvm_path)
-        raise IOError(f"compaction: could not publish {tmp}")
-    fs.delete(old_path, True)
-    return {
-        "files_before": files_before,
-        "files_after": len(_parquet_files(fs, jvm_path)),
-        "bytes": total_bytes,
-    }
-
-
-def _parquet_files(fs, jvm_path) -> list:
-    return [
-        s
-        for s in fs.listStatus(jvm_path)
-        if s.isFile() and s.getPath().getName().endswith(".parquet")
-    ]

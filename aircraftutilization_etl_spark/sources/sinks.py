@@ -9,10 +9,7 @@ Engine-native equivalent (SURVEY.md §7 step 4): append-mode parquet
 partitioned by the landing date — date partitioning reproduces the
 hours/day time-bucketing for partition-pruned time-range scans, and a
 retention job reproduces the TTL by dropping expired partitions (cheap
-metadata-level deletes, no row rewrite). The mongo-spark connector remains
-a drop-in alternative (`format("mongodb")`) where operational parity with
-the reference deployment is required; it is not exercised here because the
-connector jar is not part of the public test environment.
+metadata-level deletes, no row rewrite).
 """
 
 from __future__ import annotations
@@ -30,6 +27,7 @@ logger = logging.getLogger(__name__)
 RETENTION_DAYS = 365  # reference db.py:43,52 (expireAfterSeconds = 365 d)
 PARTITION_COLUMN = "landed_date"
 TIME_FIELD = "landed_at"  # sink key with icao24: the reference timeField
+_GUARD_SCHEMA = f"icao24 string, {TIME_FIELD} timestamp, {PARTITION_COLUMN} date"
 
 
 def append_facts(
@@ -54,9 +52,9 @@ def append_facts(
     the same completed flights. The write anti-joins the batch on the
     sink key (icao24, ``landed_at``) against the rows already in its own
     target date partitions, so replays append nothing. That guard scan
-    runs once, inside the write, partition-pruned to the touched dates (a
-    landing batch touches ~today) and column-pruned to the two key
-    columns — O(recent partitions), not O(sink). An Observation on the
+    runs once, inside the write, over the touched date directories only
+    (a landing batch touches ~today) and the two key columns —
+    O(touched partitions), not O(sink). An Observation on the
     written rows tells a fully replayed batch (0 rows appended; a
     partitioned append of no rows writes no file) from a real append.
     ``batch_id`` (the source state generation) is stamped as a lineage
@@ -86,13 +84,8 @@ def append_facts(
             logger.warning("Empty complete flights dataframe")
             return False
         fresh = out
-        fs, jvm_path = hadoop_fs(df.sparkSession, path)
-        if fs.exists(jvm_path):
-            existing = (
-                df.sparkSession.read.parquet(path)
-                .filter(F.col(PARTITION_COLUMN).isin(touched))
-                .select("icao24", TIME_FIELD)
-            )
+        existing = _landed_keys(df.sparkSession, path, touched)
+        if existing is not None:
             fresh = out.join(existing, on=["icao24", TIME_FIELD], how="left_anti")
         written = Observation("appended_facts")
         fresh = fresh.observe(written, F.count(F.lit(1)).alias("n"))
@@ -103,6 +96,34 @@ def append_facts(
         return True
     finally:
         out.unpersist()
+
+
+def _landed_keys(
+    spark: SparkSession, path: str, dates: list[dt.date]
+) -> DataFrame | None:
+    """The sink keys (icao24, ``landed_at``) already stored under the
+    given landing dates; None when none of their directories exists.
+
+    Reads only those directories, with ``basePath`` keeping the date a
+    partition column and an explicit schema, so building the frame
+    lists no other partition and opens no footer: no Spark job runs
+    before the write that consumes it.
+    """
+    root = path.rstrip("/")
+    dirs = []
+    for d in dates:
+        part = f"{root}/{PARTITION_COLUMN}={d.isoformat()}"
+        fs, jvm_path = hadoop_fs(spark, part)
+        if fs.exists(jvm_path):
+            dirs.append(part)
+    if not dirs:
+        return None
+    return (
+        spark.read.schema(_GUARD_SCHEMA)
+        .option("basePath", root)
+        .parquet(*dirs)
+        .select("icao24", TIME_FIELD)
+    )
 
 
 def retention_purge(

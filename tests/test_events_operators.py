@@ -1,10 +1,10 @@
-"""Sessionize / as-of join operator unit tests with hand-built streams."""
+"""Event-stream operator unit tests with hand-built streams."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-from aircraftutilization_etl_spark.operators.events import asof_join, sessionize
+from aircraftutilization_etl_spark.operators.events import sessionize
 
 BASE = dt.datetime(2024, 4, 5, 10, 0, 0)
 
@@ -86,107 +86,6 @@ def test_range_join_no_duplicate_pairs_across_buckets(spark):
         left_ts="l_ts", right_ts="r_ts",
     )
     assert out.count() == 1
-
-
-def test_asof_join_inclusive_and_missing(spark):
-    left = spark.createDataFrame(
-        [("u", _m(5), "e1"), ("u", _m(20), "e2"), ("v", _m(1), "e3")],
-        "k string, ts timestamp, name string",
-    )
-    right = spark.createDataFrame(
-        [("u", _m(0), 1.0), ("u", _m(20), 2.0), ("u", _m(30), 3.0)],
-        "k string, ts timestamp, price double",
-    )
-    out = {r["name"]: r["asof_price"]
-           for r in asof_join(left, right, on="k").collect()}
-    assert out["e1"] == 1.0   # most recent at-or-before 10:05
-    assert out["e2"] == 2.0   # equal timestamp counts (inclusive)
-    assert out["e3"] is None  # key with no right rows -> null
-
-
-def test_asof_join_strict_excludes_equal_ts(spark):
-    left = spark.createDataFrame(
-        [("u", _m(20), "e2")], "k string, ts timestamp, name string"
-    )
-    right = spark.createDataFrame(
-        [("u", _m(0), 1.0), ("u", _m(20), 2.0)],
-        "k string, ts timestamp, price double",
-    )
-    out = asof_join(left, right, on="k", inclusive=False).collect()
-    assert out[0]["asof_price"] == 1.0  # same-ts right row excluded
-
-
-def test_asof_join_equal_ts_tie_break_deterministic(spark):
-    """Several right rows at the same (key, ts): last() must carry the
-    one that sorts greatest by the value columns, on every run and under
-    any partitioning (ADVICE r1 nondeterminism fix)."""
-    left = spark.createDataFrame(
-        [("u", _m(20), "e")], "k string, ts timestamp, name string"
-    )
-    ties = [("u", _m(10), p) for p in (3.0, 9.0, 1.0, 7.0)]
-    for n_parts in (1, 4):
-        right = spark.createDataFrame(
-            ties, "k string, ts timestamp, price double"
-        ).repartition(n_parts)
-        for _ in range(3):
-            out = asof_join(left, right, on="k").collect()
-            assert out[0]["asof_price"] == 9.0
-
-
-def test_asof_join_randomized_against_model(spark):
-    """Seeded-random streams vs an independent scalar model (right rows
-    de-duplicated per (key, ts) so tie order can't differ)."""
-    import random
-
-    from aircraftutilization_etl_spark.operators.events import asof_join
-
-    rng = random.Random(99)
-    keys = ["a", "b", "c"]
-    right_rows = []
-    used = set()
-    for _ in range(40):
-        k, t = rng.choice(keys), rng.randrange(0, 500)
-        if (k, t) in used:
-            continue
-        used.add((k, t))
-        right_rows.append((k, _m(t), float(rng.randrange(100))))
-    left_rows = [
-        (rng.choice(keys), _m(rng.randrange(0, 500)), i) for i in range(60)
-    ]
-    left = spark.createDataFrame(
-        left_rows, "k string, ts timestamp, row_id long"
-    )
-    right = spark.createDataFrame(
-        right_rows, "k string, ts timestamp, price double"
-    )
-
-    def model(k, ts, inclusive):
-        cands = [
-            (t, v) for (kk, t, v) in right_rows
-            if kk == k and (t <= ts if inclusive else t < ts)
-        ]
-        return max(cands)[1] if cands else None
-
-    for inclusive in (True, False):
-        got = {
-            r["row_id"]: r["asof_price"]
-            for r in asof_join(left, right, on="k", inclusive=inclusive).collect()
-        }
-        want = {i: model(k, ts, inclusive) for (k, ts, i) in left_rows}
-        assert got == want
-
-
-def test_asof_join_keeps_left_columns_and_count(spark):
-    left = spark.createDataFrame(
-        [("u", _m(i), f"e{i}") for i in range(5)],
-        "k string, ts timestamp, name string",
-    )
-    right = spark.createDataFrame(
-        [("u", _m(2), 9.0)], "k string, ts timestamp, price double"
-    )
-    out = asof_join(left, right, on="k")
-    assert out.count() == 5  # left-preserving
-    assert set(out.columns) == {"k", "ts", "name", "asof_price"}
 
 
 def test_cooccurrence_pairs_counts_keys_not_events(spark):
@@ -477,46 +376,6 @@ class TestMultiTouchAttribution:
             ).count()
             == 0
         )
-
-
-class TestMergeableOHLC:
-    def test_arbitrary_batch_splits_merge_to_batch_bars(self, spark):
-        import random
-
-        from pyspark.sql import functions as F
-
-        from aircraftutilization_etl_spark.operators.events import (
-            merge_ohlc,
-            ohlc_bars,
-            ohlc_partial,
-        )
-
-        rng = random.Random(3)
-        rows = [
-            (
-                i,
-                f"2024-01-01 {10 + rng.randint(0, 2):02d}:{rng.randint(0, 59):02d}:00",
-                rng.choice(["a", "b"]),
-                round(rng.uniform(1, 100), 2),
-            )
-            for i in range(300)
-        ]
-        mk = lambda rs: spark.createDataFrame(
-            rs, "event_id long, ts_s string, event_type string, value double"
-        ).withColumn("ts", F.col("ts_s").cast("timestamp"))
-        whole = mk(rows)
-        cuts = [rows[:47], rows[47:180], rows[180:]]
-        merged = merge_ohlc(
-            ohlc_partial(mk(cuts[0]), "event_type", "ts", "value")
-            .unionByName(ohlc_partial(mk(cuts[1]), "event_type", "ts", "value"))
-            .unionByName(ohlc_partial(mk(cuts[2]), "event_type", "ts", "value")),
-            "event_type",
-        )
-        batch = ohlc_bars(whole, "event_type", "ts", "value")
-        cols = ["event_type", "bucket", "open", "high", "low", "close", "n_events"]
-        assert {tuple(r) for r in merged.select(cols).collect()} == {
-            tuple(r) for r in batch.select(cols).collect()
-        }
 
 
 class TestCusum:

@@ -266,6 +266,48 @@ def test_append_facts_replay_straddling_partial_write(spark, tmp_path):
     assert spark.read.parquet(path).count() == 4
 
 
+
+def test_append_facts_guard_reads_only_touched_partitions(spark, tmp_path):
+    """The replay guard is O(touched partitions): over a 40-date sink,
+    building the guard frame for one landing date runs no Spark job (no
+    parallel partition-discovery listing, no schema-inference footer
+    read) and its scan covers only that date's directory. A replay of
+    that date still appends nothing."""
+    from aircraftutilization_etl_spark.schemas import COMPLETE_FLIGHTS_SCHEMA
+    from aircraftutilization_etl_spark.sources.sinks import _landed_keys
+
+    path = str(tmp_path / "facts")
+    first = dt.datetime(2026, 6, 1, 12)
+    history = spark.createDataFrame(
+        [
+            (f"a{i:05d}", 10, first + dt.timedelta(days=i), None, None, None, None, None, None)
+            for i in range(40)
+        ],
+        COMPLETE_FLIGHTS_SCHEMA,
+    )
+    assert append_facts(history, path) is True
+    day = (first + dt.timedelta(days=39)).date()
+
+    sc = spark.sparkContext
+    group = "sink-guard-build"
+    sc.setJobGroup(group, "build the replay guard frame")
+    try:
+        keys = _landed_keys(spark, path, [day])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    files = keys.inputFiles()
+    assert files
+    assert all(f"/landed_date={day.isoformat()}/" in f for f in files), files
+    assert _landed_keys(spark, path, [dt.date(2030, 1, 1)]) is None
+
+    parquet = sorted(pathlib.Path(path).rglob("*.parquet"))
+    replay = history.filter(history.landed_at >= dt.datetime.combine(day, dt.time()))
+    assert append_facts(replay, path) is False
+    assert sorted(pathlib.Path(path).rglob("*.parquet")) == parquet
+
+
 def test_state_store_time_travel(spark, tmp_path):
     """Every retained generation stays readable as a consistent
     snapshot; vacuumed generations are rejected by name."""
@@ -289,106 +331,3 @@ def test_state_store_time_travel(spark, tmp_path):
     store.vacuum(keep=1)
     with pytest.raises(ValueError, match="unknown or vacuumed"):
         store.read_version(v1)
-
-
-def test_compact_parquet_shrinks_file_count(spark, tmp_path):
-    from aircraftutilization_etl_spark.sources.parquet_io import (
-        compact_parquet,
-    )
-
-    path = str(tmp_path / "many")
-    # 40 tiny files
-    spark.range(0, 4000).repartition(40).write.parquet(path)
-    before = spark.read.parquet(path)
-    before_sum = before.agg({"id": "sum"}).first()[0]
-
-    stats = compact_parquet(spark, path, target_file_bytes=10**9)
-    assert stats["files_before"] == 40
-    assert stats["files_after"] == 1
-    after = spark.read.parquet(path)
-    assert after.count() == 4000
-    assert after.agg({"id": "sum"}).first()[0] == before_sum
-    # idempotent: already compact -> no rewrite
-    stats2 = compact_parquet(spark, path, target_file_bytes=10**9)
-    assert stats2["files_before"] == stats2["files_after"] == 1
-
-
-def test_compact_parquet_recovers_from_crashed_swap(spark, tmp_path):
-    """A crash between the two swap renames leaves the data only under
-    __precompact; the next invocation must restore it before (or
-    instead of) compacting. A crash after publish but before cleanup
-    leaves a stale __precompact next to live data; the next invocation
-    must drop it so its own stage-aside rename can succeed."""
-    import os
-    import shutil
-
-    from aircraftutilization_etl_spark.sources.parquet_io import (
-        compact_parquet,
-    )
-
-    path = str(tmp_path / "facts")
-    spark.range(0, 1000).repartition(8).write.parquet(path)
-
-    # case 1: died between renames — nothing at path, data staged aside
-    os.rename(path, path + "__precompact")
-    stats = compact_parquet(spark, path, target_file_bytes=10**9)
-    assert not os.path.exists(path + "__precompact")
-    assert spark.read.parquet(path).count() == 1000
-    assert stats["files_after"] == 1
-
-    # case 2: died after publish, stale __precompact + stale tmp remain
-    shutil.copytree(path, path + "__precompact")
-    os.makedirs(path + "__compacting", exist_ok=True)
-    stats2 = compact_parquet(spark, path, target_file_bytes=10**9)
-    assert not os.path.exists(path + "__precompact")
-    assert not os.path.exists(path + "__compacting")
-    assert spark.read.parquet(path).count() == 1000
-    assert stats2["files_before"] == stats2["files_after"] == 1
-
-
-class TestEvolvedRead:
-    def test_generations_unify_to_target(self, spark, tmp_path):
-        from pyspark.sql.types import StructType
-
-        from aircraftutilization_etl_spark.sources.parquet_io import (
-            read_parquet_evolved,
-        )
-
-        path = str(tmp_path / "sink")
-        # generation 1: (id int, v int) — before the column was added
-        spark.createDataFrame([(1, 10), (2, 20)], "id int, v int").write.mode(
-            "append"
-        ).parquet(path)
-        # generation 2: adds `tag`; the TARGET widens id/v to bigint
-        spark.createDataFrame(
-            [(3, 30, "x")], "id int, v int, tag string"
-        ).write.mode("append").parquet(path)
-        target = StructType.fromDDL("id bigint, v bigint, tag string")
-        out = read_parquet_evolved(spark, path, target)
-        assert [f.simpleString() for f in out.schema.fields] == [
-            "id:bigint", "v:bigint", "tag:string",
-        ]
-        rows = {r.id: (r.v, r.tag) for r in out.collect()}
-        assert rows == {1: (10, None), 2: (20, None), 3: (30, "x")}
-
-    def test_retired_columns_drop_and_missing_path_is_empty(
-        self, spark, tmp_path
-    ):
-        from pyspark.sql.types import StructType
-
-        from aircraftutilization_etl_spark.sources.parquet_io import (
-            read_parquet_evolved,
-        )
-
-        path = str(tmp_path / "sink2")
-        spark.createDataFrame(
-            [(1, "junk", 2.5)], "id int, legacy string, v double"
-        ).write.parquet(path)
-        target = StructType.fromDDL("id bigint, v double")
-        out = read_parquet_evolved(spark, path, target)
-        assert out.columns == ["id", "v"]
-        assert out.collect()[0].asDict() == {"id": 1, "v": 2.5}
-        empty = read_parquet_evolved(
-            spark, str(tmp_path / "nope"), target
-        )
-        assert empty.columns == ["id", "v"] and empty.count() == 0

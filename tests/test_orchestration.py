@@ -1,17 +1,15 @@
-"""Orchestration (example Airflow DAGs) and optional Mongo sink adapter.
+"""Orchestration (example Airflow DAGs).
 
-Both are optional-dependency surfaces: the modules must import and the
-engine must run with neither airflow nor pymongo installed, failing only
-when the optional path is actually invoked — with a typed, actionable
-error. Structure (cadences, retries, task order) is pinned against the
-reference DAG (src/dags/flight_utilization.py:20,33,48,64-78).
+An optional-dependency surface: the module must import and the engine
+must run without airflow installed, failing only when the optional path
+is actually invoked — with a typed, actionable error. Structure
+(cadences, retries, task order) is pinned against the reference DAG
+(src/dags/flight_utilization.py:20,33,48,64-78).
 """
 
 from __future__ import annotations
 
-import sys
 import time
-import types
 from datetime import timedelta
 
 import pytest
@@ -25,12 +23,6 @@ from aircraftutilization_etl_spark.orchestration import (
     complete_flights_report,
     metadata_report,
 )
-from aircraftutilization_etl_spark.sources.mongo import (
-    MongoSinkUnavailable,
-    _partition_writer,
-    ensure_timeseries_collection,
-    write_facts_mongodb,
-)
 
 try:
     import airflow  # noqa: F401
@@ -38,13 +30,6 @@ try:
     HAVE_AIRFLOW = True
 except ImportError:
     HAVE_AIRFLOW = False
-
-try:
-    import pymongo  # noqa: F401
-
-    HAVE_PYMONGO = True
-except ImportError:
-    HAVE_PYMONGO = False
 
 
 class TestDagSpecs:
@@ -128,77 +113,3 @@ class TestTaskBodies:
         rows = facts.collect()
         assert len(rows) == 1
         assert rows[0]["icao24"] == "a1" and rows[0]["model"] == "A320"
-
-
-class FakeCollection:
-    def __init__(self):
-        self.batches = []
-
-    def insert_many(self, docs):
-        self.batches.append(list(docs))
-
-
-class FakeMongoModule(types.ModuleType):
-    def __init__(self):
-        super().__init__("pymongo")
-        self.collection = FakeCollection()
-        self.closed = False
-        outer = self
-
-        class _Client:
-            def __init__(self, uri):
-                self.uri = uri
-
-            def __getitem__(self, db):
-                return {"flights": outer.collection}
-
-            def close(self):
-                outer.closed = True
-
-        self.MongoClient = _Client
-
-
-class TestMongoAdapter:
-    @pytest.mark.skipif(HAVE_PYMONGO, reason="pymongo installed")
-    def test_pymongo_path_raises_typed_error(self, spark):
-        df = spark.range(1).withColumnRenamed("id", "icao24")
-        with pytest.raises(MongoSinkUnavailable, match="pymongo"):
-            write_facts_mongodb(df, "mongodb://x", "db", via="pymongo")
-
-    @pytest.mark.skipif(HAVE_PYMONGO, reason="pymongo installed")
-    def test_ensure_collection_raises_typed_error(self):
-        with pytest.raises(MongoSinkUnavailable, match="pymongo"):
-            ensure_timeseries_collection(db=None)
-
-    def test_connector_path_raises_typed_error_without_jar(self, spark):
-        df = spark.range(1).withColumnRenamed("id", "icao24")
-        with pytest.raises(MongoSinkUnavailable, match="connector"):
-            write_facts_mongodb(df, "mongodb://x", "db", via="connector")
-
-    def test_empty_batch_skipped(self, spark):
-        df = spark.range(0).withColumnRenamed("id", "icao24")
-        # returns False before touching any mongo dependency
-        assert write_facts_mongodb(df, "mongodb://x", "db") is False
-
-    def test_bad_via_rejected(self, spark):
-        df = spark.range(1)
-        with pytest.raises(ValueError, match="via"):
-            write_facts_mongodb(df, "mongodb://x", "db", via="smoke-signal")
-
-    def test_partition_writer_chunks_and_projects(self, monkeypatch):
-        """The executor-side closure: field projection, insert_many
-        chunking, client cleanup — driven with a fake pymongo."""
-        fake = FakeMongoModule()
-        monkeypatch.setitem(sys.modules, "pymongo", fake)
-        writer = _partition_writer(
-            "mongodb://x", "db", "flights",
-            fields=["icao24", "landed_at"], batch_size=2,
-        )
-        rows = [
-            {"icao24": f"a{i}", "landed_at": i, "extra": "dropped"}
-            for i in range(5)
-        ]
-        writer(iter(rows))
-        assert [len(b) for b in fake.collection.batches] == [2, 2, 1]
-        assert fake.collection.batches[0][0] == {"icao24": "a0", "landed_at": 0}
-        assert fake.closed

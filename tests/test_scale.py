@@ -1,25 +1,11 @@
 """Scale-pattern tests: salted joins are result-identical and actually
-spread hot keys; bucketed tables join without exchanges."""
+spread hot keys; Bloom pruning keeps the plain join's result."""
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 from pyspark.sql import functions as F
 
-from aircraftutilization_etl_spark.operators.scale import (
-    colocated_join,
-    salted_join,
-    write_bucketed,
-)
-
-
-def _plan(df):
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("simple")
-    return buf.getvalue()
+from aircraftutilization_etl_spark.operators.scale import salted_join
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -65,24 +51,6 @@ def test_salting_spreads_hot_key(spark):
     salt = F.pmod(F.xxhash64(*skewed.columns), F.lit(8)).cast("int")
     n_subkeys = skewed.withColumn("s", salt).select("k", "s").distinct().count()
     assert n_subkeys >= 6  # one hot key becomes ~8 disjoint join keys
-
-
-def test_bucketed_join_has_no_exchange(spark):
-    left = spark.range(0, 1000).withColumn("v", F.col("id") * 2)
-    right = spark.range(0, 1000).withColumn("w", F.col("id") + 1)
-    write_bucketed(left, "t_bucketed_left", "id", 4, sort_col="id")
-    write_bucketed(right, "t_bucketed_right", "id", 4, sort_col="id")
-    try:
-        joined = colocated_join(spark, "t_bucketed_left", "t_bucketed_right", "id")
-        plan = _plan(joined)
-        assert "Exchange" not in plan  # co-located: shuffle paid at write
-        assert joined.count() == 1000
-        # contrast: the same join on raw frames needs exchanges
-        raw_plan = _plan(left.join(right, "id"))
-        assert "Exchange" in raw_plan or "Broadcast" in raw_plan
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_bucketed_left")
-        spark.sql("DROP TABLE IF EXISTS t_bucketed_right")
 
 
 # --- Bloom-filter join pruning -------------------------------------------

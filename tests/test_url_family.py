@@ -3,10 +3,14 @@
 from __future__ import annotations
 
 import contextlib
+import datetime as dt
 import io
+import random
 
 import pyspark.sql.functions as F
+import pytest
 
+from aircraftutilization_etl_spark.operators.url import domain_admission_batch
 from aircraftutilization_etl_spark.plans import CATALOG
 from aircraftutilization_etl_spark.plans.url import (
     BLOCKED_DOMAINS,
@@ -133,3 +137,43 @@ def test_url_canonical_zero_shuffle_projection(spark):
     plan = _plan(CATALOG["q_url_canonical"].spark(spark, SF))
     assert "Join" not in plan
     assert "HashAggregate" not in plan
+
+
+ADMISSION_CAP = 5
+
+
+def _admission_log(spark):
+    """Seeded document log: hot.example far over the cap, exact.example
+    exactly at it, cold.example under it."""
+    rng = random.Random(411)
+    domains = (
+        ["hot.example"] * 23
+        + ["exact.example"] * ADMISSION_CAP
+        + ["cold.example"] * 2
+    )
+    rng.shuffle(domains)
+    base = dt.datetime(2024, 3, 1, 12, 0, 0)
+    return spark.createDataFrame(
+        [
+            (i, d, base + dt.timedelta(seconds=10 * i))
+            for i, d in enumerate(domains)
+        ],
+        "doc_id long, domain string, ts timestamp",
+    )
+
+
+def test_batch_twin_uses_window_group_limit(spark):
+    """The rn <= cap filter must lower to the map-side WindowGroupLimit
+    (top-k heap per task), the q_domain_caps plan shape."""
+    plan = (
+        domain_admission_batch(_admission_log(spark), ADMISSION_CAP)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "WindowGroupLimit" in plan
+
+
+def test_admission_invalid_cap_raises(spark):
+    with pytest.raises(ValueError, match="cap"):
+        domain_admission_batch(_admission_log(spark), 0)

@@ -4,13 +4,11 @@ The cross-engine oracle gate is structurally blind to a rule that is
 wrong the same way on both sides (the r8 dollars() lesson), so the
 canonicalizer gets the md5-fragment-pin treatment (VERDICT r10 #1):
 ground truth here is HAND-WRITTEN expected strings, never cross-engine
-agreement. Three derivations are pinned against the same literals:
+agreement. Two derivations are pinned against the same literals:
 
-1. the single-expression Spark forms (canonical_url_expr /
-   registrable_domain_expr);
-2. the layered/regex Spark form the catalog queries execute
+1. the layered/regex Spark form the catalog queries execute
    (with_canonical_columns);
-3. the DuckDB oracle CTE chain (plans/url.CANON_CTES) replayed over a
+2. the DuckDB oracle CTE chain (plans/url.CANON_CTES) replayed over a
    literal VALUES table.
 
 The synthetic-URL GENERATOR is pinned the same way (expected URLs
@@ -26,8 +24,6 @@ import duckdb
 import pyspark.sql.functions as F
 
 from aircraftutilization_etl_spark.operators.url import (
-    canonical_url_expr,
-    registrable_domain_expr,
     synthetic_url_expr,
     with_canonical_columns,
     with_url_columns,
@@ -149,19 +145,6 @@ def test_synthetic_url_oracle_matches_literal_pins():
     assert got == {i: u for i, _, u in GEN_FIXTURES}
 
 
-def test_canonicalization_single_expression_matches_pins(spark):
-    df = spark.createDataFrame(
-        [(u,) for u, _, _ in CANON_FIXTURES], "url string"
-    )
-    rows = df.select(
-        "url",
-        canonical_url_expr(F.col("url")).alias("canon"),
-        registrable_domain_expr(F.col("url")).alias("dom"),
-    ).collect()
-    got = {r.url: (r.canon, r.dom) for r in rows}
-    assert got == {u: (c, d) for u, c, d in CANON_FIXTURES}
-
-
 def test_canonicalization_layered_form_matches_pins(spark):
     df = spark.createDataFrame(
         [(u,) for u, _, _ in CANON_FIXTURES], "url string"
@@ -184,31 +167,6 @@ def test_canonicalization_oracle_ctes_match_pins():
     )
     got = {u: (c, d) for u, c, d in con.execute(sql).fetchall()}
     assert got == {u: (c, d) for u, c, d in CANON_FIXTURES}
-
-
-def test_layered_and_single_expression_forms_agree_on_corpus(spark):
-    """The catalog executes the layered/regex form; the fixtures pin
-    both — and this asserts they agree on EVERY synthetic URL of the
-    sf0.001 corpus, not only the hand-written cases."""
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    layered = with_url_columns(d.select("doc_id", "source"))
-    single = d.select(
-        "doc_id", synthetic_url_expr().alias("url")
-    ).select(
-        "doc_id",
-        canonical_url_expr(F.col("url")).alias("canonical_url"),
-        registrable_domain_expr(F.col("url")).alias("domain"),
-    )
-    a = {
-        r.doc_id: (r.canonical_url, r.domain)
-        for r in layered.select(
-            "doc_id", "canonical_url", "domain"
-        ).collect()
-    }
-    b = {
-        r.doc_id: (r.canonical_url, r.domain) for r in single.collect()
-    }
-    assert a == b and len(a) == 500
 
 
 def test_canonicalization_is_idempotent_on_corpus(spark):

@@ -171,15 +171,6 @@ class TestZOrder:
             assert r["max_a"] - r["min_a"] == 15
             assert r["max_b"] - r["min_b"] == 15
 
-    def test_repartition_plan_has_range_partitioning(self, spark):
-        from aircraftutilization_etl_spark.operators.warehouse import (
-            zorder_repartition,
-        )
-
-        df = spark.range(1000).selectExpr("id AS a", "id * 7 % 997 AS b")
-        plan = zorder_repartition(df, "a", "b", 8)._jdf.queryExecution()
-        assert "rangepartitioning" in plan.executedPlan().toString().lower()
-
 
 # --- snapshot diff --------------------------------------------------------
 
