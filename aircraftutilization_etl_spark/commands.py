@@ -40,13 +40,13 @@ def add_metadata(facts: DataFrame, metadata: DataFrame) -> DataFrame:
     return bare.join(F.broadcast(metadata), on="icao24", how="left")
 
 
-def built_string_to_dt(facts: DataFrame, built_col: str = "built") -> DataFrame:
+def built_string_to_dt(facts: DataFrame) -> DataFrame:
     """Parse the ``built`` string to a timestamp, unparseable → null
     (reference built_string_to_dt.py:69-75 try/except → None)."""
     return facts.withColumn(
         # try_to_timestamp: unparseable -> null even under ANSI mode
-        built_col,
-        F.try_to_timestamp(F.col(built_col).cast("string"), F.lit("yyyy-MM-dd")),
+        "built",
+        F.try_to_timestamp(F.col("built").cast("string"), F.lit("yyyy-MM-dd")),
     )
 
 

@@ -61,23 +61,19 @@ def cents(col: Column | str) -> Column:
 pct = cents
 
 
-def revenue_tm(price: Column | str = "l_extendedprice",
-               discount: Column | str = "l_discount") -> Column:
+def revenue_tm() -> Column:
     """price·(1-discount) in exact tenth-mills (1e-4 dollars)."""
-    return cents(price) * (100 - pct(discount))
+    return cents("l_extendedprice") * (100 - pct("l_discount"))
 
 
-def discount_tm(price: Column | str = "l_extendedprice",
-                discount: Column | str = "l_discount") -> Column:
+def discount_tm() -> Column:
     """price·discount in exact tenth-mills."""
-    return cents(price) * pct(discount)
+    return cents("l_extendedprice") * pct("l_discount")
 
 
-def charge_micros(price: Column | str = "l_extendedprice",
-                  discount: Column | str = "l_discount",
-                  tax: Column | str = "l_tax") -> Column:
+def charge_micros() -> Column:
     """price·(1-discount)·(1+tax) in exact micros (1e-6 dollars)."""
-    return cents(price) * (100 - pct(discount)) * (100 + pct(tax))
+    return revenue_tm() * (100 + pct("l_tax"))
 
 
 def sum128(unit_col: Column) -> Column:

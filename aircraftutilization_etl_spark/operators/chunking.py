@@ -32,7 +32,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 WINDOW = 8
 MIN_CHUNK = 16
@@ -98,12 +97,7 @@ def chunk_spans(text: str, method: str = "md5") -> list[tuple[int, int]]:
     return _cut_spans(_FLAG_FNS[method](text), len(text))
 
 
-def chunk_documents(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    method: str = "md5",
-) -> DataFrame:
+def chunk_documents(df: DataFrame, method: str = "md5") -> DataFrame:
     """One row per chunk: (id, chunk_idx, start, length, chunk_md5).
 
     Scale: partition-local mapInPandas — the corpus streams through in
@@ -115,12 +109,12 @@ def chunk_documents(
     the production-scale flag function; both are integer/digest
     recurrences a SQL oracle replays exactly).
     """
-    schema = f"{id_col} long, chunk_idx int, start int, length int, chunk_md5 string"
+    schema = "doc_id long, chunk_idx int, start int, length int, chunk_md5 string"
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, starts, lens, md5s = [], [], [], [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 for k, (s, e) in enumerate(chunk_spans(text, method)):
                     ids.append(doc_id)
                     idxs.append(k)
@@ -131,7 +125,7 @@ def chunk_documents(
                     )
             yield pd.DataFrame(
                 {
-                    id_col: pd.Series(ids, dtype="int64"),
+                    "doc_id": pd.Series(ids, dtype="int64"),
                     "chunk_idx": pd.Series(idxs, dtype="int32"),
                     "start": pd.Series(starts, dtype="int32"),
                     "length": pd.Series(lens, dtype="int32"),
@@ -139,4 +133,4 @@ def chunk_documents(
                 }
             )
 
-    return df.select(id_col, text_col).mapInPandas(kernel, schema)
+    return df.select("doc_id", "text").mapInPandas(kernel, schema)

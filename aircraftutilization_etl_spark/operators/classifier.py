@@ -52,9 +52,7 @@ import itertools as _itertools
 _TRAIN_SEQ = _itertools.count(1)
 
 
-def hashed_features(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def hashed_features(df: DataFrame) -> DataFrame:
     """(id, bucket, c, t, x): hashed-unigram features, one row per
     distinct bucket per doc — c the bucket count, t the doc token
     total (both BIGINT, the exact integers the integerized trainer
@@ -70,28 +68,28 @@ def hashed_features(
     # the explode+md5 feature pass is per-row hash work over the raw
     # text — spread an under-partitioned scan first (r11 opt; profiled
     # as a 441 ms single-task stage at sf0.1, no-op at corpus scale)
-    df = ensure_scan_parallelism(df, id_col)
+    df = ensure_scan_parallelism(df, "doc_id")
     words = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.transform(words_expr(text_col), lambda w: F.lower(w))
+            F.transform(words_expr("text"), lambda w: F.lower(w))
         ).alias("__w"),
     )
     bucketed = words.select(
-        id_col,
+        "doc_id",
         (
             F.conv(F.substring(F.md5(F.col("__w")), 1, 8), 16, 10).cast("long")
             % N_BUCKETS
         ).alias("bucket"),
     )
-    counts = bucketed.groupBy(id_col, "bucket").agg(
+    counts = bucketed.groupBy("doc_id", "bucket").agg(
         F.count(F.lit(1)).cast("long").alias("c")
     )
     return counts.select(
-        id_col,
+        "doc_id",
         "bucket",
         "c",
-        F.sum("c").over(Window.partitionBy(id_col)).alias("t"),
+        F.sum("c").over(Window.partitionBy("doc_id")).alias("t"),
     ).withColumn("x", F.col("c") / F.col("t"))
 
 
@@ -179,8 +177,6 @@ def _p_micros(m):
 def train_logreg_hashed(
     features: DataFrame,
     labels: DataFrame,
-    id_col: str = "doc_id",
-    label_col: str = "label",
     iterations: int = 20,
     lr: float = 2.0,
 ) -> tuple[list[int], int, list[float]]:
@@ -224,9 +220,9 @@ def train_logreg_hashed(
     w_view = f"__clf_w_{seq}"
     nparts = shuffle_width(spark)
     lab = labels.select(
-        F.col(id_col),
-        (F.col(label_col).cast("long") * F.lit(MICRO)).alias("__ym"),
-        F.col(label_col).cast("double").alias("__y"),
+        F.col("doc_id"),
+        (F.col("label").cast("long") * F.lit(MICRO)).alias("__ym"),
+        F.col("label").cast("double").alias("__y"),
     )
     # n counts LABELED docs (matching the oracle's COUNT(*) over the
     # label source), not docs-with-features — a doc with no feature
@@ -245,9 +241,9 @@ def train_logreg_hashed(
     # and any extra caller columns would otherwise ride the cache and
     # be re-scanned every round
     base = (
-        features.select(id_col, "bucket", "c", "t")
-        .join(lab, id_col)
-        .repartition(nparts_eff, id_col)
+        features.select("doc_id", "bucket", "c", "t")
+        .join(lab, "doc_id")
+        .repartition(nparts_eff, "doc_id")
         # corpus-scale feature rows: serialized + spill (guide §5)
         .persist(CORPUS_CACHE)
     )
@@ -279,7 +275,7 @@ def train_logreg_hashed(
                                         AS BIGINT)))
              END) AS kv
       FROM (
-        SELECT {id_col}, bucket, c, t, __minb,
+        SELECT doc_id, bucket, c, t, __minb,
                CAST(FLOOR((1.0 / (1.0 + EXP(-__m))) * 1000000.0) AS BIGINT)
                    - __ym AS __r,
                -- clamped log-loss floored to micros: even the
@@ -291,12 +287,12 @@ def train_logreg_hashed(
                ) * 1000000.0) AS BIGINT) AS __lm
         FROM (
           SELECT /*+ BROADCAST(w) */
-                 f.{id_col}, f.bucket, f.c, f.t, f.__ym, f.__y,
+                 f.doc_id, f.bucket, f.c, f.t, f.__ym, f.__y,
                  CAST(SUM(COALESCE(w.__wm, 0) * f.c)
-                          OVER (PARTITION BY f.{id_col})
+                          OVER (PARTITION BY f.doc_id)
                       + CAST({{bias}} AS BIGINT) * f.t AS DOUBLE)
                      / (f.t * 1000000.0) AS __m,
-                 MIN(f.bucket) OVER (PARTITION BY f.{id_col}) AS __minb
+                 MIN(f.bucket) OVER (PARTITION BY f.doc_id) AS __minb
           FROM {base_view} f LEFT JOIN {w_view} w USING (bucket)
         )
       )
@@ -370,30 +366,23 @@ def predict(
     features: DataFrame,
     w_micros: list[int],
     b_micros: int,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """(id, p_micros, prob): floor(σ(w·x + b)·1e6) per document (and
     its float rendering) from the broadcast integer model — a pure
     scoring pass, the shape inference takes at any corpus size. The
     sigmoid is evaluated once; prob derives from the quantized column."""
     return (
-        _margins(features, w_micros, b_micros, id_col)
-        .select(id_col, _p_micros(F.col("__m")).alias("p_micros"))
+        _margins(features, w_micros, b_micros, "doc_id")
+        .select("doc_id", _p_micros(F.col("__m")).alias("p_micros"))
         .select(
-            id_col,
+            "doc_id",
             "p_micros",
             (F.col("p_micros") / F.lit(1000000.0)).alias("prob"),
         )
     )
 
 
-def naive_bayes_confusion(
-    df: DataFrame,
-    label_col: str = "lang",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    train_prefix_bound: str = "cccd",
-) -> DataFrame:
+def naive_bayes_confusion(df: DataFrame) -> DataFrame:
     """Multinomial Naive Bayes trained ON the engine and evaluated on a
     held-out split: add-1-smoothed per-class unigram likelihoods plus a
     document-count prior, argmax over classes, reported as the
@@ -420,12 +409,11 @@ def naive_bayes_confusion(
     from pyspark.sql.window import Window
 
     tagged = df.select(
-        F.col(id_col),
-        F.col(label_col).alias("actual"),
-        words_expr(text_col).alias("__ws"),
+        F.col("doc_id"),
+        F.col("lang").alias("actual"),
+        words_expr("text").alias("__ws"),
         (
-            F.substring(F.md5(F.col(id_col).cast("string")), 1, 4)
-            < train_prefix_bound
+            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4) < "cccd"
         ).alias("in_train"),
     )
     train = tagged.filter("in_train")
@@ -469,12 +457,12 @@ def naive_bayes_confusion(
         )
     )
     hw = heldout.select(
-        id_col, "actual", F.explode("__ws").alias("w0")
-    ).select(id_col, "actual", F.lower("w0").alias("w"))
+        "doc_id", "actual", F.explode("__ws").alias("w0")
+    ).select("doc_id", "actual", F.lower("w0").alias("w"))
     scored = (
         hw.crossJoin(F.broadcast(classes))
         .join(model, ["cls", "w"], "left")
-        .groupBy(id_col, "actual", "cls", "__prior_micros")
+        .groupBy("doc_id", "actual", "cls", "__prior_micros")
         .agg(
             F.sum(
                 F.floor(
@@ -487,7 +475,7 @@ def naive_bayes_confusion(
             ).alias("__ll_micros")
         )
         .select(
-            id_col,
+            "doc_id",
             "actual",
             "cls",
             (F.col("__prior_micros") + F.col("__ll_micros")).alias(
@@ -495,13 +483,13 @@ def naive_bayes_confusion(
             ),
         )
     )
-    win = Window.partitionBy(id_col).orderBy(
+    win = Window.partitionBy("doc_id").orderBy(
         F.desc("__score"), F.col("cls")
     )
     pred = (
         scored.withColumn("__r", F.row_number().over(win))
         .filter(F.col("__r") == 1)
-        .select(id_col, "actual", F.col("cls").alias("predicted"))
+        .select("doc_id", "actual", F.col("cls").alias("predicted"))
     )
     return (
         pred.groupBy("actual", "predicted")

@@ -87,7 +87,6 @@ def kmeans_int8(
     k: int = 8,
     iterations: int = 2,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
     return_model: bool = False,
 ):
     """Lloyd's k-means on int8-quantized vectors → (id, cluster, dist).
@@ -118,7 +117,7 @@ def kmeans_int8(
     # ms df.rdd plan-build probe; same decision, same plan.)
     df = ensure_scan_parallelism(df, id_col)
     codes = (
-        quantize_embeddings(df, id_col, vec_col)
+        quantize_embeddings(df, id_col, "embedding")
         .select(F.col(id_col), "qvec")
         .persist(CORPUS_CACHE)
     )
@@ -268,8 +267,6 @@ def pq_train(
     m: int = 4,
     k: int = 8,
     iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     train_limit: int | None = None,
 ) -> tuple[list[list[list[int]]], DataFrame]:
     """Train m independent subspace codebooks (k centroids each) with
@@ -293,7 +290,7 @@ def pq_train(
     oracle-replayable because the sample is an id-prefix, not a random
     draw. Encoding still covers the full corpus.
     """
-    scodes = pq_scodes(df, m, id_col, vec_col)
+    scodes = pq_scodes(df, m, "vec_id", "embedding")
 
     if train_limit is not None:
         # Bounded-sample protocol: the training set is model-scale BY
@@ -305,19 +302,19 @@ def pq_train(
         # This is the Faiss/ScaNN shape: the cluster touches the corpus
         # only for encoding; training happens where the sample lives.
         rows = (
-            scodes.filter(F.col(id_col) < train_limit)
-            .select(id_col, "sub", "svec")
+            scodes.filter(F.col("vec_id") < train_limit)
+            .select("vec_id", "sub", "svec")
             .collect()
         )
-        if len({r[id_col] for r in rows}) >= k:
-            books = _pq_train_local(rows, m, k, iterations, id_col)
+        if len({r["vec_id"] for r in rows}) >= k:
+            books = _pq_train_local(rows, m, k, iterations, "vec_id")
             return books, scodes
 
     # full-corpus (or thin-sample fallback) distributed protocol
-    codes = quantize_embeddings(df, id_col, vec_col).select(
-        F.col(id_col), "qvec"
+    codes = quantize_embeddings(df, "vec_id", "embedding").select(
+        F.col("vec_id"), "qvec"
     )
-    seed_rows = codes.orderBy(id_col).limit(k).collect()
+    seed_rows = codes.orderBy("vec_id").limit(k).collect()
     if not seed_rows:
         # empty corpus: no codebooks to train; callers get ([], scodes)
         # and must produce their typed empty result
@@ -329,7 +326,7 @@ def pq_train(
     ]
 
     train = (
-        scodes.filter(F.col(id_col) < train_limit)
+        scodes.filter(F.col("vec_id") < train_limit)
         if train_limit is not None
         else scodes
     )
@@ -383,14 +380,14 @@ def _pq_train_local(rows, m: int, k: int, iterations: int, id_col: str):
 
 
 def pq_encode(
-    scodes: DataFrame, codebooks: list[list[list[int]]], id_col: str = "vec_id"
+    scodes: DataFrame, codebooks: list[list[list[int]]]
 ) -> DataFrame:
     """(id, sub, svec) + codebooks → (id, codes array<int>): each vector
     compressed to m codes (the PQ index payload — 4 bytes replacing
     d floats here; 1:64 at d=64)."""
     return (
         _pq_assign(scodes, codebooks)
-        .groupBy(id_col)
+        .groupBy("vec_id")
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("sub", "code"))),
@@ -458,7 +455,6 @@ def pq_adc_topk(
     codebooks: list[list[list[int]]],
     n_queries: int,
     k_top: int,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """ADC top-k: per query, precompute the m×k LUT of exact subspace
     distances to every codebook centroid, then score each corpus vector
@@ -474,17 +470,17 @@ def pq_adc_topk(
     result — no LUT expression can be built over zero centroids.
     """
     if not codebooks:
-        # id types follow the inputs (populated path renames id_col
+        # id types follow the inputs (populated path renames vec_id
         # from scodes/encoded into query_id/neighbor_id) — ADVICE r8 #3
-        q_t = scodes.schema[id_col].dataType.simpleString()
-        n_t = encoded.schema[id_col].dataType.simpleString()
+        q_t = scodes.schema["vec_id"].dataType.simpleString()
+        n_t = encoded.schema["vec_id"].dataType.simpleString()
         return scodes.sparkSession.createDataFrame(
             [],
             f"query_id {q_t}, neighbor_id {n_t}, adc_dist bigint, rank int",
         )
-    luts = _adc_luts(scodes, codebooks, n_queries, id_col)
+    luts = _adc_luts(scodes, codebooks, n_queries, "vec_id")
     scored = (
-        encoded.withColumnRenamed(id_col, "neighbor_id")
+        encoded.withColumnRenamed("vec_id", "neighbor_id")
         .join(F.broadcast(luts))
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
@@ -503,8 +499,6 @@ def ivfpq_adc_topk(
     cells: DataFrame,
     n_queries: int,
     k_top: int,
-    id_col: str = "vec_id",
-    cell_col: str = "cluster",
 ) -> DataFrame:
     """IVF-PQ (Jégou et al. 2011, the billion-vector architecture):
     coarse cells prune the search to the query's own cell (probe=1),
@@ -522,21 +516,21 @@ def ivfpq_adc_topk(
     pq_adc_topk.
     """
     if not codebooks:
-        q_t = scodes.schema[id_col].dataType.simpleString()
-        n_t = encoded.schema[id_col].dataType.simpleString()
+        q_t = scodes.schema["vec_id"].dataType.simpleString()
+        n_t = encoded.schema["vec_id"].dataType.simpleString()
         return scodes.sparkSession.createDataFrame(
             [],
             f"query_id {q_t}, neighbor_id {n_t}, adc_dist bigint, rank int",
         )
     cq = cells.select(
-        F.col(id_col).alias("query_id"), F.col(cell_col).alias("cell")
+        F.col("vec_id").alias("query_id"), F.col("cluster").alias("cell")
     )
     cn = cells.select(
-        F.col(id_col).alias("neighbor_id"), F.col(cell_col).alias("cell")
+        F.col("vec_id").alias("neighbor_id"), F.col("cluster").alias("cell")
     )
-    luts = _adc_luts(scodes, codebooks, n_queries, id_col).join(cq, "query_id")
+    luts = _adc_luts(scodes, codebooks, n_queries, "vec_id").join(cq, "query_id")
     scored = (
-        encoded.withColumnRenamed(id_col, "neighbor_id")
+        encoded.withColumnRenamed("vec_id", "neighbor_id")
         .join(cn, "neighbor_id")
         .join(F.broadcast(luts), "cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))

@@ -36,9 +36,7 @@ from .dedup import with_shingle_array
 _PPM = 1_000_000
 
 
-def benchmark_shingle_set(
-    benchmark: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def benchmark_shingle_set(benchmark: DataFrame) -> DataFrame:
     """The distinct word-n-gram set of a benchmark corpus (one ``shingle``
     column) — the probe side of contamination checks.
 
@@ -46,7 +44,7 @@ def benchmark_shingle_set(
     scale this is the small side by orders of magnitude.
     """
     return (
-        with_shingle_array(benchmark, id_col, text_col)
+        with_shingle_array(benchmark, "doc_id", "text")
         .select(F.explode_outer("shingles").alias("shingle"))
         .distinct()
     )
@@ -55,8 +53,6 @@ def benchmark_shingle_set(
 def contamination_report(
     train: DataFrame,
     benchmark_shingles: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_hits: int = 1,
 ) -> DataFrame:
     """Per-training-document benchmark overlap: (id, n_hits, n_shingles,
@@ -68,15 +64,15 @@ def contamination_report(
     Documents shorter than one shingle are excluded (they cannot
     collide), matching ``with_shingle_array``'s convention.
     """
-    shingled = with_shingle_array(train, id_col, text_col)
+    shingled = with_shingle_array(train, "doc_id", "text")
     exploded = shingled.select(
-        id_col,
+        "doc_id",
         F.size("shingles").alias("n_shingles"),
         F.explode_outer("shingles").alias("shingle"),
     )
     hits = (
         exploded.join(F.broadcast(benchmark_shingles), "shingle")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_hits"),
             F.first("n_shingles").alias("n_shingles"),
@@ -84,7 +80,7 @@ def contamination_report(
         .filter(F.col("n_hits") >= min_hits)
     )
     return hits.select(
-        id_col,
+        "doc_id",
         "n_hits",
         "n_shingles",
         F.expr(f"CAST((n_hits * {_PPM}) DIV n_shingles AS BIGINT)").alias(

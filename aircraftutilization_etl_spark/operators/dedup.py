@@ -105,7 +105,7 @@ def doc_shingles(
     )
 
 
-def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_duplicates(df: DataFrame) -> DataFrame:
     """Exact dedup on the normalized-text fingerprint.
 
     Returns one row per content group: representative (min id), member
@@ -113,18 +113,16 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     hash-groupBy dedup.
     """
     return (
-        df.select(F.col(id_col), fingerprint_expr(text_col).alias("fingerprint"))
+        df.select(F.col("doc_id"), fingerprint_expr("text").alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(
-            F.min(id_col).alias("representative"),
+            F.min("doc_id").alias("representative"),
             F.count(F.lit(1)).alias("n_docs"),
         )
     )
 
 
-def shingle_jaccard_pairs(
-    shingles: DataFrame, threshold: float, id_col: str = "doc_id"
-) -> DataFrame:
+def shingle_jaccard_pairs(shingles: DataFrame, threshold: float) -> DataFrame:
     """All document pairs with shingle-set Jaccard ≥ threshold.
 
     Pairs are generated only for documents sharing at least one shingle
@@ -140,14 +138,14 @@ def shingle_jaccard_pairs(
     collide near-identical docs.
     """
     shingles = shingles.persist(CORPUS_CACHE)
-    sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
+    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     inter = (
-        _chunked_pair_join(shingles, ["shingle"], id_col, SHINGLE_BUCKET_CAP)
+        _chunked_pair_join(shingles, ["shingle"], "doc_id", SHINGLE_BUCKET_CAP)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_shingles").alias("n_b"))
+    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_shingles").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_shingles").alias("n_b"))
     return (
         inter.join(sa, "id_a")
         .join(sb, "id_b")
@@ -209,7 +207,7 @@ def with_minhash_signature(shingled: DataFrame, id_col: str = "doc_id") -> DataF
     )
 
 
-def minhash_signatures(shingles_or_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def minhash_signatures(shingles_or_df: DataFrame) -> DataFrame:
     """MinHash signature matrix (id, seed, minhash): for seed i in
     [0, K), the lexicographic MIN over shingles of
     rotate(md5(shingle), 2·i hex chars).
@@ -217,13 +215,13 @@ def minhash_signatures(shingles_or_df: DataFrame, id_col: str = "doc_id") -> Dat
     Accepts either the exploded (id, shingle) view or the array view.
     """
     if "shingles" not in shingles_or_df.columns:
-        shingled = shingles_or_df.groupBy(id_col).agg(
+        shingled = shingles_or_df.groupBy("doc_id").agg(
             F.collect_set("shingle").alias("shingles")
         )
     else:
         shingled = shingles_or_df
-    sig = with_minhash_signature(shingled, id_col)
-    return sig.select(id_col, F.posexplode("sig").alias("seed", "minhash"))
+    sig = with_minhash_signature(shingled, "doc_id")
+    return sig.select("doc_id", F.posexplode("sig").alias("seed", "minhash"))
 
 
 def lsh_bands(shingled: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -363,12 +361,7 @@ def verify_jaccard_pairs(
     )
 
 
-def minhash_lsh_duplicates(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def minhash_lsh_duplicates(df: DataFrame, threshold: float) -> DataFrame:
     """MinHash-LSH near-dup pipeline: shingle → minhash → band → candidate
     pairs → exact-Jaccard verification ≥ threshold.
 
@@ -380,9 +373,9 @@ def minhash_lsh_duplicates(
     at corpus scale, where a production pipeline would stage it (or the
     signature matrix) to a table between passes anyway.
     """
-    shingled = with_shingle_array(df, id_col, text_col).persist(CORPUS_CACHE)
-    candidates = lsh_candidate_pairs(shingled, id_col)
-    return verify_jaccard_pairs(candidates, shingled, threshold, id_col)
+    shingled = with_shingle_array(df, "doc_id", "text").persist(CORPUS_CACHE)
+    candidates = lsh_candidate_pairs(shingled, "doc_id")
+    return verify_jaccard_pairs(candidates, shingled, threshold, "doc_id")
 
 
 def duplicate_clusters(
@@ -486,13 +479,7 @@ def _word_hash_expr(w, bits: int):
     return F.concat(*parts) if len(parts) > 1 else parts[0]
 
 
-def with_simhash(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    out_col: str = "simhash",
-    bits: int = 16,
-) -> DataFrame:
+def with_simhash(df: DataFrame, bits: int = 16) -> DataFrame:
     """(id, simhash) fingerprints.
 
     Two execution strategies with IDENTICAL output (bit p votes by hex
@@ -512,16 +499,16 @@ def with_simhash(
     under-partitioned small file would serialize them on one core —
     spread the raw text first (r11 opt; no-op at corpus scale).
     """
-    df = ensure_scan_parallelism(df, id_col)
+    df = ensure_scan_parallelism(df, "doc_id")
     if bits <= 32:
         hashed = df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.transform(
-                words_expr(text_col), lambda w: _word_hash_expr(w, bits)
+                words_expr("text"), lambda w: _word_hash_expr(w, bits)
             ).alias("__hashed"),
         )
         return hashed.select(
-            id_col, _simhash_bits(F.col("__hashed"), bits).alias(out_col)
+            "doc_id", _simhash_bits(F.col("__hashed"), bits).alias("simhash")
         )
 
     import hashlib
@@ -554,22 +541,20 @@ def with_simhash(
 
         for pdf in batches:
             outs = []
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 votes = np.zeros(bits, dtype=np.int32)
                 # split(trim(s), '\s+') semantics: '' yields ['']
                 for w in re.split(r"\s+", (text or "").strip()):
                     votes += digits(w)
                 outs.append("".join("1" if x > 0 else "0" for x in votes))
-            yield pd.DataFrame({id_col: pdf[id_col], out_col: outs})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "simhash": outs})
 
-    return df.select(id_col, text_col).mapInPandas(
-        _prints, f"{id_col} long, {out_col} string"
+    return df.select("doc_id", "text").mapInPandas(
+        _prints, "doc_id long, simhash string"
     )
 
 
-def novelty_scores(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def novelty_scores(df: DataFrame) -> DataFrame:
     """Per-document content novelty: the fraction of a document's
     distinct shingles whose FIRST corpus occurrence (minimum id) is this
     document — near-1 for fresh content, near-0 for remixes of earlier
@@ -582,19 +567,19 @@ def novelty_scores(
     min), one back on the id — both linear in corpus shingle count, no
     pairwise anything.
     """
-    shingles = doc_shingles(df, id_col, text_col)
-    first = shingles.groupBy("shingle").agg(F.min(id_col).alias("first_id"))
+    shingles = doc_shingles(df, "doc_id", "text")
+    first = shingles.groupBy("shingle").agg(F.min("doc_id").alias("first_id"))
     return (
         shingles.join(first, "shingle")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),
             F.sum(
-                F.when(F.col("first_id") == F.col(id_col), 1).otherwise(0)
+                F.when(F.col("first_id") == F.col("doc_id"), 1).otherwise(0)
             ).alias("n_novel"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_shingles",
             "n_novel",
             F.expr("CAST((n_novel * 1000000) DIV n_shingles AS BIGINT)").alias(
@@ -824,8 +809,6 @@ def incremental_lsh_duplicates(
     new_docs: DataFrame,
     corpus: DataFrame,
     threshold: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Near-dup pairs INVOLVING the new ingest batch: each new document
     against the existing corpus AND against the rest of the batch —
@@ -845,16 +828,16 @@ def incremental_lsh_duplicates(
     staged table (here derived in-plan from the corpus frame), so the
     historical side is scan + join, no re-hashing of text if staged.
     """
-    batch_sh = with_shingle_array(new_docs, id_col, text_col).persist(
+    batch_sh = with_shingle_array(new_docs, "doc_id", "text").persist(
         CORPUS_CACHE
     )
-    corpus_sh = with_shingle_array(corpus, id_col, text_col).persist(
+    corpus_sh = with_shingle_array(corpus, "doc_id", "text").persist(
         CORPUS_CACHE
     )
-    batch_bands = lsh_bands(batch_sh, id_col)
-    corpus_bands = lsh_bands(corpus_sh, id_col)
-    nb = batch_bands.select(F.col(id_col).alias("id_n"), "band", "band_key")
-    cb = corpus_bands.select(F.col(id_col).alias("id_c"), "band", "band_key")
+    batch_bands = lsh_bands(batch_sh, "doc_id")
+    corpus_bands = lsh_bands(corpus_sh, "doc_id")
+    nb = batch_bands.select(F.col("doc_id").alias("id_n"), "band", "band_key")
+    cb = corpus_bands.select(F.col("doc_id").alias("id_c"), "band", "band_key")
     cross = (
         nb.join(cb, ["band", "band_key"])
         .filter(F.col("id_n") != F.col("id_c"))
@@ -863,31 +846,29 @@ def incremental_lsh_duplicates(
             F.greatest("id_n", "id_c").alias("id_b"),
         )
     )
-    nb2 = batch_bands.select(F.col(id_col).alias("id_b2"), "band", "band_key")
+    nb2 = batch_bands.select(F.col("doc_id").alias("id_b2"), "band", "band_key")
     within = (
-        batch_bands.select(F.col(id_col).alias("id_a"), "band", "band_key")
+        batch_bands.select(F.col("doc_id").alias("id_a"), "band", "band_key")
         .join(nb2, ["band", "band_key"])
         .filter(F.col("id_a") < F.col("id_b2"))
         .select("id_a", F.col("id_b2").alias("id_b"))
     )
     candidates = cross.unionByName(within).distinct()
     all_sh = corpus_sh.unionByName(batch_sh).select(
-        id_col, "shingles"
-    ).dropDuplicates([id_col])
+        "doc_id", "shingles"
+    ).dropDuplicates(["doc_id"])
     # materialize before unpersisting: the cached shingle blocks must
     # not outlive this call (a long-lived ingest pipeline would leak
     # storage memory one batch at a time otherwise)
     result = verify_jaccard_pairs(
-        candidates, all_sh, threshold, id_col
+        candidates, all_sh, threshold, "doc_id"
     ).localCheckpoint(eager=True)
     batch_sh.unpersist()
     corpus_sh.unpersist()
     return result
 
 
-def containment_pairs(
-    shingles: DataFrame, threshold: float, id_col: str = "doc_id"
-) -> DataFrame:
+def containment_pairs(shingles: DataFrame, threshold: float) -> DataFrame:
     """Directed shingle-set containment C(src→dst) = |src ∩ dst| / |src|
     ≥ threshold — the asymmetric near-dup measure that catches a short
     document quoted inside a much longer one, which Jaccard structurally
@@ -901,14 +882,14 @@ def containment_pairs(
     directions with the direction's own denominator.
     """
     shingles = shingles.persist(CORPUS_CACHE)
-    sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles"))
+    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     inter = (
-        _chunked_pair_join(shingles, ["shingle"], id_col, SHINGLE_BUCKET_CAP)
+        _chunked_pair_join(shingles, ["shingle"], "doc_id", SHINGLE_BUCKET_CAP)
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_shingles").alias("n_b"))
+    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_shingles").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_shingles").alias("n_b"))
     both = inter.join(sa, "id_a").join(sb, "id_b")
     fwd = both.select(
         F.col("id_a").alias("id_src"),
@@ -928,8 +909,6 @@ def simhash_hamming_pairs(
     max_hamming: int = 2,
     bits: int = 16,
     bands: int = 4,
-    id_col: str = "doc_id",
-    sim_col: str = "simhash",
 ) -> DataFrame:
     """All document pairs whose SimHash fingerprints differ in at most
     ``max_hamming`` bits, found WITHOUT the n² scan: the print is cut
@@ -960,17 +939,17 @@ def simhash_hamming_pairs(
     # join sides + both verify sides) and is signature-sized
     # (id + `bands` longs), never the text
     bints = simhashed.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.array(
             *[
-                F.conv(F.substring(sim_col, b * width + 1, width), 2, 10)
+                F.conv(F.substring("simhash", b * width + 1, width), 2, 10)
                 .cast("long")
                 for b in range(bands)
             ]
         ).alias("__bint"),
     ).localCheckpoint(eager=True)
     banded = bints.select(
-        F.col(id_col), F.posexplode("__bint").alias("band", "bkey")
+        F.col("doc_id"), F.posexplode("__bint").alias("band", "bkey")
     )
     # chunked band self-join: an adversarial corpus (thousands of
     # IDENTICAL prints) collapses every band into one bucket — the same
@@ -989,10 +968,10 @@ def simhash_hamming_pairs(
     # output identical, the dedup exchange now moves final-pair rows
     # instead of candidate rows.
     cand = _chunked_pair_join(
-        banded, ["band", "bkey"], id_col, HAMMING_BUCKET_CAP
+        banded, ["band", "bkey"], "doc_id", HAMMING_BUCKET_CAP
     ).select("id_a", "id_b")
-    sa = bints.select(F.col(id_col).alias("id_a"), F.col("__bint").alias("__ba"))
-    sb = bints.select(F.col(id_col).alias("id_b"), F.col("__bint").alias("__bb"))
+    sa = bints.select(F.col("doc_id").alias("id_a"), F.col("__bint").alias("__ba"))
+    sb = bints.select(F.col("doc_id").alias("id_b"), F.col("__bint").alias("__bb"))
     hamming = sum(
         F.bit_count(
             F.element_at("__ba", b + 1).bitwiseXOR(F.element_at("__bb", b + 1))
@@ -1009,16 +988,11 @@ def simhash_hamming_pairs(
     )
 
 
-def removal_spans(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_count: int = 2,
-) -> DataFrame:
+def removal_spans(df: DataFrame) -> DataFrame:
     """Positional exact-substring dedup: the removal spans of
     Lee et al. 2021 ("Deduplicating Training Data Makes Language Models
     Better"), word-shingle formulation. Every word-``SHINGLE_N``-gram
-    occurring at least ``min_count`` times in the corpus (within- OR
+    occurring at least twice in the corpus (within- OR
     cross-document — a self-repeat is just as memorized) marks its
     occurrence interval ``[pos, pos + SHINGLE_N)``; overlapping or
     adjacent marked intervals in a document coalesce into maximal
@@ -1033,7 +1007,7 @@ def removal_spans(
     (no shuffle past the id repartition); (2) corpus-wide occurrence
     counts are one map-side-combined groupBy on the shingle, and the
     marked positions come from the shuffle-join of occurrences against
-    the >= min_count survivors (AQE splits hot-shingle skew; no
+    the repeated survivors (AQE splits hot-shingle skew; no
     window-over-shingle single-partition trap); (3) the interval merge
     is the classic gaps-and-islands window partitioned by the doc id —
     equal-length intervals sorted by start merge iff
@@ -1041,11 +1015,11 @@ def removal_spans(
     of breaks is exact, one exchange on the id.
     """
     occ = (
-        df.repartition(F.col(id_col))
-        .select(F.col(id_col), words_expr(text_col).alias("__words"))
+        df.repartition(F.col("doc_id"))
+        .select(F.col("doc_id"), words_expr("text").alias("__words"))
         .filter(F.size("__words") >= SHINGLE_N)
         .select(
-            id_col,
+            "doc_id",
             F.posexplode(
                 F.transform(
                     F.sequence(F.lit(0), F.size("__words") - SHINGLE_N),
@@ -1060,11 +1034,11 @@ def removal_spans(
     dup = (
         occ.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") >= min_count)
+        .filter(F.col("__n") >= 2)
         .select("shingle")
     )
-    marked = occ.join(dup, "shingle").select(id_col, "pos")
-    w = Window.partitionBy(id_col).orderBy("pos")
+    marked = occ.join(dup, "shingle").select("doc_id", "pos")
+    w = Window.partitionBy("doc_id").orderBy("pos")
     spans = (
         marked.withColumn(
             "__brk",
@@ -1074,7 +1048,7 @@ def removal_spans(
             "__island",
             F.sum("__brk").over(w.rowsBetween(Window.unboundedPreceding, 0)),
         )
-        .groupBy(id_col, "__island")
+        .groupBy("doc_id", "__island")
         .agg(
             F.min("pos").cast("int").alias("span_start"),
             (F.max("pos") + SHINGLE_N).cast("int").alias("span_end"),

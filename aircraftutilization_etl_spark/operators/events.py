@@ -81,9 +81,7 @@ def range_join_bucketed(
     return joined.drop("__bucket")
 
 
-def cooccurrence_pairs(
-    df: DataFrame, key: str, item: str, count_alias: str = "n_keys"
-) -> DataFrame:
+def cooccurrence_pairs(df: DataFrame, key: str, item: str) -> DataFrame:
     """Item co-occurrence counts: for every unordered pair of distinct
     items observed under the same key, the number of keys exhibiting
     both — the recsys/feature-mining primitive (users co-clicking, docs
@@ -122,7 +120,7 @@ def cooccurrence_pairs(
         ),
     )
     return pairs.groupBy("item_a", "item_b").agg(
-        F.count(F.lit(1)).alias(count_alias)
+        F.count(F.lit(1)).alias("n_keys")
     )
 
 
@@ -132,9 +130,8 @@ def resample_ffill(
     ts_col: str,
     value_col: str,
     tiebreak_col: str,
-    step: str = "1 hour",
 ) -> DataFrame:
-    """Regularize an irregular event series onto a fixed time grid with
+    """Regularize an irregular event series onto an hourly grid with
     forward-fill — the hypertable/time-series 'resample + locf' op:
     one row per (key, bucket) from the key's first to last active
     bucket, carrying the most recent observed value at or before that
@@ -152,17 +149,15 @@ def resample_ffill(
     join would reshuffle both sides on the full (key, bucket) pair —
     requireAllClusterKeysForCoPartition), each observed bucket emits
     ITSELF plus its trailing gap rows: lead() gives the next observed
-    bucket, sequence()+explode generates [bucket, next-step] carrying
+    bucket, sequence()+explode generates [bucket, next - 1 hour] carrying
     the observed value — so locf holds by construction with no second
     pass. The source is repartitioned on the key once; the per-bucket
     max_by aggregation and the lead window both ride that partitioning,
     and the explode is map-side. Per-key work is bounded by the key's
-    active span / step; gap rows are generated, never stored or
+    active span in hours; gap rows are generated, never stored or
     shuffled.
     """
-    bucket = F.date_trunc("hour", F.col(ts_col)) if step == "1 hour" else (
-        F.window(F.col(ts_col), step).getField("start")
-    )
+    bucket = F.date_trunc("hour", F.col(ts_col))
     src = df.repartition(F.col(key_col))
     obs = src.groupBy(F.col(key_col), bucket.alias("__b")).agg(
         F.max_by(
@@ -174,7 +169,7 @@ def resample_ffill(
     stopped = obs.withColumn(
         "__stop",
         F.coalesce(
-            F.lead("__b").over(w) - F.expr(f"INTERVAL {step}"), F.col("__b")
+            F.lead("__b").over(w) - F.expr("INTERVAL 1 hour"), F.col("__b")
         ),
     )
     filled = stopped.select(
@@ -182,7 +177,7 @@ def resample_ffill(
         "__b",
         "__v",
         F.explode(
-            F.sequence("__b", "__stop", F.expr(f"INTERVAL {step}"))
+            F.sequence("__b", "__stop", F.expr("INTERVAL 1 hour"))
         ).alias("bucket_ts"),
     )
     return filled.select(
@@ -199,7 +194,6 @@ def resample_interpolate(
     ts_col: str,
     value_col: str,
     tiebreak_col: str,
-    step: str = "1 hour",
 ) -> DataFrame:
     """Resample + LINEAR interpolation — the second hypertable gap-fill
     mode next to resample_ffill's locf: gap buckets between two
@@ -215,9 +209,7 @@ def resample_interpolate(
 
     Output: (key, bucket_ts, value_interp, is_observed).
     """
-    bucket = F.date_trunc("hour", F.col(ts_col)) if step == "1 hour" else (
-        F.window(F.col(ts_col), step).getField("start")
-    )
+    bucket = F.date_trunc("hour", F.col(ts_col))
     src = df.repartition(F.col(key_col))
     obs = src.groupBy(F.col(key_col), bucket.alias("__b")).agg(
         F.max_by(
@@ -236,7 +228,7 @@ def resample_interpolate(
     stopped = nxt.withColumn(
         "__stop",
         F.coalesce(
-            F.col("__nb") - F.expr(f"INTERVAL {step}"), F.col("__b")
+            F.col("__nb") - F.expr("INTERVAL 1 hour"), F.col("__b")
         ),
     )
     filled = stopped.select(
@@ -246,7 +238,7 @@ def resample_interpolate(
         "__nb",
         "__nv",
         F.explode(
-            F.sequence("__b", "__stop", F.expr(f"INTERVAL {step}"))
+            F.sequence("__b", "__stop", F.expr("INTERVAL 1 hour"))
         ).alias("bucket_ts"),
     )
     elapsed = F.unix_timestamp("bucket_ts") - F.unix_timestamp("__b")
@@ -273,7 +265,6 @@ def ewma(
     value_col: str,
     tiebreak: str,
     alpha: float = 0.25,
-    out_col: str = "ewma",
 ) -> DataFrame:
     """Per-key exponential moving average (adjust-free recurrence:
     y_0 = x_0, y_t = (1-alpha)*y_{t-1} + alpha*x_t) — the smoothing
@@ -296,12 +287,10 @@ def ewma(
     key changes and carries (last_key, last_ewma) across Arrow batch
     boundaries, so batch slicing never splits a recurrence.
     """
-    import pandas as pd
-
     one_minus = 1.0 - alpha
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {out_col} double"
+    ) + ", ewma double"
 
     def _smooth(batches):
         last_key, last_val = object(), 0.0  # sentinel: matches no key
@@ -316,7 +305,7 @@ def ewma(
                     out[i] = one_minus * last_val + alpha * vals[i]
                 last_key, last_val = keys[i], out[i]
             pdf = pdf.copy()
-            pdf[out_col] = out
+            pdf["ewma"] = out
             yield pdf
 
     return (
@@ -331,15 +320,13 @@ def ohlc_bars(
     key_col: str,
     ts_col: str,
     value_col: str,
-    bucket: str = "hour",
-    tie_col: str = "event_id",
 ) -> DataFrame:
-    """Open/high/low/close bars per (key, time bucket) — the hypertable
+    """Open/high/low/close bars per (key, hour bucket) — the hypertable
     downsampling primitive (continuous-aggregate style): first and last
     observed value plus extremes and count, per key per bucket.
 
     Open/close are ORDER-dependent aggregates; ties on the timestamp
-    break by ``tie_col`` so the bar is deterministic under replays and
+    break by ``event_id`` so the bar is deterministic under replays and
     engine swaps. Formulated as one bucket-keyed window pass (row_number
     ascending + descending share the single sort) rather than min_by /
     arg_min, whose composite-key tie-breaking differs across engines.
@@ -349,15 +336,15 @@ def ohlc_bars(
     leaves the shuffle is |keys|·|buckets| rows — the downsampled
     series, storage-bounded regardless of event volume.
     """
-    b = F.date_trunc(bucket, F.col(ts_col)).alias("bucket")
+    b = F.date_trunc("hour", F.col(ts_col)).alias("bucket")
     base = df.select(
-        F.col(key_col), b, F.col(ts_col), F.col(value_col), F.col(tie_col)
+        F.col(key_col), b, F.col(ts_col), F.col(value_col), F.col("event_id")
     )
     w_asc = Window.partitionBy(key_col, "bucket").orderBy(
-        F.col(ts_col), F.col(tie_col)
+        F.col(ts_col), F.col("event_id")
     )
     w_desc = Window.partitionBy(key_col, "bucket").orderBy(
-        F.col(ts_col).desc(), F.col(tie_col).desc()
+        F.col(ts_col).desc(), F.col("event_id").desc()
     )
     return (
         base.withColumn("__ra", F.row_number().over(w_asc))
@@ -379,9 +366,6 @@ def multi_touch_attribution(
     touch_type: str,
     convert_type: str,
     lookback_seconds: int,
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
 ) -> DataFrame:
     """Linear multi-touch attribution: each conversion's value is split
     in integer cents across the key's touch events in the preceding
@@ -402,16 +386,16 @@ def multi_touch_attribution(
     width = int(lookback_seconds) * 1_000_000
     conv = events.filter(F.col("event_type") == convert_type).select(
         F.col(key).alias("__k"),
-        F.col(id_col).alias("conv_id"),
-        F.unix_micros(F.col(ts_col)).alias("__pt"),
-        F.round(F.col(value_col) * 100, 0).cast("bigint").alias("__cents"),
+        F.col("event_id").alias("conv_id"),
+        F.unix_micros(F.col("ts")).alias("__pt"),
+        F.round(F.col("value") * 100, 0).cast("bigint").alias("__cents"),
     )
     touch = events.filter(F.col("event_type") == touch_type).select(
         F.col(key).alias("__k"),
-        F.col(id_col).alias("touch_id"),
-        F.col(ts_col).alias("touch_ts"),
-        F.unix_micros(F.col(ts_col)).alias("__ct"),
-        F.floor(F.unix_micros(F.col(ts_col)) / width).alias("__bucket"),
+        F.col("event_id").alias("touch_id"),
+        F.col("ts").alias("touch_ts"),
+        F.unix_micros(F.col("ts")).alias("__ct"),
+        F.floor(F.unix_micros(F.col("ts")) / width).alias("__bucket"),
     )
     probes = conv.withColumn(
         "__bucket",
@@ -461,7 +445,6 @@ def cusum(
     target_cents: int,
     slack_cents: int,
     threshold_cents: int,
-    out_col: str = "cusum_cents",
 ) -> DataFrame:
     """Per-key one-sided (upper) CUSUM changepoint detector over an
     integer-cents series: S_0 = max(0, x_0 − target − slack),
@@ -480,7 +463,7 @@ def cusum(
     drift = int(target_cents) + int(slack_cents)
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {out_col} bigint, alarm boolean"
+    ) + ", cusum_cents bigint, alarm boolean"
 
     def _scan(batches):
         last_key, last_s = object(), 0
@@ -496,7 +479,7 @@ def cusum(
                 out[i] = s if s > 0 else 0
                 last_key, last_s = keys[i], out[i]
             pdf = pdf.copy()
-            pdf[out_col] = out
+            pdf["cusum_cents"] = out
             pdf["alarm"] = [s > threshold_cents for s in out]
             yield pdf
 
@@ -507,12 +490,7 @@ def cusum(
     )
 
 
-def directed_cooccurrence(
-    df: DataFrame,
-    key: str,
-    item: str,
-    weight_alias: str = "weight",
-) -> DataFrame:
+def directed_cooccurrence(df: DataFrame, key: str, item: str) -> DataFrame:
     """Symmetric DIRECTED co-occurrence edges (src, dst, weight): both
     orientations of every unordered pair from
     :func:`cooccurrence_pairs`, weight = number of keys exhibiting
@@ -540,5 +518,5 @@ def directed_cooccurrence(
                 ),
             )
         ).alias("__e"),
-        F.col("n_keys").alias(weight_alias),
-    ).select("__e.src", "__e.dst", weight_alias)
+        F.col("n_keys").alias("weight"),
+    ).select("__e.src", "__e.dst", "weight")

@@ -131,12 +131,7 @@ def _cms_col(key, depth_idx, width: int):
     )
 
 
-def count_min_build(
-    df: DataFrame,
-    key_col: str,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-) -> DataFrame:
+def count_min_build(df: DataFrame, key_col: str) -> DataFrame:
     """Build a count-min sketch (Cormode & Muthukrishnan 2005) of the
     key stream as a (depth, col, cnt) frame — ≤ depth × width rows
     regardless of input size.
@@ -151,7 +146,7 @@ def count_min_build(
     every distinct key.
     """
     return (
-        count_min_cells(df, key_col, depth, width)
+        count_min_cells(df, key_col, CMS_DEPTH, CMS_WIDTH)
         .groupBy("depth", "col")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -180,8 +175,6 @@ def count_min_estimate(
     sketch: DataFrame,
     keys: DataFrame,
     key_col: str,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
 ) -> DataFrame:
     """Point-frequency estimates for ``keys`` from a count-min sketch:
     est(k) = min over rows of cell(row, hash_row(k)) — never an
@@ -195,7 +188,9 @@ def count_min_estimate(
     probes = keys.select(
         F.col(key_col),
         F.posexplode(
-            F.array(*[_cms_col(F.col(key_col), i, width) for i in range(depth)])
+            F.array(
+                *[_cms_col(F.col(key_col), i, CMS_WIDTH) for i in range(CMS_DEPTH)]
+            )
         ).alias("depth", "col"),
     )
     return (

@@ -46,9 +46,6 @@ def haversine_km(lat1, lon1, lat2, lon2):
 def proximity_pairs(
     df: DataFrame,
     max_km: float,
-    id_col: str = "icao24",
-    lat_col: str = "latitude",
-    lon_col: str = "longitude",
     max_candidates_per_cell: int | None = None,
 ) -> DataFrame:
     """All unordered pairs of rows within ``max_km`` great-circle km —
@@ -90,30 +87,30 @@ def proximity_pairs(
     # the guard IS the latitude every downstream expression reads —
     # a dropped side-column would be pruned before the error could fire
     lat_guarded = F.when(
-        F.abs(F.col(lat_col)) <= MAX_ABS_LAT_DEG, F.col(lat_col)
+        F.abs(F.col("latitude")) <= MAX_ABS_LAT_DEG, F.col("latitude")
     ).otherwise(
         F.raise_error(
             F.concat(
                 F.lit(
                     f"proximity_pairs: |latitude| must be <= {MAX_ABS_LAT_DEG}, got "
                 ),
-                F.col(lat_col).cast("string"),
+                F.col("latitude").cast("string"),
             )
         )
     )
     base = df.select(
-        F.col(id_col),
+        F.col("icao24"),
         lat_guarded.alias("__lat"),
-        F.col(lon_col).alias("__lon"),
+        F.col("longitude").alias("__lon"),
     ).select(
-        id_col,
+        "icao24",
         "__lat",
         "__lon",
         F.floor(F.col("__lat") / d_lat).cast("long").alias("__ci"),
         F.floor(F.col("__lon") / d_lon).cast("long").alias("__cj"),
     )
     probe = base.select(
-        F.col(id_col).alias("id_a"),
+        F.col("icao24").alias("id_a"),
         F.col("__lat").alias("__lat_a"),
         F.col("__lon").alias("__lon_a"),
         F.explode(
@@ -130,7 +127,7 @@ def proximity_pairs(
         ).alias("__cell"),
     ).select("id_a", "__lat_a", "__lon_a", "__cell.ci", "__cell.cj")
     build = base.select(
-        F.col(id_col).alias("id_b"),
+        F.col("icao24").alias("id_b"),
         F.col("__lat").alias("__lat_b"),
         F.col("__lon").alias("__lon_b"),
         F.col("__ci").alias("ci"),
@@ -165,14 +162,7 @@ def proximity_pairs(
     )
 
 
-def track_lengths(
-    df: DataFrame,
-    id_col: str = "icao24",
-    ts_col: str = "ts",
-    lat_col: str = "latitude",
-    lon_col: str = "longitude",
-    tie_col: str | None = None,
-) -> DataFrame:
+def track_lengths(df: DataFrame, tie_col: str | None = None) -> DataFrame:
     """Distance flown per track: the sum of consecutive-fix haversine
     legs, ordered by time — the utilization metric the reference domain
     exists to compute (km flown per aircraft from its position stream).
@@ -186,17 +176,17 @@ def track_lengths(
     """
     from pyspark.sql.window import Window
 
-    order = [F.col(ts_col)] + ([F.col(tie_col)] if tie_col else [])
-    w = Window.partitionBy(id_col).orderBy(*order)
+    order = [F.col("ts")] + ([F.col(tie_col)] if tie_col else [])
+    w = Window.partitionBy("icao24").orderBy(*order)
     leg = haversine_km(
-        F.lag(lat_col).over(w),
-        F.lag(lon_col).over(w),
-        F.col(lat_col),
-        F.col(lon_col),
+        F.lag("latitude").over(w),
+        F.lag("longitude").over(w),
+        F.col("latitude"),
+        F.col("longitude"),
     )
     return (
         df.withColumn("__leg", leg)
-        .groupBy(id_col)
+        .groupBy("icao24")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_fixes"),
             F.count("__leg").cast("bigint").alias("n_legs"),

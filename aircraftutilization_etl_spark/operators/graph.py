@@ -41,8 +41,6 @@ BASE_PPM = PPM - DAMPING_PPM  # (1 - d) teleport mass per node
 def pagerank(
     edges: DataFrame,
     n_iterations: int = 5,
-    src: str = "src",
-    dst: str = "dst",
     rank_partitions: int | None = None,
 ) -> DataFrame:
     """Integer-ppm PageRank over a directed edge list; returns
@@ -66,7 +64,7 @@ def pagerank(
     """
     if n_iterations < 0:
         raise ValueError("n_iterations must be >= 0")
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = edges.select("src", "dst")
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
     # edge-scale cache, reused every iteration
     out_edges = e.join(deg, "src").persist(CORPUS_CACHE)
@@ -220,12 +218,7 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_rounds: int = 25,
-) -> DataFrame:
+def connected_components_star(pairs: DataFrame) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris et al. 2014, "Connected Components in
     MapReduce and Beyond") → (node, component) with component = the
@@ -250,7 +243,7 @@ def connected_components_star(
     driver, never the data); a stable star graph IS the component
     assignment.
     """
-    fwd = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+    fwd = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
     edges = (
         fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .filter(F.col("u") != F.col("v"))
@@ -291,7 +284,7 @@ def connected_components_star(
         return int(row["n"]), int(row["h"])
 
     prev = _fingerprint(edges)
-    for _ in range(max_rounds):
+    for _ in range(25):
         edges = _star(edges, large=True).localCheckpoint(eager=True)
         edges = _star(edges, large=False).localCheckpoint(eager=True)
         cur = _fingerprint(edges)
@@ -300,8 +293,7 @@ def connected_components_star(
         prev = cur
     else:
         raise RuntimeError(
-            f"connected_components_star did not stabilize within "
-            f"{max_rounds} rounds"
+            "connected_components_star did not stabilize within 25 rounds"
         )
     # stable state: every non-root points directly at its component min
     roots = edges.groupBy("u").agg(F.min("v").alias("component"))
@@ -314,13 +306,7 @@ def connected_components_star(
     )
 
 
-def knn_edges(
-    weighted_pairs: DataFrame,
-    k: int,
-    src: str = "src",
-    dst: str = "dst",
-    weight: str = "weight",
-) -> DataFrame:
+def knn_edges(weighted_pairs: DataFrame, k: int) -> DataFrame:
     """Sparsify a weighted similarity graph to each node's k strongest
     neighbors (ties by neighbor id) — the k-NN graph construction used
     before clustering/label propagation at scale, where the dense
@@ -329,23 +315,17 @@ def knn_edges(
     Scale: one shuffle on the src for the per-node top-k window; the
     output is k·|V| edges regardless of input density.
     """
-    w = Window.partitionBy(src).orderBy(F.desc(weight), F.col(dst))
+    w = Window.partitionBy("src").orderBy(F.desc("weight"), F.col("dst"))
     return (
         weighted_pairs.withColumn("__r", F.row_number().over(w))
         .filter(F.col("__r") <= k)
-        .select(src, dst)
+        .select("src", "dst")
     )
 
 
-def bfs_depths(
-    edges: DataFrame,
-    max_depth: int,
-    src: str = "src",
-    dst: str = "dst",
-    source_node: int | None = None,
-) -> DataFrame:
+def bfs_depths(edges: DataFrame, max_depth: int) -> DataFrame:
     """Breadth-first reachability: (node, depth) for every node within
-    ``max_depth`` hops of the source (default: the smallest src id),
+    ``max_depth`` hops of the source (the smallest src id),
     depth = first-reach distance.
 
     The frontier loop is the synchronous-BFS shape of the iterative
@@ -357,13 +337,8 @@ def bfs_depths(
     frontier is usually the small side, so AQE broadcasts it into the
     edge scan.
     """
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).persist(CORPUS_CACHE)  # edge-scale
-    if source_node is None:
-        source = e.agg(F.min("src")).collect()[0][0]
-    else:
-        source = source_node
+    e = edges.select("src", "dst").persist(CORPUS_CACHE)  # edge-scale
+    source = e.agg(F.min("src")).collect()[0][0]
     spark = edges.sparkSession
     dist = spark.createDataFrame([(source, 0)], "node long, depth int")
     frontier = dist

@@ -271,12 +271,12 @@ def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
 PHASH_BLOCKS = 32  # perceptual-hash resolution (bits)
 
 
-def perceptual_hash(media: DataFrame, n_blocks: int = PHASH_BLOCKS) -> DataFrame:
+def perceptual_hash(media: DataFrame) -> DataFrame:
     """Block-average perceptual hash (aHash) of every decoded payload →
-    (asset_id, media_type, phash) with ``phash`` an ``n_blocks``-char
+    (asset_id, media_type, phash) with ``phash`` a ``PHASH_BLOCKS``-char
     bit string.
 
-    The decoded signal is split into ``n_blocks`` near-equal contiguous
+    The decoded signal is split into ``PHASH_BLOCKS`` near-equal contiguous
     blocks (byte j → block j·B div n); bit b is 1 iff block b's mean
     amplitude ≥ the whole signal's mean, compared EXACTLY by integer
     cross-multiplication (block_sum·n ≥ total_sum·block_len) — no float
@@ -316,16 +316,16 @@ def perceptual_hash(media: DataFrame, n_blocks: int = PHASH_BLOCKS) -> DataFrame
                     # row for a byteless doc
                     continue
                 else:
-                    blk = (np.arange(n, dtype=np.int64) * n_blocks) // n
+                    blk = (np.arange(n, dtype=np.int64) * PHASH_BLOCKS) // n
                     bsum = np.bincount(
-                        blk, weights=sig, minlength=n_blocks
+                        blk, weights=sig, minlength=PHASH_BLOCKS
                     ).astype(np.int64)
-                    blen = np.bincount(blk, minlength=n_blocks).astype(
+                    blen = np.bincount(blk, minlength=PHASH_BLOCKS).astype(
                         np.int64
                     )
                     total = int(sig.sum())
                     flags = bsum * n >= total * blen
-                    # empty blocks (n < n_blocks) compare 0 >= 0 -> 1,
+                    # empty blocks (n < PHASH_BLOCKS) compare 0 >= 0 -> 1,
                     # deterministically, matching the SQL replay
                     bits = "".join("1" if f else "0" for f in flags)
                 out_ids.append(aid)
@@ -344,23 +344,16 @@ def perceptual_hash(media: DataFrame, n_blocks: int = PHASH_BLOCKS) -> DataFrame
     )
 
 
-def phash_near_dup(
-    hashed: DataFrame,
-    max_hamming: int = 3,
-    n_bands: int = 4,
-    n_blocks: int = PHASH_BLOCKS,
-) -> DataFrame:
+def phash_near_dup(hashed: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-duplicate asset pairs by perceptual hash: banded LSH
-    candidate generation (pairs agreeing exactly on ≥1 of ``n_bands``
+    candidate generation (pairs agreeing exactly on ≥1 of 4
     hash slices) + exact Hamming verification ≤ ``max_hamming``.
 
     Same shape as the MinHash pipeline: the self-join runs on
     (band, band_key) buckets — only near-identical hashes ever meet —
     and verification touches candidates only. All JVM expressions.
     """
-    if n_blocks % n_bands:
-        raise ValueError("n_blocks must be a multiple of n_bands")
-    width = n_blocks // n_bands
+    width = PHASH_BLOCKS // 4
     bands = F.explode(
         F.array(
             *[
@@ -370,7 +363,7 @@ def phash_near_dup(
                         "band_key"
                     ),
                 )
-                for b in range(n_bands)
+                for b in range(4)
             ]
         )
     ).alias("bk")
@@ -398,7 +391,7 @@ def phash_near_dup(
         .distinct()
     )
     hamming = F.expr(
-        f"aggregate(sequence(1, {n_blocks}), 0, (acc, i) -> "
+        f"aggregate(sequence(1, {PHASH_BLOCKS}), 0, (acc, i) -> "
         "acc + IF(substring(ph_a, i, 1) = substring(ph_b, i, 1), 0, 1))"
     )
     return (

@@ -33,8 +33,6 @@ match row for row.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -48,9 +46,6 @@ DEFAULT_CAPACITY = 256
 def pack_sequences(
     df: DataFrame,
     capacity: int = DEFAULT_CAPACITY,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bucket_prefix_len: int = 1,
 ) -> DataFrame:
     """Assign every document to (bucket, seq_id, offset) under a greedy
     token-budget packing; returns one row per document.
@@ -61,21 +56,20 @@ def pack_sequences(
     """
     if capacity <= 0:
         raise ValueError(f"capacity must be positive, got {capacity}")
-    md5 = F.md5(F.col(id_col).cast("string"))
+    md5 = F.md5(F.col("doc_id").cast("string"))
     sized = df.select(
-        F.substring(md5, 1, bucket_prefix_len).alias("bucket"),
+        F.substring(md5, 1, 1).alias("bucket"),
         md5.alias("__order"),
-        F.col(id_col),
-        token_count_expr(text_col).cast("long").alias("n_tokens"),
+        F.col("doc_id"),
+        token_count_expr("text").cast("long").alias("n_tokens"),
     )
 
     out_schema = (
-        f"bucket string, seq_id long, {id_col} long, "
-        "n_tokens long, offset long"
+        "bucket string, seq_id long, doc_id long, n_tokens long, offset long"
     )
 
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["__order", id_col], kind="mergesort")
+        pdf = pdf.sort_values(["__order", "doc_id"], kind="mergesort")
         seq_ids, offsets = [], []
         seq_id, fill = 0, 0
         for tok in pdf["n_tokens"]:
@@ -89,7 +83,7 @@ def pack_sequences(
             {
                 "bucket": pdf["bucket"],
                 "seq_id": seq_ids,
-                id_col: pdf[id_col],
+                "doc_id": pdf["doc_id"],
                 "n_tokens": pdf["n_tokens"],
                 "offset": offsets,
             }
@@ -141,9 +135,6 @@ def length_bucket_expr(n_tokens, edges=LENGTH_BUCKET_EDGES):
 def padding_audit(
     df: DataFrame,
     batch_size: int = DEFAULT_BATCH_SIZE,
-    edges=LENGTH_BUCKET_EDGES,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Padding-waste audit of length-bucketed batching vs shuffled
     global batching — the measurement that justifies (or rejects)
@@ -166,11 +157,11 @@ def padding_audit(
     """
     from .sampling import global_running_sum
 
-    md5 = F.md5(F.col(id_col).cast("string"))
+    md5 = F.md5(F.col("doc_id").cast("string"))
     sized = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         md5.alias("__ord"),
-        token_count_expr(text_col).cast("long").alias("n_tokens"),
+        token_count_expr("text").cast("long").alias("n_tokens"),
     )
 
     def _audit(batched: DataFrame, policy: str, bucket_col):
@@ -197,9 +188,9 @@ def padding_audit(
             ).alias("waste_ppm"),
         )
 
-    w = Window.partitionBy("bucket").orderBy("__ord", id_col)
+    w = Window.partitionBy("bucket").orderBy("__ord", "doc_id")
     bucketed = sized.withColumn(
-        "bucket", length_bucket_expr(F.col("n_tokens"), edges)
+        "bucket", length_bucket_expr(F.col("n_tokens"), LENGTH_BUCKET_EDGES)
     ).withColumn(
         "batch_id",
         F.floor((F.row_number().over(w) - 1) / batch_size).cast("bigint"),
@@ -208,7 +199,7 @@ def padding_audit(
 
     indexed = global_running_sum(
         sized.withColumn("__one", F.lit(1)),
-        order_cols=["__ord", id_col],
+        order_cols=["__ord", "doc_id"],
         value_col="__one",
         out_col="__idx",
     ).withColumn("batch_id", F.expr(f"CAST((__idx - 1) DIV {batch_size} AS BIGINT)"))

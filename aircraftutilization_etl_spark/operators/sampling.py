@@ -39,10 +39,10 @@ _PREFIX_LEN = 4
 _BUCKETS = 16**_PREFIX_LEN
 
 
-def hash_bucket(key: Column, prefix_len: int = _PREFIX_LEN) -> Column:
-    """Stable [0, 16^prefix_len) bucket of a key via its md5 prefix."""
+def hash_bucket(key: Column) -> Column:
+    """Stable [0, 16^_PREFIX_LEN) bucket of a key via its md5 prefix."""
     return F.conv(
-        F.substring(F.md5(key.cast("string")), 1, prefix_len), 16, 10
+        F.substring(F.md5(key.cast("string")), 1, _PREFIX_LEN), 16, 10
     ).cast("long")
 
 
@@ -65,9 +65,7 @@ def split_thresholds(splits: dict[str, float]) -> list[tuple[str, str]]:
     return out
 
 
-def hash_split(
-    df: DataFrame, key: str, splits: dict[str, float], col_name: str = "split"
-) -> DataFrame:
+def hash_split(df: DataFrame, key: str, splits: dict[str, float]) -> DataFrame:
     """Assign every row to a named split by its key's md5 prefix.
 
     Deterministic, partitioning-independent, and stable under appends:
@@ -85,7 +83,7 @@ def hash_split(
         )
     # reversed() + otherwise-chaining emits WHEN prefix < b1 THEN s1
     # WHEN prefix < b2 THEN s2 ... ELSE s_last — first matching range wins
-    return df.withColumn(col_name, expr)
+    return df.withColumn("split", expr)
 
 
 def stratified_sample(
@@ -103,20 +101,15 @@ def stratified_sample(
     )
 
 
-def rebalance_sources(
-    df: DataFrame,
-    weight_ppm: Column,
-    source_col: str = "source",
-    key: str = "doc_id",
-) -> DataFrame:
+def rebalance_sources(df: DataFrame, weight_ppm: Column) -> DataFrame:
     """Downsample to a target source mix — the largest corpus honoring
     the given per-source weights without upsampling any source.
 
     ``weight_ppm`` is a positive integer column (parts-per-million mix
-    weight, functionally dependent on ``source_col``). Let
+    weight, functionally dependent on ``source``). Let
     T = min_s(n_s · 1e6 DIV w_s) — the total the scarcest source can
     support; each source then keeps k_s = (w_s · T) DIV 1e6 rows, chosen
-    by md5 order of the key. Pure integer arithmetic end to end, so
+    by md5 order of ``doc_id``. Pure integer arithmetic end to end, so
     quota sizes and row placement are engine-exact and reproducible.
 
     Scale: one tiny per-source count aggregate (broadcast back), then
@@ -127,20 +120,20 @@ def rebalance_sources(
     partitionings.
     """
     tagged = df.withColumn("__w", weight_ppm.cast("long"))
-    counts = tagged.groupBy(source_col, "__w").agg(
+    counts = tagged.groupBy("source", "__w").agg(
         F.count(F.lit(1)).alias("__n")
     )
     t = counts.agg(
         F.min(F.expr("__n * 1000000 DIV __w")).alias("__t")
     )
     quota = counts.crossJoin(F.broadcast(t)).select(
-        source_col, F.expr("(__w * __t) DIV 1000000").alias("__k")
+        "source", F.expr("(__w * __t) DIV 1000000").alias("__k")
     )
-    order = F.md5(F.col(key).cast("string"))
-    w = Window.partitionBy(source_col).orderBy(order, F.col(key))
+    order = F.md5(F.col("doc_id").cast("string"))
+    w = Window.partitionBy("source").orderBy(order, F.col("doc_id"))
     return (
         tagged.withColumn("__rn", F.row_number().over(w))
-        .join(F.broadcast(quota), source_col)
+        .join(F.broadcast(quota), "source")
         .filter(F.col("__rn") <= F.col("__k"))
         .drop("__w", "__rn", "__k")
     )
@@ -243,7 +236,6 @@ def temperature_rebalance(
     domain_col: str,
     key: str,
     target_total: int,
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """Temperature-flattened domain mix at temperature alpha = 1/2: keep
     domain ``d``'s share proportional to sqrt(n_d) — the mT5/UniMax-style
@@ -251,7 +243,7 @@ def temperature_rebalance(
     training corpus isn't dominated by its largest source.
 
     Engine-exact by construction: IEEE-754 requires ``sqrt`` (unlike
-    ``pow``) to be correctly rounded, so ``floor(sqrt(n) * scale)`` is
+    ``pow``) to be correctly rounded, so ``floor(sqrt(n) * 1e6)`` is
     bit-identical in Spark and DuckDB; every step after that integer
     weight is pure integer arithmetic (BIGINT sums, DIV quotas), so
     quota sizes and md5-ordered row placement replay exactly in the
@@ -262,7 +254,7 @@ def temperature_rebalance(
     The realized total is min(target_total, T_feasible) where
     T_feasible = min_d(n_d * S DIV s_d) caps the total at the point the
     scarcest domain would need upsampling. Overflow bound: n_d * S must
-    fit in int64 — at 1e12 docs drop ``scale`` to 1e3.
+    fit in int64, about 1e12 docs at the 1e6 weight scale.
 
     Scale: the per-domain count is a tiny aggregate (map-side combine,
     |domains| rows); quota arithmetic happens on that tiny frame with
@@ -273,7 +265,7 @@ def temperature_rebalance(
     s = counts.select(
         domain_col,
         "__n",
-        F.floor(F.sqrt(F.col("__n")) * scale).cast("long").alias("__w"),
+        F.floor(F.sqrt(F.col("__n")) * 1_000_000).cast("long").alias("__w"),
     )
     tot = s.agg(F.sum("__w").alias("__wtot"))
     st = s.crossJoin(F.broadcast(tot))
@@ -295,9 +287,7 @@ def temperature_rebalance(
     )
 
 
-def kfold_assign(
-    df: DataFrame, key: str, k: int, col_name: str = "fold"
-) -> DataFrame:
+def kfold_assign(df: DataFrame, key: str, k: int) -> DataFrame:
     """Assign every row a fold in [0, k) from its key's md5 — the
     deterministic k-fold carve for cross-validation over a corpus.
 
@@ -310,7 +300,7 @@ def kfold_assign(
     the scan.
     """
     bucket = hash_bucket(F.col(key))
-    return df.withColumn(col_name, (bucket % k).cast("int"))
+    return df.withColumn("fold", (bucket % k).cast("int"))
 
 
 def shard_and_order(
@@ -318,8 +308,6 @@ def shard_and_order(
     key: str,
     n_shards: int,
     seed: str = "",
-    shard_col: str = "shard",
-    pos_col: str = "pos",
 ) -> DataFrame:
     """Seeded global training-order shuffle, materialized as shard +
     position-within-shard — the "shuffle the corpus before training"
@@ -332,7 +320,7 @@ def shard_and_order(
     concatenation in any shard order is a uniform permutation. So:
     shard = (first 4 md5 hex digits of seed:key) mod S — a narrow
     projection — and pos = row_number within the shard ordered by the
-    full digest. One hash exchange on ``shard_col`` + per-shard sort:
+    full digest. One hash exchange on ``shard`` + per-shard sort:
     exactly the work a partitioned writer does anyway, and each of the
     S sort tasks handles ~N/S rows regardless of data skew, because the
     digest is uniform over the key space.
@@ -344,19 +332,12 @@ def shard_and_order(
     digest = F.md5(F.concat(F.lit(f"{seed}:"), F.col(key).cast("string")))
     bucket = F.conv(F.substring(digest, 1, _PREFIX_LEN), 16, 10).cast("long")
     shard = (bucket % n_shards).cast("int")
-    out = df.withColumn(shard_col, shard)
-    w = Window.partitionBy(shard_col).orderBy(digest, F.col(key))
-    return out.withColumn(pos_col, F.row_number().over(w).cast("long"))
+    out = df.withColumn("shard", shard)
+    w = Window.partitionBy("shard").orderBy(digest, F.col(key))
+    return out.withColumn("pos", F.row_number().over(w).cast("long"))
 
 
-def mix_epochs(
-    df: DataFrame,
-    epochs_ppm: dict[str, int],
-    source_col: str = "source",
-    key: str = "doc_id",
-    copies_col: str = "copies",
-    epoch_col: str = "epoch_idx",
-) -> DataFrame:
+def mix_epochs(df: DataFrame, epochs_ppm: dict[str, int]) -> DataFrame:
     """Realize a fractional-epoch source mix by deterministic row
     replication — the standard way training recipes express "3.5 epochs
     of wiki, 0.7 epochs of web" (e.g. the repetition-aware mixes in
@@ -366,12 +347,12 @@ def mix_epochs(
     (3_500_000 = 3.5 epochs). Every row of source s gets
     floor(e_s) copies; the fractional remainder is realized EXACTLY as
     k_s = (n_s * (e_s mod 1e6)) DIV 1e6 extra copies, granted to the
-    k_s first rows in md5 order of the key — so the realized per-source
+    k_s first rows in md5 order of ``doc_id`` — so the realized per-source
     total is integer-exact, not Bernoulli-approximate, and which rows
     repeat is reproducible on any engine. e_s < 1e6 downsamples
     (floor = 0, only the md5-selected k_s survive), unifying up- and
     down-sampling in one rule. Rows are exploded with a 0-based
-    ``epoch_col`` so downstream shuffling can interleave copies.
+    ``epoch_idx`` so downstream shuffling can interleave copies.
 
     Scale: one tiny per-source count (map-side combine) broadcast back;
     the data-sized work is the per-source md5 ranking (per-group
@@ -383,21 +364,21 @@ def mix_epochs(
     spec = inline_values_df(
         df.sparkSession,
         [(s, int(p)) for s, p in epochs_ppm.items()],
-        f"{source_col} string, __eppm long",
+        "source string, __eppm long",
     )
-    counts = df.groupBy(source_col).agg(F.count(F.lit(1)).alias("__n"))
-    quota = counts.join(spec, source_col).select(
-        source_col,
+    counts = df.groupBy("source").agg(F.count(F.lit(1)).alias("__n"))
+    quota = counts.join(spec, "source").select(
+        "source",
         F.expr("__eppm DIV 1000000").alias("__base"),
         F.expr("(__n * (__eppm % 1000000)) DIV 1000000").alias("__k"),
     )
-    order = F.md5(F.col(key).cast("string"))
-    w = Window.partitionBy(source_col).orderBy(order, F.col(key))
+    order = F.md5(F.col("doc_id").cast("string"))
+    w = Window.partitionBy("source").orderBy(order, F.col("doc_id"))
     ranked = df.withColumn("__rn", F.row_number().over(w))
     with_copies = (
-        ranked.join(F.broadcast(quota), source_col)
+        ranked.join(F.broadcast(quota), "source")
         .withColumn(
-            copies_col,
+            "copies",
             (
                 F.col("__base")
                 + F.when(F.col("__rn") <= F.col("__k"), 1).otherwise(0)
@@ -409,8 +390,8 @@ def mix_epochs(
     # no sequence(1,0) reverse-step trap
     return with_copies.select(
         "*",
-        F.posexplode(F.array_repeat(F.lit(1), F.col(copies_col))).alias(
-            epoch_col, "__one"
+        F.posexplode(F.array_repeat(F.lit(1), F.col("copies"))).alias(
+            "epoch_idx", "__one"
         ),
     ).drop("__one")
 
@@ -420,8 +401,6 @@ def weighted_sample(
     key: str,
     weight_col: str,
     n: int,
-    max_weight: int = 64,
-    seed: str = "ws",
 ) -> DataFrame:
     """Weighted sampling WITHOUT replacement (Efraimidis–Spirtakis
     A-ES), integer-exact: draw the ``n`` rows whose selection keys rank
@@ -436,25 +415,23 @@ def weighted_sample(
     maximum hex string. Pure string comparison — no float anywhere, so
     placement replays exactly in any engine with md5 (ties are
     impossible in practice but break by key for total order). Weights
-    must be integers in [1, max_weight]; enforced with a typed error
+    must be integers in [1, 64]; enforced with a typed error
     because a silently-capped weight would bias the draw.
 
     Scale: the key is a zero-shuffle per-row projection (a w-element
-    map-side hash array, bounded by max_weight); the global top-n is
+    map-side hash array, bounded by the cap of 64); the global top-n is
     TakeOrderedAndProject — per-partition heaps of n, no global sort,
-    no shuffle of the data itself. The weight cap is the knob that
-    keeps the per-row cost bounded: resolution beyond ~64 tiers buys
+    no shuffle of the data itself. The weight cap keeps the per-row
+    cost bounded: resolution beyond ~64 tiers buys
     no practical sampling fidelity but scales hashing linearly.
     """
     wcol = F.col(weight_col).cast("long")
     guarded = df.withColumn(
         "__w",
-        F.when((wcol >= 1) & (wcol <= max_weight), wcol).otherwise(
+        F.when((wcol >= 1) & (wcol <= 64), wcol).otherwise(
             F.raise_error(
                 F.concat(
-                    F.lit(
-                        f"weighted_sample: weight must be in [1, {max_weight}], got "
-                    ),
+                    F.lit("weighted_sample: weight must be in [1, 64], got "),
                     wcol.cast("string"),
                 )
             )
@@ -465,7 +442,7 @@ def weighted_sample(
             F.sequence(F.lit(1), F.col("__w").cast("int")),
             lambda j: F.md5(
                 F.concat_ws(
-                    ":", F.lit(seed), F.col(key).cast("string"), j.cast("string")
+                    ":", F.lit("ws"), F.col(key).cast("string"), j.cast("string")
                 )
             ),
         )

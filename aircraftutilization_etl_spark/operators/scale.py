@@ -148,8 +148,6 @@ def bloom_prune_join(
     probe: DataFrame,
     build: DataFrame,
     on: str,
-    m_bits: int = 1 << 17,
-    k_hashes: int = 5,
     how: str = "inner",
 ) -> DataFrame:
     """Equi-join with the probe side Bloom-pruned before its shuffle.
@@ -167,6 +165,7 @@ def bloom_prune_join(
             "join: pruned probe rows would be missing from its unmatched-"
             "row output. Use inner/semi/right."
         )
+    m_bits, k_hashes = 1 << 17, 5
     words = bloom_filter_words(build.select(on), on, m_bits, k_hashes)
     pruned = probe.filter(bloom_might_contain(words, on, m_bits, k_hashes))
     return pruned.join(build, on=on, how=how)

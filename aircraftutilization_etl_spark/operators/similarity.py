@@ -136,13 +136,7 @@ def _score_against(query_ids, query_mat_norm, id_col, vec_col, partial_k=None):
 _SCORE_SCHEMA = "query_id long, neighbor_id long, cosine_raw double"
 
 
-def cosine_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     """Exact top-k cosine neighbors of each query vector over the corpus.
 
     Output: (query_id, neighbor_id, cosine, rank), self-matches excluded,
@@ -151,13 +145,17 @@ def cosine_topk(
     An empty query set yields a typed empty result (no neighbors of
     nothing) rather than an error — the corpus scan is skipped entirely.
     """
-    qids, qmat = _collect_matrix(queries, id_col, vec_col)
+    qids, qmat = _collect_matrix(queries, "vec_id", "embedding")
     if qids.size == 0:
         return queries.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, cosine double, rank int"
         )
-    scored = ensure_scan_parallelism(corpus.select(id_col, vec_col)).mapInPandas(
-        _score_against(qids, _normalize(qmat), id_col, vec_col, partial_k=k),
+    scored = ensure_scan_parallelism(
+        corpus.select("vec_id", "embedding")
+    ).mapInPandas(
+        _score_against(
+            qids, _normalize(qmat), "vec_id", "embedding", partial_k=k
+        ),
         _SCORE_SCHEMA,
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
@@ -176,8 +174,6 @@ def cosine_topk(
 def cosine_pairs(
     corpus: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     block_rows: int = 4096,
 ) -> DataFrame:
     """All unordered pairs with cosine ≥ threshold (semantic near-dup).
@@ -201,7 +197,7 @@ def cosine_pairs(
     spark = corpus.sparkSession
     out_schema = "id_a long, id_b long, cosine double"
     base = corpus.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
+        F.col("vec_id").cast("long").alias("id"), F.col("embedding").alias("vec")
     )
     n = base.count()  # metadata-cheap over parquet; sizes the block grid
     if n == 0:
@@ -275,14 +271,7 @@ def cosine_pairs(
     return scored.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
 
 
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "label",
-) -> DataFrame:
+def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     """IVF-style ANN: search only the query's own coarse cell (probe=1).
 
     The equi-join on the cell id replaces the dense scan — at corpus
@@ -292,14 +281,14 @@ def ivf_topk(
     fold beats a Python round-trip.
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(cell_col).alias("cell"),
-        _as_double(F.col(vec_col)).alias("qv"),
+        F.col("vec_id").alias("query_id"),
+        F.col("label").alias("cell"),
+        _as_double(F.col("embedding")).alias("qv"),
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(cell_col).alias("cell"),
-        _as_double(F.col(vec_col)).alias("cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("label").alias("cell"),
+        _as_double(F.col("embedding")).alias("cv"),
     )
     scored = (
         c.join(F.broadcast(q), "cell")
@@ -348,9 +337,6 @@ def with_srp_bands(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = SRP_DIM,
-    n_planes: int = SRP_PLANES,
-    band_bits: int = SRP_BAND_BITS,
 ) -> DataFrame:
     """Exploded (id, vec, band, band_key) — one row per (vector, band).
 
@@ -360,8 +346,6 @@ def with_srp_bands(
     coefficients are literal arrays, so each projection is a codegen'd
     fold, no Python.
     """
-    if n_planes % band_bits:
-        raise ValueError("n_planes must be a multiple of band_bits")
     v = _as_double(F.col(vec_col))
     # plane literals as ONE parsed expression each: building ±1.0 arrays
     # element-by-element with F.lit costs one py4j round-trip per
@@ -375,7 +359,7 @@ def with_srp_bands(
                         "array("
                         + ",".join(
                             "1.0D" if x > 0 else "-1.0D"
-                            for x in srp_plane(p, dim)
+                            for x in srp_plane(p, SRP_DIM)
                         )
                         + ")"
                     ),
@@ -385,17 +369,17 @@ def with_srp_bands(
             > 0,
             F.lit("1"),
         ).otherwise(F.lit("0"))
-        for p in range(n_planes)
+        for p in range(SRP_PLANES)
     ]
     bands = F.array(
         *[
             F.struct(
                 F.lit(b).alias("band"),
-                F.concat(*bits[b * band_bits : (b + 1) * band_bits]).alias(
-                    "band_key"
-                ),
+                F.concat(
+                    *bits[b * SRP_BAND_BITS : (b + 1) * SRP_BAND_BITS]
+                ).alias("band_key"),
             )
-            for b in range(n_planes // band_bits)
+            for b in range(SRP_PLANES // SRP_BAND_BITS)
         ]
     )
     return df.select(
@@ -403,13 +387,7 @@ def with_srp_bands(
     ).select(id_col, vec_col, F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
 
 
-def srp_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def srp_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     """Hyperplane-LSH ANN top-k: candidates are corpus vectors sharing
     ≥ 1 sign-bit band with the query; exact cosine on candidates only.
 
@@ -420,15 +398,15 @@ def srp_topk(
     groups duplicate candidates and one per-query top-k window ranks.
     Recall tunes with bands × bits like any LSH.
     """
-    qb = with_srp_bands(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("qv"),
+    qb = with_srp_bands(queries, "vec_id", "embedding").select(
+        F.col("vec_id").alias("query_id"),
+        _as_double(F.col("embedding")).alias("qv"),
         "band",
         "band_key",
     )
-    cb = with_srp_bands(corpus, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        _as_double(F.col(vec_col)).alias("cv"),
+    cb = with_srp_bands(corpus, "vec_id", "embedding").select(
+        F.col("vec_id").alias("neighbor_id"),
+        _as_double(F.col("embedding")).alias("cv"),
         "band",
         "band_key",
     )
@@ -484,12 +462,7 @@ def quantize_embeddings(
     )
 
 
-def cosine_best_match(
-    corpus: DataFrame,
-    refs: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_best_match(corpus: DataFrame, refs: DataFrame) -> DataFrame:
     """Best cosine match of every corpus vector against a SMALL
     reference set: (vec_id, best_ref_id, cosine) — the kernel of
     embedding-space decontamination, where refs are benchmark items and
@@ -506,7 +479,7 @@ def cosine_best_match(
     candidate table (~1 row of 24 bytes per corpus vector), never the
     vectors.
     """
-    rids, rmat = _collect_matrix(refs, id_col, vec_col)
+    rids, rmat = _collect_matrix(refs, "vec_id", "embedding")
     if rids.size == 0:
         # no references -> no best match for any corpus row (the
         # oracle's CROSS JOIN against an empty reference set)
@@ -519,8 +492,8 @@ def cosine_best_match(
         for batch in batches:
             if batch.empty:
                 continue
-            cids = batch[id_col].to_numpy(dtype=np.int64)
-            cmat = np.stack(batch[vec_col].to_numpy()).astype(np.float64)
+            cids = batch["vec_id"].to_numpy(dtype=np.int64)
+            cmat = np.stack(batch["embedding"].to_numpy()).astype(np.float64)
             sims = _normalize(cmat) @ rnorm.T  # (nb, nr)
             mx = sims.max(axis=1)
             rows, cols = np.nonzero(sims >= mx[:, None] - 1e-6)
@@ -532,7 +505,9 @@ def cosine_best_match(
                 }
             )
 
-    cand = ensure_scan_parallelism(corpus.select(id_col, vec_col)).mapInPandas(
+    cand = ensure_scan_parallelism(
+        corpus.select("vec_id", "embedding")
+    ).mapInPandas(
         fn, "vec_id long, ref_id long, cosine_raw double"
     )
     w = Window.partitionBy("vec_id").orderBy(
@@ -549,20 +524,14 @@ def cosine_best_match(
     )
 
 
-def rrf_fuse(
-    lex: DataFrame,
-    vec: DataFrame,
-    k: int,
-    c: int = 60,
-    scale: int = 1_000_000_000,
-) -> DataFrame:
+def rrf_fuse(lex: DataFrame, vec: DataFrame, k: int) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. 2009) of two per-query
     rank lists — the standard hybrid-retrieval combiner for a lexical
     (BM25) and a vector (cosine ANN) ranking.
 
     Inputs are (query_id, doc_id, rank) frames; a document absent from
     one list contributes 0 from that side. RRF(d) = Σ 1/(c + rank_d)
-    is computed in scaled-integer form ``scale DIV (c + rank)`` so the
+    is computed in scaled-integer form ``1e9 DIV (c + rank)`` so the
     fused score — and therefore the fused top-k cut — is engine-exact
     with no float summation anywhere. c=60 is the paper's constant.
 
@@ -577,8 +546,8 @@ def rrf_fuse(
         a.join(b, ["query_id", "doc_id"], "full_outer")
         .withColumn(
             "rrf_score_e9",
-            F.coalesce(F.expr(f"{scale} DIV ({c} + lex_rank)"), F.lit(0))
-            + F.coalesce(F.expr(f"{scale} DIV ({c} + vec_rank)"), F.lit(0)),
+            F.coalesce(F.expr("1000000000 DIV (60 + lex_rank)"), F.lit(0))
+            + F.coalesce(F.expr("1000000000 DIV (60 + vec_rank)"), F.lit(0)),
         )
         .withColumn("rrf_score_e9", F.col("rrf_score_e9").cast("long"))
     )

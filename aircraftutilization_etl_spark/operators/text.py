@@ -40,9 +40,9 @@ def token_count_expr(col: Column | str = "text") -> Column:
     return F.size(words_expr(col))
 
 
-def bpe_token_count_expr(col: Column | str = "text") -> Column:
+def bpe_token_count_expr() -> Column:
     """BPE-ish token count via the pre-tokenizer regex."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = F.col("text")
     return F.size(F.regexp_extract_all(c, F.lit(BPE_TOKEN_PATTERN), 0))
 
 
@@ -96,13 +96,11 @@ def quality_score_expr(
     return F.round((len_ok + word_ok + punct_ok) / 3, 4)
 
 
-def lang_id_expr(
-    col: Column | str = "text", *, stop_ratio: Column | None = None
-) -> Column:
+def lang_id_expr(*, stop_ratio: Column | None = None) -> Column:
     """Stopword-hit language heuristic: 'en' when English stopwords make
     up over 5% of tokens, else 'unknown'. (A real lang-ID model plugs in
     behind the same column contract.)"""
-    ratio = stopword_ratio_expr(col) if stop_ratio is None else stop_ratio
+    ratio = stopword_ratio_expr("text") if stop_ratio is None else stop_ratio
     return F.when(ratio > 0.05, F.lit("en")).otherwise(F.lit("unknown"))
 
 
@@ -163,9 +161,7 @@ def gopher_metrics(col: Column | str = "text") -> dict[str, Column]:
     }
 
 
-def gopher_flags(
-    metrics: dict[str, Column], thresholds: dict | None = None
-) -> dict[str, Column]:
+def gopher_flags(metrics: dict[str, Column]) -> dict[str, Column]:
     """Gopher rule booleans over pre-materialized metrics columns.
 
     Passing metrics in (rather than recomputing from text) lets the
@@ -173,7 +169,7 @@ def gopher_flags(
     from both the flags and the report output (see q_text_quality's
     layered-projection note).
     """
-    t = {**GOPHER_DEFAULTS, **(thresholds or {})}
+    t = GOPHER_DEFAULTS
     return {
         "f_word_count": metrics["n_words"].between(
             t["min_words"], t["max_words"]
@@ -267,9 +263,7 @@ def ngram_repetition_expr(
     )
 
 
-def unigram_logprob(
-    df: DataFrame, id_col: str = "doc_id", col: str = "text"
-) -> DataFrame:
+def unigram_logprob(df: DataFrame) -> DataFrame:
     """Mean unigram log-probability per document under the corpus's own
     unigram model — the cheap perplexity proxy used to rank documents by
     'naturalness' in pretraining-data curation (a doc of rare/garbled
@@ -280,13 +274,13 @@ def unigram_logprob(
     (2) tokens join the model on the token key — vocabulary is tiny
     relative to the corpus, so AQE typically broadcasts it — then one
     shuffle on the doc id for the per-doc mean. No Python anywhere.
-    Output: (id_col, n_tokens, logprob) with logprob rounded to 4dp at
+    Output: (doc_id, n_tokens, logprob) with logprob rounded to 4dp at
     the edge.
     """
     words = df.select(
-        id_col,
+        "doc_id",
         F.explode(
-            F.transform(words_expr(col), lambda w: F.lower(w))
+            F.transform(words_expr("text"), lambda w: F.lower(w))
         ).alias("__w"),
     )
     counts = words.groupBy("__w").agg(F.count(F.lit(1)).alias("__c"))
@@ -294,7 +288,7 @@ def unigram_logprob(
     model = counts.crossJoin(F.broadcast(total))
     return (
         words.join(model, "__w")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             # + 0.0: -0.0 discipline — a degenerate corpus can
@@ -307,13 +301,7 @@ def unigram_logprob(
     )
 
 
-def repeated_ngrams(
-    df: DataFrame,
-    min_docs: int,
-    k: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def repeated_ngrams(df: DataFrame, min_docs: int, k: int) -> DataFrame:
     """Corpus-level repeated-n-gram mining: the top-k word-3-grams by
     the number of DISTINCT documents containing them — the boilerplate
     scan (headers, license blocks, templated navigation) that sits
@@ -334,7 +322,7 @@ def repeated_ngrams(
     """
     from .dedup import doc_shingles
 
-    sh = doc_shingles(df, id_col, text_col)
+    sh = doc_shingles(df, "doc_id", "text")
     counts = sh.groupBy("shingle").agg(
         F.count(F.lit(1)).alias("n_docs")
     )
@@ -346,12 +334,7 @@ def repeated_ngrams(
     )
 
 
-def boilerplate_scores(
-    df: DataFrame,
-    min_docs: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def boilerplate_scores(df: DataFrame, min_docs: int) -> DataFrame:
     """Per-document boilerplate share: the fraction (integer ppm) of a
     document's distinct shingles that are corpus-common (contained in
     >= min_docs documents) — high scores mark templated/remixed
@@ -372,7 +355,7 @@ def boilerplate_scores(
     """
     from .dedup import doc_shingles
 
-    sh = doc_shingles(df, id_col, text_col)
+    sh = doc_shingles(df, "doc_id", "text")
     common = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("__nd"))
@@ -381,7 +364,7 @@ def boilerplate_scores(
     )
     return (
         sh.join(F.broadcast(common), "shingle", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_shingles"),
             F.count("__hit").cast("long").alias("n_common"),
@@ -397,10 +380,6 @@ def bm25_topk(
     df: DataFrame,
     query_terms: DataFrame,
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     exclude_self: bool = False,
 ) -> DataFrame:
     """BM25 keyword retrieval: top-k documents per query under the
@@ -411,7 +390,8 @@ def bm25_topk(
     ``query_terms``: a small (query_id, term) frame — one row per
     query term, terms lowercased.
 
-    score(q, d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl)),
+    score(q, d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))
+    with k1 = 1.2, b = 0.75;
     idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5)). Scores are rounded to
     6dp BEFORE ranking (ties then break by doc id), so the top-k cut
     is reproducible across engines — ranking raw doubles would let a
@@ -426,29 +406,29 @@ def bm25_topk(
     over candidate docs only. No full-corpus scoring anywhere.
     """
     words = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.transform(words_expr(text_col), lambda w: F.lower(w))
+            F.transform(words_expr("text"), lambda w: F.lower(w))
         ).alias("__w"),
     )
-    tf = words.groupBy(id_col, "__w").agg(F.count(F.lit(1)).alias("__tf"))
+    tf = words.groupBy("doc_id", "__w").agg(F.count(F.lit(1)).alias("__tf"))
     # doc length is size(words) — a shuffle-free per-row projection,
     # NOT a second explode+aggregate pass over the corpus
     dl = df.select(
-        F.col(id_col), F.size(words_expr(text_col)).alias("__dl")
+        F.col("doc_id"), F.size(words_expr("text")).alias("__dl")
     )
     stats = dl.agg(
         F.count(F.lit(1)).alias("__n"), F.avg("__dl").alias("__avgdl")
     )
     postings = tf.join(
         F.broadcast(query_terms), tf["__w"] == query_terms["term"]
-    ).select("query_id", "term", id_col, "__tf")
+    ).select("query_id", "term", "doc_id", "__tf")
     dft = postings.groupBy("term").agg(
         F.count(F.lit(1)).alias("__df")
     )
     scored = (
         postings.join(F.broadcast(dft), "term")
-        .join(dl, id_col)
+        .join(dl, "doc_id")
         .crossJoin(F.broadcast(stats))
         .withColumn(
             "__idf",
@@ -460,32 +440,30 @@ def bm25_topk(
         )
         .withColumn(
             "__tfnorm",
-            (F.col("__tf") * (k1 + 1.0))
+            (F.col("__tf") * 2.2)
             / (
                 F.col("__tf")
-                + k1 * (1.0 - b + b * F.col("__dl") / F.col("__avgdl"))
+                + 1.2 * (0.25 + 0.75 * F.col("__dl") / F.col("__avgdl"))
             ),
         )
-        .groupBy("query_id", id_col)
+        .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum(F.col("__idf") * F.col("__tfnorm")), 6).alias("score"))
     )
     if exclude_self:
         # document-as-query retrieval: drop the query's own document
         # BEFORE ranking so downstream fusion sees gap-free ranks
-        scored = scored.filter(F.col(id_col) != F.col("query_id"))
+        scored = scored.filter(F.col("doc_id") != F.col("query_id"))
     w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col(id_col)
+        F.desc("score"), F.col("doc_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", id_col, F.col("rank").cast("int"), "score")
+        .select("query_id", "doc_id", F.col("rank").cast("int"), "score")
     )
 
 
-def bigram_logprob(
-    df: DataFrame, id_col: str = "doc_id", col: str = "text"
-) -> DataFrame:
+def bigram_logprob(df: DataFrame) -> DataFrame:
     """Mean bigram conditional log-probability per document under the
     corpus's own bigram model — the next step up from unigram_logprob
     as a naturalness proxy: word-salad documents whose unigrams are
@@ -502,7 +480,7 @@ def bigram_logprob(
     aggregate, model join (AQE broadcasts the head-count side),
     per-doc mean. Documents with < 2 words drop (no transitions).
     """
-    w = df.select(F.col(id_col), words_expr(col).alias("__ws"))
+    w = df.select(F.col("doc_id"), words_expr("text").alias("__ws"))
     pairs = F.transform(
         F.sequence(F.lit(1), F.size("__ws") - 1),
         lambda i: F.struct(
@@ -512,15 +490,15 @@ def bigram_logprob(
     )
     bigrams = (
         w.filter(F.size("__ws") >= 2)
-        .select(id_col, F.explode(pairs).alias("__p"))
-        .select(id_col, F.col("__p.w1").alias("__w1"), F.col("__p.w2").alias("__w2"))
+        .select("doc_id", F.explode(pairs).alias("__p"))
+        .select("doc_id", F.col("__p.w1").alias("__w1"), F.col("__p.w2").alias("__w2"))
     )
     c12 = bigrams.groupBy("__w1", "__w2").agg(F.count(F.lit(1)).alias("__c12"))
     c1 = bigrams.groupBy("__w1").agg(F.count(F.lit(1)).alias("__c1"))
     return (
         bigrams.join(c12, ["__w1", "__w2"])
         .join(c1, "__w1")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
             # + 0.0: -0.0 discipline (see unigram_logprob)
@@ -532,12 +510,7 @@ def bigram_logprob(
     )
 
 
-def bpe_merges(
-    df: DataFrame,
-    n_merges: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_merges(df: DataFrame, n_merges: int) -> DataFrame:
     """Learn the first ``n_merges`` BPE merge rules from the corpus —
     the tokenizer-training primitive: repeatedly merge the most
     frequent adjacent symbol pair across the (frequency-weighted) word
@@ -565,7 +538,7 @@ def bpe_merges(
     round with an eager localCheckpoint so the plan doesn't grow with
     rank count.
     """
-    merges, _ = _bpe_train(df, n_merges, text_col)
+    merges, _ = _bpe_train(df, n_merges, "text")
     spark = df.sparkSession
     return inline_values_df(
         spark,
@@ -635,12 +608,7 @@ def _bpe_train(
     return merges, vocab
 
 
-def bpe_encode(
-    df: DataFrame,
-    n_merges: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_encode(df: DataFrame, n_merges: int) -> DataFrame:
     """Tokenize every document with a BPE tokenizer trained on the same
     corpus — the counting side of tokenizer/data co-design: per-doc BPE
     token counts and the chars-per-token compression each doc achieves
@@ -658,21 +626,21 @@ def bpe_encode(
     Output: (id, n_words, n_bpe_tokens, n_chars, compression) over the
     tokenizer's [a-z0-9]+ word filter.
     """
-    _, vocab = _bpe_train(df, n_merges, text_col)
+    _, vocab = _bpe_train(df, n_merges, "text")
     encoder = vocab.select(
         "__w",
         (F.size(F.split("__repr", "\\|")) - 1).alias("__wtoks"),
         F.length("__w").alias("__wlen"),
     )
     doc_words = df.select(
-        id_col,
+        "doc_id",
         F.explode(
-            F.transform(words_expr(text_col), lambda w: F.lower(w))
+            F.transform(words_expr("text"), lambda w: F.lower(w))
         ).alias("__w"),
     ).filter(F.col("__w").rlike("^[a-z0-9]+$"))
     return (
         doc_words.join(F.broadcast(encoder), "__w")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_words"),
             F.sum("__wtoks").alias("n_bpe_tokens"),
@@ -694,7 +662,7 @@ _SCRIPT_CLASSES: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def script_profile_exprs(col: Column | str = "text") -> list[Column]:
+def script_profile_exprs() -> list[Column]:
     """Per-document Unicode-script composition: character counts per
     script class (latin/digit/CJK/Cyrillic/Greek), counted as
     length(text) - length(text with the class removed) — pure codegen'd
@@ -705,7 +673,7 @@ def script_profile_exprs(col: Column | str = "text") -> list[Column]:
     says what its bytes are (mixed-script docs are the classic
     mojibake/injection symptom).
     """
-    c = F.col(col) if isinstance(col, str) else col
+    c = F.col("text")
     out = []
     for name, java_re, _ in _SCRIPT_CLASSES:
         out.append(
@@ -716,11 +684,11 @@ def script_profile_exprs(col: Column | str = "text") -> list[Column]:
     return out
 
 
-def dominant_script_expr(col: Column | str = "text") -> Column:
+def dominant_script_expr() -> Column:
     """Name of the script class with the highest character count; ties
     break by class order (latin first, via the when-chain's first-wins
     evaluation). 'other' when no class matches any character."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = F.col("text")
     counts = [
         (name, F.length(c) - F.length(F.regexp_replace(c, java_re, "")))
         for name, java_re, _ in _SCRIPT_CLASSES
@@ -737,8 +705,6 @@ def inverted_index(
     df: DataFrame,
     min_df: int,
     postings_per_term: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Materialize a serving-shape inverted index: one row per term
     with document frequency, total term frequency, and the top
@@ -769,12 +735,12 @@ def inverted_index(
     driver harness's pandas canonicalizer (unhashable list).
     """
     words = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.transform(words_expr(text_col), lambda w: F.lower(w))
+            F.transform(words_expr("text"), lambda w: F.lower(w))
         ).alias("__w"),
     )
-    tf = words.groupBy("__w", id_col).agg(
+    tf = words.groupBy("__w", "doc_id").agg(
         F.count(F.lit(1)).alias("__tf")
     ).persist(CORPUS_CACHE)
     stats = (
@@ -786,12 +752,12 @@ def inverted_index(
         .filter(F.col("df") >= min_df)
     )
     w_rank = Window.partitionBy("__w").orderBy(
-        F.col("__tf").desc(), F.col(id_col).cast("long").asc()
+        F.col("__tf").desc(), F.col("doc_id").cast("long").asc()
     )
     ranked = (
         tf.select(
             F.col("__w"),
-            F.col(id_col).cast("long").alias("__doc"),
+            F.col("doc_id").cast("long").alias("__doc"),
             F.col("__tf").cast("long").alias("__tf"),
             F.row_number().over(w_rank).cast("long").alias("__rn"),
         )
@@ -825,12 +791,7 @@ def inverted_index(
     )
 
 
-def quality_calibrated(
-    df: DataFrame,
-    domain_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def quality_calibrated(df: DataFrame) -> DataFrame:
     """Within-domain quality percentile (integer ppm): each document's
     quality score re-expressed as its exact rank position inside its
     own domain — (rank-1)·1e6 DIV (n-1), ties sharing the min rank.
@@ -854,32 +815,32 @@ def quality_calibrated(
     1 + Σ counts of strictly smaller scores, exactly.
     """
     raw = df.select(
-        F.col(id_col),
-        F.col(domain_col),
-        token_count_expr(text_col).alias("__n_tokens"),
-        mean_word_length_expr(text_col).alias("__mwl"),
-        punct_ratio_expr(text_col).alias("__punct"),
+        F.col("doc_id"),
+        F.col("source"),
+        token_count_expr("text").alias("__n_tokens"),
+        mean_word_length_expr("text").alias("__mwl"),
+        punct_ratio_expr("text").alias("__punct"),
     )
     scored = raw.select(
-        id_col,
-        domain_col,
+        "doc_id",
+        "source",
         quality_score_expr(
             n_tokens=F.col("__n_tokens"),
             mwl=F.col("__mwl"),
             punct=F.col("__punct"),
         ).alias("quality_score"),
     )
-    grp = scored.groupBy(domain_col, "quality_score").agg(
+    grp = scored.groupBy("source", "quality_score").agg(
         F.count(F.lit(1)).alias("__c")
     )
     w_cum = (
-        Window.partitionBy(domain_col)
+        Window.partitionBy("source")
         .orderBy("quality_score")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    w_dom = Window.partitionBy(domain_col)
+    w_dom = Window.partitionBy("source")
     ranks = grp.select(
-        domain_col,
+        "source",
         "quality_score",
         (F.coalesce(F.sum("__c").over(w_cum), F.lit(0)) + 1).alias("__r"),
         F.sum("__c").over(w_dom).alias("__n"),
@@ -887,9 +848,9 @@ def quality_calibrated(
     # integer DIV, not float division + floor: a correctly-rounded
     # double quotient can land ON an integer the exact quotient sits
     # just below, and the oracle's // is exact
-    return scored.join(ranks, [domain_col, "quality_score"]).select(
-        id_col,
-        domain_col,
+    return scored.join(ranks, ["source", "quality_score"]).select(
+        "doc_id",
+        "source",
         "quality_score",
         F.expr("(__r - 1) * 1000000 DIV greatest(__n - 1, 1)")
         .cast("bigint")
@@ -897,12 +858,7 @@ def quality_calibrated(
     )
 
 
-def dsir_logratio(
-    df: DataFrame,
-    is_target: Column,
-    id_col: str = "doc_id",
-    col: str = "text",
-) -> DataFrame:
+def dsir_logratio(df: DataFrame, is_target: Column) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling"): score every raw
     document by how much more likely its tokens are under a TARGET-domain
@@ -922,10 +878,10 @@ def dsir_logratio(
     and reduce per doc. No Python, no driver-side model.
     """
     words = df.select(
-        id_col,
+        "doc_id",
         is_target.alias("__tgt"),
         F.explode(
-            F.transform(words_expr(col), lambda w: F.lower(w))
+            F.transform(words_expr("text"), lambda w: F.lower(w))
         ).alias("__w"),
     )
     counts = words.groupBy("__w").agg(
@@ -946,7 +902,7 @@ def dsir_logratio(
     )
     return (
         words.join(model, "__w")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             (F.round(F.avg("__lr"), 4) + 0.0).alias("dsir_logratio"),
@@ -954,9 +910,7 @@ def dsir_logratio(
     )
 
 
-def source_divergence(
-    df: DataFrame, group_col: str = "source", col: str = "text"
-) -> DataFrame:
+def source_divergence(df: DataFrame) -> DataFrame:
     """KL(p_group || p_corpus) in nats per group over add-1 smoothed
     unigram models (smoothing over the CORPUS vocabulary, so every
     group's distribution is supported wherever the corpus's is and the
@@ -968,9 +922,9 @@ def source_divergence(
     sized work, not corpus-sized.
     """
     words = df.select(
-        F.col(group_col).alias("__g"),
+        F.col("source").alias("__g"),
         F.explode(
-            F.transform(words_expr(col), lambda w: F.lower(w))
+            F.transform(words_expr("text"), lambda w: F.lower(w))
         ).alias("__w"),
     )
     vocab = words.groupBy("__w").agg(F.count(F.lit(1)).alias("__cc"))
@@ -1003,7 +957,7 @@ def source_divergence(
         )
     )
     unseen = (
-        df.select(F.col(group_col).alias("__g"))
+        df.select(F.col("source").alias("__g"))
         .distinct()
         .crossJoin(vocab)
         .join(src.select("__g", "__w"), ["__g", "__w"], "left_anti")
@@ -1026,7 +980,7 @@ def source_divergence(
     return (
         seen.join(unseen, "__g", "left")
         .select(
-            F.col("__g").alias(group_col),
+            F.col("__g").alias("source"),
             F.col("n_seen_words").cast("bigint").alias("n_seen_words"),
             F.round(
                 F.col("__kl_seen") + F.coalesce("__kl_unseen", F.lit(0.0)), 4
@@ -1035,34 +989,29 @@ def source_divergence(
     )
 
 
-def span_corruption(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    segment: int = 8,
-    span_len: int = 2,
-) -> DataFrame:
+def span_corruption(df: DataFrame) -> DataFrame:
     """T5-style span-corruption example generation (Raffel et al. 2020
-    §3.1.4): mask one ``span_len``-word span per full ``segment``-word
-    window, replacing it with an ordinal sentinel in the input and
-    emitting ``<sentinel> masked words`` pairs as the target — the
+    §3.1.4): mask one 2-word span per full 8-word window, replacing it
+    with an ordinal sentinel in the input and emitting
+    ``<sentinel> masked words`` pairs as the target — the
     (input_text, target_text) pretraining pairs of encoder-decoder LMs,
     derived deterministically so the corpus→examples step is
     reproducible run-to-run and engine-to-engine.
 
-    Span placement inside window ``i`` is ``md5(id:i) % (segment -
-    span_len + 1)`` — corpus-stable (a document's examples don't change
-    when its neighbors do), and integer-exact for the SQL oracle.
+    Span placement inside window ``i`` is ``md5(id:i) % 7`` (the 7
+    offsets of a 2-word span in an 8-word window) — corpus-stable (a
+    document's examples don't change when its neighbors do), and
+    integer-exact for the SQL oracle.
 
     Scale: pure per-row array algebra — word split, per-window hash
     offsets, one masked-token rewrite, two joins back to strings — all
     inside whole-stage codegen, zero shuffles, zero Python; streams
     with the scan like the quality/lang exprs above.
     """
-    n_offsets = segment - span_len + 1
+    n_offsets = 7
     w = df.select(
-        F.col(id_col), words_expr(text_col).alias("__words")
-    ).withColumn("__nseg", F.size("__words") / segment)
+        F.col("doc_id"), words_expr("text").alias("__words")
+    ).withColumn("__nseg", F.size("__words") / 8)
     w = w.withColumn("__nseg", F.floor("__nseg").cast("int"))
     # per-window span starts, materialized once (input AND target read it)
     starts = F.when(
@@ -1070,14 +1019,14 @@ def span_corruption(
         F.transform(
             F.sequence(F.lit(0), F.col("__nseg") - 1),
             lambda i: (
-                i * segment
+                i * 8
                 + F.conv(
                     F.substring(
                         F.md5(
                             F.concat_ws(
                                 ":",
                                 F.lit("sc"),
-                                F.col(id_col).cast("string"),
+                                F.col("doc_id").cast("string"),
                                 i.cast("string"),
                             )
                         ),
@@ -1094,7 +1043,7 @@ def span_corruption(
     w = w.withColumn("__starts", starts)
 
     def _tok(p):
-        seg = (p / segment).cast("int")
+        seg = (p / 8).cast("int")
         start = F.element_at("__starts", seg + 1)
         in_window = seg < F.col("__nseg")
         return (
@@ -1102,7 +1051,7 @@ def span_corruption(
                 in_window & (p == start),
                 F.concat(F.lit("<extra_id_"), seg.cast("string"), F.lit(">")),
             )
-            .when(in_window & (p > start) & (p < start + span_len), F.lit(None))
+            .when(in_window & (p > start) & (p < start + 2), F.lit(None))
             .otherwise(F.element_at("__words", p.cast("int") + 1))
         )
 
@@ -1117,14 +1066,14 @@ def span_corruption(
             F.lit("> "),
             F.array_join(
                 F.slice(
-                    F.col("__words"), F.element_at("__starts", i + 1) + 1, span_len
+                    F.col("__words"), F.element_at("__starts", i + 1) + 1, 2
                 ),
                 " ",
             ),
         ),
     )
     return w.filter(F.size("__words") > 0).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("__nseg").alias("n_spans"),
         F.array_join(F.filter(toks, lambda t: t.isNotNull()), " ").alias(
             "input_text"
@@ -1147,13 +1096,7 @@ def span_corruption(
 TFIDF_TERM_BUCKET_CAP = 256
 
 
-def tfidf_cosine_pairs(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_df_ratio: float = 0.5,
-) -> DataFrame:
+def tfidf_cosine_pairs(df: DataFrame, threshold: float) -> DataFrame:
     """All document pairs with TF-IDF cosine ≥ threshold — LEXICAL
     near-dup detection in the sparse vector space, the middle ground
     between shingle Jaccard (set overlap, order-blind) and embedding
@@ -1165,7 +1108,7 @@ def tfidf_cosine_pairs(
     the pair set is engine-reproducible.
 
     Scale: pairs form ONLY through the inverted-index self-join on the
-    term — cost Σ_t df(t)², never |corpus|². Terms with df > max_df_ratio·N
+    term — cost Σ_t df(t)², never |corpus|². Terms with df > N/2
     are dropped from the index first: stopword-grade terms contribute
     near-zero weight but quadratic join fan-out, so the cut removes the
     skew hazard AND the wasted work (documented ranking-safe: their
@@ -1173,20 +1116,20 @@ def tfidf_cosine_pairs(
     pair dot-products shuffle on (id_a, id_b) with map-side combine.
     """
     words = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
-            F.transform(words_expr(text_col), lambda w: F.lower(w))
+            F.transform(words_expr("text"), lambda w: F.lower(w))
         ).alias("term"),
     )
-    tf = words.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("__tf"))
+    tf = words.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("__tf"))
     n_docs = df.select(F.count(F.lit(1)).alias("__n"))
     dft = tf.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
     weighted = (
         tf.join(F.broadcast(dft), "term")
         .crossJoin(F.broadcast(n_docs))
-        .filter(F.col("__df") <= F.col("__n") * max_df_ratio)
+        .filter(F.col("__df") <= F.col("__n") * 0.5)
         .select(
-            id_col,
+            "doc_id",
             "term",
             (F.col("__tf") * F.log(F.col("__n") / F.col("__df"))).alias("__w"),
         )
@@ -1196,7 +1139,7 @@ def tfidf_cosine_pairs(
     # materialized eagerly below so the cache can be dropped before
     # returning (the kmeans_int8 idiom)
     weighted = weighted.persist(CORPUS_CACHE)
-    norms = weighted.groupBy(id_col).agg(
+    norms = weighted.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("__w") * F.col("__w"))).alias("__norm")
     )
     # chunked term self-join (round-10 Zipf-head audit): the df cut
@@ -1210,15 +1153,15 @@ def tfidf_cosine_pairs(
         chunked_self_pairs(
             weighted,
             ["term"],
-            id_col,
+            "doc_id",
             TFIDF_TERM_BUCKET_CAP,
             payload={"__w": ("__wa", "__wb")},
         )
         .groupBy("id_a", "id_b")
         .agg(F.sum(F.col("__wa") * F.col("__wb")).alias("__dot"))
     )
-    na = norms.select(F.col(id_col).alias("id_a"), F.col("__norm").alias("__na"))
-    nb = norms.select(F.col(id_col).alias("id_b"), F.col("__norm").alias("__nb"))
+    na = norms.select(F.col("doc_id").alias("id_a"), F.col("__norm").alias("__na"))
+    nb = norms.select(F.col("doc_id").alias("id_b"), F.col("__norm").alias("__nb"))
     out = (
         dots.join(na, "id_a")
         .join(nb, "id_b")
@@ -1295,11 +1238,8 @@ def skipgram_with_negatives(
     df: DataFrame,
     top_k: int,
     n_negatives: int = 2,
-    window: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
-    """The ``top_k`` most frequent skip-gram pairs, each with
+    """The ``top_k`` most frequent skip-gram pairs (window 2), each with
     ``n_negatives`` DETERMINISTIC negative samples drawn from the
     frequency-ranked vocabulary by md5(center:context:j) — reproducible
     negative sampling (a dataset card can state exactly which negatives
@@ -1310,13 +1250,13 @@ def skipgram_with_negatives(
     probe rows against the vocab index — broadcast-sized both sides
     after the top-k cut (TakeOrderedAndProject, no global sort).
     """
-    pairs = skipgram_pairs(df, window, id_col, text_col)
+    pairs = skipgram_pairs(df, 2, "doc_id", "text")
     top = pairs.orderBy(
         F.desc("n_pairs"), F.col("center"), F.col("context")
     ).limit(top_k)
     words = df.select(
         F.explode(
-            F.transform(words_expr(text_col), lambda x: F.lower(x))
+            F.transform(words_expr("text"), lambda x: F.lower(x))
         ).alias("word")
     )
     vocab = (
@@ -1382,8 +1322,6 @@ def pmi_collocations(
     df: DataFrame,
     min_count: int = 5,
     k: int = 50,
-    id_col: str = "doc_id",
-    col: str = "text",
 ) -> DataFrame:
     """Top-``k`` adjacent-word collocations by pointwise mutual
     information — the classic "new york"/"machine learning" detector:
@@ -1408,7 +1346,7 @@ def pmi_collocations(
     ~3·10⁹ of each other's product — beyond that, rewrite as a sum of
     logs (same value, overflow-free).
     """
-    w = df.select(F.col(id_col), words_expr(col).alias("__ws"))
+    w = df.select(F.col("doc_id"), words_expr("text").alias("__ws"))
     pairs = F.transform(
         F.sequence(F.lit(1), F.size("__ws") - 1),
         lambda i: F.struct(

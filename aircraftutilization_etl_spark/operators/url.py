@@ -166,14 +166,7 @@ def synthetic_url_expr(
     )
 
 
-def with_url_columns(
-    df,
-    doc_id: str = "doc_id",
-    source: str = "source",
-    url_col: str = "url",
-    canonical_col: str = "canonical_url",
-    domain_col: str = "domain",
-):
+def with_url_columns(df):
     """``df`` + (url, canonical_url, domain) via LAYERED projections.
 
     Single-expression canonical/domain forms are correct but, composed
@@ -194,25 +187,17 @@ def with_url_columns(
     hand-written fixtures and their SQL replay pin the rules
     (tests/test_url_fixtures.py) and the DuckDB oracles pin the values.
     """
-    key = _memo_key(df, "synthetic", doc_id, source, url_col)
+    key = _memo_key(df, "synthetic", "doc_id", "source", "url")
     url = _EXPR_MEMO.get(key)
     if url is None:
-        url = synthetic_url_expr(doc_id, source).alias(url_col)
+        url = synthetic_url_expr("doc_id", "source").alias("url")
         _EXPR_MEMO[key] = url
     l0 = df.select("*", url)
-    return with_canonical_columns(
-        l0, url_col=url_col, canonical_col=canonical_col,
-        domain_col=domain_col,
-    )
+    return with_canonical_columns(l0)
 
 
-def with_canonical_columns(
-    df,
-    url_col: str = "url",
-    canonical_col: str = "canonical_url",
-    domain_col: str = "domain",
-):
-    """``df`` (already carrying ``url_col``) + canonical_url + domain —
+def with_canonical_columns(df):
+    """``df`` (already carrying ``url``) + canonical_url + domain —
     the canonicalization stage of :func:`with_url_columns`, exposed so
     literal-URL fixtures and real URL columns use the identical layered
     derivation.
@@ -233,10 +218,10 @@ def with_canonical_columns(
     two-label tail is a bundled public-suffix entry
     (MULTI_LABEL_SUFFIXES); single-label hosts pass through unchanged.
     """
-    key = _memo_key(df, "canon", url_col, canonical_col, domain_col)
+    key = _memo_key(df, "canon", "url", "canonical_url", "domain")
     layers = _EXPR_MEMO.get(key)
     if layers is None:
-        layers = _canon_layer_exprs(url_col, canonical_col, domain_col)
+        layers = _canon_layer_exprs("url", "canonical_url", "domain")
         _EXPR_MEMO[key] = layers
     l1_exprs, l2_exprs, l3_exprs = layers
     l3 = (
@@ -337,8 +322,6 @@ def _canon_layer_exprs(
 def domain_admission_batch(
     docs: DataFrame,
     cap: int,
-    domain_col: str = "domain",
-    id_col: str = "doc_id",
     ts_col: str = "ts",
 ) -> DataFrame:
     """First-come admission: the first ``cap`` documents per domain in
@@ -350,15 +333,11 @@ def domain_admission_batch(
     """
     if cap < 1:
         raise ValueError(f"cap must be >= 1, got {cap}")
-    w = Window.partitionBy(F.col(domain_col)).orderBy(
-        F.col(ts_col), F.col(id_col)
+    w = Window.partitionBy(F.col("domain")).orderBy(
+        F.col(ts_col), F.col("doc_id")
     )
     return (
-        docs.select(
-            F.col(domain_col).alias("domain"),
-            F.col(id_col).alias("doc_id"),
-            F.col(ts_col).alias("ts"),
-        )
+        docs.select("domain", "doc_id", F.col(ts_col).alias("ts"))
         .withColumn("admitted_rank", F.row_number().over(w).cast("long"))
         .filter(F.col("admitted_rank") <= cap)
     )

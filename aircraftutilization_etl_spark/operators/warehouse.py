@@ -315,12 +315,12 @@ def with_hilbert_value(
     return cur.withColumn(out, F.col("hval")).select(*keep)
 
 
-def hilbert_sql(a: str, b: str, source: str, bits: int = HILBERT_BITS) -> str:
+def hilbert_sql(a: str, b: str, source: str) -> str:
     """Nested-subquery SQL deriving ``hval`` over ``source`` from the
     SAME step chain the Spark column chain uses — one generator, two
     realizations, so the oracle replays every level bit for bit."""
     query = f"SELECT * FROM {source}"
-    for name, expr in hilbert_steps(a, b, bits):
+    for name, expr in hilbert_steps(a, b, HILBERT_BITS):
         query = f"SELECT *, {expr} AS {name} FROM ({query})"
     return query
 
@@ -330,8 +330,6 @@ def point_in_time_join(
     dim_history: DataFrame,
     key: str,
     fact_ts: str,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
 ) -> DataFrame:
     """Join facts to the dimension version in effect at fact time — the
     point-in-time (a.k.a. temporal / PIT) join every SCD2 dimension
@@ -351,10 +349,10 @@ def point_in_time_join(
     d = dim_history.alias("d")
     cond = (
         (F.col(f"f.{key}") == F.col(f"d.{key}"))
-        & (F.col(f"f.{fact_ts}") >= F.col(f"d.{valid_from}"))
+        & (F.col(f"f.{fact_ts}") >= F.col("d.valid_from"))
         & (
-            F.col(f"d.{valid_to}").isNull()
-            | (F.col(f"f.{fact_ts}") < F.col(f"d.{valid_to}"))
+            F.col("d.valid_to").isNull()
+            | (F.col(f"f.{fact_ts}") < F.col("d.valid_to"))
         )
     )
     return f.join(d, cond, "inner").select(
@@ -407,13 +405,12 @@ def layout_pruning_audit(
     lo: int,
     hi: int,
     bucket_width: int = 192,
-    n_natural: int = 256,
 ) -> DataFrame:
     """Head-to-head file-skipping audit of three physical layouts —
     natural (insertion order), Z-order, Hilbert — for one 2-D range
     predicate ``lo <= a8 <= hi AND lo <= b8 <= hi`` over the low bytes
     of (``col_a``, ``col_b``). Every layout is cut into fixed-width
-    "files" (``bucket_width`` curve cells per file; ``n_natural``
+    "files" (``bucket_width`` curve cells per file; 256
     equal key-range chunks for the natural layout). The width is
     deliberately NOT a power of 4: power-of-4 prefixes make Morton and
     Hilbert buckets the IDENTICAL aligned square tiles, hiding exactly
@@ -457,7 +454,7 @@ def layout_pruning_audit(
             F.explode(
                 F.create_map(
                     F.lit("natural"),
-                    F.expr(f"__ok * {n_natural} DIV (__mo + 1)"),
+                    F.expr("__ok * 256 DIV (__mo + 1)"),
                     F.lit("zorder"),
                     F.expr(f"__zv DIV {bucket_width}"),
                     F.lit("hilbert"),

@@ -21,7 +21,6 @@ tests/test_pipeline.py::test_crash_between_facts_and_state.
 from __future__ import annotations
 
 import logging
-import time
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -68,7 +67,6 @@ class FlightPipeline:
 
         Reference ActiveFlightsETL.etl (opensky/transformers.py:148-151).
         """
-        now_epoch = now_epoch or round(time.time())
         states = states_response_to_df(self.spark, states_payload)
         prior = self.state.read()
         merged = merge_states(states, prior, now_epoch=now_epoch)

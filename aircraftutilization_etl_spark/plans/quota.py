@@ -300,7 +300,6 @@ def budget_allocate_with_floor(
     total: int,
     floor: int,
     key: str = "doc_id",
-    source_col: str = "source",
 ) -> DataFrame:
     """Keep ~``total`` rows: each source first receives its floor
     min(n_s, ``floor``), then the leftover budget max(0, total - Σfloor)
@@ -319,16 +318,16 @@ def budget_allocate_with_floor(
     """
     from pyspark.sql.window import Window
 
-    docs = d.select(key, source_col)
+    docs = d.select(key, "source")
     rows = [
         (r[0], r[1])
-        for r in docs.groupBy(source_col)
+        for r in docs.groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .collect()
     ]
     if any(s is None for s, _ in rows):
         raise ValueError(
-            f"budget_allocate_with_floor requires non-null {source_col!r} "
+            "budget_allocate_with_floor requires non-null 'source' "
             "values; found NULL — filter or impute the source column first"
         )
     counts = sorted(rows)
@@ -342,21 +341,21 @@ def budget_allocate_with_floor(
     else:
         base = {s: 0 for s, _ in counts}
     alloc = {s: floors[s] + base[s] for s, _ in counts}
-    src_type = docs.schema[source_col].dataType.simpleString()
+    src_type = docs.schema["source"].dataType.simpleString()
     alloc_df = inline_values_df(
         d.sparkSession, sorted(alloc.items()),
-        f"`{source_col}` {src_type}, alloc bigint",
+        f"`source` {src_type}, alloc bigint",
     )
     order = F.md5(F.col(key).cast("string"))
-    rn_w = Window.partitionBy(source_col).orderBy(order, F.col(key))
+    rn_w = Window.partitionBy("source").orderBy(order, F.col(key))
     return (
         docs.withColumn("__rn", F.row_number().over(rn_w))
         # constant bound first (alloc_s <= max(floor, total) always) so
         # Catalyst lowers it to the map-side WindowGroupLimit
         .filter(F.col("__rn") <= max(floor, total))
-        .join(F.broadcast(alloc_df), source_col)
+        .join(F.broadcast(alloc_df), "source")
         .filter(F.col("__rn") <= F.col("alloc"))
-        .select(key, source_col)
+        .select(key, "source")
     )
 
 
@@ -454,12 +453,10 @@ def budget_allocate_two_level(
     d: DataFrame,
     total: int,
     key: str = "doc_id",
-    outer_col: str = "lang",
-    inner_col: str = "source",
 ) -> DataFrame:
     """Keep ~``total`` rows apportioned by largest remainder TWICE:
-    ``total`` across outer groups (sqrt of group size), then each outer
-    share across its inner cells (sqrt of cell size), each cell's keep
+    ``total`` across outer ``lang`` groups (sqrt of group size), then
+    each outer share across its inner ``source`` cells (sqrt of cell size), each cell's keep
     set chosen by md5 rank of the key. Same all-integer engine-exactness
     contract as budget_allocate (floor'd sqrt·1e6 weights, trunc-DIV on
     non-negative operands, remainder ties broken by name), and the same
@@ -477,17 +474,17 @@ def budget_allocate_two_level(
     """
     from pyspark.sql.window import Window
 
-    docs = d.select(key, outer_col, inner_col)
+    docs = d.select(key, "lang", "source")
     rows = [
         (r[0], r[1], r[2])
-        for r in docs.groupBy(outer_col, inner_col)
+        for r in docs.groupBy("lang", "source")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .collect()
     ]
     if any(o is None or i is None for o, i, _ in rows):
         raise ValueError(
-            f"budget_allocate_two_level requires non-null {outer_col!r} "
-            f"and {inner_col!r} values; found NULL — filter or impute "
+            "budget_allocate_two_level requires non-null 'lang' "
+            "and 'source' values; found NULL — filter or impute "
             "the strata columns first"
         )
     cells = sorted(rows)
@@ -504,15 +501,15 @@ def budget_allocate_two_level(
         inner_w = {i: sqrt_weight(n) for oo, i, n in cells if oo == o}
         for i, a in hamilton_apportion(inner_w, outer_alloc[o]).items():
             alloc[(o, i)] = a
-    out_type = docs.schema[outer_col].dataType.simpleString()
-    in_type = docs.schema[inner_col].dataType.simpleString()
+    out_type = docs.schema["lang"].dataType.simpleString()
+    in_type = docs.schema["source"].dataType.simpleString()
     alloc_df = inline_values_df(
         d.sparkSession,
         [(o, i, a) for (o, i), a in sorted(alloc.items())],
-        f"`{outer_col}` {out_type}, `{inner_col}` {in_type}, alloc bigint",
+        f"`lang` {out_type}, `source` {in_type}, alloc bigint",
     )
     order = F.md5(F.col(key).cast("string"))
-    rn_w = Window.partitionBy(outer_col, inner_col).orderBy(
+    rn_w = Window.partitionBy("lang", "source").orderBy(
         order, F.col(key)
     )
     return (
@@ -520,9 +517,9 @@ def budget_allocate_two_level(
         # constant bound first (cell alloc <= total always) -> map-side
         # WindowGroupLimit before the exact broadcast-join filter
         .filter(F.col("__rn") <= total)
-        .join(F.broadcast(alloc_df), [outer_col, inner_col])
+        .join(F.broadcast(alloc_df), ["lang", "source"])
         .filter(F.col("__rn") <= F.col("alloc"))
-        .select(key, outer_col, inner_col)
+        .select(key, "lang", "source")
     )
 
 
@@ -641,13 +638,10 @@ def budget_allocate_recency(
     d: DataFrame,
     total: int,
     half_life_days: int,
-    key: str = "event_id",
-    source_col: str = "event_type",
-    ts_col: str = "ts",
 ) -> DataFrame:
     """Keep ~``total`` rows apportioned across sources by largest
     remainder over recency-decayed volume, each source keeping its most
-    recent rows (ties broken by md5 of the key, then the key).
+    recent rows (ties broken by md5 of ``event_id``, then ``event_id``).
 
     Decay is all-integer: age buckets are (dmax - day) DIV
     ``half_life_days`` whole half-lives (dmax = the corpus's newest
@@ -667,22 +661,22 @@ def budget_allocate_recency(
     """
     from pyspark.sql.window import Window
 
-    ev = d.select(key, source_col, ts_col)
+    ev = d.select("event_id", "event_type", "ts")
     rows = [
         (r[0], r[1], r[2])
         for r in ev.groupBy(
-            source_col, F.to_date(ts_col).alias("__d")
+            "event_type", F.to_date("ts").alias("__d")
         )
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     ]
     if any(s is None or day is None for s, day, _ in rows):
         raise ValueError(
-            f"budget_allocate_recency requires non-null {source_col!r} "
-            f"and {ts_col!r} values; found NULL — filter or impute first"
+            "budget_allocate_recency requires non-null 'event_type' "
+            "and 'ts' values; found NULL — filter or impute first"
         )
     if not rows:
-        return ev.select(key, source_col).filter(F.lit(False))
+        return ev.select("event_id", "event_type").filter(F.lit(False))
     dmax = max(day for _, day, _ in rows)
     weights: dict = {}
     for s, day, n in rows:
@@ -691,15 +685,15 @@ def budget_allocate_recency(
     # a corpus whose every row is >62 half-lives stale has an all-zero
     # weight vector; hamilton_apportion raises readably on it
     base = hamilton_apportion(weights, total)
-    src_type = ev.schema[source_col].dataType.simpleString()
+    src_type = ev.schema["event_type"].dataType.simpleString()
     alloc = inline_values_df(
         d.sparkSession, sorted(base.items()),
-        f"`{source_col}` {src_type}, alloc bigint",
+        f"`event_type` {src_type}, alloc bigint",
     )
-    rn_w = Window.partitionBy(source_col).orderBy(
-        F.col(ts_col).desc(),
-        F.md5(F.col(key).cast("string")),
-        F.col(key),
+    rn_w = Window.partitionBy("event_type").orderBy(
+        F.col("ts").desc(),
+        F.md5(F.col("event_id").cast("string")),
+        F.col("event_id"),
     )
     return (
         ev.withColumn("__rn", F.row_number().over(rn_w))
@@ -707,9 +701,9 @@ def budget_allocate_recency(
         # WindowGroupLimit; the broadcast join then applies the exact
         # per-source allocation
         .filter(F.col("__rn") <= total)
-        .join(F.broadcast(alloc), source_col)
+        .join(F.broadcast(alloc), "event_type")
         .filter(F.col("__rn") <= F.col("alloc"))
-        .select(key, source_col)
+        .select("event_id", "event_type")
     )
 
 

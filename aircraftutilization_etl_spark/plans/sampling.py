@@ -245,8 +245,6 @@ def q_split_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_split = assigned.groupBy("split", "lang").agg(
         F.count(F.lit(1)).alias("n_docs")
     )
-    from pyspark.sql.window import Window
-
     split_tot = per_split.groupBy("split").agg(
         F.sum("n_docs").alias("split_total")
     )

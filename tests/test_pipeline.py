@@ -196,6 +196,14 @@ def test_crash_between_facts_and_state(pipeline, spark, tmp_path, monkeypatch):
     assert pipeline.state.read().filter("icao24 = 'ab1234'").count() == 0
 
 
+def test_injected_clock_of_zero_is_kept(pipeline):
+    """now_epoch=0 is a clock, not "use the wall clock": a session last
+    seen at T0 is not idle at epoch 0, so the cycle keeps it."""
+    pipeline.run_active_flights(payload(vector("ab1234", T0, 80.0, 9.0)), now_epoch=T0)
+    pipeline.run_active_flights(payload(), now_epoch=0)
+    assert pipeline.state.read().filter("icao24 = 'ab1234'").count() == 1
+
+
 def test_state_generations_stay_bounded(pipeline):
     """vacuum() is wired into the run loop: generations don't accumulate."""
     for i in range(8):

@@ -13,9 +13,9 @@ Invariants:
    plan nodes at all.
 3. Every lineitem-scanning TPC-H query reads a pruned schema (never the
    full 11-column table; column pruning reached the scan).
-4. No driver-side collect inside query construction (queries build
-   lazily; building must not launch collect jobs beyond the allowed
-   grid-sizing counts).
+4. Every catalog query builds at sf0.001 and yields a non-empty
+   schema. (Build-time driver jobs are not counted here; the benchmark's
+   traced run reports them as `plans.build_jobs`.)
 """
 
 from __future__ import annotations
@@ -140,16 +140,12 @@ def test_lineitem_scans_are_column_pruned(plans):
     assert offenders == []
 
 
-def test_every_query_builds_lazily(spark):
-    """Constructing a catalog DataFrame must not trigger result jobs —
-    allowed driver work is metadata/grid sizing (count on a scan) and
-    broadcast-matrix collection for the similarity queries, which are
-    bounded; a .collect() of results in a query body would show up as
-    huge build times and is also structurally banned by review. Here we
-    just assert construction succeeds everywhere at sf0.001."""
-    for name, qd in CATALOG.items():
-        df = qd.spark(spark, SF_DIR)
-        assert df.columns, name
+def test_every_query_builds_lazily(built):
+    """Every catalog query builds, and its result has at least one
+    column (invariant 4); the frames are the ones the plan sweeps share."""
+    assert set(built) == set(CATALOG)
+    empty = [n for n, (_plan, schema) in built.items() if not schema.fields]
+    assert empty == []
 
 
 def _round_calls(sql):
