@@ -128,7 +128,6 @@ def dollars(sum_col: Column, unit_scale: int, signed: bool = False) -> Column:
 # --- DuckDB oracle fragments (same units, same rounding) ----------------
 
 SQL_CENTS = "CAST(ROUND({col} * 100) AS BIGINT)"
-SQL_PCT = SQL_CENTS  # same extraction, semantic alias
 SQL_REVENUE_TM = (
     "CAST(ROUND(l_extendedprice * 100) AS BIGINT)"
     " * (100 - CAST(ROUND(l_discount * 100) AS BIGINT))"

@@ -122,10 +122,8 @@ def _weights_df(spark, w_micros: list[int]):
     )
 
 
-def _margins(
-    feats: DataFrame, w_micros: list[int], b_micros: int, id_col: str
-):
-    """(id, __m): the per-doc margin (w·x + b) via the broadcast model
+def _margins(feats: DataFrame, w_micros: list[int], b_micros: int):
+    """(doc_id, __m): the per-doc margin (w·x + b) via the broadcast model
     join. Exact-integer numerator Σ w_micros·c + b_micros·t (absent
     buckets carry weight 0, so the sparse model frame is exact), ONE
     double division by t·1e6 — both engines round that division
@@ -161,7 +159,7 @@ def _margins(
     )
     return (
         feats.join(F.broadcast(wdf), "bucket", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.when(bound_ok.isNull(), margin).alias("__m"))
     )
 
@@ -372,7 +370,7 @@ def predict(
     scoring pass, the shape inference takes at any corpus size. The
     sigmoid is evaluated once; prob derives from the quantized column."""
     return (
-        _margins(features, w_micros, b_micros, "doc_id")
+        _margins(features, w_micros, b_micros)
         .select("doc_id", _p_micros(F.col("__m")).alias("p_micros"))
         .select(
             "doc_id",

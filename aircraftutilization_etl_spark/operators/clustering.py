@@ -51,13 +51,14 @@ def _int_array_lit(values) -> str:
     return "array(" + ",".join(str(int(v)) for v in values) + ")"
 
 
-def _sq_dist_expr(vec_col: str, centroid: list[int]):
-    """Exact BIGINT squared L2 distance between an int-code array column
-    and one literal centroid — a codegen'd fold, no Python, no join."""
+def _sq_dist_expr(centroid: list[int]):
+    """Exact BIGINT squared L2 distance between the ``qvec`` int-code
+    array column and one literal centroid — a codegen'd fold, no Python,
+    no join."""
     carr = F.expr(_int_array_lit(centroid))
     return F.aggregate(
         F.zip_with(
-            F.col(vec_col),
+            F.col("qvec"),
             carr,
             lambda a, b: (a.cast("bigint") - b) * (a.cast("bigint") - b),
         ),
@@ -72,7 +73,7 @@ def _assign(codes: DataFrame, centroids: list[list[int]]) -> DataFrame:
     argmin with lowest-cluster-index tie-break: array_position returns
     the FIRST index holding the minimum.
     """
-    dists = F.array(*[_sq_dist_expr("qvec", c) for c in centroids])
+    dists = F.array(*[_sq_dist_expr(c) for c in centroids])
     return codes.select(
         "*",
         (F.array_position(dists, F.array_min(dists)) - 1)
@@ -117,7 +118,7 @@ def kmeans_int8(
     # ms df.rdd plan-build probe; same decision, same plan.)
     df = ensure_scan_parallelism(df, id_col)
     codes = (
-        quantize_embeddings(df, id_col, "embedding")
+        quantize_embeddings(df, id_col)
         .select(F.col(id_col), "qvec")
         .persist(CORPUS_CACHE)
     )
@@ -182,11 +183,12 @@ def kmeans_int8(
 # encoding, the per-query LUTs and every ADC score bit-for-bit.
 
 
-def _sub_split(codes: DataFrame, m: int, id_col: str) -> DataFrame:
-    """(id, qvec) → (id, sub, svec): m subvector rows per vector."""
+def _sub_split(codes: DataFrame, m: int) -> DataFrame:
+    """(vec_id, qvec) → (vec_id, sub, svec): m subvector rows per
+    vector."""
     sd = (F.size("qvec") / m).cast("int")
     return codes.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.explode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(m - 1)),
@@ -196,7 +198,7 @@ def _sub_split(codes: DataFrame, m: int, id_col: str) -> DataFrame:
                 ),
             )
         ).alias("__s"),
-    ).select(id_col, "__s.sub", "__s.svec")
+    ).select("vec_id", "__s.sub", "__s.svec")
 
 
 def _sq_dist_cols(a, b):
@@ -241,12 +243,7 @@ def _pq_assign(scodes: DataFrame, codebooks: list[list[list[int]]]) -> DataFrame
     )
 
 
-def pq_scodes(
-    df: DataFrame,
-    m: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_scodes(df: DataFrame, m: int = 4) -> DataFrame:
     """(id, vec) → persisted (id, sub, svec) subvector codes — the
     quantize+split prefix every PQ path (training, encoding, LUT
     scoring) consumes. Split out of :func:`pq_train` so a caller holding
@@ -255,11 +252,9 @@ def pq_scodes(
     # distribute an under-partitioned scan before the quantize+split
     # projections — see kmeans_int8; the persisted cache keeps the
     # spread for every downstream PQ pass (train, encode, LUTs)
-    df = ensure_scan_parallelism(df, id_col)
-    codes = quantize_embeddings(df, id_col, vec_col).select(
-        F.col(id_col), "qvec"
-    )
-    return _sub_split(codes, m, id_col).persist(CORPUS_CACHE)
+    df = ensure_scan_parallelism(df, "vec_id")
+    codes = quantize_embeddings(df).select(F.col("vec_id"), "qvec")
+    return _sub_split(codes, m).persist(CORPUS_CACHE)
 
 
 def pq_train(
@@ -290,7 +285,7 @@ def pq_train(
     oracle-replayable because the sample is an id-prefix, not a random
     draw. Encoding still covers the full corpus.
     """
-    scodes = pq_scodes(df, m, "vec_id", "embedding")
+    scodes = pq_scodes(df, m)
 
     if train_limit is not None:
         # Bounded-sample protocol: the training set is model-scale BY
@@ -307,13 +302,11 @@ def pq_train(
             .collect()
         )
         if len({r["vec_id"] for r in rows}) >= k:
-            books = _pq_train_local(rows, m, k, iterations, "vec_id")
+            books = _pq_train_local(rows, m, k, iterations)
             return books, scodes
 
     # full-corpus (or thin-sample fallback) distributed protocol
-    codes = quantize_embeddings(df, "vec_id", "embedding").select(
-        F.col("vec_id"), "qvec"
-    )
+    codes = quantize_embeddings(df).select(F.col("vec_id"), "qvec")
     seed_rows = codes.orderBy("vec_id").limit(k).collect()
     if not seed_rows:
         # empty corpus: no codebooks to train; callers get ([], scodes)
@@ -347,7 +340,7 @@ def pq_train(
     return codebooks, scodes
 
 
-def _pq_train_local(rows, m: int, k: int, iterations: int, id_col: str):
+def _pq_train_local(rows, m: int, k: int, iterations: int):
     """Driver-side Lloyd rounds over the collected training sample —
     EXACTLY the arithmetic of the distributed loop (and of the SQL
     oracle): seeds are the k smallest ids' subvectors in id order;
@@ -358,7 +351,7 @@ def _pq_train_local(rows, m: int, k: int, iterations: int, id_col: str):
 
     by_sub: dict[int, list] = {s: [] for s in range(m)}
     for r in rows:
-        by_sub[r["sub"]].append((r[id_col], r["svec"]))
+        by_sub[r["sub"]].append((r["vec_id"], r["svec"]))
     books = []
     for s in range(m):
         members = sorted(by_sub[s], key=lambda t: t[0])
@@ -398,10 +391,7 @@ def pq_encode(
 
 
 def _adc_luts(
-    scodes: DataFrame,
-    codebooks: list[list[list[int]]],
-    n_queries: int,
-    id_col: str,
+    scodes: DataFrame, codebooks: list[list[list[int]]], n_queries: int
 ) -> DataFrame:
     """(query_id, lut): per query the m×k table of exact subspace
     distances to every codebook centroid — the model-sized frame ADC
@@ -411,8 +401,8 @@ def _adc_luts(
         lambda c: _sq_dist_cols(F.col("svec"), c),
     )
     return (
-        scodes.filter(F.col(id_col) < n_queries)
-        .select(F.col(id_col).alias("query_id"), "sub", lut_rows.alias("lr"))
+        scodes.filter(F.col("vec_id") < n_queries)
+        .select(F.col("vec_id").alias("query_id"), "sub", lut_rows.alias("lr"))
         .groupBy("query_id")
         .agg(
             F.transform(
@@ -478,7 +468,7 @@ def pq_adc_topk(
             [],
             f"query_id {q_t}, neighbor_id {n_t}, adc_dist bigint, rank int",
         )
-    luts = _adc_luts(scodes, codebooks, n_queries, "vec_id")
+    luts = _adc_luts(scodes, codebooks, n_queries)
     scored = (
         encoded.withColumnRenamed("vec_id", "neighbor_id")
         .join(F.broadcast(luts))
@@ -528,7 +518,7 @@ def ivfpq_adc_topk(
     cn = cells.select(
         F.col("vec_id").alias("neighbor_id"), F.col("cluster").alias("cell")
     )
-    luts = _adc_luts(scodes, codebooks, n_queries, "vec_id").join(cq, "query_id")
+    luts = _adc_luts(scodes, codebooks, n_queries).join(cq, "query_id")
     scored = (
         encoded.withColumnRenamed("vec_id", "neighbor_id")
         .join(cn, "neighbor_id")

@@ -44,7 +44,7 @@ def benchmark_shingle_set(benchmark: DataFrame) -> DataFrame:
     scale this is the small side by orders of magnitude.
     """
     return (
-        with_shingle_array(benchmark, "doc_id", "text")
+        with_shingle_array(benchmark)
         .select(F.explode_outer("shingles").alias("shingle"))
         .distinct()
     )
@@ -64,7 +64,7 @@ def contamination_report(
     Documents shorter than one shingle are excluded (they cannot
     collide), matching ``with_shingle_array``'s convention.
     """
-    shingled = with_shingle_array(train, "doc_id", "text")
+    shingled = with_shingle_array(train)
     exploded = shingled.select(
         "doc_id",
         F.size("shingles").alias("n_shingles"),

@@ -47,13 +47,9 @@ MINHASH_BANDS = 4
 MINHASH_ROWS = MINHASH_K // MINHASH_BANDS
 
 
-def with_shingle_array(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, shingles) — the distinct word-``SHINGLE_N``-grams of each
-    document as one array column, one row per document.
+def with_shingle_array(df: DataFrame) -> DataFrame:
+    """(doc_id, shingles) — the distinct word-``SHINGLE_N``-grams of each
+    document's ``text`` as one array column, one row per document.
 
     Documents with fewer than SHINGLE_N words are dropped (they can never
     pair) — the same convention as the SQL oracles. Two-step projection:
@@ -76,20 +72,18 @@ def with_shingle_array(
     shingle pass single-task). The pinned width is the configured
     shuffle parallelism — exactly what the exchange would use anyway.
     """
-    df = df.repartition(shuffle_width(df.sparkSession), F.col(id_col))
-    w = df.select(F.col(id_col), words_expr(text_col).alias("__words"))
+    df = df.repartition(shuffle_width(df.sparkSession), F.col("doc_id"))
+    w = df.select(F.col("doc_id"), words_expr("text").alias("__words"))
     shingle_list = F.transform(
         F.sequence(F.lit(0), F.size(F.col("__words")) - SHINGLE_N),
         lambda i: F.concat_ws(" ", F.slice(F.col("__words"), i + 1, SHINGLE_N)),
     )
     return w.filter(F.size("__words") >= SHINGLE_N).select(
-        id_col, F.array_distinct(shingle_list).alias("shingles")
+        "doc_id", F.array_distinct(shingle_list).alias("shingles")
     )
 
 
-def doc_shingles(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def doc_shingles(df: DataFrame) -> DataFrame:
     """Exploded (id, shingle) view — for operators that genuinely need
     the inverted layout (shingle-keyed pair generation).
 
@@ -100,8 +94,8 @@ def doc_shingles(
     The word-count filter already guarantees non-empty arrays, so outer
     explode is semantically identical here.
     """
-    return with_shingle_array(df, id_col, text_col).select(
-        id_col, F.explode_outer("shingles").alias("shingle")
+    return with_shingle_array(df).select(
+        "doc_id", F.explode_outer("shingles").alias("shingle")
     )
 
 
@@ -113,7 +107,7 @@ def exact_duplicates(df: DataFrame) -> DataFrame:
     hash-groupBy dedup.
     """
     return (
-        df.select(F.col("doc_id"), fingerprint_expr("text").alias("fingerprint"))
+        df.select(F.col("doc_id"), fingerprint_expr().alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(
             F.min("doc_id").alias("representative"),
@@ -176,12 +170,12 @@ def rotation_expr(h, seed: int):
     return F.concat(F.substring(h, cut + 1, 32), F.substring(h, 1, cut))
 
 
-def with_minhash_signature(shingled: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, sig) — the K-element MinHash signature array per document.
+def with_minhash_signature(shingled: DataFrame) -> DataFrame:
+    """(doc_id, sig) — the K-element MinHash signature array per document.
 
     One md5 per shingle in a flat codegen projection (higher-order
     lambdas are interpreted per element and ~5× slower for hash work),
-    K rotation columns derive the seeded orderings, then ONE groupBy(id)
+    K rotation columns derive the seeded orderings, then ONE groupBy(doc_id)
     with K conditional MIN aggregates builds the signature: partial
     aggregation collapses each partition to one row per document before
     the single shuffle on the id.
@@ -189,21 +183,21 @@ def with_minhash_signature(shingled: DataFrame, id_col: str = "doc_id") -> DataF
     # explode_outer: see doc_shingles — avoids the inferred size()>0
     # scan predicate that would re-inline the shingle construction.
     exploded = shingled.select(
-        id_col, F.explode_outer("shingles").alias("shingle")
+        "doc_id", F.explode_outer("shingles").alias("shingle")
     )
-    base = exploded.select(id_col, F.md5("shingle").alias("__h"))
+    base = exploded.select("doc_id", F.md5("shingle").alias("__h"))
     hashed = base.select(
-        id_col,
+        "doc_id",
         *[
             rotation_expr(F.col("__h"), s).alias(f"__h{s}")
             for s in range(MINHASH_K)
         ],
     )
-    per_doc = hashed.groupBy(id_col).agg(
+    per_doc = hashed.groupBy("doc_id").agg(
         *[F.min(f"__h{s}").alias(f"__mh{s}") for s in range(MINHASH_K)]
     )
     return per_doc.select(
-        id_col, F.array(*[f"__mh{s}" for s in range(MINHASH_K)]).alias("sig")
+        "doc_id", F.array(*[f"__mh{s}" for s in range(MINHASH_K)]).alias("sig")
     )
 
 
@@ -220,14 +214,14 @@ def minhash_signatures(shingles_or_df: DataFrame) -> DataFrame:
         )
     else:
         shingled = shingles_or_df
-    sig = with_minhash_signature(shingled, "doc_id")
+    sig = with_minhash_signature(shingled)
     return sig.select("doc_id", F.posexplode("sig").alias("seed", "minhash"))
 
 
-def lsh_bands(shingled: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, band, band_key) — the signature split into MINHASH_BANDS
+def lsh_bands(shingled: DataFrame) -> DataFrame:
+    """(doc_id, band, band_key) — the signature split into MINHASH_BANDS
     bands; band_key = md5 of the band's sorted minhashes."""
-    with_sig = with_minhash_signature(shingled, id_col)
+    with_sig = with_minhash_signature(shingled)
     bands = F.array(
         *[
             F.struct(
@@ -244,8 +238,8 @@ def lsh_bands(shingled: DataFrame, id_col: str = "doc_id") -> DataFrame:
             for b in range(MINHASH_BANDS)
         ]
     )
-    return with_sig.select(id_col, F.explode(bands).alias("bk")).select(
-        id_col, "bk.band", "bk.band_key"
+    return with_sig.select("doc_id", F.explode(bands).alias("bk")).select(
+        "doc_id", "bk.band", "bk.band_key"
     )
 
 
@@ -283,7 +277,7 @@ SHINGLE_BUCKET_CAP = 256
 _chunked_pair_join = chunked_self_pairs
 
 
-def lsh_candidate_pairs(shingled: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def lsh_candidate_pairs(shingled: DataFrame) -> DataFrame:
     """Docs colliding on any band's full key become candidate pairs.
 
     Scale: the self-join shuffles on (band, band_key). On an honest
@@ -318,12 +312,12 @@ def lsh_candidate_pairs(shingled: DataFrame, id_col: str = "doc_id") -> DataFram
     """
     # band-sized (4 narrow rows/doc): deserialized memory is the
     # right class — declared explicitly (VERDICT r11 #3)
-    banded = lsh_bands(shingled, id_col).persist(MODEL_CACHE)
+    banded = lsh_bands(shingled).persist(MODEL_CACHE)
     return (
         _chunked_pair_join(
             banded,
             ["band", "band_key"],
-            id_col,
+            "doc_id",
             LSH_BUCKET_CAP,
         )
         .select("id_a", "id_b")
@@ -332,17 +326,14 @@ def lsh_candidate_pairs(shingled: DataFrame, id_col: str = "doc_id") -> DataFram
 
 
 def verify_jaccard_pairs(
-    candidates: DataFrame,
-    shingled: DataFrame,
-    threshold: float,
-    id_col: str = "doc_id",
+    candidates: DataFrame, shingled: DataFrame, threshold: float
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate pairs via two id-keyed
     joins against the per-doc shingle arrays and a per-row
     array_intersect — the verification cost is proportional to the
     number of candidates, not the corpus size."""
-    a = shingled.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
-    b = shingled.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
+    a = shingled.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
+    b = shingled.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
     joined = candidates.join(a, "id_a").join(b, "id_b")
     joined = joined.withColumn(
         "n_common", F.size(F.array_intersect("sh_a", "sh_b"))
@@ -373,9 +364,9 @@ def minhash_lsh_duplicates(df: DataFrame, threshold: float) -> DataFrame:
     at corpus scale, where a production pipeline would stage it (or the
     signature matrix) to a table between passes anyway.
     """
-    shingled = with_shingle_array(df, "doc_id", "text").persist(CORPUS_CACHE)
-    candidates = lsh_candidate_pairs(shingled, "doc_id")
-    return verify_jaccard_pairs(candidates, shingled, threshold, "doc_id")
+    shingled = with_shingle_array(df).persist(CORPUS_CACHE)
+    candidates = lsh_candidate_pairs(shingled)
+    return verify_jaccard_pairs(candidates, shingled, threshold)
 
 
 def duplicate_clusters(
@@ -567,7 +558,7 @@ def novelty_scores(df: DataFrame) -> DataFrame:
     min), one back on the id — both linear in corpus shingle count, no
     pairwise anything.
     """
-    shingles = doc_shingles(df, "doc_id", "text")
+    shingles = doc_shingles(df)
     first = shingles.groupBy("shingle").agg(F.min("doc_id").alias("first_id"))
     return (
         shingles.join(first, "shingle")
@@ -828,14 +819,10 @@ def incremental_lsh_duplicates(
     staged table (here derived in-plan from the corpus frame), so the
     historical side is scan + join, no re-hashing of text if staged.
     """
-    batch_sh = with_shingle_array(new_docs, "doc_id", "text").persist(
-        CORPUS_CACHE
-    )
-    corpus_sh = with_shingle_array(corpus, "doc_id", "text").persist(
-        CORPUS_CACHE
-    )
-    batch_bands = lsh_bands(batch_sh, "doc_id")
-    corpus_bands = lsh_bands(corpus_sh, "doc_id")
+    batch_sh = with_shingle_array(new_docs).persist(CORPUS_CACHE)
+    corpus_sh = with_shingle_array(corpus).persist(CORPUS_CACHE)
+    batch_bands = lsh_bands(batch_sh)
+    corpus_bands = lsh_bands(corpus_sh)
     nb = batch_bands.select(F.col("doc_id").alias("id_n"), "band", "band_key")
     cb = corpus_bands.select(F.col("doc_id").alias("id_c"), "band", "band_key")
     cross = (
@@ -860,9 +847,9 @@ def incremental_lsh_duplicates(
     # materialize before unpersisting: the cached shingle blocks must
     # not outlive this call (a long-lived ingest pipeline would leak
     # storage memory one batch at a time otherwise)
-    result = verify_jaccard_pairs(
-        candidates, all_sh, threshold, "doc_id"
-    ).localCheckpoint(eager=True)
+    result = verify_jaccard_pairs(candidates, all_sh, threshold).localCheckpoint(
+        eager=True
+    )
     batch_sh.unpersist()
     corpus_sh.unpersist()
     return result
@@ -905,46 +892,42 @@ def containment_pairs(shingles: DataFrame, threshold: float) -> DataFrame:
 
 
 def simhash_hamming_pairs(
-    simhashed: DataFrame,
-    max_hamming: int = 2,
-    bits: int = 16,
-    bands: int = 4,
+    simhashed: DataFrame, max_hamming: int = 2, bits: int = 16
 ) -> DataFrame:
     """All document pairs whose SimHash fingerprints differ in at most
     ``max_hamming`` bits, found WITHOUT the n² scan: the print is cut
-    into ``bands`` equal slices and candidates form only through an
+    into 4 equal slices and candidates form only through an
     equi-join on (band, slice). Pigeonhole guarantee: hamming ≤ h and
-    h < bands ⇒ at least one slice is identical, so the banded join
-    misses nothing (requires max_hamming < bands; enforced).
+    h < 4 ⇒ at least one slice is identical, so the banded join
+    misses nothing (requires max_hamming < 4; enforced).
 
     Exact Hamming verification runs only on candidates — NOT as
     per-character string comparisons (``bits`` interpreted substring
     evaluations per candidate dominate the query when band slices
-    correlate and candidates are plentiful) but as ``bands`` integer
+    correlate and candidates are plentiful) but as 4 integer
     XOR + bit_count intrinsics over the band slices parsed to BIGINTs
     once per document: popcount(a XOR b) summed over slices IS the
     print's Hamming distance. The SQL oracle keeps the positionwise
     character form — same value, independent derivation.
     """
-    if max_hamming >= bands:
+    if max_hamming >= 4:
         raise ValueError(
-            f"pigeonhole guarantee needs max_hamming < bands "
-            f"({max_hamming} >= {bands})"
+            f"pigeonhole guarantee needs max_hamming < 4 bands ({max_hamming} >= 4)"
         )
-    width = bits // bands
+    width = bits // 4
     if width > 62:
         raise ValueError("band slices must fit a signed BIGINT (width <= 62)")
     # parse each band slice to an integer ONCE per document and
     # materialize: the frame feeds four plan branches (both candidate
     # join sides + both verify sides) and is signature-sized
-    # (id + `bands` longs), never the text
+    # (id + 4 longs), never the text
     bints = simhashed.select(
         F.col("doc_id"),
         F.array(
             *[
                 F.conv(F.substring("simhash", b * width + 1, width), 2, 10)
                 .cast("long")
-                for b in range(bands)
+                for b in range(4)
             ]
         ).alias("__bint"),
     ).localCheckpoint(eager=True)
@@ -955,14 +938,14 @@ def simhash_hamming_pairs(
     # IDENTICAL prints) collapses every band into one bucket — the same
     # quadratic-single-task trap as LSH, guarded the same way (output
     # unchanged, per-task work ≤ ~HAMMING_BUCKET_CAP² popcount pairs)
-    # Candidates keep their per-band multiplicity here (≤ ``bands``
+    # Candidates keep their per-band multiplicity here (≤ 4
     # rows per pair): deduplicating BEFORE verification paid a
     # full-width exchange + hash aggregate over the candidate volume
     # (profiled at bench scale: 438k candidate rows collapsing to 223
     # final pairs — the distinct was ~a third of the query for a 2%
-    # multiplicity reduction), while the verify itself is ``bands``
+    # multiplicity reduction), while the verify itself is 4
     # XOR+popcount intrinsics per row against signature-sized sides
-    # (id + ``bands`` longs — the planner broadcasts them at bench
+    # (id + 4 longs — the planner broadcasts them at bench
     # scale; at corpus scale they join id-keyed either way). So:
     # verify first, then distinct over the filtered survivors —
     # output identical, the dedup exchange now moves final-pair rows
@@ -976,7 +959,7 @@ def simhash_hamming_pairs(
         F.bit_count(
             F.element_at("__ba", b + 1).bitwiseXOR(F.element_at("__bb", b + 1))
         )
-        for b in range(bands)
+        for b in range(4)
     )
     return (
         cand.join(sa, "id_a")

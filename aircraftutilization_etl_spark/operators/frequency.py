@@ -112,8 +112,9 @@ CMS_DEPTH = 4
 CMS_WIDTH = 256
 
 
-def _cms_col(key, depth_idx, width: int):
-    """Row ``depth_idx``'s column for ``key``: md5-prefix hash mod width.
+def _cms_col(key, depth_idx):
+    """Row ``depth_idx``'s column for ``key``: md5-prefix hash mod
+    CMS_WIDTH.
 
     Same stable-hex-prefix construction as sampling.hash_bucket, salted
     by the depth index — engine-portable (md5 + integer mod only)."""
@@ -127,7 +128,7 @@ def _cms_col(key, depth_idx, width: int):
             16,
             10,
         ).cast("long")
-        % width
+        % CMS_WIDTH
     )
 
 
@@ -146,18 +147,13 @@ def count_min_build(df: DataFrame, key_col: str) -> DataFrame:
     every distinct key.
     """
     return (
-        count_min_cells(df, key_col, CMS_DEPTH, CMS_WIDTH)
+        count_min_cells(df, key_col)
         .groupBy("depth", "col")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
-def count_min_cells(
-    df: DataFrame,
-    key_col: str,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-) -> DataFrame:
+def count_min_cells(df: DataFrame, key_col: str) -> DataFrame:
     """The pre-aggregation (depth, col) cell stream — one row per input
     row per sketch row. Exposed separately so incremental maintenance
     can route cells through a mergeable count rollup
@@ -166,7 +162,7 @@ def count_min_cells(
     incrementally-maintained CMS."""
     return df.select(
         F.posexplode(
-            F.array(*[_cms_col(F.col(key_col), i, width) for i in range(depth)])
+            F.array(*[_cms_col(F.col(key_col), i) for i in range(CMS_DEPTH)])
         ).alias("depth", "col")
     )
 
@@ -189,7 +185,7 @@ def count_min_estimate(
         F.col(key_col),
         F.posexplode(
             F.array(
-                *[_cms_col(F.col(key_col), i, CMS_WIDTH) for i in range(CMS_DEPTH)]
+                *[_cms_col(F.col(key_col), i) for i in range(CMS_DEPTH)]
             )
         ).alias("depth", "col"),
     )

@@ -204,8 +204,8 @@ def extract_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(kernel, FEATURES_SCHEMA)
 
 
-def sample_frames(media: DataFrame, every: int = 4) -> DataFrame:
-    """video assets → one row per sampled frame (every ``every``-th).
+def sample_frames(media: DataFrame) -> DataFrame:
+    """video assets → one row per sampled frame (every 4th).
 
     Row-expanding mapInPandas: frames are fixed-size payload slices under
     the fake codec (a real pyav decode keeps the same output contract).
@@ -220,7 +220,7 @@ def sample_frames(media: DataFrame, every: int = 4) -> DataFrame:
             for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
                 raw = bytes(payload)
                 n_frames = -(-len(raw) // FRAME_BYTES)
-                for i in range(0, n_frames, every):
+                for i in range(0, n_frames, 4):
                     ids.append(asset_id)
                     idxs.append(i)
                     frames.append(raw[i * FRAME_BYTES : (i + 1) * FRAME_BYTES])

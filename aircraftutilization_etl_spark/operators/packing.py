@@ -117,7 +117,7 @@ LENGTH_BUCKET_EDGES = (16, 32, 64)
 DEFAULT_BATCH_SIZE = 8
 
 
-def length_bucket_expr(n_tokens, edges=LENGTH_BUCKET_EDGES):
+def length_bucket_expr(n_tokens):
     """Smallest configured power-of-2-ish edge >= n_tokens; NULL for
     documents longer than the last edge (the overflow bucket).
 
@@ -126,7 +126,7 @@ def length_bucket_expr(n_tokens, edges=LENGTH_BUCKET_EDGES):
     comparison chain is not.
     """
     expr = None
-    for e in edges:
+    for e in LENGTH_BUCKET_EDGES:
         cond = n_tokens <= e
         expr = F.when(cond, F.lit(e)) if expr is None else expr.when(cond, F.lit(e))
     return expr.otherwise(F.lit(None)).cast("long")
@@ -190,7 +190,7 @@ def padding_audit(
 
     w = Window.partitionBy("bucket").orderBy("__ord", "doc_id")
     bucketed = sized.withColumn(
-        "bucket", length_bucket_expr(F.col("n_tokens"), LENGTH_BUCKET_EDGES)
+        "bucket", length_bucket_expr(F.col("n_tokens"))
     ).withColumn(
         "batch_id",
         F.floor((F.row_number().over(w) - 1) / batch_size).cast("bigint"),

@@ -6,7 +6,7 @@ out beyond what AQE gives for free:
 - **Salting** defeats hot-key skew that AQE's skew-join splitting can't
   fully fix (a single key's rows must still meet a single copy of the
   build row per split). The salted join spreads each hot key over
-  ``n_salts`` sub-keys and replicates the small side once per salt —
+  8 salt sub-keys and replicates the small side once per salt —
   result-identical to the plain join, verified by oracle.
 - **Bloom pruning** cuts a huge probe side before its shuffle with a
   few-KB bit array over the selective build side's keys; the exact
@@ -23,21 +23,20 @@ def salted_join(
     skewed: DataFrame,
     small: DataFrame,
     on: str,
-    n_salts: int = 8,
     how: str = "inner",
 ) -> DataFrame:
-    """Equi-join with the skewed side's hot keys spread over ``n_salts``
+    """Equi-join with the skewed side's hot keys spread over 8 salt
     sub-keys.
 
     The skewed side gets a deterministic content-derived salt; the small
     side is replicated once per salt value (explode of a literal range —
-    ``n_salts``× a small table, still broadcastable). Joining on
-    (key, salt) splits every hot key's rows across ``n_salts`` tasks.
+    8× a small table, still broadcastable). Joining on (key, salt)
+    splits every hot key's rows across 8 tasks.
 
     Result set is exactly the plain join's ONLY for join types where the
     replicated (small) side never contributes unmatched rows: inner,
     left outer, left semi, left anti. For right/full outer an unmatched
-    small-side row would survive once per salt replica (``n_salts``
+    small-side row would survive once per salt replica (8
     copies), so those types are rejected.
     """
     allowed = {
@@ -49,13 +48,13 @@ def salted_join(
         raise ValueError(
             f"salted_join does not preserve '{how}' semantics: the small "
             "side is replicated per salt, so unmatched small-side rows "
-            "would be emitted n_salts times. Use inner/left/semi/anti."
+            "would be emitted 8 times. Use inner/left/semi/anti."
         )
-    salt = F.pmod(F.xxhash64(*skewed.columns), F.lit(n_salts)).cast("int")
+    salt = F.pmod(F.xxhash64(*skewed.columns), F.lit(8)).cast("int")
     left = skewed.withColumn("__salt", salt)
     right = small.withColumn(
         "__salt",
-        F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<int>")),
+        F.explode(F.sequence(F.lit(0), F.lit(7)).cast("array<int>")),
     )
     joined = left.join(right, on=[on, "__salt"], how=how)
     return joined.drop("__salt")

@@ -58,8 +58,9 @@ def cosine_expr(a, b):
 MAX_BROADCAST_QUERIES = 100_000  # ~50 MB at d=64 float64 — broadcast budget
 
 
-def _collect_matrix(df: DataFrame, id_col: str, vec_col: str):
-    """Driver-side (ids, float64 matrix) of a SMALL vector set.
+def _collect_matrix(df: DataFrame):
+    """Driver-side (vec_id, float64 embedding matrix) of a SMALL vector
+    set.
 
     Arrow-path toPandas + np.stack — one columnar transfer, no per-row
     Python object churn. The smallness contract is ENFORCED, not
@@ -75,15 +76,15 @@ def _collect_matrix(df: DataFrame, id_col: str, vec_col: str):
             f"({MAX_BROADCAST_QUERIES}). Use ivf_topk/srp_topk (bucketed "
             "ANN) or cosine_pairs (blocked exact all-pairs) instead."
         )
-    pdf = df.select(id_col, vec_col).toPandas()
-    ids = pdf[id_col].to_numpy(dtype=np.int64)
+    pdf = df.select("vec_id", "embedding").toPandas()
+    ids = pdf["vec_id"].to_numpy(dtype=np.int64)
     if ids.size == 0:
         # empty query/reference set (a filter matched nothing — routine
         # at scale): np.stack rejects an empty list, and every caller's
         # contract is an empty RESULT, so hand back a (0, 0) matrix and
         # let the operator short-circuit on ids.size
         return ids, np.zeros((0, 0), dtype=np.float64)
-    mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+    mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
     return ids, mat
 
 
@@ -93,7 +94,7 @@ def _normalize(mat: np.ndarray) -> np.ndarray:
     return mat / norms
 
 
-def _score_against(query_ids, query_mat_norm, id_col, vec_col, partial_k=None):
+def _score_against(query_ids, query_mat_norm, partial_k=None):
     """mapInPandas kernel: batch GEMM against the broadcast query matrix.
 
     Hits leave the kernel via boolean-matrix ``argwhere`` — never the
@@ -109,8 +110,8 @@ def _score_against(query_ids, query_mat_norm, id_col, vec_col, partial_k=None):
         for batch in batches:
             if batch.empty:
                 continue
-            cids = batch[id_col].to_numpy(dtype=np.int64)
-            cmat = np.stack(batch[vec_col].to_numpy()).astype(np.float64)
+            cids = batch["vec_id"].to_numpy(dtype=np.int64)
+            cmat = np.stack(batch["embedding"].to_numpy()).astype(np.float64)
             sims = _normalize(cmat) @ query_mat_norm.T  # (nb, nq)
             keep = query_ids[None, :] != cids[:, None]
             if partial_k is not None:
@@ -145,7 +146,7 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     An empty query set yields a typed empty result (no neighbors of
     nothing) rather than an error — the corpus scan is skipped entirely.
     """
-    qids, qmat = _collect_matrix(queries, "vec_id", "embedding")
+    qids, qmat = _collect_matrix(queries)
     if qids.size == 0:
         return queries.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, cosine double, rank int"
@@ -153,9 +154,7 @@ def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     scored = ensure_scan_parallelism(
         corpus.select("vec_id", "embedding")
     ).mapInPandas(
-        _score_against(
-            qids, _normalize(qmat), "vec_id", "embedding", partial_k=k
-        ),
+        _score_against(qids, _normalize(qmat), partial_k=k),
         _SCORE_SCHEMA,
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
@@ -316,7 +315,7 @@ SRP_BAND_BITS = 4  # bits per band -> SRP_PLANES // SRP_BAND_BITS bands
 SRP_DIM = 64  # embedding dimensionality of the documents corpus
 
 
-def srp_plane(p: int, dim: int = SRP_DIM) -> list[float]:
+def srp_plane(p: int) -> list[float]:
     """Deterministic Rademacher (±1) hyperplane ``p`` — component ``d``
     is the high bit of md5(f"{p}_{d}")'s first hex char.
 
@@ -329,15 +328,11 @@ def srp_plane(p: int, dim: int = SRP_DIM) -> list[float]:
 
     return [
         1.0 if hashlib.md5(f"{p}_{d}".encode()).hexdigest()[0] >= "8" else -1.0
-        for d in range(dim)
+        for d in range(SRP_DIM)
     ]
 
 
-def with_srp_bands(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def with_srp_bands(df: DataFrame) -> DataFrame:
     """Exploded (id, vec, band, band_key) — one row per (vector, band).
 
     ``band_key`` concatenates the sign bits of the band's projections
@@ -346,7 +341,7 @@ def with_srp_bands(
     coefficients are literal arrays, so each projection is a codegen'd
     fold, no Python.
     """
-    v = _as_double(F.col(vec_col))
+    v = _as_double(F.col("embedding"))
     # plane literals as ONE parsed expression each: building ±1.0 arrays
     # element-by-element with F.lit costs one py4j round-trip per
     # component (~0.5 s of driver time for 8×64 planes; guide §5)
@@ -359,7 +354,7 @@ def with_srp_bands(
                         "array("
                         + ",".join(
                             "1.0D" if x > 0 else "-1.0D"
-                            for x in srp_plane(p, SRP_DIM)
+                            for x in srp_plane(p)
                         )
                         + ")"
                     ),
@@ -383,8 +378,8 @@ def with_srp_bands(
         ]
     )
     return df.select(
-        F.col(id_col), F.col(vec_col), F.explode(bands).alias("bk")
-    ).select(id_col, vec_col, F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
+        F.col("vec_id"), F.col("embedding"), F.explode(bands).alias("bk")
+    ).select("vec_id", "embedding", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
 
 
 def srp_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
@@ -398,13 +393,13 @@ def srp_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     groups duplicate candidates and one per-query top-k window ranks.
     Recall tunes with bands × bits like any LSH.
     """
-    qb = with_srp_bands(queries, "vec_id", "embedding").select(
+    qb = with_srp_bands(queries).select(
         F.col("vec_id").alias("query_id"),
         _as_double(F.col("embedding")).alias("qv"),
         "band",
         "band_key",
     )
-    cb = with_srp_bands(corpus, "vec_id", "embedding").select(
+    cb = with_srp_bands(corpus).select(
         F.col("vec_id").alias("neighbor_id"),
         _as_double(F.col("embedding")).alias("cv"),
         "band",
@@ -438,19 +433,18 @@ def srp_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
 
 # --- scalar quantization -------------------------------------------------
 
-def quantize_embeddings(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """Symmetric int8 scalar quantization: per-vector scale = max |x|,
-    q_i = floor(x_i · 127 / scale) ∈ [-127, 127] (all-zero vectors
-    quantize to zeros). 4× memory cut for ANN candidate stages; exact
-    floor-of-double arithmetic, so any engine reproduces every code.
+def quantize_embeddings(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
+    """Symmetric int8 scalar quantization of ``embedding``: per-vector
+    scale = max |x|, q_i = floor(x_i · 127 / scale) ∈ [-127, 127]
+    (all-zero vectors quantize to zeros). 4× memory cut for ANN
+    candidate stages; exact floor-of-double arithmetic, so any engine
+    reproduces every code.
 
     Column-expression formulation (fine at catalog dimensionality; swap
     the lambda for a mapInPandas numpy kernel if vectors are long —
     same output contract either way).
     """
-    v = _as_double(F.col(vec_col))
+    v = _as_double(F.col("embedding"))
     scale = F.array_max(F.transform(v, lambda x: F.abs(x)))
     q = F.when(scale == 0, F.transform(v, lambda x: F.lit(0))).otherwise(
         F.transform(v, lambda x: F.floor(x * 127 / scale).cast("int"))
@@ -479,7 +473,7 @@ def cosine_best_match(corpus: DataFrame, refs: DataFrame) -> DataFrame:
     candidate table (~1 row of 24 bytes per corpus vector), never the
     vectors.
     """
-    rids, rmat = _collect_matrix(refs, "vec_id", "embedding")
+    rids, rmat = _collect_matrix(refs)
     if rids.size == 0:
         # no references -> no best match for any corpus row (the
         # oracle's CROSS JOIN against an empty reference set)

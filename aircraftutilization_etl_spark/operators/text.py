@@ -23,10 +23,10 @@ BPE_TOKEN_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
 ENGLISH_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
 
 
-def normalized_text(col: Column | str = "text") -> Column:
-    """Lowercase + collapse whitespace — canonical form for fingerprints."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.trim(F.regexp_replace(F.lower(c), "\\s+", " "))
+def normalized_text() -> Column:
+    """``text`` lowercased with whitespace collapsed — canonical form for
+    fingerprints."""
+    return F.trim(F.regexp_replace(F.lower(F.col("text")), "\\s+", " "))
 
 
 def words_expr(col: Column | str = "text") -> Column:
@@ -46,9 +46,10 @@ def bpe_token_count_expr() -> Column:
     return F.size(F.regexp_extract_all(c, F.lit(BPE_TOKEN_PATTERN), 0))
 
 
-def stopword_ratio_expr(col: Column | str = "text") -> Column:
-    """Fraction of whitespace tokens that are English stopwords."""
-    words = words_expr(col)
+def stopword_ratio_expr() -> Column:
+    """Fraction of ``text``'s whitespace tokens that are English
+    stopwords."""
+    words = words_expr("text")
     hits = F.size(
         F.filter(words, lambda w: F.lower(w).isin(*ENGLISH_STOPWORDS))
     )
@@ -100,7 +101,7 @@ def lang_id_expr(*, stop_ratio: Column | None = None) -> Column:
     """Stopword-hit language heuristic: 'en' when English stopwords make
     up over 5% of tokens, else 'unknown'. (A real lang-ID model plugs in
     behind the same column contract.)"""
-    ratio = stopword_ratio_expr("text") if stop_ratio is None else stop_ratio
+    ratio = stopword_ratio_expr() if stop_ratio is None else stop_ratio
     return F.when(ratio > 0.05, F.lit("en")).otherwise(F.lit("unknown"))
 
 
@@ -128,15 +129,16 @@ GOPHER_DEFAULTS = {
 }
 
 
-def gopher_metrics(col: Column | str = "text") -> dict[str, Column]:
-    """The raw per-doc measurements the Gopher rules threshold.
+def gopher_metrics() -> dict[str, Column]:
+    """The raw per-doc measurements of ``text`` the Gopher rules
+    threshold.
 
     ``top_word_share`` (fraction of tokens taken by the single most
     frequent token — Gopher's repetition screen) is an O(v·n) per-row
     fold over the distinct words; v is the per-doc vocabulary, so this
     stays cheap even for long documents.
     """
-    words = words_expr(col)
+    words = words_expr("text")
     words_lower = F.transform(words, F.lower)
     n = F.size(words)
     top_count = F.array_max(
@@ -154,7 +156,7 @@ def gopher_metrics(col: Column | str = "text") -> dict[str, Column]:
     )
     return {
         "n_words": n,
-        "mean_word_len": mean_word_length_expr(col),
+        "mean_word_len": mean_word_length_expr("text"),
         "top_word_share": top_count / F.greatest(n, F.lit(1)),
         "alpha_word_ratio": alpha / F.greatest(n, F.lit(1)),
         "n_distinct_stopwords": stops,
@@ -185,13 +187,14 @@ def gopher_flags(metrics: dict[str, Column]) -> dict[str, Column]:
     }
 
 
-def fingerprint_expr(col: Column | str = "text") -> Column:
-    """Deterministic document fingerprint: md5 of the normalized text.
+def fingerprint_expr() -> Column:
+    """Deterministic document fingerprint: md5 of the normalized
+    ``text``.
 
     md5 is engine-portable (identical hex in Spark and DuckDB), which the
     dedup/minhash operators rely on for their oracles.
     """
-    return F.md5(normalized_text(col))
+    return F.md5(normalized_text())
 
 
 # --- PII redaction ---------------------------------------------------------
@@ -235,25 +238,24 @@ def redact_pii_expr(col: Column | str = "text") -> Column:
     return out
 
 
-def ngram_repetition_expr(
-    col: Column | str = "text", n: int = 5
-) -> Column:
-    """Fraction of within-document n-gram repeats: 1 - distinct/total
-    word n-grams (0.0 when the doc has fewer than ``n`` words).
+def ngram_repetition_expr() -> Column:
+    """Fraction of within-document 5-gram repeats of ``text``: 1 -
+    distinct/total word 5-grams (0.0 when the doc has fewer than 5
+    words).
 
     The standard boilerplate/templated-text signal in pretraining-data
     curation. Pure per-row array work (sequence → transform →
     array_distinct): no shuffle, no Python; cost is O(words) per row.
     """
-    words = F.transform(words_expr(col), lambda w: F.lower(w))
+    words = F.transform(words_expr("text"), lambda w: F.lower(w))
     # sequence() must be guarded: Spark's sequence(1, 0) DESCENDS to
     # [1, 0] rather than returning empty, so short docs are handled by
     # the when() branch, never by an empty sequence
     grams = F.transform(
-        F.sequence(F.lit(1), F.size(words) - (n - 1)),
-        lambda i: F.concat_ws(" ", F.slice(words, i, n)),
+        F.sequence(F.lit(1), F.size(words) - 4),
+        lambda i: F.concat_ws(" ", F.slice(words, i, 5)),
     )
-    return F.when(F.size(words) < n, F.lit(0.0)).otherwise(
+    return F.when(F.size(words) < 5, F.lit(0.0)).otherwise(
         F.round(
             1.0
             - F.size(F.array_distinct(grams))
@@ -322,7 +324,7 @@ def repeated_ngrams(df: DataFrame, min_docs: int, k: int) -> DataFrame:
     """
     from .dedup import doc_shingles
 
-    sh = doc_shingles(df, "doc_id", "text")
+    sh = doc_shingles(df)
     counts = sh.groupBy("shingle").agg(
         F.count(F.lit(1)).alias("n_docs")
     )
@@ -355,7 +357,7 @@ def boilerplate_scores(df: DataFrame, min_docs: int) -> DataFrame:
     """
     from .dedup import doc_shingles
 
-    sh = doc_shingles(df, "doc_id", "text")
+    sh = doc_shingles(df)
     common = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("__nd"))
@@ -538,7 +540,7 @@ def bpe_merges(df: DataFrame, n_merges: int) -> DataFrame:
     round with an eager localCheckpoint so the plan doesn't grow with
     rank count.
     """
-    merges, _ = _bpe_train(df, n_merges, "text")
+    merges, _ = _bpe_train(df, n_merges)
     spark = df.sparkSession
     return inline_values_df(
         spark,
@@ -548,7 +550,7 @@ def bpe_merges(df: DataFrame, n_merges: int) -> DataFrame:
 
 
 def _bpe_train(
-    df: DataFrame, n_merges: int, text_col: str = "text"
+    df: DataFrame, n_merges: int
 ) -> tuple[list[tuple[int, str, str, str, int]], DataFrame]:
     """Shared BPE training loop → (merge rules, trained vocabulary).
 
@@ -559,7 +561,7 @@ def _bpe_train(
     """
     words = df.select(
         F.explode(
-            F.transform(words_expr(text_col), lambda w: F.lower(w))
+            F.transform(words_expr("text"), lambda w: F.lower(w))
         ).alias("__w")
     ).filter(F.col("__w").rlike("^[a-z0-9]+$"))
     vocab = (
@@ -626,7 +628,7 @@ def bpe_encode(df: DataFrame, n_merges: int) -> DataFrame:
     Output: (id, n_words, n_bpe_tokens, n_chars, compression) over the
     tokenizer's [a-z0-9]+ word filter.
     """
-    _, vocab = _bpe_train(df, n_merges, "text")
+    _, vocab = _bpe_train(df, n_merges)
     encoder = vocab.select(
         "__w",
         (F.size(F.split("__repr", "\\|")) - 1).alias("__wtoks"),
@@ -1179,12 +1181,7 @@ def tfidf_cosine_pairs(df: DataFrame, threshold: float) -> DataFrame:
     return out
 
 
-def skipgram_pairs(
-    df: DataFrame,
-    window: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def skipgram_pairs(df: DataFrame, window: int = 2) -> DataFrame:
     """Skip-gram co-occurrence mining: (center, context, n_pairs) for
     every ordered word pair within ±``window`` positions — the
     positive-pair extraction of word2vec-style embedding training.
@@ -1198,8 +1195,8 @@ def skipgram_pairs(
     # algebra below is interpreted higher-order-function work (~0.7 ms
     # per document), and a small corpus scans as ONE task (profiled:
     # a 1.4 s single-task stage at sf0.1).
-    df = ensure_scan_parallelism(df, id_col)
-    w = df.select(F.col(id_col), words_expr(text_col).alias("__words"))
+    df = ensure_scan_parallelism(df, "doc_id")
+    w = df.select(F.col("doc_id"), words_expr("text").alias("__words"))
     pairs = F.flatten(
         F.transform(
             F.sequence(F.lit(0), F.size("__words") - 1),
@@ -1250,7 +1247,7 @@ def skipgram_with_negatives(
     probe rows against the vocab index — broadcast-sized both sides
     after the top-k cut (TakeOrderedAndProject, no global sort).
     """
-    pairs = skipgram_pairs(df, 2, "doc_id", "text")
+    pairs = skipgram_pairs(df, 2)
     top = pairs.orderBy(
         F.desc("n_pairs"), F.col("center"), F.col("context")
     ).limit(top_k)

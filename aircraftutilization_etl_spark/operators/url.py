@@ -54,10 +54,6 @@ MULTI_LABEL_SUFFIXES = (
     "co.in",
 )
 
-# Query parameters dropped by canonicalization: analytics/click
-# trackers that never change the fetched representation.
-TRACKING_PARAM_PREFIXES = ("utm_", "fbclid=", "gclid=", "ref=")
-
 # Synthetic-corpus knobs shared with plans/url.py oracles.
 URL_PATH_BUCKETS = 5  # doc_id % 5 → path collisions for canonical dedup
 
@@ -67,7 +63,7 @@ URL_PATH_BUCKETS = 5  # doc_id % 5 → path collisions for canonical dedup
 # driver time per catalog call, rebuilt identically by every member of
 # the ~10-query URL family. The trees are pure unresolved expressions
 # over column NAMES (no DataFrame reference, no data), so one build per
-# (SparkContext, name-parameters) is replayed for every consumer —
+# (SparkContext, tree) is replayed for every consumer —
 # resolution still happens per-DataFrame at analysis, plans unchanged.
 # Keyed on applicationId: a restarted context gets fresh trees; Column
 # JVM objects outlive a stopped context (the gateway JVM is
@@ -75,8 +71,8 @@ URL_PATH_BUCKETS = 5  # doc_id % 5 → path collisions for canonical dedup
 _EXPR_MEMO: dict[tuple, object] = {}
 
 
-def _memo_key(df, *parts) -> tuple:
-    return (df.sparkSession.sparkContext.applicationId, *parts)
+def _memo_key(df, tree: str) -> tuple:
+    return (df.sparkSession.sparkContext.applicationId, tree)
 
 
 def _nib(h: Column, i: int) -> Column:
@@ -84,10 +80,8 @@ def _nib(h: Column, i: int) -> Column:
     return F.substring(h, i, 1)
 
 
-def synthetic_url_expr(
-    doc_id: str = "doc_id", source: str = "source"
-) -> Column:
-    """Deterministic messy absolute URL for a document row.
+def synthetic_url_expr() -> Column:
+    """Deterministic messy absolute URL for a (doc_id, source) row.
 
     Variety comes from md5 nibbles of the doc id (per-document mess:
     case, www, port, params, fragment) and of the source (per-site
@@ -100,8 +94,8 @@ def synthetic_url_expr(
     plans/url.py's oracles and pinned row-for-row by the literal
     fixture test (tests/test_url_fixtures.py).
     """
-    h = F.md5(F.col(doc_id).cast("string"))
-    hs = F.md5(F.col(source))
+    h = F.md5(F.col("doc_id").cast("string"))
+    hs = F.md5(F.col("source"))
     s1 = _nib(hs, 1)
     tld = (
         F.when(s1 < "2", F.lit("com"))
@@ -119,7 +113,7 @@ def synthetic_url_expr(
         .when(n2 < "6", F.lit("WWW."))
         .otherwise(F.lit(""))
     )
-    host_raw = F.concat(wprefix, F.col(source), F.lit("."), tld)
+    host_raw = F.concat(wprefix, F.col("source"), F.lit("."), tld)
     host = F.when(_nib(h, 3) < "4", F.upper(host_raw)).otherwise(host_raw)
     n4 = _nib(h, 4)
     scheme = (
@@ -139,7 +133,7 @@ def synthetic_url_expr(
     )
     path = F.concat(
         F.lit("/docs/"),
-        (F.col(doc_id) % URL_PATH_BUCKETS).cast("string"),
+        (F.col("doc_id") % URL_PATH_BUCKETS).cast("string"),
         F.when(_nib(h, 6) < "8", F.lit("/")).otherwise(F.lit("")),
     )
     params = F.array_compact(
@@ -187,10 +181,10 @@ def with_url_columns(df):
     hand-written fixtures and their SQL replay pin the rules
     (tests/test_url_fixtures.py) and the DuckDB oracles pin the values.
     """
-    key = _memo_key(df, "synthetic", "doc_id", "source", "url")
+    key = _memo_key(df, "synthetic")
     url = _EXPR_MEMO.get(key)
     if url is None:
-        url = synthetic_url_expr("doc_id", "source").alias("url")
+        url = synthetic_url_expr().alias("url")
         _EXPR_MEMO[key] = url
     l0 = df.select("*", url)
     return with_canonical_columns(l0)
@@ -218,10 +212,10 @@ def with_canonical_columns(df):
     two-label tail is a bundled public-suffix entry
     (MULTI_LABEL_SUFFIXES); single-label hosts pass through unchanged.
     """
-    key = _memo_key(df, "canon", "url", "canonical_url", "domain")
+    key = _memo_key(df, "canon")
     layers = _EXPR_MEMO.get(key)
     if layers is None:
-        layers = _canon_layer_exprs("url", "canonical_url", "domain")
+        layers = _canon_layer_exprs()
         _EXPR_MEMO[key] = layers
     l1_exprs, l2_exprs, l3_exprs = layers
     l3 = (
@@ -242,12 +236,10 @@ def with_canonical_columns(df):
     )
 
 
-def _canon_layer_exprs(
-    url_col: str, canonical_col: str, domain_col: str
-) -> tuple[list, list, list]:
+def _canon_layer_exprs() -> tuple[list, list, list]:
     """The three projection layers of :func:`with_canonical_columns` as
     unresolved Column lists (built once per context via _EXPR_MEMO)."""
-    u = F.col(url_col)
+    u = F.col("url")
     # each part: ONE anchored regex over the url attribute (no-match
     # regexp_extract yields '', which the CASE layer treats as absent)
     l1_exprs = [
@@ -265,6 +257,8 @@ def _canon_layer_exprs(
         ),
         F.regexp_extract(u, r"^[^?#]*\?([^#]*)", 1).alias("__qstr"),
     ]
+    # tracking params are analytics/click trackers that never change the
+    # fetched representation
     keep = F.filter(
         F.split(F.col("__qstr"), "&"),
         lambda x: (x != "")
@@ -306,7 +300,7 @@ def _canon_layer_exprs(
                 F.size("__keep") > 0,
                 F.concat(F.lit("?"), F.array_join("__keep", "&")),
             ).otherwise(F.lit("")),
-        ).alias(canonical_col),
+        ).alias("canonical_url"),
         (
             F.when(n <= 1, F.col("__host"))
             .when(
@@ -314,7 +308,7 @@ def _canon_layer_exprs(
                 F.concat_ws(".", F.get("__labs", n - 3), last2),
             )
             .otherwise(last2)
-        ).alias(domain_col),
+        ).alias("domain"),
     ]
     return l1_exprs, l2_exprs, l3_exprs
 

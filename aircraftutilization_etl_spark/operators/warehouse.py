@@ -249,7 +249,7 @@ HILBERT_BITS = 8  # 256x256 grid -> 16-bit Hilbert index
 _H_MASK = (1 << HILBERT_BITS) - 1
 
 
-def hilbert_steps(a: str, b: str, bits: int = HILBERT_BITS) -> list[tuple[str, str]]:
+def hilbert_steps(a: str, b: str) -> list[tuple[str, str]]:
     """The Hilbert xy→d transform as a list of (column, SQL expression)
     assignments — one integer-only step chain both engines evaluate
     identically (each level references the PREVIOUS level's columns, so
@@ -268,7 +268,7 @@ def hilbert_steps(a: str, b: str, bits: int = HILBERT_BITS) -> list[tuple[str, s
         ("hd0", "CAST(0 AS BIGINT)"),
     ]
     level = 0
-    s = 1 << (bits - 1)
+    s = 1 << (HILBERT_BITS - 1)
     while s > 0:
         x, y, d = f"hx{level}", f"hy{level}", f"hd{level}"
         rx = f"(CASE WHEN ({x} & {s}) > 0 THEN 1 ELSE 0 END)"
@@ -320,7 +320,7 @@ def hilbert_sql(a: str, b: str, source: str) -> str:
     SAME step chain the Spark column chain uses — one generator, two
     realizations, so the oracle replays every level bit for bit."""
     query = f"SELECT * FROM {source}"
-    for name, expr in hilbert_steps(a, b, HILBERT_BITS):
+    for name, expr in hilbert_steps(a, b):
         query = f"SELECT *, {expr} AS {name} FROM ({query})"
     return query
 

@@ -22,7 +22,7 @@ CLF_LR = 2.0
 LOW_SOURCES = tuple(f"src{i}" for i in range(10))
 
 
-def _logreg_ctes(iterations: int, lr: float) -> tuple[str, str]:
+def _logreg_ctes() -> tuple[str, str]:
     """(CTE chain, final-margin name) replaying the integerized GD
     recurrence of operators/classifier.train_logreg_hashed — iterations
     unrolled like the k-means Lloyd replay. ``marg{k}`` with the
@@ -63,7 +63,7 @@ def _logreg_ctes(iterations: int, lr: float) -> tuple[str, str]:
     ]
     # per round: margin (exact-integer numerator, ONE double division),
     # residual micros, bucket-keyed BIGINT gradient, floored update
-    for i in range(1, iterations + 2):
+    for i in range(1, CLF_ITERATIONS + 2):
         parts.append(f"""
     marg{i} AS MATERIALIZED (
         SELECT f.doc_id,
@@ -75,7 +75,7 @@ def _logreg_ctes(iterations: int, lr: float) -> tuple[str, str]:
           CROSS JOIN b{i - 1} b
         GROUP BY f.doc_id, tt.t, b.bm
     )""")
-        if i == iterations + 1:
+        if i == CLF_ITERATIONS + 1:
             break  # final scoring pass only; no further update
         parts.append(f"""
     resid{i} AS MATERIALIZED (
@@ -97,22 +97,22 @@ def _logreg_ctes(iterations: int, lr: float) -> tuple[str, str]:
         parts.append(f"""
     w{i} AS MATERIALIZED (
         SELECT w.bucket,
-               w.wm - CAST(FLOOR(({lr!r} * g.g) / (1000.0 * nn.n)) AS BIGINT)
+               w.wm - CAST(FLOOR(({CLF_LR!r} * g.g) / (1000.0 * nn.n)) AS BIGINT)
                    AS wm
         FROM w{i - 1} w JOIN grad{i} g USING (bucket) CROSS JOIN nn
     )""")
         parts.append(f"""
     b{i} AS MATERIALIZED (
-        SELECT b.bm - CAST(FLOOR(({lr!r} * rs.s) / CAST(nn.n AS DOUBLE))
+        SELECT b.bm - CAST(FLOOR(({CLF_LR!r} * rs.s) / CAST(nn.n AS DOUBLE))
                            AS BIGINT) AS bm
         FROM b{i - 1} b
           CROSS JOIN (SELECT CAST(SUM(r) AS BIGINT) AS s FROM resid{i}) rs
           CROSS JOIN nn
     )""")
-    return ",".join(parts), f"marg{iterations + 1}"
+    return ",".join(parts), f"marg{CLF_ITERATIONS + 1}"
 
 
-_LOGREG_CTES, _FINAL_MARG = _logreg_ctes(CLF_ITERATIONS, CLF_LR)
+_LOGREG_CTES, _FINAL_MARG = _logreg_ctes()
 
 
 @query(

@@ -39,7 +39,7 @@ _CODES_CTE = """
     )"""
 
 
-def _kmeans_ctes(k: int, iters: int) -> tuple[str, str]:
+def _kmeans_ctes() -> tuple[str, str]:
     """(CTE chain, final-centroid name) replaying Lloyd's iterations."""
     parts = [
         _CODES_CTE,
@@ -47,7 +47,7 @@ def _kmeans_ctes(k: int, iters: int) -> tuple[str, str]:
     seeds AS (
         SELECT vec_id,
                CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT) AS cluster
-        FROM (SELECT DISTINCT vec_id FROM codes ORDER BY vec_id LIMIT {k})
+        FROM (SELECT DISTINCT vec_id FROM codes ORDER BY vec_id LIMIT {K_CLUSTERS})
     )""",
         """
     cent0 AS (
@@ -55,7 +55,7 @@ def _kmeans_ctes(k: int, iters: int) -> tuple[str, str]:
         FROM seeds s JOIN codes c USING (vec_id)
     )""",
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, KMEANS_ITERS + 1):
         parts.append(f"""
     dist{i} AS (
         SELECT c.vec_id, t.cluster,
@@ -83,10 +83,10 @@ def _kmeans_ctes(k: int, iters: int) -> tuple[str, str]:
             GROUP BY a.cluster, c.pos
         ) m ON m.cluster = p.cluster AND m.pos = p.pos
     )""")
-    return ",".join(parts), f"cent{iters}"
+    return ",".join(parts), f"cent{KMEANS_ITERS}"
 
 
-_KMEANS_CTES, _FINAL_CENT = _kmeans_ctes(K_CLUSTERS, KMEANS_ITERS)
+_KMEANS_CTES, _FINAL_CENT = _kmeans_ctes()
 
 
 @query(
@@ -386,13 +386,13 @@ PQ_ITERS = 2
 PQ_TRAIN_LIMIT = 400  # Faiss-style bounded training sample (id-prefix)
 
 
-def _pq_ctes(m: int, k: int, iters: int, train_limit: int) -> tuple[str, str]:
+def _pq_ctes() -> tuple[str, str]:
     """(CTE chain, encode-CTE name) replaying PQ training per subspace
     and the final per-(vector, subspace) code assignment."""
     parts = [
         _CODES_CTE,
         f"""
-    sdim AS (SELECT (MAX(pos) + 1) // {m} AS sd FROM codes)""",
+    sdim AS (SELECT (MAX(pos) + 1) // {M_SUB} AS sd FROM codes)""",
         f"""
     scodes AS (
         SELECT vec_id, CAST(pos // sd AS INT) AS sub,
@@ -403,7 +403,7 @@ def _pq_ctes(m: int, k: int, iters: int, train_limit: int) -> tuple[str, str]:
     pqseeds AS (
         SELECT vec_id,
                CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT) AS code
-        FROM (SELECT DISTINCT vec_id FROM scodes ORDER BY vec_id LIMIT {k})
+        FROM (SELECT DISTINCT vec_id FROM scodes ORDER BY vec_id LIMIT {K_PQ})
     )""",
         """
     pqcent0 AS (
@@ -411,16 +411,16 @@ def _pq_ctes(m: int, k: int, iters: int, train_limit: int) -> tuple[str, str]:
         FROM pqseeds s JOIN scodes c USING (vec_id)
     )""",
     ]
-    for i in range(1, iters + 2):
-        # rounds 1..iters train; round iters+1 is the encode assignment
-        # against the final codebooks (no update follows it)
+    for i in range(1, PQ_ITERS + 2):
+        # rounds 1..PQ_ITERS train; round PQ_ITERS+1 is the encode
+        # assignment against the final codebooks (no update follows it)
         parts.append(f"""
     pqdist{i} AS (
         SELECT c.vec_id, c.sub, t.code,
                CAST(SUM((c.q - t.val) * (c.q - t.val)) AS BIGINT) AS dist
         FROM scodes c JOIN pqcent{i - 1} t
           ON c.sub = t.sub AND c.spos = t.spos
-        {f"WHERE c.vec_id < {train_limit}" if i <= iters else ""}
+        {f"WHERE c.vec_id < {PQ_TRAIN_LIMIT}" if i <= PQ_ITERS else ""}
         GROUP BY c.vec_id, c.sub, t.code
     )""")
         parts.append(f"""
@@ -432,7 +432,7 @@ def _pq_ctes(m: int, k: int, iters: int, train_limit: int) -> tuple[str, str]:
             FROM pqdist{i}
         ) WHERE rn = 1
     )""")
-        if i <= iters:
+        if i <= PQ_ITERS:
             parts.append(f"""
     pqcent{i} AS (
         SELECT p.sub, p.code, p.spos, COALESCE(u.val, p.val) AS val
@@ -445,10 +445,10 @@ def _pq_ctes(m: int, k: int, iters: int, train_limit: int) -> tuple[str, str]:
             GROUP BY a.sub, a.code, c.spos
         ) u ON u.sub = p.sub AND u.code = p.code AND u.spos = p.spos
     )""")
-    return ",".join(parts), f"pqassign{iters + 1}"
+    return ",".join(parts), f"pqassign{PQ_ITERS + 1}"
 
 
-_PQ_CTES, _PQ_ENC = _pq_ctes(M_SUB, K_PQ, PQ_ITERS, PQ_TRAIN_LIMIT)
+_PQ_CTES, _PQ_ENC = _pq_ctes()
 
 _PQ_ADC_CTES = f"""
     pqlut AS (
@@ -489,9 +489,9 @@ _PQ_ADC_CTES = f"""
 _PQ_BOOKS_CACHE: dict[tuple, list[list[list[int]]]] = {}
 
 
-def _parquet_fingerprint(sf_dir: str, name: str) -> tuple:
+def _parquet_fingerprint(sf_dir: str) -> tuple:
     """(path, size, mtime_ns, sha256 of the file's last 64 KiB) per
-    data file under the table's parquet path (single file or part-file
+    data file under the embeddings parquet path (single file or part-file
     dir) — a content fingerprint that changes whenever the table is
     rewritten. The two signals cover each other's blind spot
     (ADVICE r6 / code-review r7): the tail of a parquet file is its
@@ -506,7 +506,7 @@ def _parquet_fingerprint(sf_dir: str, name: str) -> tuple:
     import hashlib
     import os
 
-    root = os.path.join(sf_dir, f"{name}.parquet")
+    root = os.path.join(sf_dir, "embeddings.parquet")
     out = []
     paths = [root]
     if os.path.isdir(root):
@@ -534,7 +534,7 @@ def _pq_pipeline(spark: SparkSession, sf_dir: str):
     e = table(spark, sf_dir, "embeddings")
     key = (
         sf_dir,
-        _parquet_fingerprint(sf_dir, "embeddings"),
+        _parquet_fingerprint(sf_dir),
         M_SUB,
         K_PQ,
         PQ_ITERS,
@@ -1059,7 +1059,7 @@ def q_emb_ivfpq_probe2_recall(
     melted = qcodes.select(
         F.col("vec_id").alias("query_id"),
         F.posexplode(
-            F.array(*[_sq_dist_expr("qvec", c) for c in cents])
+            F.array(*[_sq_dist_expr(c) for c in cents])
         ).alias("cell", "dist"),
     )
     wp = _W.partitionBy("query_id").orderBy("dist", "cell")
@@ -1068,7 +1068,7 @@ def q_emb_ivfpq_probe2_recall(
         .filter(F.col("rn") <= N_PROBE)
         .select("query_id", "cell")
     )
-    luts = _adc_luts(scodes, books, N_QUERIES, "vec_id").join(
+    luts = _adc_luts(scodes, books, N_QUERIES).join(
         probes, "query_id"
     )
     cn = corpus_cells.select(
@@ -1372,7 +1372,7 @@ def q_emb_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import quantize_embeddings
 
     e = table(spark, sf_dir, "embeddings")
-    qq = quantize_embeddings(e, "vec_id", "embedding").join(
+    qq = quantize_embeddings(e).join(
         e.select("vec_id", "label"), "vec_id"
     ).select(
         "vec_id",

@@ -86,7 +86,7 @@ def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-asset count aggregates across the cluster.
     """
     media = attach_fake_media(table(spark, sf_dir, "documents"))
-    frames = sample_frames(media, every=4)
+    frames = sample_frames(media)
     return (
         frames.groupBy("asset_id")
         .agg(

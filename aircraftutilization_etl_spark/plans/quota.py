@@ -112,11 +112,11 @@ TOTAL_BUDGET = 120
 
 
 def budget_allocate(
-    d: DataFrame, total: int, key: str = "doc_id", source_col: str = "source"
+    d: DataFrame, total: int, source_col: str = "source"
 ) -> DataFrame:
     """Keep exactly ``total`` rows (when no source runs dry), allocated
     across sources by largest-remainder over integer sqrt weights, each
-    source's share chosen by md5 rank of the key.
+    source's share chosen by md5 rank of ``doc_id``.
 
     Integer exactness: weights are FLOOR(sqrt(n)·1e6) (IEEE sqrt is
     correctly rounded, so Python, Spark, and DuckDB compute the
@@ -143,7 +143,7 @@ def budget_allocate(
     """
     from pyspark.sql.window import Window
 
-    docs = d.select(key, source_col)
+    docs = d.select("doc_id", source_col)
     rows = [
         (r[0], r[1])
         for r in docs.groupBy(source_col)
@@ -170,8 +170,8 @@ def budget_allocate(
         d.sparkSession, sorted(base.items()),
         f"`{source_col}` {src_type}, alloc bigint",
     )
-    order = F.md5(F.col(key).cast("string"))
-    rn_w = Window.partitionBy(source_col).orderBy(order, F.col(key))
+    order = F.md5(F.col("doc_id").cast("string"))
+    rn_w = Window.partitionBy(source_col).orderBy(order, F.col("doc_id"))
     return (
         docs.withColumn("__rn", F.row_number().over(rn_w))
         # constant upper bound first: alloc <= total always, so this
@@ -181,7 +181,7 @@ def budget_allocate(
         .filter(F.col("__rn") <= total)
         .join(F.broadcast(alloc), source_col)
         .filter(F.col("__rn") <= F.col("alloc"))
-        .select(key, source_col)
+        .select("doc_id", source_col)
     )
 
 
@@ -295,12 +295,7 @@ QUOTA_FLOOR = 5
 TOTAL_BUDGET_FLOORED = 150
 
 
-def budget_allocate_with_floor(
-    d: DataFrame,
-    total: int,
-    floor: int,
-    key: str = "doc_id",
-) -> DataFrame:
+def budget_allocate_with_floor(d: DataFrame, total: int, floor: int) -> DataFrame:
     """Keep ~``total`` rows: each source first receives its floor
     min(n_s, ``floor``), then the leftover budget max(0, total - Σfloor)
     is apportioned over remaining capacities c_s = n_s - floor_s by
@@ -318,7 +313,7 @@ def budget_allocate_with_floor(
     """
     from pyspark.sql.window import Window
 
-    docs = d.select(key, "source")
+    docs = d.select("doc_id", "source")
     rows = [
         (r[0], r[1])
         for r in docs.groupBy("source")
@@ -346,8 +341,8 @@ def budget_allocate_with_floor(
         d.sparkSession, sorted(alloc.items()),
         f"`source` {src_type}, alloc bigint",
     )
-    order = F.md5(F.col(key).cast("string"))
-    rn_w = Window.partitionBy("source").orderBy(order, F.col(key))
+    order = F.md5(F.col("doc_id").cast("string"))
+    rn_w = Window.partitionBy("source").orderBy(order, F.col("doc_id"))
     return (
         docs.withColumn("__rn", F.row_number().over(rn_w))
         # constant bound first (alloc_s <= max(floor, total) always) so
@@ -355,7 +350,7 @@ def budget_allocate_with_floor(
         .filter(F.col("__rn") <= max(floor, total))
         .join(F.broadcast(alloc_df), "source")
         .filter(F.col("__rn") <= F.col("alloc"))
-        .select(key, "source")
+        .select("doc_id", "source")
     )
 
 
@@ -449,15 +444,11 @@ def q_quota_floored_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 TOTAL_BUDGET_TWO_LEVEL = 100
 
 
-def budget_allocate_two_level(
-    d: DataFrame,
-    total: int,
-    key: str = "doc_id",
-) -> DataFrame:
+def budget_allocate_two_level(d: DataFrame, total: int) -> DataFrame:
     """Keep ~``total`` rows apportioned by largest remainder TWICE:
     ``total`` across outer ``lang`` groups (sqrt of group size), then
     each outer share across its inner ``source`` cells (sqrt of cell size), each cell's keep
-    set chosen by md5 rank of the key. Same all-integer engine-exactness
+    set chosen by md5 rank of ``doc_id``. Same all-integer engine-exactness
     contract as budget_allocate (floor'd sqrt·1e6 weights, trunc-DIV on
     non-negative operands, remainder ties broken by name), and the same
     honest-shortfall contract when a cell runs dry.
@@ -474,7 +465,7 @@ def budget_allocate_two_level(
     """
     from pyspark.sql.window import Window
 
-    docs = d.select(key, "lang", "source")
+    docs = d.select("doc_id", "lang", "source")
     rows = [
         (r[0], r[1], r[2])
         for r in docs.groupBy("lang", "source")
@@ -508,9 +499,9 @@ def budget_allocate_two_level(
         [(o, i, a) for (o, i), a in sorted(alloc.items())],
         f"`lang` {out_type}, `source` {in_type}, alloc bigint",
     )
-    order = F.md5(F.col(key).cast("string"))
+    order = F.md5(F.col("doc_id").cast("string"))
     rn_w = Window.partitionBy("lang", "source").orderBy(
-        order, F.col(key)
+        order, F.col("doc_id")
     )
     return (
         docs.withColumn("__rn", F.row_number().over(rn_w))
@@ -519,7 +510,7 @@ def budget_allocate_two_level(
         .filter(F.col("__rn") <= total)
         .join(F.broadcast(alloc_df), ["lang", "source"])
         .filter(F.col("__rn") <= F.col("alloc"))
-        .select(key, "lang", "source")
+        .select("doc_id", "lang", "source")
     )
 
 

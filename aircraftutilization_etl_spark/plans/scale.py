@@ -38,7 +38,7 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    joined = salted_join(events, customer, on="c_custkey", n_salts=8)
+    joined = salted_join(events, customer, on="c_custkey")
     return (
         joined.groupBy("c_mktsegment")
         .agg(

@@ -343,7 +343,7 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repartition parallelizes both passes; no-op at corpus scale.
     d = ensure_scan_parallelism(table(spark, sf_dir, "documents"), "doc_id")
     return d.select(
-        "doc_id", ngram_repetition_expr("text", 5).alias("rep_ratio")
+        "doc_id", ngram_repetition_expr().alias("rep_ratio")
     ).orderBy("doc_id")
 
 
@@ -658,7 +658,7 @@ def q_text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 BPE_N_MERGES = 8
 
 
-def _bpe_ctes(n: int) -> str:
+def _bpe_ctes() -> str:
     """CTE chain replaying every BPE round (kmeans-oracle style): the
     hash match certifies each round's argmax pair AND the merged vocab
     it produced, not just the final merge table."""
@@ -676,7 +676,7 @@ def _bpe_ctes(n: int) -> str:
         FROM bpe_words GROUP BY w
     )"""
     ]
-    for i in range(1, n + 1):
+    for i in range(1, BPE_N_MERGES + 1):
         parts.append(f"""
     pairs{i} AS (
         SELECT s[CAST(j AS INT)] AS w1, s[CAST(j + 1 AS INT)] AS w2,
@@ -714,7 +714,7 @@ _BPE_FINAL = " UNION ALL ".join(
 @query(
     "q_text_bpe_merges",
     f"""
-    WITH {_bpe_ctes(BPE_N_MERGES)}
+    WITH {_bpe_ctes()}
     SELECT * FROM ({_BPE_FINAL}) ORDER BY rank
     """,
 )
@@ -942,7 +942,7 @@ def q_text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import gopher_flags, gopher_metrics
 
     d = table(spark, sf_dir, "documents")
-    m = gopher_metrics("text")
+    m = gopher_metrics()
     raw = d.select(
         "doc_id",
         "source",
@@ -1052,7 +1052,7 @@ def q_text_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_text_bpe_encode",
     f"""
-    WITH {_bpe_ctes(BPE_N_MERGES)},
+    WITH {_bpe_ctes()},
     encoder AS (
         SELECT replace(repr, '|', '') AS w,
                len(str_split(repr, '|')) - 1 AS wtoks

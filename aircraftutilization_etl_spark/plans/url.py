@@ -416,9 +416,7 @@ def q_domain_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter — budget_allocate's documented plan, unchanged.
     """
     d = _cdocs(spark, sf_dir).select("doc_id", "domain")
-    return budget_allocate(
-        d, DOMAIN_BUDGET, key="doc_id", source_col="domain"
-    )
+    return budget_allocate(d, DOMAIN_BUDGET, source_col="domain")
 
 
 @query(

@@ -113,14 +113,6 @@ COMPLETE_FLIGHTS_SCHEMA = StructType(
 )
 
 FLIGHT_STATUS_COLUMN = "flight_status"
-FLIGHT_STATUSES = ("takeoff", "landing", "other")
-FLIGHT_TRAJECTORIES = ("climb", "descend", "other")
-
-# Sentinel semantics (SURVEY.md §4.4.5): after the outer-join fillna(0),
-# 0 in last_contact means "not seen this batch" and 0 in takeoff_at means
-# "no takeoff observed" (reference opensky/transformers.py:114-132).
-NOT_SEEN_SENTINEL = 0
-NO_TAKEOFF_SENTINEL = 0
 
 
 def empty_df(spark: SparkSession, schema: StructType) -> DataFrame:

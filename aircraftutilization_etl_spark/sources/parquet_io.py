@@ -123,10 +123,6 @@ class StateStore:
                 out.append((status.getModificationTime(), name))
         return out
 
-    def _read_generation(self, version: str) -> DataFrame:
-        df = self.spark.read.schema(self.schema).parquet(f"{self.root}/{version}")
-        return require_columns(df, [f.name for f in self.schema.fields])
-
     # -- public API -----------------------------------------------------
     def read(self) -> DataFrame:
         """Current state generation, or a typed empty frame if none.
@@ -141,26 +137,8 @@ class StateStore:
         version = self.current_version()
         if version is None:
             return empty_df(self.spark, self.schema)
-        return self._read_generation(version)
-
-    def read_version(self, version: str) -> DataFrame:
-        """Time travel: read a specific retained state generation.
-
-        Any version still listed by :meth:`versions` (i.e. not yet
-        vacuumed) is readable — committed generations are immutable, so
-        this is a consistent snapshot of the keyed state as of that
-        commit. The debugging/backfill read every versioned store owes
-        its operators: replay a past cycle's input exactly, diff two
-        generations (operators/warehouse.snapshot_diff), or re-derive a
-        sink batch id.
-        """
-        retained = self.versions()
-        if version not in retained:
-            raise ValueError(
-                f"unknown or vacuumed state generation {version!r}; "
-                f"retained: {retained}"
-            )
-        return self._read_generation(version)
+        df = self.spark.read.schema(self.schema).parquet(f"{self.root}/{version}")
+        return require_columns(df, [f.name for f in self.schema.fields])
 
     def current_version(self) -> str | None:
         """Resolved current generation (manifest, else crash-recovery

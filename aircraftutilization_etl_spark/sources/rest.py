@@ -37,9 +37,6 @@ except ImportError:  # pragma: no cover
 logger = logging.getLogger(__name__)
 
 OPENSKY_STATES_URL = "https://opensky-network.org/api/states/all"
-OPENSKY_AIRCRAFT_DB_URL = (
-    "https://opensky-network.org/datasets/metadata/aircraftDatabase.csv"
-)
 REQUEST_TIMEOUT_SECONDS = 5  # reference client.py:25
 N_STATE_COLUMNS = len(STATES_SCHEMA.fields)
 # The one Python type each field type takes, matched exactly (a bool is no

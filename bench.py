@@ -359,39 +359,66 @@ def _parse_args(argv: list[str]):
     return ap.parse_args(argv)
 
 
-def main() -> int:
-    args = _parse_args(sys.argv[1:])
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-    from aircraftutilization_etl_spark.plans import CATALOG
+def bench_session(ui: bool = False):
+    """The engine's own tuned builder (AQE + skew-join + Arrow lanes +
+    128 MB scan splits) on local[$SPARK_GRAFT_CPUS] — measured ~25%
+    faster across the headline set than a minimal hand-rolled conf, and
+    keeps bench aligned with what the engine recommends for production.
+    ``ui`` turns on the Spark UI (and its REST API) for stage dumps."""
     from aircraftutilization_etl_spark.session import build_session
 
-    # the engine's own tuned builder (AQE + skew-join + Arrow lanes +
-    # 128 MB scan splits) — measured ~25% faster across the headline set
-    # than a minimal hand-rolled conf, and keeps bench aligned with what
-    # the engine recommends for production
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = build_session(
         app_name="aircraftutilization-etl-spark-bench",
         master=f"local[{cpus}]",
         shuffle_partitions=cpus,
         extra_conf={
-            "spark.ui.enabled": "false",
+            "spark.ui.enabled": "true" if ui else "false",
             "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
             "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
 
-    # Warm-up (not timed): JVM/codegen on the smallest table, plus the
-    # Python worker pool + Arrow lanes that the first Pandas-UDF query
-    # would otherwise pay for (~4 s of pure process startup).
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Untimed warm-up: JVM/codegen on the smallest table, plus the
+    Python worker pool + Arrow lanes that the first Pandas-UDF query
+    would otherwise pay for (~4 s of pure process startup)."""
+    from aircraftutilization_etl_spark.plans import CATALOG
+
+    cpus = spark.sparkContext.defaultParallelism
     CATALOG["q1_pricing_summary"].spark(spark, sf_dir).write.mode(
         "overwrite"
     ).format("noop").save()
     spark.range(cpus).repartition(cpus).mapInPandas(
         lambda it: it, "id long"
     ).write.mode("overwrite").format("noop").save()
+
+
+def timed_rep(spark, qd, sf_dir: str) -> float:
+    """Wall seconds of one noop-sink execution of catalog query ``qd``,
+    after the per-rep reset: a query's own persist() calls must not leak
+    into its rerun, and the JVM GC lets the ContextCleaner actually
+    release prior runs' unreferenced persisted blocks (weak-ref cleanup
+    only fires after a collection — without it, storage-memory pressure
+    from dead blocks taxes persist-heavy queries)."""
+    spark.catalog.clearCache()
+    spark.sparkContext._jvm.System.gc()  # noqa: SLF001
+    t0 = time.time()
+    qd.spark(spark, sf_dir).write.mode("overwrite").format("noop").save()
+    return time.time() - t0
+
+
+def main() -> int:
+    args = _parse_args(sys.argv[1:])
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+    from aircraftutilization_etl_spark.plans import CATALOG
+
+    spark = bench_session()
+    warm_up(spark, sf_dir)
 
     # Best-of-N per query: the noop sink executes the full plan; the min
     # filters transient host noise (this box shows occasional 5-10x
@@ -410,19 +437,7 @@ def main() -> int:
         times: list[float] = []
         try:
             while True:
-                # a query's own persist() calls must not leak into its
-                # rerun; the JVM GC lets the ContextCleaner actually
-                # release prior runs' unreferenced persisted blocks
-                # (weak-ref cleanup only fires after a collection —
-                # without it, storage-memory pressure from dead blocks
-                # taxes persist-heavy queries)
-                spark.catalog.clearCache()
-                spark.sparkContext._jvm.System.gc()  # noqa: SLF001
-                t0 = time.time()
-                qd.spark(spark, sf_dir).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-                times.append(time.time() - t0)
+                times.append(timed_rep(spark, qd, sf_dir))
                 base = 5 if min(times) < 1.0 else 3
                 if len(times) >= base and (
                     max(times) / max(min(times), 1e-9) <= 2

@@ -58,23 +58,34 @@ VELOCITIES = [0.0, 5.0, 9.5, 80.0, 250.0, None]
 RATES = [0.0, 3.5, -4.0, None]
 
 
-def _nonvacuous_batches(spark, rng, lc0_prob=0.0):
-    """Seeded sequence long enough for the batch leg to emit: a
-    no-flight roll (seed 1234's first 8 cycles) would make every
-    equivalence assert vacuous, so extend the SAME seeded sequence
-    until the reference leg produces output. Returns (batches,
-    got_batch); got_batch is asserted non-empty."""
-    batches = _random_batches(rng, n_batches=8, lc0_prob=lc0_prob)
-    got_batch = _run_batch(spark, batches)
-    tries = 0
-    while not got_batch and tries < 5:
-        batches += _random_batches(
-            rng, n_batches=8, start=len(batches), lc0_prob=lc0_prob
-        )
-        got_batch = _run_batch(spark, batches)
-        tries += 1
-    assert got_batch, "seeded corpus produced no completed flights"
-    return batches, got_batch
+@pytest.fixture(scope="module")
+def nonvacuous_batches(spark):
+    """``(seed, lc0_prob) -> (batches, got_batch)``: a seeded sequence
+    long enough for the batch leg to emit. A no-flight roll (seed 1234's
+    first 8 cycles) would make every equivalence assert vacuous, so the
+    SAME seeded sequence is extended 8 cycles at a time (at most 5
+    times) until the reference leg produces output; got_batch is
+    asserted non-empty. Each batch cycle runs once: an extension
+    continues from the carried state, and each key's reference is
+    built once per module and shared by every test that replays it."""
+    built: dict[tuple[int, float], tuple[list, list]] = {}
+
+    def get(seed, lc0_prob=0.0):
+        if (seed, lc0_prob) not in built:
+            rng = random.Random(seed)
+            batches, emitted = [], []
+            state = empty_df(spark, SOURCE_SCHEMA)
+            while not emitted and len(batches) < 6 * 8:
+                more = _random_batches(
+                    rng, n_batches=8, start=len(batches), lc0_prob=lc0_prob
+                )
+                state = _batch_cycles(spark, more, state, emitted)
+                batches += more
+            assert emitted, "seeded corpus produced no completed flights"
+            built[seed, lc0_prob] = (batches, sorted(emitted))
+        return built[seed, lc0_prob]
+
+    return get
 
 
 def _random_batches(rng, n_batches, start=0, lc0_prob=0.0):
@@ -103,12 +114,12 @@ def _state_vector(icao, t, vel, vr):
             vel, 10.0, vr, None, 120.0, None, False, 0)
 
 
-def _run_batch(spark, batches):
-    """Drive the batch operators exactly as FlightPipeline does, keeping
-    state in memory between cycles; return emitted (icao, takeoff, land)."""
-    state = empty_df(spark, SOURCE_SCHEMA)
+def _batch_cycles(spark, batches, state, emitted):
+    """Drive the batch operators exactly as FlightPipeline does over
+    ``batches``, starting from ``state`` and keeping state in memory
+    between cycles; append emitted (icao, duration, land) to
+    ``emitted`` and return the state after the last cycle."""
     metadata = empty_df(spark, METADATA_SCHEMA)
-    emitted = []
     for now, batch in batches:
         states = spark.createDataFrame(
             [_state_vector(*ev) for ev in batch], STATES_SCHEMA
@@ -126,6 +137,14 @@ def _run_batch(spark, batches):
         state = spark.createDataFrame(
             flights.active.collect(), flights.active.schema
         )
+    return state
+
+
+def _run_batch(spark, batches):
+    """The batch pipeline over ``batches`` from empty state; return the
+    sorted emitted (icao, duration, land)."""
+    emitted = []
+    _batch_cycles(spark, batches, empty_df(spark, SOURCE_SCHEMA), emitted)
     return sorted(emitted)
 
 
@@ -156,9 +175,8 @@ def _run_fold(spark, batches):
     ("seed", "lc0_prob"),
     [(7, 0.0), (42, 0.0), (1234, 0.0), (21, 0.25), (99, 0.25), (1234, 0.25)],
 )
-def test_random_sequences_equivalent(spark, seed, lc0_prob):
-    rng = random.Random(seed)
-    batches, got_batch = _nonvacuous_batches(spark, rng, lc0_prob=lc0_prob)
+def test_random_sequences_equivalent(spark, nonvacuous_batches, seed, lc0_prob):
+    batches, got_batch = nonvacuous_batches(seed, lc0_prob)
     got_fold = _run_fold(spark, batches)
     assert got_batch == got_fold
 
@@ -290,8 +308,9 @@ def _run_stream(spark, tmp_path, batches, kernel_name, expected_rows):
 @pytest.mark.slow
 @pytest.mark.parametrize("kernel_name", sorted(KERNELS))
 @pytest.mark.parametrize("seed", [7, 1234])
-def test_three_stream_backends_match_batch(spark, tmp_path, seed, kernel_name):
-    rng = random.Random(seed)
-    batches, got_batch = _nonvacuous_batches(spark, rng)
+def test_three_stream_backends_match_batch(
+    spark, nonvacuous_batches, tmp_path, seed, kernel_name
+):
+    batches, got_batch = nonvacuous_batches(seed)
     got_stream = _run_stream(spark, tmp_path, batches, kernel_name, len(got_batch))
     assert got_stream == got_batch

@@ -219,12 +219,12 @@ class TestPQBooksCache:
 
         p = tmp_path / "embeddings.parquet"
         p.write_bytes(b"v1-bytes")
-        fp1 = _parquet_fingerprint(str(tmp_path), "embeddings")
+        fp1 = _parquet_fingerprint(str(tmp_path))
         # same content, untouched -> same fingerprint
-        assert _parquet_fingerprint(str(tmp_path), "embeddings") == fp1
+        assert _parquet_fingerprint(str(tmp_path)) == fp1
         time.sleep(0.01)
         p.write_bytes(b"v2-bytes-longer")
-        fp2 = _parquet_fingerprint(str(tmp_path), "embeddings")
+        fp2 = _parquet_fingerprint(str(tmp_path))
         assert fp2 != fp1
         # ADVICE r6: a SAME-SIZE rewrite with the mtime restored
         # (rsync -t, archive extraction, coarse object-store mtime)
@@ -232,23 +232,20 @@ class TestPQBooksCache:
         st = os.stat(p)
         p.write_bytes(b"v3-bytes-longer")  # same length as v2
         os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns))
-        fp3 = _parquet_fingerprint(str(tmp_path), "embeddings")
+        fp3 = _parquet_fingerprint(str(tmp_path))
         assert fp3 != fp2
         assert os.stat(p).st_mtime_ns == st.st_mtime_ns  # trap is real
         # part-file directory layout: adding a part changes the print
         d = tmp_path / "dir_case" / "embeddings.parquet"
         os.makedirs(d)
         (d / "part-0.parquet").write_bytes(b"a")
-        fpd1 = _parquet_fingerprint(str(tmp_path / "dir_case"), "embeddings")
+        fpd1 = _parquet_fingerprint(str(tmp_path / "dir_case"))
         (d / "part-1.parquet").write_bytes(b"b")
-        fpd2 = _parquet_fingerprint(str(tmp_path / "dir_case"), "embeddings")
+        fpd2 = _parquet_fingerprint(str(tmp_path / "dir_case"))
         assert fpd2 != fpd1
         # hidden/_SUCCESS markers are ignored
         (d / "_SUCCESS").write_bytes(b"")
-        assert (
-            _parquet_fingerprint(str(tmp_path / "dir_case"), "embeddings")
-            == fpd2
-        )
+        assert _parquet_fingerprint(str(tmp_path / "dir_case")) == fpd2
 
 
 class TestEmptyBranchIdTyping:

@@ -439,7 +439,7 @@ class TestSimhashHammingPairs:
 
         df = spark.createDataFrame([(1, "0" * 16)], "doc_id long, simhash string")
         with _pytest.raises(ValueError):
-            simhash_hamming_pairs(df, max_hamming=4, bands=4)
+            simhash_hamming_pairs(df, max_hamming=4)
 
 
 class TestRemovalSpans:

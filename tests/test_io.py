@@ -306,28 +306,3 @@ def test_append_facts_guard_reads_only_touched_partitions(spark, tmp_path):
     replay = history.filter(history.landed_at >= dt.datetime.combine(day, dt.time()))
     assert append_facts(replay, path) is False
     assert sorted(pathlib.Path(path).rglob("*.parquet")) == parquet
-
-
-def test_state_store_time_travel(spark, tmp_path):
-    """Every retained generation stays readable as a consistent
-    snapshot; vacuumed generations are rejected by name."""
-    import pytest
-
-    from aircraftutilization_etl_spark.schemas import SOURCE_SCHEMA
-    from aircraftutilization_etl_spark.sources.parquet_io import StateStore
-
-    store = StateStore(spark, str(tmp_path / "state"), SOURCE_SCHEMA)
-    row = spark.createDataFrame(
-        [("aaa111", 100, 50.0, 1.0, 90, 100, "climbing", False)],
-        SOURCE_SCHEMA,
-    )
-    v1 = store.commit(row)
-    v2 = store.commit(row.union(row))
-    v3 = store.commit(row.union(row).union(row))
-    assert store.read_version(v1).count() == 1
-    assert store.read_version(v2).count() == 2
-    assert store.read().count() == 3  # current = v3
-    assert store.read_version(v3).columns == store.read().columns
-    store.vacuum(keep=1)
-    with pytest.raises(ValueError, match="unknown or vacuumed"):
-        store.read_version(v1)

@@ -58,7 +58,7 @@ def test_extract_features_histogram(spark):
 def test_sample_frames_expansion(spark):
     # 270 bytes -> 9 frames of 32 (frame 8 short), sample every 4th: 0,4,8
     docs = _docs(spark, [(2, "x" * 270, "en", "s", 270)])
-    frames = sample_frames(attach_fake_media(docs), every=4).collect()
+    frames = sample_frames(attach_fake_media(docs)).collect()
     assert [f["frame_index"] for f in frames] == [0, 4, 8]
     assert len(bytes(frames[0]["frame"])) == FRAME_BYTES
     assert len(bytes(frames[2]["frame"])) == 270 - 8 * FRAME_BYTES

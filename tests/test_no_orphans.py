@@ -1,7 +1,7 @@
 """Source guards against dead code in the package.
 
-Orphans: every public top-level function or class in the package is
-reached from outside the test suite. A name counts as reached when
+Orphans: every public top-level function, class or UPPER_CASE constant
+in the package is reached from outside the test suite. A name counts as reached when
 some module of the package, `tools/`, the non-test `perfbench/` files,
 `bench.py` or `__spark_entry__.py` mentions it as a `Name`, an
 `Attribute` or an imported alias (a definition's mentions of its own
@@ -10,14 +10,22 @@ name do not count), or when it is a catalog query registered through
 delete it with its tests, or reach it.
 
 Options: every defaulted parameter of a public top-level package
-function is passed by some call in the package, `tools/`, `perfbench/`,
-`bench.py`, `__spark_entry__.py` or `tests/`. A call passes a parameter
+function is set by some call in the package, `tools/`, `perfbench/`,
+`bench.py`, `__spark_entry__.py` or `tests/`. A call sets a parameter
 when it names it as a keyword, or gives it a position at a direct call
-by the function's name. Where the callee cannot be named (a function
-held in a variable, `functools.partial`, a method of the same name
-elsewhere), any keyword of that call, and any string key of a dict
-literal, counts for every parameter of that name. An option that only
-ever takes its default is a constant: inline it.
+by the function's name, with an expression other than the parameter's
+own default (the same literal or the same constant name sets nothing).
+A function escapes when something references it other than as the
+callee of a call (a list of legs, an argument, a decorator's target).
+Only an escaping function can be called where the callee cannot be
+named, so only its parameters also count as set by any keyword of an
+unresolved call, or any string key of a dict literal, of that name. An
+option that only ever takes its default is a constant: inline it.
+
+Private parameters: a private top-level package function that never
+escapes has no parameter that every call fills with the same literal or
+the same UPPER_CASE module constant. Such a parameter is a constant:
+inline it.
 
 Imports: no module of the package (``__init__.py`` re-exports aside)
 imports a name it never uses, at module level or inside a function.
@@ -36,6 +44,8 @@ ALLOWLIST = {
     "diagnostics.advise": "plan advisor that the runtime sweep is built beside",
     "diagnostics.assert_scalable": "the advisor's gate, kept with advise",
     "orchestration.build_dags": "reference DAG lifecycle factory for Airflow",
+    "schemas.COMPLETE_FLIGHTS_SCHEMA": "the facts sink's row shape, which "
+    "the sink tests build their batches in",
 }
 
 
@@ -79,15 +89,35 @@ def _is_query_registered(node):
     )
 
 
+def _defined_names(node):
+    """Names a top-level statement defines: a def/class name, or the
+    ``Name`` targets of an assignment."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return {node.name}
+    if isinstance(node, (ast.Assign, ast.AnnAssign)):
+        targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+        return {
+            n.id
+            for t in targets
+            for n in ast.walk(t)
+            if isinstance(n, ast.Name)
+        }
+    return set()
+
+
 def _public_definitions():
-    """(module, name, node) for every public top-level def/class."""
+    """(module, name, node) for every public top-level def/class and
+    UPPER_CASE constant."""
     for path in sorted(PACKAGE.rglob("*.py")):
         module = ".".join(path.relative_to(PACKAGE).with_suffix("").parts)
         for node in ast.parse(path.read_text()).body:
-            if isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ) and not node.name.startswith("_"):
-                yield module, node.name, node
+            for name in sorted(_defined_names(node)):
+                if name.startswith("_"):
+                    continue
+                if name.isupper() or not isinstance(
+                    node, (ast.Assign, ast.AnnAssign)
+                ):
+                    yield module, name, node
 
 
 def _referenced_names():
@@ -95,8 +125,8 @@ def _referenced_names():
     names = set()
     for path in _reference_files():
         for node in ast.parse(path.read_text()).body:
-            own = getattr(node, "name", None)
-            names.update(m for m in _mentions(node) if m != own)
+            own = _defined_names(node)
+            names.update(m for m in _mentions(node) if m not in own)
     return names
 
 
@@ -114,7 +144,8 @@ def orphans():
 def test_no_public_definition_is_reached_only_by_tests():
     found = orphans()
     assert not found, (
-        "public definitions that nothing outside tests/ references "
+        "public definitions and constants that nothing outside tests/ "
+        "references "
         "(delete them with their tests, or call them):\n  "
         + "\n  ".join(found)
     )
@@ -131,72 +162,142 @@ OPTION_ALLOWLIST: dict[str, str] = {}
 
 
 def _options(fn):
-    """Names of ``fn``'s parameters that carry a default."""
+    """``fn``'s defaulted parameters, as name -> default expression."""
     a = fn.args
     positional = a.posonlyargs + a.args
-    named = positional[len(positional) - len(a.defaults):]
-    named += [p for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
-    return [p.arg for p in named]
+    named = list(zip(positional[len(positional) - len(a.defaults):], a.defaults))
+    named += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+    return {p.arg: d for p, d in named}
 
 
-def _passed_parameters(functions):
-    """(function name, parameter) pairs that some call passes, and the
-    parameter names passed where the callee is unknown."""
+def _parameters(fn):
+    a = fn.args
+    return [p.arg for p in a.posonlyargs + a.args + a.kwonlyargs]
+
+
+def _callee(call):
+    """The name a call names its callee by: ``f(..)`` or ``m.f(..)``."""
+    return getattr(call.func, "id", getattr(call.func, "attr", None))
+
+
+def _parse_call_sites():
+    return [ast.parse(path.read_text()) for path in _call_site_files()]
+
+
+def _escaping_names(trees):
+    """Names referenced other than as the callee of a call: a function
+    with such a name can be called through a variable."""
+    callees = {
+        id(node.func)
+        for tree in trees
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+    }
+    escaping = set()
+    for tree in trees:
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                if node.decorator_list:
+                    escaping.add(node.name)
+            elif isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                if id(node) not in callees:
+                    escaping.add(node.id)
+            elif isinstance(node, ast.Attribute) and id(node) not in callees:
+                escaping.add(node.attr)
+    return escaping
+
+
+def _bound_arguments(fn, call):
+    """parameter -> argument expression for one direct call of ``fn``,
+    or None when a ``*args``/``**kwargs`` argument hides the binding."""
+    a = fn.args
+    positional = [p.arg for p in a.posonlyargs + a.args]
+    bound = {}
+    for i, arg in enumerate(call.args):
+        if isinstance(arg, ast.Starred):
+            return None
+        if i < len(positional):
+            bound[positional[i]] = arg
+    for kw in call.keywords:
+        if kw.arg is None:
+            return None
+        bound[kw.arg] = kw.value
+    return bound
+
+
+def _calls_by_name(trees, names):
+    """callee name -> every call that names it."""
+    calls = {}
+    for tree in trees:
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and _callee(node) in names:
+                calls.setdefault(_callee(node), []).append(node)
+    return calls
+
+
+def _set_parameters(functions, trees):
+    """(function name, parameter) pairs that some call sets to something
+    other than the parameter's default, and the parameter names any
+    unresolved call or dict literal may set."""
     by_name = {}
     for fn in functions:
         by_name.setdefault(fn.name, []).append(fn)
+    calls = _calls_by_name(trees, set(by_name))
     passed, anywhere = set(), set()
-    for path in _call_site_files():
-        for node in ast.walk(ast.parse(path.read_text())):
+    for tree in trees:
+        for node in ast.walk(tree):
             if isinstance(node, ast.Dict):
                 anywhere.update(
                     k.value
                     for k in node.keys
                     if isinstance(k, ast.Constant) and isinstance(k.value, str)
                 )
-            if not isinstance(node, ast.Call):
-                continue
-            callee = getattr(node.func, "id", getattr(node.func, "attr", None))
-            if callee not in by_name:
+            elif isinstance(node, ast.Call) and _callee(node) not in by_name:
                 anywhere.update(k.arg for k in node.keywords if k.arg)
-                continue
-            for fn in by_name[callee]:
-                a = fn.args
-                positional = [p.arg for p in a.posonlyargs + a.args]
-                params = positional + [p.arg for p in a.kwonlyargs]
-                for i, arg in enumerate(node.args):
-                    if isinstance(arg, ast.Starred):
-                        passed.update((fn.name, p) for p in positional[i:])
-                        break
-                    if i < len(positional):
-                        passed.add((fn.name, positional[i]))
-                for kw in node.keywords:
-                    if kw.arg is None:  # **mapping: any parameter
-                        passed.update((fn.name, p) for p in params)
-                        continue
-                    passed.add((fn.name, kw.arg))
-                    if a.kwarg:  # may be forwarded to any callee
-                        anywhere.add(kw.arg)
+    for name, fns in by_name.items():
+        for fn in fns:
+            defaults = _options(fn)
+            for call in calls.get(name, ()):
+                bound = _bound_arguments(fn, call)
+                if bound is None:  # *args/**mapping: any parameter
+                    passed.update((name, p) for p in _parameters(fn))
+                    continue
+                for p, arg in bound.items():
+                    default = defaults.get(p)
+                    if default is None or ast.dump(arg) != ast.dump(default):
+                        passed.add((name, p))
+                if fn.args.kwarg:  # may be forwarded to any callee
+                    anywhere.update(k.arg for k in call.keywords if k.arg)
     return passed, anywhere
+
+
+def _top_level_functions():
+    for path in sorted(PACKAGE.rglob("*.py")):
+        module = ".".join(path.relative_to(PACKAGE).with_suffix("").parts)
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield module, node
 
 
 def _public_functions():
     return [
         (module, node)
-        for module, _, node in _public_definitions()
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        for module, node in _top_level_functions()
+        if not node.name.startswith("_")
     ]
 
 
 def unset_options():
     functions = _public_functions()
-    passed, anywhere = _passed_parameters([fn for _, fn in functions])
+    trees = _parse_call_sites()
+    passed, anywhere = _set_parameters([fn for _, fn in functions], trees)
+    escaping = _escaping_names(trees)
     return sorted(
         f"{module}.{fn.name}.{p}"
         for module, fn in functions
         for p in _options(fn)
         if (fn.name, p) not in passed
-        and p not in anywhere
+        and not (fn.name in escaping and p in anywhere)
         and f"{module}.{fn.name}.{p}" not in OPTION_ALLOWLIST
     )
 
@@ -204,8 +305,8 @@ def unset_options():
 def test_every_option_is_set():
     found = unset_options()
     assert not found, (
-        "defaulted parameters that no call passes (inline the default "
-        "and delete the parameter):\n  " + "\n  ".join(found)
+        "defaulted parameters that no call sets to another value (inline "
+        "the default and delete the parameter):\n  " + "\n  ".join(found)
     )
 
 
@@ -216,6 +317,52 @@ def test_option_allowlist_names_existing_options():
         for p in _options(fn)
     }
     assert set(OPTION_ALLOWLIST) <= defined
+
+
+def _is_constant(expr):
+    """A literal, or an UPPER_CASE module constant (``X`` or ``m.X``)."""
+    if isinstance(expr, ast.Name):
+        return expr.id.isupper()
+    if isinstance(expr, ast.Attribute):
+        return expr.attr.isupper() and isinstance(expr.value, ast.Name)
+    try:
+        ast.literal_eval(expr)
+    except ValueError:
+        return False
+    return True
+
+
+def constant_private_parameters():
+    trees = _parse_call_sites()
+    escaping = _escaping_names(trees)
+    private = [
+        (module, node)
+        for module, node in _top_level_functions()
+        if node.name.startswith("_") and node.name not in escaping
+    ]
+    calls = _calls_by_name(trees, {fn.name for _, fn in private})
+    found = []
+    for module, fn in private:
+        defaults = _options(fn)
+        bindings = [_bound_arguments(fn, c) for c in calls.get(fn.name, ())]
+        if not bindings or None in bindings:
+            continue
+        for p in _parameters(fn):
+            args = [b.get(p, defaults.get(p)) for b in bindings]
+            if all(a is not None and _is_constant(a) for a in args) and (
+                len({ast.dump(a) for a in args}) == 1
+            ):
+                found.append(f"{module}.{fn.name}.{p}")
+    return sorted(found)
+
+
+def test_no_private_parameter_is_constant():
+    found = constant_private_parameters()
+    assert not found, (
+        "private-helper parameters that every call fills with one "
+        "constant (inline it and drop the argument):\n  "
+        + "\n  ".join(found)
+    )
 
 
 def _unused_imports_in(path):

@@ -39,7 +39,7 @@ def test_allocation_sums_to_budget_and_picks_md5_rank(spark):
         (f"{s}{i}", s) for s, n in counts.items() for i in range(n)
     ]
     df = spark.createDataFrame(rows, "doc_id string, source string")
-    out = budget_allocate(df, 20, key="doc_id").collect()
+    out = budget_allocate(df, 20).collect()
     alloc = _hamilton(counts, 20)
     assert sum(alloc.values()) == 20
     from collections import Counter
@@ -66,7 +66,7 @@ def test_allocation_shortfall_when_a_source_runs_dry(spark):
     total = 100
     alloc = _hamilton(counts, total)
     assert alloc["tiny"] > counts["tiny"]  # the premise: over-allocated
-    out = budget_allocate(df, total, key="doc_id").collect()
+    out = budget_allocate(df, total).collect()
     from collections import Counter
 
     got = Counter(r["source"] for r in out)
@@ -77,7 +77,7 @@ def test_allocation_shortfall_when_a_source_runs_dry(spark):
 
 def test_allocation_empty_input_keeps_schema(spark):
     df = spark.createDataFrame([], "doc_id string, source string")
-    out = budget_allocate(df, 10, key="doc_id")
+    out = budget_allocate(df, 10)
     assert [
         (f.name, f.dataType.simpleString()) for f in out.schema.fields
     ] == [("doc_id", "string"), ("source", "string")]
@@ -130,9 +130,9 @@ def test_null_source_raises_readably(spark):
         "doc_id string, source string",
     )
     with _pytest.raises(ValueError, match="non-null 'source'"):
-        budget_allocate(df, 2, key="doc_id")
+        budget_allocate(df, 2)
     with _pytest.raises(ValueError, match="non-null 'source'"):
-        budget_allocate_with_floor(df, 2, 1, key="doc_id")
+        budget_allocate_with_floor(df, 2, 1)
 
 
 def _floored_reference(
@@ -167,9 +167,7 @@ def test_floored_allocation_guarantees_floor_and_spreads_rest(spark):
     total, floor = 50, 5
     got = Counter(
         r["source"]
-        for r in budget_allocate_with_floor(
-            df, total, floor, key="doc_id"
-        ).collect()
+        for r in budget_allocate_with_floor(df, total, floor).collect()
     )
     want = _floored_reference(counts, total, floor)
     assert dict(got) == {s: n for s, n in want.items() if n}
@@ -192,7 +190,7 @@ def test_floor_dominated_budget_keeps_floors_only(spark):
     # Σfloors = 30 > total = 10: floors win, nothing proportional
     got = Counter(
         r["source"]
-        for r in budget_allocate_with_floor(df, 10, 10, key="doc_id").collect()
+        for r in budget_allocate_with_floor(df, 10, 10).collect()
     )
     assert dict(got) == {"a": 10, "b": 10, "c": 10}
 
@@ -255,7 +253,7 @@ def test_two_level_allocation_matches_reference(spark):
     assert sum(want.values()) == total
     got = Counter(
         (r["lang"], r["source"])
-        for r in budget_allocate_two_level(df, total, key="doc_id").collect()
+        for r in budget_allocate_two_level(df, total).collect()
     )
     assert dict(got) == {c: n for c, n in want.items() if n}
     # within a cell, selection is the md5-smallest keys
@@ -266,9 +264,7 @@ def test_two_level_allocation_matches_reference(spark):
         )[:n]
         kept = sorted(
             r["doc_id"]
-            for r in budget_allocate_two_level(
-                df, total, key="doc_id"
-            ).collect()
+            for r in budget_allocate_two_level(df, total).collect()
             if (r["lang"], r["source"]) == (o, i)
         )
         assert kept == sorted(keys)
@@ -287,7 +283,7 @@ def test_two_level_null_strata_raises(spark):
         "doc_id string, lang string, source string",
     )
     with _pytest.raises(ValueError, match="non-null 'lang'"):
-        budget_allocate_two_level(df, 1, key="doc_id")
+        budget_allocate_two_level(df, 1)
 
 
 def _recency_reference(

@@ -134,7 +134,7 @@ def test_ngram_repetition_known_values(spark):
     got = {
         r["doc_id"]: r["rep"]
         for r in df.select(
-            "doc_id", ngram_repetition_expr("text", 5).alias("rep")
+            "doc_id", ngram_repetition_expr().alias("rep")
         ).collect()
     }
     assert got == {1: 0.0, 2: round(1 - 5 / 11, 4), 3: 0.0, 4: 0.0}
@@ -447,7 +447,7 @@ class TestGopherRules:
         )
 
         df = spark.createDataFrame([(text,)], "text string")
-        m = gopher_metrics("text")
+        m = gopher_metrics()
         f = gopher_flags(m)
         row = df.select(
             *[v.alias(k) for k, v in m.items()],

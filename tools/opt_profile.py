@@ -5,8 +5,9 @@ Usage:
     python tools/opt_profile.py [--reps N] [--plan-dir DIR] [--no-time] q1 q2 ...
     python tools/opt_profile.py --all-plans --plan-dir DIR   # explain only
 
-Timing methodology matches bench.py exactly (noop sink, clearCache +
-JVM GC between reps, best-of-N) so numbers are comparable; plans are
+Timing uses bench.py's own session, warm-up and per-rep reset (noop
+sink, clearCache + JVM GC between reps, best-of-N) so numbers are
+comparable; plans are
 ``explain("formatted")`` written to ``<plan-dir>/<name>.txt``.
 """
 
@@ -82,34 +83,17 @@ def main() -> int:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from aircraftutilization_etl_spark.plans import CATALOG
-    from aircraftutilization_etl_spark.session import build_session
+    from bench import bench_session, timed_rep, warm_up
 
-    spark = build_session(
-        app_name="opt-profile",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-        extra_conf={
-            "spark.ui.enabled": "true" if args.stages else "false",
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
-            "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session(ui=args.stages)
 
     names = list(args.names)
     if args.all_plans:
         names = sorted(CATALOG)
 
-    # warm-up identical to bench.py
-    CATALOG["q1_pricing_summary"].spark(spark, sf_dir).write.mode(
-        "overwrite"
-    ).format("noop").save()
-    spark.range(cpus).repartition(cpus).mapInPandas(
-        lambda it: it, "id long"
-    ).write.mode("overwrite").format("noop").save()
+    warm_up(spark, sf_dir)
 
     out: dict[str, object] = {}
     for name in names:
@@ -133,16 +117,10 @@ def main() -> int:
                 out[name] = "plan-only"
                 continue
             times = []
-            first_job = None
+            spark.sparkContext.setJobDescription(f"opt: {name}")
             for _ in range(args.reps):
-                spark.catalog.clearCache()
-                spark.sparkContext._jvm.System.gc()  # noqa: SLF001
-                spark.sparkContext.setJobDescription(f"opt: {name}")
                 t0 = time.time()
-                qd.spark(spark, sf_dir).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-                times.append(round(time.time() - t0, 3))
+                times.append(round(timed_rep(spark, qd, sf_dir), 3))
             out[name] = {"best": min(times), "times": times}
             if args.stages:
                 out[name]["stages"] = _stage_dump(spark, t0 * 1000.0)

@@ -5,9 +5,9 @@ upscaled data (tools/upscale_testdata.py -> .bench_sf1, 10x every
 table) in the SAME session, and print per-query wall ratios for the
 SCALE.md table.
 
-Methodology matches bench.py: the engine's tuned build_session, a
-noop-sink write executes the full plan, best-of-N reps filters the
-host's transient stalls (N=3 at sf0.1, N=2 at sf1 — the sf1 legs are
+Methodology is bench.py's own: its session, warm-up and per-rep reset
+(clearCache + JVM GC), a noop-sink write executes the full plan,
+best-of-N reps filters the host's transient stalls (N=3 at sf0.1, N=2 at sf1 — the sf1 legs are
 minutes-long, and a stall that survives two full reps would be visible
 as an implausible ratio, re-arbitrated by hand).
 
@@ -21,7 +21,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -41,16 +40,6 @@ HEAVY = [
 ]
 
 
-def _best_of(qd, spark, sf_dir: str, reps: int) -> float:
-    times = []
-    for _ in range(reps):
-        spark.sparkContext._jvm.System.gc()
-        t0 = time.time()
-        qd.spark(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        times.append(time.time() - t0)
-    return min(times)
-
-
 def main() -> int:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     ap = argparse.ArgumentParser(description=__doc__)
@@ -60,35 +49,17 @@ def main() -> int:
     args = ap.parse_args()
 
     from aircraftutilization_etl_spark.plans import CATALOG
-    from aircraftutilization_etl_spark.session import build_session
+    from bench import bench_session, timed_rep, warm_up
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = build_session(
-        app_name="orderup-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-        extra_conf={
-            "spark.ui.enabled": "false",
-            "spark.driver.memory": os.environ.get(
-                "SPARK_GRAFT_DRIVER_MEM", "24g"
-            ),
-            "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-        },
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    CATALOG["q1_pricing_summary"].spark(spark, args.sf01).write.mode(
-        "overwrite"
-    ).format("noop").save()
-    spark.range(cpus).repartition(cpus).mapInPandas(
-        lambda it: it, "id long"
-    ).write.mode("overwrite").format("noop").save()
+    spark = bench_session()
+    warm_up(spark, args.sf01)
 
     names = args.only.split(",") if args.only else HEAVY
     rows = {}
     for name in names:
         qd = CATALOG[name]
-        t01 = _best_of(qd, spark, args.sf01, reps=3)
-        t1 = _best_of(qd, spark, args.sf1, reps=2)
+        t01 = min(timed_rep(spark, qd, args.sf01) for _ in range(3))
+        t1 = min(timed_rep(spark, qd, args.sf1) for _ in range(2))
         rows[name] = {
             "sf0.1_sec": round(t01, 2),
             "sf1_sec": round(t1, 2),
