@@ -87,7 +87,6 @@ def kmeans_int8(
     df: DataFrame,
     k: int = 8,
     iterations: int = 2,
-    id_col: str = "vec_id",
     return_model: bool = False,
 ):
     """Lloyd's k-means on int8-quantized vectors → (id, cluster, dist).
@@ -116,25 +115,25 @@ def kmeans_int8(
     # scan already has >= defaultParallelism splits and this is a no-op.
     # (r12: shared helper — the file-estimate probe replaces the ~60-90
     # ms df.rdd plan-build probe; same decision, same plan.)
-    df = ensure_scan_parallelism(df, id_col)
+    df = ensure_scan_parallelism(df, "vec_id")
     codes = (
-        quantize_embeddings(df, id_col)
-        .select(F.col(id_col), "qvec")
+        quantize_embeddings(df)
+        .select(F.col("vec_id"), "qvec")
         .persist(CORPUS_CACHE)
     )
-    seed_rows = codes.orderBy(id_col).limit(k).collect()
+    seed_rows = codes.orderBy("vec_id").limit(k).collect()
     centroids = [list(r["qvec"]) for r in seed_rows]
     if not centroids:
         # empty input: no seeds, no model, no assignments — a typed
         # empty result instead of a zero-centroid _assign expression.
         # The id field's type comes from the INPUT schema (the populated
-        # path passes id_col through untouched), so a caller with an
+        # path passes vec_id through untouched), so a caller with an
         # int/string key gets the same schema on empty and populated
         # inputs (ADVICE r8 #3).
         codes.unpersist()
-        id_type = df.schema[id_col].dataType.simpleString()
+        id_type = df.schema["vec_id"].dataType.simpleString()
         out = df.sparkSession.createDataFrame(
-            [], f"`{id_col}` {id_type}, cluster int, dist bigint"
+            [], f"vec_id {id_type}, cluster int, dist bigint"
         )
         return (out, []) if return_model else out
 
@@ -158,7 +157,7 @@ def kmeans_int8(
     # quantization from the raw vectors after the unpersist below
     out = (
         _assign(codes, centroids)
-        .select(F.col(id_col), "cluster", "dist")
+        .select(F.col("vec_id"), "cluster", "dist")
         .localCheckpoint(eager=True)
     )
     codes.unpersist()
@@ -243,132 +242,86 @@ def _pq_assign(scodes: DataFrame, codebooks: list[list[list[int]]]) -> DataFrame
     )
 
 
-def pq_scodes(df: DataFrame, m: int = 4) -> DataFrame:
-    """(id, vec) → persisted (id, sub, svec) subvector codes — the
-    quantize+split prefix every PQ path (training, encoding, LUT
-    scoring) consumes. Split out of :func:`pq_train` so a caller holding
-    an already-trained codebook (the train-once production contract)
-    can build the encoding input without re-running Lloyd rounds."""
-    # distribute an under-partitioned scan before the quantize+split
-    # projections — see kmeans_int8; the persisted cache keeps the
-    # spread for every downstream PQ pass (train, encode, LUTs)
-    df = ensure_scan_parallelism(df, "vec_id")
-    codes = quantize_embeddings(df).select(F.col("vec_id"), "qvec")
-    return _sub_split(codes, m).persist(CORPUS_CACHE)
-
-
 def pq_train(
     df: DataFrame,
+    train_limit: int,
     m: int = 4,
     k: int = 8,
     iterations: int = 2,
-    train_limit: int | None = None,
 ) -> tuple[list[list[list[int]]], DataFrame]:
     """Train m independent subspace codebooks (k centroids each) with
-    the kmeans_int8 protocol per subspace → (codebooks, scodes).
+    the kmeans_int8 protocol per subspace → (codebooks, scodes), where
+    scodes is the persisted (id, sub, svec) subvector frame every PQ
+    pass (encoding, LUT scoring) consumes.
 
     Deterministic protocol (the oracle replays it): seeds are the k
-    smallest ids' subvectors (cluster index in id order, identical
-    across subspaces); per iteration, exact-integer argmin assignment
-    (ties → lowest code) then floor-of-ratio codebook update per
-    (sub, code, dim), empty cells keeping their previous centroid.
+    smallest corpus ids' subvectors (cluster index in id order,
+    identical across subspaces); per iteration, exact-integer argmin
+    assignment over the training sample (ties → lowest code) then
+    floor-of-ratio codebook update per (sub, code, dim), empty cells
+    keeping their previous centroid.
 
-    Scale: assignment is map-only against the m·k·(d/m) literal model
-    (same total work as one full-vector k-means pass); the update is one
-    shuffle with m·k·(d/m) = k·d result groups; the driver holds k·d
-    integers per round — the model, never the data.
-
-    ``train_limit`` restricts the Lloyd iterations to the vectors with
-    id < limit — the production PQ protocol (Faiss/ScaNN train
-    codebooks on a bounded sample whatever the corpus size; a 100 TB
-    corpus cannot afford per-iteration full passes). Deterministic and
-    oracle-replayable because the sample is an id-prefix, not a random
-    draw. Encoding still covers the full corpus.
+    The training sample is the vectors with id < ``train_limit`` — the
+    production PQ protocol (Faiss/ScaNN train codebooks on a bounded
+    sample whatever the corpus size). It is an id-prefix, not a random
+    draw, so the oracle replays it. The sample is model-scale by
+    contract: one collect fetches it together with the seed vectors
+    (inside the sample whenever it holds ≥ k ids), and the Lloyd rounds
+    run driver-side — the cluster touches the corpus only to quantize
+    and, later, to encode it.
     """
-    scodes = pq_scodes(df, m)
-
-    if train_limit is not None:
-        # Bounded-sample protocol: the training set is model-scale BY
-        # CONTRACT (a constant-size id-prefix, independent of corpus
-        # size), so collect it ONCE and run the Lloyd rounds driver-side
-        # in numpy — one Spark job instead of one shuffle+collect per
-        # iteration, with bit-identical integer arithmetic (np.argmin =
-        # first minimum = lowest code; np.floor_divide = floor(sum/n)).
-        # This is the Faiss/ScaNN shape: the cluster touches the corpus
-        # only for encoding; training happens where the sample lives.
-        rows = (
-            scodes.filter(F.col("vec_id") < train_limit)
-            .select("vec_id", "sub", "svec")
-            .collect()
-        )
-        if len({r["vec_id"] for r in rows}) >= k:
-            books = _pq_train_local(rows, m, k, iterations)
-            return books, scodes
-
-    # full-corpus (or thin-sample fallback) distributed protocol
+    # distribute an under-partitioned scan before the quantize+split
+    # projections — see kmeans_int8; the persisted cache keeps the
+    # spread for every downstream PQ pass (encode, LUTs)
+    df = ensure_scan_parallelism(df, "vec_id")
     codes = quantize_embeddings(df).select(F.col("vec_id"), "qvec")
-    seed_rows = codes.orderBy("vec_id").limit(k).collect()
-    if not seed_rows:
+    scodes = _sub_split(codes, m).persist(CORPUS_CACHE)
+    # every vector has exactly m subvector rows, so the k·m smallest
+    # (id, sub) rows are the k seed vectors
+    rows = (
+        scodes.filter(F.col("vec_id") < train_limit)
+        .unionByName(scodes.orderBy("vec_id", "sub").limit(k * m))
+        .collect()
+    )
+    vecs: dict[int, dict[int, list[int]]] = {}
+    for r in rows:
+        vecs.setdefault(r["vec_id"], {})[r["sub"]] = r["svec"]
+    if not vecs:
         # empty corpus: no codebooks to train; callers get ([], scodes)
         # and must produce their typed empty result
         return [], scodes
-    sd = len(seed_rows[0]["qvec"]) // m
-    codebooks = [
-        [list(r["qvec"][s * sd : (s + 1) * sd]) for r in seed_rows]
-        for s in range(m)
-    ]
-
-    train = (
-        scodes.filter(F.col("vec_id") < train_limit)
-        if train_limit is not None
-        else scodes
-    )
-    for _ in range(iterations):
-        assigned = _pq_assign(train, codebooks)
-        stats = (
-            assigned.select(
-                "sub", "code", F.posexplode("svec").alias("spos", "x")
-            )
-            .groupBy("sub", "code", "spos")
-            .agg(F.floor(F.sum("x") / F.count(F.lit(1))).alias("val"))
-            .collect()
-        )
-        new_books = [[list(c) for c in book] for book in codebooks]
-        for row in stats:
-            new_books[row["sub"]][row["code"]][row["spos"]] = int(row["val"])
-        codebooks = new_books
-    return codebooks, scodes
+    # a collected id outside the k seeds is a sample id above all of
+    # them, so the k smallest collected ids are the seeds
+    ids = sorted(vecs)
+    sample = [i for i in ids if i < train_limit]
+    return _pq_train_local(vecs, ids[:k], sample, m, iterations), scodes
 
 
-def _pq_train_local(rows, m: int, k: int, iterations: int):
-    """Driver-side Lloyd rounds over the collected training sample —
-    EXACTLY the arithmetic of the distributed loop (and of the SQL
-    oracle): seeds are the k smallest ids' subvectors in id order;
-    assignment is integer-L2 argmin with ties to the lowest code;
-    update is floor(sum/count) per (sub, code, dim), empty cells keep
-    their previous centroid."""
+def _pq_train_local(vecs, seeds, sample, m: int, iterations: int):
+    """Driver-side Lloyd rounds per subspace, in exactly the oracle's
+    integer arithmetic: assignment is integer-L2 argmin with ties to the
+    lowest code (np.argmin = first minimum); update is floor(sum/count)
+    per (sub, code, dim) (np.floor_divide), empty cells keep their
+    previous centroid."""
     import numpy as np
 
-    by_sub: dict[int, list] = {s: [] for s in range(m)}
-    for r in rows:
-        by_sub[r["sub"]].append((r["vec_id"], r["svec"]))
     books = []
     for s in range(m):
-        members = sorted(by_sub[s], key=lambda t: t[0])
-        x = np.array([list(v) for _, v in members], dtype=np.int64)
-        cb = x[:k].copy()  # k smallest ids' subvectors, id order
+        cb = np.array([vecs[i][s] for i in seeds], dtype=np.int64)
+        x = np.array([vecs[i][s] for i in sample], dtype=np.int64)
+        x = x.reshape(len(sample), cb.shape[1])  # (0, sd) when empty
         for _ in range(iterations):
             d = ((x[:, None, :] - cb[None, :, :]) ** 2).sum(axis=2)
-            code = d.argmin(axis=1)  # first min -> lowest code
+            code = d.argmin(axis=1)
             new = cb.copy()
-            for c in range(k):
+            for c in range(len(cb)):
                 mask = code == c
                 if mask.any():
                     new[c] = np.floor_divide(
                         x[mask].sum(axis=0), int(mask.sum())
                     )
             cb = new
-        books.append([[int(v) for v in c] for c in cb])
+        books.append(cb.tolist())
     return books
 
 

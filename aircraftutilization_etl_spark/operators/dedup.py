@@ -369,81 +369,6 @@ def minhash_lsh_duplicates(df: DataFrame, threshold: float) -> DataFrame:
     return verify_jaccard_pairs(candidates, shingled, threshold)
 
 
-def duplicate_clusters(
-    pairs: DataFrame, max_iterations: int = 20
-) -> DataFrame:
-    """Connected components over near-dup pairs → (doc_id, cluster_id).
-
-    The step that turns pairwise dedup output into dedup GROUPS: every
-    document reachable through a chain of near-dup pairs shares a
-    cluster, labeled by the smallest member id (the canonical
-    representative a pipeline keeps).
-
-    Iterative label propagation: each node starts labeled with its own
-    id; every round each node takes the min of its label and its
-    neighbors' labels; converged when no label changes. Rounds needed =
-    cluster diameter — near-dup clusters are small, so convergence is
-    fast; ``max_iterations`` bounds adversarial chains.
-
-    Scale: one shuffle per round on the node id (join + groupBy share
-    the partitioning). Each round's labels are localCheckpoint'ed —
-    persist alone keeps the logical plan, and since every round
-    references the previous labels twice (join + fallback), the plan
-    would double per round and blow up the driver after ~8 rounds;
-    lineage truncation is what makes iterative DataFrame loops viable.
-    The driver sees one scalar per round, never the data.
-    """
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    n_changed = 0
-    for _ in range(max_iterations):
-        nbr_min = (
-            edges.join(labels, edges.src == labels.node)
-            .groupBy(F.col("dst").alias("node2"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(nbr_min, labels.node == nbr_min.node2, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", "label")
-                ).alias("label"),
-                (F.col("label") != F.least(
-                    F.col("label"), F.coalesce("nbr_label", "label")
-                )).alias("changed"),
-            )
-        ).localCheckpoint(eager=True)
-        n_changed = new_labels.filter("changed").count()
-        labels = new_labels.drop("changed")
-        if n_changed == 0:
-            break
-    if n_changed != 0:
-        # Truncated propagation would silently split one true cluster
-        # into several (diameter > max_iterations) — surface it so
-        # callers can distinguish converged from cut-off output.
-        raise RuntimeError(
-            f"duplicate_clusters did not converge within {max_iterations} "
-            f"iterations ({n_changed} labels still changing); raise "
-            "max_iterations for long duplicate chains"
-        )
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-    )
-
-
 def _simhash_bits(hashed, bits: int):
     def bit(p: int):
         # vote_p = Σ_words (digit_p >= '8' ? 1 : -1)

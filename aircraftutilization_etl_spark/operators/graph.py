@@ -14,9 +14,8 @@ expressed relationally. Two deliberate design points:
   is far below any ranking use's tolerance.
 - **Lineage truncation.** Each iteration's plan references the previous
   ranks twice (join + aggregate); left un-truncated the logical plan
-  doubles per round and the driver OOMs analyzing it (measured in this
-  repo's cluster-resolution work — see operators/dedup.py).
-  ``localCheckpoint(eager=True)`` caps the plan at one iteration.
+  doubles per round and the driver OOMs analyzing it.
+  ``localCheckpoint`` caps the plan at one iteration.
 
 Scale: each iteration shuffles |edges| contribution rows on the dst key
 with map-side partial sums — the same profile as any groupBy; skewed
@@ -27,7 +26,7 @@ persisted, not rebuilt per round.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -104,14 +103,15 @@ def pagerank(
         if rank_partitions is not None:
             ranks = ranks.coalesce(rank_partitions)
         # truncate lineage: the loop otherwise doubles the plan per
-        # round. Intermediate rounds checkpoint LAZILY — unlike
-        # duplicate_clusters there is no per-round driver decision, so
-        # materializing each round as its own job is pure scheduling
-        # overhead; lazy marks keep the whole run one job while still
-        # capping the analyzed plan at one iteration. The LAST round is
-        # eager: it drives that one job to completion WHILE the edge and
-        # node caches are still live, so the unpersist below never
-        # strips a cache a pending computation depends on.
+        # round. Intermediate rounds checkpoint LAZILY — the round count
+        # is fixed, so unlike connected_components_star there is no
+        # per-round convergence check, and materializing each round as
+        # its own job is pure scheduling overhead; lazy marks keep the
+        # whole run one job while still capping the analyzed plan at one
+        # iteration. The LAST round is eager: it drives that one job to
+        # completion WHILE the edge and node caches are still live, so
+        # the unpersist below never strips a cache a pending computation
+        # depends on.
         ranks = ranks.localCheckpoint(eager=(it == n_iterations - 1))
     out_edges.unpersist()
     nodes.unpersist()
@@ -224,12 +224,11 @@ def connected_components_star(pairs: DataFrame) -> DataFrame:
     MapReduce and Beyond") → (node, component) with component = the
     component's minimum node id.
 
-    Why a second algorithm next to label propagation
-    (dedup.duplicate_clusters): propagation needs DIAMETER rounds — the
-    right choice for near-dup clusters (tiny diameters), a scale
-    hazard for arbitrary graphs where chains can be long. Star
-    contraction converges in O(log^2 n) rounds on ANY topology by
-    rewiring every node toward its neighborhood minimum:
+    Star contraction converges in O(log^2 n) rounds on ANY topology —
+    label propagation would need as many rounds as the graph's
+    diameter, a scale hazard wherever chains can be long (an
+    adversarial corpus can chain near-duplicates arbitrarily far). Each
+    round rewires every node toward its neighborhood minimum:
 
     - large-star: for each node u, connect every STRICTLY LARGER
       neighbor to min(N(u) ∪ {u});
@@ -239,18 +238,11 @@ def connected_components_star(pairs: DataFrame) -> DataFrame:
     neighbor — two exchanges per phase, lineage truncated per round
     (the same localCheckpoint discipline as every iterative loop
     here). Convergence = the canonical edge set stops changing,
-    detected with a count + XOR-folded hash (two scalars to the
-    driver, never the data); a stable star graph IS the component
-    assignment.
+    detected with a count + XOR-folded hash observed on the round's
+    own checkpoint job (two scalars to the driver, never the data, no
+    extra job); a stable star graph IS the component assignment.
     """
     fwd = pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-    edges = (
-        fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    all_nodes = edges.select(F.col("u").alias("node")).distinct()
 
     def _sym(e: DataFrame) -> DataFrame:
         return e.unionByName(
@@ -272,22 +264,26 @@ def connected_components_star(pairs: DataFrame) -> DataFrame:
             out = out.unionByName(m.select("u", F.col("m").alias("v")))
         return out.filter(F.col("u") != F.col("v")).distinct()
 
-    def _fingerprint(e: DataFrame) -> tuple[int, int]:
-        row = e.agg(
+    def _checkpoint(e: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+        # the fingerprint rides the checkpoint's job as an Observation
+        # at the plan root, where no empty-input pruning can drop it
+        obs = Observation()
+        e = e.observe(
+            obs,
             F.count(F.lit(1)).alias("n"),
             # bit_xor: order-independent and overflow-free (a SUM of
             # 64-bit hashes trips ANSI overflow)
-            F.coalesce(
-                F.bit_xor(F.xxhash64(F.col("u"), F.col("v"))), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"])
+            F.bit_xor(F.xxhash64(F.col("u"), F.col("v"))).alias("h"),
+        ).localCheckpoint(eager=True)
+        return e, (obs.get["n"], obs.get["h"])
 
-    prev = _fingerprint(edges)
+    edges, prev = _checkpoint(
+        _sym(fwd).filter(F.col("u") != F.col("v")).distinct()
+    )
+    all_nodes = edges.select(F.col("u").alias("node")).distinct()
     for _ in range(25):
         edges = _star(edges, large=True).localCheckpoint(eager=True)
-        edges = _star(edges, large=False).localCheckpoint(eager=True)
-        cur = _fingerprint(edges)
+        edges, cur = _checkpoint(_star(edges, large=False))
         if cur == prev:
             break
         prev = cur

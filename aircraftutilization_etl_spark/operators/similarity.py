@@ -433,7 +433,7 @@ def srp_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
 
 # --- scalar quantization -------------------------------------------------
 
-def quantize_embeddings(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
+def quantize_embeddings(df: DataFrame) -> DataFrame:
     """Symmetric int8 scalar quantization of ``embedding``: per-vector
     scale = max |x|, q_i = floor(x_i · 127 / scale) ∈ [-127, 127]
     (all-zero vectors quantize to zeros). 4× memory cut for ANN
@@ -450,7 +450,7 @@ def quantize_embeddings(df: DataFrame, id_col: str = "vec_id") -> DataFrame:
         F.transform(v, lambda x: F.floor(x * 127 / scale).cast("int"))
     )
     return df.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.round(scale, 6).alias("scale"),
         q.alias("qvec"),
     )

@@ -16,7 +16,6 @@ from ..operators.dedup import (
     MINHASH_K,
     MINHASH_ROWS,
     doc_shingles,
-    duplicate_clusters,
     exact_duplicates,
     minhash_lsh_duplicates,
     novelty_scores,
@@ -26,6 +25,7 @@ from ..operators.dedup import (
     with_simhash,
 )
 from ..operators.distribute import CORPUS_CACHE
+from ..operators.graph import connected_components_star
 from .catalog import query, table
 
 JACCARD_THRESHOLD = 0.5
@@ -156,9 +156,9 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_duplicates(d, JACCARD_THRESHOLD)
 
 
-@query(
-    "q_dedup_clusters",
-    f"""
+# Recursive-CTE transitive closure over the LSH pairs — the oracle of
+# both duplicate-group queries.
+_LSH_CLUSTERS_SQL = f"""
     WITH RECURSIVE {_LSH_PAIRS_CTES},
     edges AS (
         SELECT id_a AS src, id_b AS dst FROM lsh_pairs
@@ -174,21 +174,30 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM closure
     GROUP BY node
     ORDER BY doc_id
-    """,
-)
+    """
+
+
+def _lsh_clusters(d: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id): star-contraction components over the LSH
+    near-dup pairs, each labeled by its smallest doc id."""
+    pairs = minhash_lsh_duplicates(d, JACCARD_THRESHOLD)
+    return connected_components_star(pairs).select(
+        F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
+    )
+
+
+@query("q_dedup_clusters", _LSH_CLUSTERS_SQL)
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate GROUPS: connected components over the LSH near-dup
     pairs, each cluster labeled by its smallest doc id (the canonical
     document a dedup pipeline keeps). Oracle: recursive-CTE transitive
     closure over the same pairs.
 
-    Scale: bounded-iteration label propagation — one key-partitioned
-    shuffle per round, rounds = cluster diameter (small for near-dup
-    chains); the driver only ever sees the per-round change count.
+    Scale: large-star/small-star contraction (connected_components_star)
+    — O(log^2 n) rounds whatever the chain length, two exchanges per
+    phase; the driver only ever sees two scalars per round.
     """
-    d = table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_duplicates(d, JACCARD_THRESHOLD)
-    return duplicate_clusters(pairs).orderBy("doc_id")
+    return _lsh_clusters(table(spark, sf_dir, "documents")).orderBy("doc_id")
 
 
 def _simhash_sql(bits: int = 16) -> str:
@@ -335,7 +344,8 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality_score, kept), i.e. the dedup purge list and its
     justification in one relation.
 
-    Scale: clusters come from the LSH pipeline (banded candidates only);
+    Scale: clusters come from the LSH pipeline (banded candidates only)
+    and star contraction (O(log^2 n) rounds, as q_dedup_clusters);
     quality is a per-row map; the final choice is one window over
     cluster_id — a single extra shuffle on a corpus already shuffled by
     the cluster join.
@@ -345,8 +355,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import quality_score_expr
 
     d = table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_duplicates(d, JACCARD_THRESHOLD)
-    clusters = duplicate_clusters(pairs)
+    clusters = _lsh_clusters(d)
     scored = (
         d.select("doc_id", quality_score_expr().alias("quality_score"))
         .join(clusters, "doc_id", "left")
@@ -540,48 +549,17 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_dedup_clusters_star",
-    f"""
-    WITH RECURSIVE {_LSH_PAIRS_CTES},
-    edges AS (
-        SELECT id_a AS src, id_b AS dst FROM lsh_pairs
-        UNION
-        SELECT id_b, id_a FROM lsh_pairs
-    ),
-    closure(node, reach) AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT c.node, e.dst FROM closure c JOIN edges e ON c.reach = e.src
-    )
-    SELECT node AS doc_id, LEAST(node, MIN(reach)) AS cluster_id
-    FROM closure
-    GROUP BY node
-    ORDER BY doc_id
-    """,
-)
+@query("q_dedup_clusters_star", _LSH_CLUSTERS_SQL)
 def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same duplicate groups as q_dedup_clusters, computed by
-    large-star/small-star contraction instead of label propagation —
-    the two backends must agree exactly (and both must match the
-    recursive-closure oracle). Propagation pays DIAMETER rounds and is
-    right for shallow near-dup clusters; star contraction pays
-    O(log^2 n) rounds on ANY topology, the safe default when an
-    adversarial corpus can chain duplicates arbitrarily long.
+    """The duplicate groups of q_dedup_clusters, registered under the
+    name of the kernel that computes them (large-star/small-star
+    contraction, connected_components_star). Oracle: the same
+    recursive closure.
 
-    Scale: two exchanges per phase (neighborhood-min groupBy + re-key
-    join), per-round lineage truncation, two scalars to the driver per
-    round for the convergence check.
+    Scale: as q_dedup_clusters — two exchanges per phase, per-round
+    lineage truncation, two observed scalars per round.
     """
-    from ..operators.graph import connected_components_star
-
-    d = table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_duplicates(d, JACCARD_THRESHOLD)
-    return (
-        connected_components_star(pairs)
-        .select(F.col("node").alias("doc_id"), F.col("component").alias("cluster_id"))
-        .orderBy("doc_id")
-    )
+    return q_dedup_clusters(spark, sf_dir)
 
 
 @query(

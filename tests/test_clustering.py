@@ -46,6 +46,34 @@ def _kmeans_ref(ids, mat, k, iters):
     return {int(i): (int(c), int(d)) for i, c, d in zip(ids, cl, dist)}
 
 
+def _pq_ref(ids, mat, limit, m, k, iters):
+    """Pure-Python replay of the PQ oracle protocol: seeds are the k
+    smallest corpus ids (pqseeds), only ids < limit train, argmin ties
+    go to the lowest code, updates are floor(sum/count) and an empty
+    code keeps its centroid."""
+    codes = _quantize(mat)
+    sd = codes.shape[1] // m
+    vecs = {int(i): [int(v) for v in row] for i, row in zip(ids, codes)}
+    order = sorted(vecs)
+    sample = [i for i in order if i < limit]
+    books = []
+    for s in range(m):
+        sub = {i: v[s * sd:(s + 1) * sd] for i, v in vecs.items()}
+        book = [sub[i] for i in order[:k]]
+        for _ in range(iters):
+            members = {}
+            for i in sample:
+                d = [sum((a - b) ** 2 for a, b in zip(sub[i], c)) for c in book]
+                members.setdefault(d.index(min(d)), []).append(sub[i])
+            book = [
+                [sum(col) // len(members[c]) for col in zip(*members[c])]
+                if c in members else cent
+                for c, cent in enumerate(book)
+            ]
+        books.append(book)
+    return books
+
+
 @pytest.fixture(scope="module")
 def vectors():
     rng = np.random.default_rng(7)
@@ -150,7 +178,9 @@ class TestProductQuantization:
             pq_train,
         )
 
-        books, scodes = pq_train(self._tiny(spark), m=2, k=2, iterations=2)
+        books, scodes = pq_train(
+            self._tiny(spark), train_limit=6, m=2, k=2, iterations=2
+        )
         assert len(books) == 2 and len(books[0]) == 2
         assert all(len(c) == 2 for book in books for c in book)
         enc = {r["vec_id"]: list(r["codes"]) for r in
@@ -163,6 +193,26 @@ class TestProductQuantization:
         # opposite vectors get different codes in every subspace
         assert enc[0][0] != enc[2][0] and enc[0][1] != enc[2][1]
         scodes.unpersist()
+
+    def test_thin_sample_matches_oracle_replay(self, spark, vectors):
+        """A training sample holding fewer than k ids: the seeds are
+        still the k smallest CORPUS ids, two of them above the limit,
+        and only the sample trains."""
+        from aircraftutilization_etl_spark.operators.clustering import (
+            pq_train,
+        )
+
+        ids, mat = vectors
+        sparse = ids * 10 + 3  # 3, 13, 23, 33, 43, ...
+        df = spark.createDataFrame(
+            [(int(i), [float(x) for x in row]) for i, row in zip(sparse, mat)],
+            "vec_id long, embedding array<float>",
+        )
+        # sample = {3, 13, 23}: 3 ids < k = 5; seeds 33 and 43 lie above
+        books, scodes = pq_train(df, train_limit=30, m=2, k=5, iterations=2)
+        scodes.unpersist()
+        want = _pq_ref(sparse, np.asarray(mat, dtype=np.float64), 30, 2, 5, 2)
+        assert books == want
 
     def test_adc_equals_lut_sum(self, spark):
         """ADC score of (query, vector) == exact sum of subspace
@@ -178,7 +228,7 @@ class TestProductQuantization:
         )
 
         df = self._tiny(spark)
-        books, scodes = pq_train(df, m=2, k=2, iterations=1)
+        books, scodes = pq_train(df, train_limit=6, m=2, k=2, iterations=1)
         enc_df = pq_encode(scodes, books)
         enc = {r["vec_id"]: list(r["codes"]) for r in enc_df.collect()}
         q = {
@@ -201,51 +251,6 @@ class TestProductQuantization:
             )
             assert r["adc_dist"] == expected
         scodes.unpersist()
-
-
-class TestPQBooksCache:
-    def test_fingerprint_invalidates_on_rewrite(self, tmp_path):
-        """The train-once codebook cache keys on a filesystem
-        fingerprint of the embeddings parquet, so rewriting the data
-        under the SAME directory must produce a different cache key
-        (pins the path-only-key hazard: stale codebooks served against
-        a regenerated corpus)."""
-        import os
-        import time
-
-        from aircraftutilization_etl_spark.plans.clustering import (
-            _parquet_fingerprint,
-        )
-
-        p = tmp_path / "embeddings.parquet"
-        p.write_bytes(b"v1-bytes")
-        fp1 = _parquet_fingerprint(str(tmp_path))
-        # same content, untouched -> same fingerprint
-        assert _parquet_fingerprint(str(tmp_path)) == fp1
-        time.sleep(0.01)
-        p.write_bytes(b"v2-bytes-longer")
-        fp2 = _parquet_fingerprint(str(tmp_path))
-        assert fp2 != fp1
-        # ADVICE r6: a SAME-SIZE rewrite with the mtime restored
-        # (rsync -t, archive extraction, coarse object-store mtime)
-        # must STILL move the fingerprint — content, not stat metadata
-        st = os.stat(p)
-        p.write_bytes(b"v3-bytes-longer")  # same length as v2
-        os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns))
-        fp3 = _parquet_fingerprint(str(tmp_path))
-        assert fp3 != fp2
-        assert os.stat(p).st_mtime_ns == st.st_mtime_ns  # trap is real
-        # part-file directory layout: adding a part changes the print
-        d = tmp_path / "dir_case" / "embeddings.parquet"
-        os.makedirs(d)
-        (d / "part-0.parquet").write_bytes(b"a")
-        fpd1 = _parquet_fingerprint(str(tmp_path / "dir_case"))
-        (d / "part-1.parquet").write_bytes(b"b")
-        fpd2 = _parquet_fingerprint(str(tmp_path / "dir_case"))
-        assert fpd2 != fpd1
-        # hidden/_SUCCESS markers are ignored
-        (d / "_SUCCESS").write_bytes(b"")
-        assert _parquet_fingerprint(str(tmp_path / "dir_case")) == fpd2
 
 
 class TestEmptyBranchIdTyping:
@@ -274,10 +279,10 @@ class TestEmptyBranchIdTyping:
 
     def test_kmeans_empty_follows_string_id(self, spark):
         empty = spark.createDataFrame(
-            [], "doc string, embedding array<float>"
+            [], "vec_id string, embedding array<float>"
         )
-        out = kmeans_int8(empty, k=1, iterations=1, id_col="doc")
-        assert out.schema["doc"].dataType.simpleString() == "string"
+        out = kmeans_int8(empty, k=1, iterations=1)
+        assert out.schema["vec_id"].dataType.simpleString() == "string"
         assert out.count() == 0
 
     def test_adc_empty_codebooks_follow_int_ids(self, spark):

@@ -2,7 +2,8 @@
 session (VERDICT r10 "What's wrong" #2: seven retired recall-gauge names
 survived five rounds in the doc). Pin the doc to the live catalog: every
 query name cited must exist in ``queries()``, and every catalog entry
-must be cited somewhere in the per-family index.
+must be cited somewhere in the per-family index. QUERIES.md is pinned
+byte for byte to the output of its generator.
 
 No SparkSession needed — the catalog registry imports without one.
 """
@@ -32,17 +33,18 @@ def test_coverage_doc_names_match_catalog():
 
 
 def test_queries_doc_names_match_catalog():
-    """QUERIES.md is generated (tools/gen_query_index.py) — assert it was
-    regenerated after the last catalog change."""
-    from aircraftutilization_etl_spark.plans import CATALOG
+    """QUERIES.md is generated (tools/gen_query_index.py) — assert it is
+    byte-for-byte the generator's output for the live catalog, so a
+    docstring edit that is not regenerated fails here, not just a
+    renamed query."""
+    import importlib.util
 
-    # name column only — the description column truncates docstrings at
-    # 160 chars, which can shear a cited query name mid-word
-    with open(os.path.join(REPO, "QUERIES.md")) as f:
-        cited = set(re.findall(r"^\| `(q\d*_[a-z0-9_]+)` \|", f.read(), re.M))
-    live = set(CATALOG)
-    assert not cited - live, f"QUERIES.md cites retired names: {sorted(cited - live)}"
-    assert not live - cited, (
-        "catalog queries missing from QUERIES.md (rerun "
-        f"tools/gen_query_index.py): {sorted(live - cited)}"
+    spec = importlib.util.spec_from_file_location(
+        "gen_query_index", os.path.join(REPO, "tools", "gen_query_index.py")
     )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    with open(os.path.join(REPO, "QUERIES.md"), encoding="utf-8") as f:
+        assert f.read() == gen.render(), (
+            "QUERIES.md is stale: rerun tools/gen_query_index.py"
+        )

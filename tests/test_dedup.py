@@ -207,49 +207,6 @@ class TestMinHashLSH:
         assert got == expected
 
 
-class TestDuplicateClusters:
-    def _pairs(self, spark, rows):
-        return spark.createDataFrame(rows, "id_a long, id_b long")
-
-    def test_chain_merges_into_one_cluster(self, spark):
-        from aircraftutilization_etl_spark.operators.dedup import (
-            duplicate_clusters,
-        )
-
-        # chain 1-2-3 plus separate pair 10-11
-        pairs = self._pairs(spark, [(1, 2), (2, 3), (10, 11)])
-        got = {
-            r["doc_id"]: r["cluster_id"]
-            for r in duplicate_clusters(pairs).collect()
-        }
-        assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-
-    def test_long_chain_converges(self, spark):
-        from aircraftutilization_etl_spark.operators.dedup import (
-            duplicate_clusters,
-        )
-
-        pairs = self._pairs(spark, [(i, i + 1) for i in range(8)])
-        got = {
-            r["doc_id"]: r["cluster_id"]
-            for r in duplicate_clusters(pairs).collect()
-        }
-        assert got == {i: 0 for i in range(9)}
-
-    def test_nonconvergence_raises(self, spark):
-        import pytest
-
-        from aircraftutilization_etl_spark.operators.dedup import (
-            duplicate_clusters,
-        )
-
-        # diameter-4 chain can't finish in 1 round → must raise, not
-        # silently return split clusters (ADVICE r1)
-        pairs = self._pairs(spark, [(i, i + 1) for i in range(4)])
-        with pytest.raises(RuntimeError, match="did not converge"):
-            duplicate_clusters(pairs, max_iterations=1).collect()
-
-
 class TestSimHash:
     def test_identical_text_identical_print(self, spark):
         df = _docs(spark, [(1, "alpha beta gamma"), (2, "alpha beta gamma")])

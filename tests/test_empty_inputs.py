@@ -81,7 +81,7 @@ def test_pq_train_and_adc_empty_input(spark, empty_emb):
         pq_train,
     )
 
-    books, scodes = pq_train(empty_emb, m=2, k=4, iterations=1)
+    books, scodes = pq_train(empty_emb, train_limit=0, m=2, k=4, iterations=1)
     assert books == []
     assert scodes.count() == 0
 
@@ -97,8 +97,8 @@ def test_pq_train_and_adc_empty_input(spark, empty_emb):
 
 
 def test_pq_train_empty_with_train_limit(spark, empty_emb):
-    """The bounded-sample branch must fall through to the same empty
-    contract (the id-prefix sample of an empty corpus is empty)."""
+    """A positive limit on an empty corpus keeps the same empty
+    contract (both the id-prefix sample and the seeds are empty)."""
     from aircraftutilization_etl_spark.operators.clustering import pq_train
 
     books, scodes = pq_train(empty_emb, m=2, k=4, iterations=1,

@@ -77,6 +77,24 @@ def test_triangle_stats_hand_graph(spark):
         assert out[n]["n_triangles"] == 0 and out[n]["degree"] == 2
 
 
+def _union_find_components(edges):
+    """Pure-Python model: node -> the minimum node id of its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in list(parent)}
+
+
 class TestStarComponents:
     def _pairs(self, spark, edges):
         return spark.createDataFrame(edges, "id_a long, id_b long")
@@ -86,20 +104,18 @@ class TestStarComponents:
             connected_components_star,
         )
 
-        # a 60-node path: label propagation would need 60 rounds; star
-        # contraction must finish far inside 25
-        chain = [(i, i + 1) for i in range(60)]
-        out = connected_components_star(self._pairs(spark, chain))
-        rows = out.collect()
-        assert len(rows) == 61
-        assert {r.component for r in rows} == {0}
+        # paths of 8 and 60 edges: label propagation would need as many
+        # rounds as edges; star contraction must finish far inside 25
+        for n in (8, 60):
+            chain = [(i, i + 1) for i in range(n)]
+            rows = connected_components_star(self._pairs(spark, chain)).collect()
+            assert {r.node: r.component for r in rows} == {
+                i: 0 for i in range(n + 1)
+            }
 
-    def test_matches_label_propagation_on_random_graphs(self, spark):
+    def test_matches_union_find_on_random_graphs(self, spark):
         import random
 
-        from aircraftutilization_etl_spark.operators.dedup import (
-            duplicate_clusters,
-        )
         from aircraftutilization_etl_spark.operators.graph import (
             connected_components_star,
         )
@@ -110,28 +126,59 @@ class TestStarComponents:
                 (rng.randrange(40), rng.randrange(40)) for _ in range(35)
             ]
             edges = [(a, b) for a, b in edges if a != b]
-            pairs = self._pairs(spark, edges)
             star = {
-                (r.node, r.component)
-                for r in connected_components_star(pairs).collect()
+                r.node: r.component
+                for r in connected_components_star(
+                    self._pairs(spark, edges)
+                ).collect()
             }
-            lp = {
-                (r.doc_id, r.cluster_id)
-                for r in duplicate_clusters(pairs, max_iterations=40).collect()
-            }
-            assert star == lp, f"trial {trial} diverged"
+            assert star == _union_find_components(edges), (
+                f"trial {trial} diverged"
+            )
 
     def test_two_components_and_isolated_root_labels(self, spark):
         from aircraftutilization_etl_spark.operators.graph import (
             connected_components_star,
         )
 
-        pairs = self._pairs(spark, [(5, 9), (9, 7), (20, 30)])
-        got = {
-            r.node: r.component
-            for r in connected_components_star(pairs).collect()
+        cases = [
+            ([(5, 9), (9, 7), (20, 30)], {5: 5, 9: 5, 7: 5, 20: 20, 30: 20}),
+            # chain 1-2-3 plus a separate pair 10-11
+            ([(1, 2), (2, 3), (10, 11)], {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}),
+        ]
+        for edges, want in cases:
+            got = {
+                r.node: r.component
+                for r in connected_components_star(
+                    self._pairs(spark, edges)
+                ).collect()
+            }
+            assert got == want
+
+    def test_empty_pairs_give_typed_empty_result(self, spark):
+        import threading
+
+        from aircraftutilization_etl_spark.operators.graph import (
+            connected_components_star,
+        )
+
+        # the fingerprint Observation must still fire when every stage
+        # is empty — run in a thread so a lost metric fails, not hangs
+        got = {}
+
+        def run():
+            out = connected_components_star(self._pairs(spark, []))
+            got["schema"] = out.schema.simpleString()
+            got["rows"] = out.collect()
+
+        t = threading.Thread(target=run, daemon=True)
+        t.start()
+        t.join(timeout=300)
+        assert not t.is_alive(), "connected_components_star hung on empty input"
+        assert got == {
+            "schema": "struct<node:bigint,component:bigint>",
+            "rows": [],
         }
-        assert got == {5: 5, 9: 5, 7: 5, 20: 20, 30: 20}
 
 
 class TestKnnBfs:

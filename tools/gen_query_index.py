@@ -10,7 +10,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def main() -> int:
+def render() -> str:
+    """The full text of QUERIES.md for the live catalog."""
     from aircraftutilization_etl_spark.plans import CATALOG
 
     lines = [
@@ -32,12 +33,18 @@ def main() -> int:
             doc = doc[:157] + "..."
         kind = "hash" if qd.oracle else "rows"
         lines.append(f"| `{name}` | {kind} | {doc} |")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> int:
+    from aircraftutilization_etl_spark.plans import CATALOG
+
     out = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "QUERIES.md",
     )
-    with open(out, "w") as f:
-        f.write("\n".join(lines) + "\n")
+    with open(out, "w", encoding="utf-8") as f:
+        f.write(render())
     print(f"{out}: {len(CATALOG)} queries")
     return 0
 
