@@ -329,8 +329,8 @@ def pq_encode(
     scodes: DataFrame, codebooks: list[list[list[int]]]
 ) -> DataFrame:
     """(id, sub, svec) + codebooks → (id, codes array<int>): each vector
-    compressed to m codes (the PQ index payload — 4 bytes replacing
-    d floats here; 1:64 at d=64)."""
+    compressed to m codes (the PQ index payload — 16 bytes replacing
+    d floats at m=16; 1:16 at d=64)."""
     return (
         _pq_assign(scodes, codebooks)
         .groupBy("vec_id")

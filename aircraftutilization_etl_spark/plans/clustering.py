@@ -9,16 +9,27 @@ formulated on the int8 grid (see operators/clustering.py).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators.clustering import kmeans_int8
-from ..operators.distribute import CORPUS_CACHE, MODEL_CACHE
+from ..operators.clustering import ivfpq_adc_topk, kmeans_int8, pq_adc_topk
+from ..operators.distribute import CORPUS_CACHE
 from ..operators.graph import connected_components_star
-from ..operators.similarity import cosine_pairs, cosine_topk, ivf_topk
+from ..operators.similarity import cosine_pairs, cosine_topk, ivf_topk, srp_topk
 from .catalog import query, table
-from .similarity import _COSINE_SQL, N_QUERIES, NEAR_DUP_COSINE, TOP_K
+from .similarity import (
+    _COSINE_SQL,
+    IVF_RECALL_SQL,
+    MRL_DIMS,
+    MRL_RECALL_SQL,
+    N_QUERIES,
+    NEAR_DUP_COSINE,
+    SRP_RECALL_SQL,
+    TOP_K,
+)
 
 K_CLUSTERS = 8
 KMEANS_ITERS = 2
@@ -223,57 +234,6 @@ KMEANS_RECALL_SQL = f"""
     GROUP BY e.query_id
     ORDER BY e.query_id
     """
-
-
-def q_emb_kmeans_recall(
-    spark: SparkSession,
-    sf_dir: str,
-    exact_topk: DataFrame | None = None,
-    cells: DataFrame | None = None,
-) -> DataFrame:
-    """Measured recall@5 of IVF ANN probing the k-means-TRAINED cells —
-    the third column of the ANN strategy comparison: q_emb_ivf_recall
-    (untrained label cells, ≈0.11 mean) and q_emb_srp_recall
-    (hyperplane buckets, ≈0.30) asked what a given cell map buys;
-    this gauge answers what training the quantizer on the corpus itself
-    buys — measured ≈0.46 mean at sf0.01, a 4× recall gain over the
-    untrained cells at identical probe cost, completing the decision
-    table an operator reads before picking an ANN strategy at scale.
-
-    Scale: the quantizer is the k-means plan (map-only assignment, k·d
-    update groups); ground truth is the corpus-streaming GEMM; the
-    comparison join is top-k-sized.
-    """
-    e = table(spark, sf_dir, "embeddings")
-    if cells is None:
-        cells = kmeans_int8(
-            e, k=K_CLUSTERS, iterations=KMEANS_ITERS
-        ).select("vec_id", "cluster")
-    cells = cells.select("vec_id", F.col("cluster").alias("kcell"))
-    with_cells = e.join(cells, "vec_id").select(
-        "vec_id", "embedding", F.col("kcell").alias("label")
-    )
-    queries = with_cells.filter(F.col("vec_id") < N_QUERIES)
-    exact = (
-        exact_topk
-        if exact_topk is not None
-        else cosine_topk(queries, with_cells, TOP_K)
-    ).select("query_id", F.col("neighbor_id").alias("exact_neighbor"))
-    approx = ivf_topk(queries, with_cells, TOP_K).select(
-        "query_id", F.col("neighbor_id").alias("ivf_neighbor")
-    )
-    joined = exact.join(
-        approx,
-        (exact["query_id"] == approx["query_id"])
-        & (exact["exact_neighbor"] == approx["ivf_neighbor"]),
-        "left",
-    ).select(exact["query_id"], approx["ivf_neighbor"])
-    return joined.groupBy("query_id").agg(
-        F.count("ivf_neighbor").alias("n_hits"),
-        F.expr(
-            f"CAST(COUNT(ivf_neighbor) * 1000000 DIV {TOP_K} AS BIGINT)"
-        ).alias("recall_ppm"),
-    )
 
 
 N_NEG_DRAWS = 3  # 3 distinct candidate indices can't all hit {anchor, positive}
@@ -519,8 +479,6 @@ def q_emb_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the K_PQ seed vectors in one collect and runs the Lloyd
     rounds driver-side; every run trains its own codebooks.
     """
-    from ..operators.clustering import pq_adc_topk
-
     _, scodes, encoded, books = _pq_pipeline(spark, sf_dir)
     out = pq_adc_topk(
         scodes, encoded, books, N_QUERIES, TOP_K
@@ -554,58 +512,6 @@ PQ_RECALL_SQL = f"""
     GROUP BY e.query_id
     ORDER BY e.query_id
     """
-
-
-def q_emb_pq_recall(
-    spark: SparkSession,
-    sf_dir: str,
-    exact_topk: DataFrame | None = None,
-    pq: tuple | None = None,
-) -> DataFrame:
-    """Measured recall@5 of PQ-ADC against exact-cosine ground truth —
-    the fourth column of the ANN strategy table (untrained IVF cells,
-    SRP buckets, k-means cells, now 4-byte PQ codes): what does 64×
-    compression cost in recall at identical query cost? Unit-norm
-    corpus makes ADC-L2 order directly comparable with cosine order.
-
-    Scale: ground truth is the corpus-streaming GEMM; the PQ side is
-    the map-only ADC plan; the comparison join is top-k-sized.
-    """
-    from ..operators.clustering import pq_adc_topk
-
-    e, scodes, encoded, books = (
-        pq if pq is not None else _pq_pipeline(spark, sf_dir)
-    )
-    adc = pq_adc_topk(scodes, encoded, books, N_QUERIES, TOP_K).select(
-        "query_id", F.col("neighbor_id").alias("adc_neighbor")
-    )
-    queries = e.filter(F.col("vec_id") < N_QUERIES)
-    exact = (
-        exact_topk
-        if exact_topk is not None
-        else cosine_topk(queries, e, TOP_K)
-    ).select("query_id", F.col("neighbor_id").alias("exact_neighbor"))
-    joined = exact.join(
-        adc,
-        (exact["query_id"] == adc["query_id"])
-        & (exact["exact_neighbor"] == adc["adc_neighbor"]),
-        "left",
-    ).select(exact["query_id"], adc["adc_neighbor"])
-    out = (
-        joined.groupBy("query_id")
-        .agg(
-            F.count("adc_neighbor").alias("n_hits"),
-            F.expr(
-                f"CAST(COUNT(adc_neighbor) * 1000000 DIV {TOP_K} AS BIGINT)"
-            ).alias("recall_ppm"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    if pq is None:
-        # a SHARED pipeline's caches belong to the caller (the recall
-        # report unpersists once after every leg has materialized)
-        scodes.unpersist()
-    return out
 
 
 _QUANT_EXPL = """
@@ -753,29 +659,6 @@ _IVFPQ_CTES = f"""{_KMEANS_CTES},
     )"""
 
 
-def _ivfpq_spark(
-    spark: SparkSession,
-    sf_dir: str,
-    pq: tuple | None = None,
-    cells: DataFrame | None = None,
-):
-    from ..operators.clustering import ivfpq_adc_topk
-
-    e, scodes, encoded, books = (
-        pq if pq is not None else _pq_pipeline(spark, sf_dir)
-    )
-    if cells is None:
-        cells = kmeans_int8(
-            e, k=K_CLUSTERS, iterations=KMEANS_ITERS
-        ).select("vec_id", "cluster")
-    out = ivfpq_adc_topk(
-        scodes, encoded, books, cells, N_QUERIES, TOP_K
-    ).localCheckpoint(eager=True)
-    if pq is None:
-        scodes.unpersist()
-    return out
-
-
 @query(
     "q_emb_ivfpq_topk",
     f"""
@@ -800,7 +683,15 @@ def q_emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     PQ codebooks are trained per run by _pq_pipeline (see
     q_emb_pq_topk).
     """
-    return _ivfpq_spark(spark, sf_dir)
+    e, scodes, encoded, books = _pq_pipeline(spark, sf_dir)
+    cells = kmeans_int8(e, k=K_CLUSTERS, iterations=KMEANS_ITERS).select(
+        "vec_id", "cluster"
+    )
+    out = ivfpq_adc_topk(
+        scodes, encoded, books, cells, N_QUERIES, TOP_K
+    ).localCheckpoint(eager=True)
+    scodes.unpersist()
+    return out
 
 
 IVFPQ_RECALL_SQL = f"""
@@ -827,60 +718,6 @@ IVFPQ_RECALL_SQL = f"""
     GROUP BY e.query_id
     ORDER BY e.query_id
     """
-
-
-def q_emb_ivfpq_recall(
-    spark: SparkSession,
-    sf_dir: str,
-    exact_topk: DataFrame | None = None,
-    pq: tuple | None = None,
-    cells: DataFrame | None = None,
-) -> DataFrame:
-    """Measured recall@5 of IVF-PQ against brute-force cosine ground
-    truth — the honesty gauge for the compound approximation (coarse
-    pruning loss x code-quantization loss). Measured ~ 0.28 mean at
-    sf0.01, completing the ANN comparison table: untrained cells
-    ~ 0.11, SRP ~ 0.30, flat PQ ~ 0.34, trained cells ~ 0.46 — i.e.
-    probe=1 pruning costs flat PQ ~6 points here; at production scale
-    the remedy is multi-probe, and the cost it buys back is the
-    cell-count compute cut.
-
-    Scale: ground truth is the streaming GEMM top-k; the IVF-PQ leg is
-    the cell-pruned ADC join; the comparison is a per-query left join
-    over two k-row-per-query frames.
-    """
-    from ..operators.similarity import cosine_topk
-
-    e = table(spark, sf_dir, "embeddings")
-    approx = _ivfpq_spark(spark, sf_dir, pq=pq, cells=cells)
-    exact = (
-        exact_topk
-        if exact_topk is not None
-        else cosine_topk(e.filter(F.col("vec_id") < N_QUERIES), e, TOP_K)
-    ).select("query_id", F.col("neighbor_id").alias("exact_neighbor"))
-    hits = exact.join(
-        approx.select(
-            "query_id", F.col("neighbor_id").alias("exact_neighbor")
-        ),
-        ["query_id", "exact_neighbor"],
-        "left_semi",
-    )
-    per_q = hits.groupBy("query_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_hits")
-    )
-    return (
-        exact.select("query_id")
-        .distinct()
-        .join(per_q, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("bigint").alias("n_hits"),
-            F.expr(f"COALESCE(n_hits, 0) * 1000000 DIV {TOP_K}").alias(
-                "recall_ppm"
-            ),
-        )
-        .orderBy("query_id")
-    )
 
 
 N_PROBE = 2
@@ -937,19 +774,11 @@ IVFPQ2_RECALL_SQL = f"""
     """
 
 
-def q_emb_ivfpq_probe2_recall(
-    spark: SparkSession,
-    sf_dir: str,
-    exact_topk: DataFrame | None = None,
-    pq: tuple | None = None,
-    cells_model: tuple | None = None,
-) -> DataFrame:
-    """IVF-PQ at probe=2: each query additionally scores its
-    second-nearest coarse cell — the dial every IVF deployment turns
-    (probes trade compute back for recall). Against probe=1
-    (q_emb_ivfpq_recall, ~0.28) the extra cell buys ~3 points here
-    (measured ~0.31 mean at sf0.01), converging toward flat PQ's 0.34
-    ceiling as probes approach the cell count.
+def _ivfpq_probe2_topk(pq: tuple, cells: DataFrame, cents) -> DataFrame:
+    """IVF-PQ at probe=2 → (query_id, neighbor_id) top-k: each query
+    additionally scores its second-nearest coarse cell — the dial every
+    IVF deployment turns (probes trade compute back for recall).
+    ``cells``/``cents`` are kmeans_int8's (assignment, centroids).
 
     Scale: the probe list is model-sized (n_queries x probes rows
     riding the broadcast LUT frame); corpus-side cost grows linearly
@@ -962,29 +791,14 @@ def q_emb_ivfpq_probe2_recall(
         _adc_rank,
         _adc_score_expr,
         _sq_dist_expr,
-        kmeans_int8,
     )
-    from ..operators.similarity import cosine_topk, quantize_embeddings
-    from pyspark.sql.window import Window as _W
+    from ..operators.similarity import quantize_embeddings
 
-    e = table(spark, sf_dir, "embeddings")
-    _, scodes, encoded, books = (
-        pq if pq is not None else _pq_pipeline(spark, sf_dir)
-    )
-    corpus_cells, cents = (
-        cells_model
-        if cells_model is not None
-        else kmeans_int8(
-            e, k=K_CLUSTERS, iterations=KMEANS_ITERS, return_model=True
-        )
-    )
+    e, scodes, encoded, books = pq
     if not cents:
-        # empty corpus: no coarse cells to probe — typed empty per-query
-        # recall frame (the report leg aggregates it to n_queries=0)
-        if pq is None:
-            scodes.unpersist()
-        return spark.createDataFrame(
-            [], "query_id long, n_hits bigint, recall_ppm bigint"
+        # empty corpus: no coarse cells to probe
+        return e.sparkSession.createDataFrame(
+            [], "query_id long, neighbor_id long"
         )
     qcodes = quantize_embeddings(
         e.filter(F.col("vec_id") < N_QUERIES)
@@ -995,7 +809,7 @@ def q_emb_ivfpq_probe2_recall(
             F.array(*[_sq_dist_expr(c) for c in cents])
         ).alias("cell", "dist"),
     )
-    wp = _W.partitionBy("query_id").orderBy("dist", "cell")
+    wp = Window.partitionBy("query_id").orderBy("dist", "cell")
     probes = (
         melted.withColumn("rn", F.row_number().over(wp))
         .filter(F.col("rn") <= N_PROBE)
@@ -1004,7 +818,7 @@ def q_emb_ivfpq_probe2_recall(
     luts = _adc_luts(scodes, books, N_QUERIES).join(
         probes, "query_id"
     )
-    cn = corpus_cells.select(
+    cn = cells.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("cluster").alias("cell"),
     )
@@ -1019,47 +833,14 @@ def q_emb_ivfpq_probe2_recall(
             _adc_score_expr(len(books)).alias("adc_dist"),
         )
     )
-    approx = (
-        _adc_rank(scored, TOP_K)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
-    )
-    if pq is None:
-        scodes.unpersist()
-    exact = (
-        exact_topk
-        if exact_topk is not None
-        else cosine_topk(e.filter(F.col("vec_id") < N_QUERIES), e, TOP_K)
-    ).select("query_id", F.col("neighbor_id").alias("exact_neighbor"))
-    per_q = (
-        exact.join(
-            approx.withColumnRenamed("neighbor_id", "exact_neighbor"),
-            ["query_id", "exact_neighbor"],
-            "left_semi",
-        )
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_hits"))
-    )
-    return (
-        exact.select("query_id")
-        .distinct()
-        .join(per_q, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("bigint").alias("n_hits"),
-            F.expr(f"COALESCE(n_hits, 0) * 1000000 DIV {TOP_K}").alias(
-                "recall_ppm"
-            ),
-        )
-        .orderBy("query_id")
-    )
+    return _adc_rank(scored, TOP_K).select("query_id", "neighbor_id")
 
 
 RERANK_CANDIDATES = 20
 
 # shared SQL leg: ADC top-RERANK_CANDIDATES re-scored by exact cosine
-# (both rerank queries splice this after _PQ_CTES/_PQ_ADC_CTES so the
-# two oracles can never drift apart)
+# (q_emb_pq_rerank and the report's pq_rerank oracle splice this after
+# _PQ_CTES/_PQ_ADC_CTES so the two oracles can never drift apart)
 _PQ_RERANK_CTES = f"""
     q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
           FROM embeddings WHERE vec_id < {N_QUERIES}),
@@ -1082,20 +863,13 @@ _PQ_RERANK_CTES = f"""
     )"""
 
 
-def _pq_rerank_topk(
-    spark: SparkSession, sf_dir: str, pq: tuple | None = None
-):
-    """Shared Spark leg of the two-stage retrieval: PQ-ADC overfetch
-    (RERANK_CANDIDATES) re-scored by exact cosine, ranked per query →
-    (ranked_df, scodes). Caller materializes its projection and
-    unpersists scodes (unless a shared ``pq`` pipeline was passed in —
-    then the pipeline's owner manages the cache lifetime)."""
-    from ..operators.clustering import pq_adc_topk
+def _pq_rerank_topk(pq: tuple) -> DataFrame:
+    """Spark leg of the two-stage retrieval over a _pq_pipeline build:
+    PQ-ADC overfetch (RERANK_CANDIDATES) re-scored by exact cosine,
+    ranked per query. The caller owns the pipeline's caches."""
     from ..operators.similarity import _as_double, cosine_expr
 
-    e, scodes, encoded, books = (
-        pq if pq is not None else _pq_pipeline(spark, sf_dir)
-    )
+    e, scodes, encoded, books = pq
     cands = pq_adc_topk(
         scodes, encoded, books, N_QUERIES, RERANK_CANDIDATES
     ).select("query_id", "neighbor_id")
@@ -1122,7 +896,7 @@ def _pq_rerank_topk(
         )
         .withColumn("rank", F.row_number().over(w))
     )
-    return ranked, scodes
+    return ranked
 
 
 @query(
@@ -1139,17 +913,17 @@ def _pq_rerank_topk(
 )
 def q_emb_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage retrieval, the production ANN serving architecture:
-    PQ-ADC generates {RERANK_CANDIDATES} compressed-domain candidates
+    PQ-ADC generates 20 (RERANK_CANDIDATES) compressed-domain candidates
     per query, then EXACT cosine re-scores only those and keeps the
-    top-5 — candidate generation pays 4 bytes/vector bandwidth, the
+    top-5 — candidate generation pays 16 bytes/vector bandwidth, the
     rerank pays full-precision cost on a constant-size set. This is
-    how Faiss/ScaNN deployments recover the precision the 1:64
+    how Faiss/ScaNN deployments recover the precision the 1:16
     compression gives up (flat PQ@5 recall ≈ 0.34 here; the 4×
-    overfetch + exact rerank lifts it to ≈ 0.61 — see
-    q_emb_pq_rerank_recall — and every kept neighbor is ordered by
+    overfetch + exact rerank lifts it to ≈ 0.61 — the pq_rerank row of
+    q_emb_ann_recall_report — and every kept neighbor is ordered by
     TRUE similarity).
 
-    Scale: the candidate set is queries × {RERANK_CANDIDATES} rows —
+    Scale: the candidate set is queries × 20 candidates rows —
     the exact-rerank join touches that, never the corpus; full vectors
     are fetched by equi-join on the neighbor id (at 100 TB: a
     broadcast-hash probe into the vector store's id index).
@@ -1160,9 +934,10 @@ def q_emb_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     PQ codebooks are trained per run by _pq_pipeline (see
     q_emb_pq_topk).
     """
-    ranked, scodes = _pq_rerank_topk(spark, sf_dir)
+    pq = _pq_pipeline(spark, sf_dir)
     out = (
-        ranked.filter(F.col("rank") <= TOP_K)
+        _pq_rerank_topk(pq)
+        .filter(F.col("rank") <= TOP_K)
         .select(
             "query_id",
             "neighbor_id",
@@ -1172,7 +947,7 @@ def q_emb_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("query_id", "rank")
         .localCheckpoint(eager=True)
     )
-    scodes.unpersist()
+    pq[1].unpersist()  # scodes, persisted by pq_train
     return out
 
 
@@ -1198,56 +973,6 @@ PQ_RERANK_RECALL_SQL = f"""
     GROUP BY e.query_id
     ORDER BY e.query_id
     """
-
-
-def q_emb_pq_rerank_recall(
-    spark: SparkSession,
-    sf_dir: str,
-    exact_topk: DataFrame | None = None,
-    pq: tuple | None = None,
-) -> DataFrame:
-    """Measured recall@5 of the two-stage PQ→exact-rerank run — the
-    number that justifies the overfetch dial: reranking a 4×
-    candidate set recovers much of what flat PQ@5 loses to 64×
-    compression — measured mean recall 0.61 vs flat PQ's 0.34 on the
-    synthetic corpus (a reranked hit requires only that the true
-    neighbor survive into the ADC top-20, not its exact ADC rank).
-    Compare the q_emb_pq_recall column of the ANN strategy table.
-
-    Scale: identical legs to the rerank query plus the top-k-sized
-    ground-truth comparison join.
-    """
-    ranked, scodes = _pq_rerank_topk(spark, sf_dir, pq=pq)
-    rr = ranked.filter(F.col("rank") <= TOP_K).select(
-        "query_id", F.col("neighbor_id").alias("rr_neighbor")
-    )
-    e = table(spark, sf_dir, "embeddings")
-    queries = e.filter(F.col("vec_id") < N_QUERIES)
-    exact = (
-        exact_topk
-        if exact_topk is not None
-        else cosine_topk(queries, e, TOP_K)
-    ).select("query_id", F.col("neighbor_id").alias("exact_neighbor"))
-    joined = exact.join(
-        rr,
-        (exact["query_id"] == rr["query_id"])
-        & (exact["exact_neighbor"] == rr["rr_neighbor"]),
-        "left",
-    ).select(exact["query_id"], rr["rr_neighbor"])
-    out = (
-        joined.groupBy("query_id")
-        .agg(
-            F.count("rr_neighbor").alias("n_hits"),
-            F.expr(
-                f"CAST(COUNT(rr_neighbor) * 1000000 DIV {TOP_K} AS BIGINT)"
-            ).alias("recall_ppm"),
-        )
-        .orderBy("query_id")
-        .localCheckpoint(eager=True)
-    )
-    if pq is None:
-        scodes.unpersist()
-    return out
 
 
 @query(
@@ -1347,29 +1072,24 @@ def q_emb_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Consolidated ANN recall report (r5): the eight per-method recall gauges
-# (untrained IVF cells, SRP-LSH, k-means cells, matryoshka truncation,
-# flat PQ-ADC, IVF-PQ probe=1/probe=2, PQ→exact rerank) used to be eight
-# separate catalog queries; each is now a plain per-query builder above /
-# in plans/similarity.py, and ONE catalog entry aggregates them into the
-# ANN strategy decision table — same capability, an 8× smaller slice of
-# the driver's 50-query correctness window (VERDICT r4 #3).
+# ANN recall report: one catalog entry measures every approximate retrieval
+# path against one brute-force ground truth. Each method's top-k comes
+# straight from the operators its serving query uses; one join scores all
+# eight. The oracle aggregates each method's per-query recall SQL (the
+# *_RECALL_SQL strings here and in plans/similarity.py).
 # ---------------------------------------------------------------------------
 
-
-def _recall_legs():
-    from . import similarity as _sim
-
-    return [
-        ("ivf_label_cells", _sim.q_emb_ivf_recall, _sim.IVF_RECALL_SQL),
-        ("ivfpq_probe1", q_emb_ivfpq_recall, IVFPQ_RECALL_SQL),
-        ("ivfpq_probe2", q_emb_ivfpq_probe2_recall, IVFPQ2_RECALL_SQL),
-        ("kmeans_cells", q_emb_kmeans_recall, KMEANS_RECALL_SQL),
-        ("matryoshka_trunc", _sim.q_emb_matryoshka_recall, _sim.MRL_RECALL_SQL),
-        ("pq_adc", q_emb_pq_recall, PQ_RECALL_SQL),
-        ("pq_rerank", q_emb_pq_rerank_recall, PQ_RERANK_RECALL_SQL),
-        ("srp_lsh", _sim.q_emb_srp_recall, _sim.SRP_RECALL_SQL),
-    ]
+# method -> per-query recall@5 oracle, in the report's row order
+_ANN_RECALL_SQL = {
+    "ivf_label_cells": IVF_RECALL_SQL,
+    "ivfpq_probe1": IVFPQ_RECALL_SQL,
+    "ivfpq_probe2": IVFPQ2_RECALL_SQL,
+    "kmeans_cells": KMEANS_RECALL_SQL,
+    "matryoshka_trunc": MRL_RECALL_SQL,
+    "pq_adc": PQ_RECALL_SQL,
+    "pq_rerank": PQ_RERANK_RECALL_SQL,
+    "srp_lsh": SRP_RECALL_SQL,
+}
 
 
 def _ann_recall_oracle() -> str:
@@ -1381,9 +1101,19 @@ def _ann_recall_oracle() -> str:
            CAST(SUM(recall_ppm) // COUNT(*) AS BIGINT) AS mean_recall_ppm
     FROM ({sql})
     """
-        for method, _fn, sql in _recall_legs()
+        for method, sql in _ANN_RECALL_SQL.items()
     ]
     return " UNION ALL ".join(blocks) + " ORDER BY method"
+
+
+def _tagged(topk: dict[str, DataFrame]) -> DataFrame:
+    """method -> top-k frame, as one (method, query_id, neighbor_id)
+    union."""
+    frames = [
+        df.select(F.lit(method).alias("method"), "query_id", "neighbor_id")
+        for method, df in topk.items()
+    ]
+    return reduce(DataFrame.unionByName, frames)
 
 
 @query("q_emb_ann_recall_report", _ann_recall_oracle())
@@ -1397,90 +1127,102 @@ def q_emb_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     SRP-LSH ≈0.30, flat PQ-ADC ≈0.34, k-means-trained cells ≈0.46,
     PQ overfetch + exact rerank ≈0.61.
 
-    Each leg composes the SAME Spark pipelines the corresponding top-k
-    catalog queries run (per-cell equi-joins, broadcast LUT ADC,
-    streaming GEMM ground truth) and each oracle leg replays its
-    pipeline in SQL — so a hash match certifies all eight retrieval
-    paths at once. Consolidated from eight per-query gauges in r5 so
-    the driver's sampled correctness window covers the whole table in
-    one row-set. The PQ legs share one _pq_pipeline build, so the
-    codebooks are trained once per run.
+    Each method's top-k is built from the SAME operators its serving
+    query runs (ivf_topk over label cells or k-means cells, srp_topk,
+    cosine_topk on the 32-dim prefix, PQ-ADC flat / IVF-PQ probe=1 and
+    probe=2 / exact rerank over one _pq_pipeline and one kmeans_int8
+    training), and each oracle leg replays that pipeline in SQL, so a
+    hash match certifies all eight retrieval paths at once. Scoring is
+    one plan: the ground truth, exploded over the method names, is
+    left-joined to the union of the method-tagged top-k frames and
+    counted per (method, query), then per method; the method list is
+    the outer side, so an empty corpus still yields eight rows.
+
+    Cache ownership: the report releases every cache it makes. The four
+    PQ frames are the only readers of scodes (persisted by pq_train)
+    and the encoded codes (persisted here); their union is eagerly
+    localCheckpointed once, and both caches are unpersisted right
+    after. The ground truth is read once by the scoring plan, so it is
+    not persisted.
 
     Scale: ground truth is the corpus-streaming GEMM (the audit cost,
     run on a sample at production scale); every approximate leg is
-    bucketed or broadcast-bounded exactly as its serving twin.
+    bucketed or broadcast-bounded exactly as its serving twin; the
+    scoring joins are (methods x queries x k)-sized.
     """
-    from ..operators.similarity import cosine_topk
-
-    # ONE ground truth for all eight legs (r11 opt): every leg audits
-    # against the SAME brute-force cosine top-k (identical queries,
-    # corpus vectors, k and tie-breaks — the kmeans leg's label-joined
-    # corpus carries the same embedding values), yet the composed form
-    # re-ran the streaming GEMM + rank window once per leg (profiled:
-    # 8x the single heaviest subtree in the report). Compute it once,
-    # persist the (queries x k)-sized result, and hand it to each leg
-    # via the legs' exact_topk parameter; every leg's standalone query
-    # (its own declared oracle) is unchanged — the parameter defaults
-    # to the leg computing its own truth.
-    #
-    # r12 (VERDICT r11 #5): the same sharing for the APPROXIMATE side's
-    # common prefixes. The four PQ legs each rebuilt the quantize +
-    # subvector-split frame and re-ran the encode aggregation, and
-    # three legs (probe1, probe2, kmeans_cells) each re-trained the
-    # SAME deterministic coarse quantizer (identical k/iterations/
-    # protocol — bit-identical cells by construction). One _pq_pipeline
-    # (scodes persisted by pq_train; the encoded codes persisted here)
-    # and ONE kmeans training now feed every leg through the legs' new
-    # pq/cells parameters — each parameter defaults to self-computed,
-    # so every standalone declared query is unchanged. The shared
-    # caches are released right after the loop: every PQ leg eagerly
-    # localCheckpoints its approximate result while building, so no
-    # lazy reference outlives the loop.
-    e = table(spark, sf_dir, "embeddings")
-    truth = (
-        cosine_topk(e.filter(F.col("vec_id") < N_QUERIES), e, TOP_K)
-        .select("query_id", "neighbor_id")
-        # (queries x k)-sized: deserialized memory is the right class,
-        # declared explicitly (VERDICT r11 #3)
-        .persist(MODEL_CACHE)
-    )
-    _, scodes, encoded, books = _pq_pipeline(spark, sf_dir)
+    pq = _pq_pipeline(spark, sf_dir)
+    e, scodes, encoded, books = pq
     # corpus-scale (one codes row per vector): serialized + spill
-    encoded = encoded.persist(CORPUS_CACHE)
-    corpus_cells, cents = kmeans_int8(
+    encoded.persist(CORPUS_CACHE)
+    cells, cents = kmeans_int8(
         e, k=K_CLUSTERS, iterations=KMEANS_ITERS, return_model=True
     )
-    cells = corpus_cells.select("vec_id", "cluster")
-    pq = (e, scodes, encoded, books)
-    leg_inputs: dict[str, dict] = {
-        "ivfpq_probe1": {"pq": pq, "cells": cells},
-        "ivfpq_probe2": {"pq": pq, "cells_model": (corpus_cells, cents)},
-        "kmeans_cells": {"cells": cells},
-        "pq_adc": {"pq": pq},
-        "pq_rerank": {"pq": pq},
-    }
-    parts = []
-    for method, fn, _sql in _recall_legs():
-        per_q = fn(spark, sf_dir, exact_topk=truth, **leg_inputs.get(method, {}))
-        parts.append(
-            per_q.agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_queries"),
-                F.sum("n_hits").cast("bigint").alias("total_hits"),
-                F.expr(
-                    "CAST(SUM(recall_ppm) DIV COUNT(*) AS BIGINT)"
-                ).alias("mean_recall_ppm"),
-            ).select(
-                F.lit(method).alias("method"),
-                "n_queries",
-                "total_hits",
-                "mean_recall_ppm",
-            )
-        )
-    # every PQ leg has materialized (eager localCheckpoint) — release
-    # the shared kernel caches before the report's own action
+    cell_ids = cells.select("vec_id", "cluster")
+    pq_topk = _tagged(
+        {
+            "ivfpq_probe1": ivfpq_adc_topk(
+                scodes, encoded, books, cell_ids, N_QUERIES, TOP_K
+            ),
+            "ivfpq_probe2": _ivfpq_probe2_topk(pq, cells, cents),
+            "pq_adc": pq_adc_topk(scodes, encoded, books, N_QUERIES, TOP_K),
+            "pq_rerank": _pq_rerank_topk(pq).filter(F.col("rank") <= TOP_K),
+        }
+    ).localCheckpoint(eager=True)
     scodes.unpersist()
     encoded.unpersist()
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.orderBy("method")
+
+    queries = e.filter(F.col("vec_id") < N_QUERIES)
+    with_cells = e.select("vec_id", "embedding").join(
+        cell_ids.withColumnRenamed("cluster", "label"), "vec_id"
+    )
+    trunc = lambda df: df.select(  # noqa: E731
+        "vec_id", F.slice("embedding", 1, MRL_DIMS).alias("embedding")
+    )
+    approx = _tagged(
+        {
+            "ivf_label_cells": ivf_topk(queries, e, TOP_K),
+            "kmeans_cells": ivf_topk(
+                with_cells.filter(F.col("vec_id") < N_QUERIES),
+                with_cells,
+                TOP_K,
+            ),
+            "matryoshka_trunc": cosine_topk(trunc(queries), trunc(e), TOP_K),
+            "srp_lsh": srp_topk(queries, e, TOP_K),
+        }
+    ).unionByName(pq_topk)
+    truth = cosine_topk(queries, e, TOP_K).select(
+        F.explode(F.array(*[F.lit(m) for m in _ANN_RECALL_SQL])).alias(
+            "method"
+        ),
+        "query_id",
+        "neighbor_id",
+    )
+    per_query = (
+        truth.join(
+            approx.withColumn("hit", F.col("neighbor_id")),
+            ["method", "query_id", "neighbor_id"],
+            "left",
+        )
+        .groupBy("method", "query_id")
+        .agg(F.count("hit").alias("n_hits"))
+    )
+    per_method = per_query.groupBy("method").agg(
+        F.count(F.lit(1)).alias("n_queries"),
+        F.sum("n_hits").cast("bigint").alias("total_hits"),
+        F.expr(
+            f"CAST(SUM(n_hits * 1000000 DIV {TOP_K}) DIV COUNT(*) AS BIGINT)"
+        ).alias("mean_recall_ppm"),
+    )
+    methods = spark.createDataFrame(
+        [(m,) for m in _ANN_RECALL_SQL], "method string"
+    )
+    return (
+        methods.join(per_method, "method", "left")
+        .select(
+            "method",
+            F.coalesce("n_queries", F.lit(0)).cast("bigint").alias("n_queries"),
+            "total_hits",
+            "mean_recall_ppm",
+        )
+        .orderBy("method")
+    )

@@ -251,6 +251,10 @@ def q_emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "scale", F.col("dim").cast("int").alias("dim"), "q")
 
 
+# Per-query recall@5 oracles for three rows of q_emb_ann_recall_report
+# (plans/clustering.py): untrained label cells (IVF_RECALL_SQL), SRP-LSH
+# bands (SRP_RECALL_SQL) and the 32-dim matryoshka prefix
+# (MRL_RECALL_SQL), each against brute-force cosine ground truth.
 IVF_RECALL_SQL = f"""
     WITH q AS (SELECT vec_id AS query_id, label AS cell,
                       CAST(embedding AS DOUBLE[]) AS qv
@@ -284,51 +288,6 @@ IVF_RECALL_SQL = f"""
     GROUP BY e.query_id
     ORDER BY e.query_id
     """
-
-
-def q_emb_ivf_recall(
-    spark: SparkSession,
-    sf_dir: str,
-    exact_topk: DataFrame | None = None,
-) -> DataFrame:
-    """Measured recall@5 of the IVF ANN path against brute-force ground
-    truth, per query, as integer ppm — the number that justifies (or
-    vetoes) the probe=1 recall trade at any scale. Composes the two
-    existing pipelines and joins their top-k sets; no new math, so the
-    oracle disagrees only if either pipeline drifts.
-
-    Measured on the synthetic corpus: mean recall ≈ 0.11 — the label
-    column is NOT a geometric clustering, so probing one cell misses
-    most true neighbors. That is the finding, not a defect: this gauge
-    is what tells an operator their coarse quantizer needs retraining
-    (a k-means cell map would push it toward 1.0).
-
-    Scale: ground truth is the corpus-streaming GEMM (one scan), IVF is
-    the per-cell join; the comparison join is top-k-sized (queries × k),
-    i.e. negligible.
-    """
-    e = table(spark, sf_dir, "embeddings")
-    queries = e.filter(F.col("vec_id") < N_QUERIES)
-    exact = (
-        exact_topk
-        if exact_topk is not None
-        else cosine_topk(queries, e, TOP_K)
-    ).select("query_id", F.col("neighbor_id").alias("exact_neighbor"))
-    approx = ivf_topk(queries, e, TOP_K).select(
-        "query_id", F.col("neighbor_id").alias("ivf_neighbor")
-    )
-    joined = exact.join(
-        approx,
-        (exact["query_id"] == approx["query_id"])
-        & (exact["exact_neighbor"] == approx["ivf_neighbor"]),
-        "left",
-    ).select(exact["query_id"], approx["ivf_neighbor"])
-    return joined.groupBy("query_id").agg(
-        F.count("ivf_neighbor").alias("n_hits"),
-        F.expr(f"CAST(COUNT(ivf_neighbor) * 1000000 DIV {TOP_K} AS BIGINT)").alias(
-            "recall_ppm"
-        ),
-    )
 
 
 SRP_RECALL_SQL = f"""
@@ -393,47 +352,6 @@ SRP_RECALL_SQL = f"""
     """
 
 
-def q_emb_srp_recall(
-    spark: SparkSession,
-    sf_dir: str,
-    exact_topk: DataFrame | None = None,
-) -> DataFrame:
-    """Measured recall@5 of the hyperplane-LSH path against brute-force
-    ground truth — the companion gauge to q_emb_ivf_recall: recall here
-    tunes with bands × bits (2 × 4 in the catalog), and unlike IVF needs
-    no trained quantizer, so this is the number that decides between the
-    two ANN strategies on a given corpus. Measured here: ≈ 0.30 mean vs
-    IVF's ≈ 0.11 — data-derived hyperplane buckets beat the corpus's
-    non-geometric label cells, exactly the comparison this gauge exists
-    to make.
-
-    Scale: same profile as its inputs — GEMM scan for truth, broadcast
-    band probe for candidates; the comparison join is top-k sized.
-    """
-    e = table(spark, sf_dir, "embeddings")
-    queries = e.filter(F.col("vec_id") < N_QUERIES)
-    exact = (
-        exact_topk
-        if exact_topk is not None
-        else cosine_topk(queries, e, TOP_K)
-    ).select("query_id", F.col("neighbor_id").alias("exact_neighbor"))
-    approx = srp_topk(queries, e, TOP_K).select(
-        "query_id", F.col("neighbor_id").alias("srp_neighbor")
-    )
-    joined = exact.join(
-        approx,
-        (exact["query_id"] == approx["query_id"])
-        & (exact["exact_neighbor"] == approx["srp_neighbor"]),
-        "left",
-    ).select(exact["query_id"], approx["srp_neighbor"])
-    return joined.groupBy("query_id").agg(
-        F.count("srp_neighbor").alias("n_hits"),
-        F.expr(f"CAST(COUNT(srp_neighbor) * 1000000 DIV {TOP_K} AS BIGINT)").alias(
-            "recall_ppm"
-        ),
-    )
-
-
 MRL_DIMS = 32  # truncated prefix length (full vectors are 64-d)
 
 
@@ -476,54 +394,6 @@ MRL_RECALL_SQL = f"""
     GROUP BY e.query_id
     ORDER BY e.query_id
     """
-
-
-def q_emb_matryoshka_recall(
-    spark: SparkSession,
-    sf_dir: str,
-    exact_topk: DataFrame | None = None,
-) -> DataFrame:
-    """Dimension-truncation recall gauge (matryoshka-style): recall@5
-    of cosine top-k computed on the first 32 of 64 dimensions against
-    full-dimension ground truth, per query, integer ppm — the number
-    that prices the 2x speed/memory win of truncated embeddings before
-    an operator commits an index to it. Measured here: mean ≈ 0.24 —
-    these synthetic vectors carry no matryoshka training, so truncation
-    costs most of the neighborhood; an MRL-trained embedding would sit
-    near 1.0, and THAT difference is exactly what the gauge exists to
-    reveal.
-
-    Scale: both sides are the corpus-streaming GEMM (operators/
-    similarity.cosine_topk) — the truncated pass literally halves the
-    matrix bytes streamed; the comparison join is top-k-sized. At
-    production scale this is the gauge you run on a sample BEFORE
-    rebuilding a trillion-vector index at half width.
-    """
-    e = table(spark, sf_dir, "embeddings")
-    queries = e.filter(F.col("vec_id") < N_QUERIES)
-    trunc = lambda df: df.select(  # noqa: E731
-        "vec_id", F.slice("embedding", 1, MRL_DIMS).alias("embedding")
-    )
-    exact = (
-        exact_topk
-        if exact_topk is not None
-        else cosine_topk(queries, e, TOP_K)
-    ).select("query_id", F.col("neighbor_id").alias("exact_neighbor"))
-    approx = cosine_topk(trunc(queries), trunc(e), TOP_K).select(
-        "query_id", F.col("neighbor_id").alias("trunc_neighbor")
-    )
-    joined = exact.join(
-        approx,
-        (exact["query_id"] == approx["query_id"])
-        & (exact["exact_neighbor"] == approx["trunc_neighbor"]),
-        "left",
-    ).select(exact["query_id"], approx["trunc_neighbor"])
-    return joined.groupBy("query_id").agg(
-        F.count("trunc_neighbor").alias("n_hits"),
-        F.expr(
-            f"CAST(COUNT(trunc_neighbor) * 1000000 DIV {TOP_K} AS BIGINT)"
-        ).alias("recall_ppm"),
-    )
 
 
 RRF_QUERY_DOCS = (7, 42, 123)
@@ -700,10 +570,11 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_emb_ivf_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nDCG@5 of the IVF ANN run against brute-force graded relevance
     (grade = 6 − exact rank for the true top-5, 0 otherwise; ln
-    discount) — the rank-SENSITIVE companion to q_emb_ivf_recall:
-    recall says how many true neighbors the probe found, nDCG says
-    whether it put them in the right ORDER, which is what a retrieval
-    serving stack actually pays for. Queries whose probed cell yields
+    discount) — the rank-SENSITIVE companion to the ivf_label_cells
+    row of q_emb_ann_recall_report: recall says how many true
+    neighbors the probe found, nDCG says whether it put them in the
+    right ORDER, which is what a retrieval serving stack actually pays
+    for. Queries whose probed cell yields
     no true neighbor score 0 rather than dropping out.
 
     Determinism: both rankings tie-break on (rounded cosine, id); DCG

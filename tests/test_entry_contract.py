@@ -318,13 +318,13 @@ def test_legacy_string_snapshot_retires_against_plan_hash(monkeypatch):
 
 def test_import_resolver_handles_all_package_shapes():
     """code-review r7: the dep scanner must resolve (a) `from . import
-    X as Y` — the imported NAME is the submodule (plans/clustering.py
-    pulls plans.similarity this way), (b) relative imports inside a
+    X as Y` — the imported NAME is the submodule (the plans package
+    __init__ pulls plans.similarity this way), (b) relative imports inside a
     package __init__ (relative to the package itself, not its parent),
     and (c) plain `import pkg.mod`; missing any of these silently
     narrows deep-hash coverage."""
     pkg = "aircraftutilization_etl_spark"
-    deps = entry_mod._module_imports(f"{pkg}.plans.clustering")
+    deps = entry_mod._module_imports(f"{pkg}.plans")
     assert f"{pkg}.plans.similarity" in deps  # from . import similarity
     # streaming/__init__.py: from .flight_stream import ... must resolve
     # against the package itself

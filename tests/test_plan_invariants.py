@@ -16,6 +16,8 @@ Invariants:
 4. Every catalog query builds at sf0.001 and yields a non-empty
    schema. (Build-time driver jobs are not counted here; the benchmark's
    traced run reports them as `plans.build_jobs`.)
+5. A query's build leaves nothing in the cache manager, except the
+   named known leakers (a ratchet: a fix must shrink that set).
 """
 
 from __future__ import annotations
@@ -49,8 +51,8 @@ PURE_JVM_PREFIXES = (
     "q_graph_", "q_emb_srp_topk", "q_emb_quantize_int8",
     "q_curation_funnel",
     # round-3 additions that must stay JVM-pure (note: q_emb_kmeans is
-    # also pure JVM but shares a prefix with q_emb_kmeans_recall, whose
-    # ground-truth leg is the sanctioned GEMM kernel — pinned below)
+    # also pure JVM; it is pinned by exact name below, since a prefix
+    # entry would also cover any later q_emb_kmeans_* query)
     "q_bloom_", "q_dedup_keep_best", "q_dedup_edit", "q_snapshot_",
     "q_token_",
     # round-4 additions that must stay JVM-pure
@@ -76,23 +78,47 @@ ARROW_EXEMPT = frozenset(
 )
 
 
+# Queries whose build leaves an entry in the cache manager: a persist
+# that is never released. ROADMAP item 4 owns them; equality below makes
+# each fix shrink this set.
+KNOWN_CACHE_LEAKS = frozenset(
+    {
+        "q_dedup_ngram_jaccard",
+        "q_dedup_minhash_lsh",
+        "q_dedup_clusters",
+        "q_dedup_keep_best",
+        "q_dedup_edit_distance",
+        "q_dedup_containment",
+        "q_dedup_clusters_star",
+        "q_dedup_minhash_estimate",
+        "q_text_inverted_index",
+        "q_split_leakage_report",
+    }
+)
+
+
 @pytest.fixture(scope="module")
 def built(spark):
-    """name -> (executed-plan string, result schema) for every catalog
-    query — built once, shared by the plan sweeps and the output-edge
-    type gate."""
+    """name -> (executed-plan string, result schema, cache left
+    non-empty) for every catalog query — built once, shared by the plan
+    sweeps, the output-edge type gate and the cache ratchet. The cache
+    manager is cleared before each build, so each flag is that query's
+    own."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
     out = {}
     for name, qd in CATALOG.items():
+        spark.catalog.clearCache()
         df = qd.spark(spark, SF_DIR)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        out[name] = (plan, df.schema)
+        out[name] = (plan, df.schema, not cache.isEmpty())
+    spark.catalog.clearCache()
     return out
 
 
 @pytest.fixture(scope="module")
 def plans(built):
     """name -> executed-plan string for every catalog query."""
-    return {name: plan for name, (plan, _schema) in built.items()}
+    return {name: plan for name, (plan, _schema, _cached) in built.items()}
 
 
 def test_no_row_at_a_time_python_anywhere(plans):
@@ -144,8 +170,18 @@ def test_every_query_builds_lazily(built):
     """Every catalog query builds, and its result has at least one
     column (invariant 4); the frames are the ones the plan sweeps share."""
     assert set(built) == set(CATALOG)
-    empty = [n for n, (_plan, schema) in built.items() if not schema.fields]
+    empty = [
+        n for n, (_plan, schema, _cached) in built.items() if not schema.fields
+    ]
     assert empty == []
+
+
+def test_builds_release_their_caches(built):
+    """Invariant 5: after its build, a query holds nothing in the cache
+    manager — every persist it makes is released once its consumer is
+    done — apart from KNOWN_CACHE_LEAKS."""
+    leaking = {n for n, (_plan, _schema, cached) in built.items() if cached}
+    assert leaking == KNOWN_CACHE_LEAKS
 
 
 def _round_calls(sql):
@@ -304,7 +340,7 @@ def test_spark_output_edges_free_of_decimal(built):
     _, _, spark_problems = _edge_helpers()
     offenders = [
         (name, spark_problems(schema))
-        for name, (_plan, schema) in built.items()
+        for name, (_plan, schema, _cached) in built.items()
         if spark_problems(schema)
     ]
     assert offenders == []
