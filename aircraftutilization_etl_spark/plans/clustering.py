@@ -913,7 +913,7 @@ def _pq_rerank_topk(pq: tuple) -> DataFrame:
 )
 def q_emb_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage retrieval, the production ANN serving architecture:
-    PQ-ADC generates 20 (RERANK_CANDIDATES) compressed-domain candidates
+    PQ-ADC generates RERANK_CANDIDATES (20) compressed-domain candidates
     per query, then EXACT cosine re-scores only those and keeps the
     top-5 — candidate generation pays 16 bytes/vector bandwidth, the
     rerank pays full-precision cost on a constant-size set. This is
@@ -923,7 +923,7 @@ def q_emb_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_emb_ann_recall_report — and every kept neighbor is ordered by
     TRUE similarity).
 
-    Scale: the candidate set is queries × 20 candidates rows —
+    Scale: the candidate set is queries × RERANK_CANDIDATES rows —
     the exact-rerank join touches that, never the corpus; full vectors
     are fetched by equi-join on the neighbor id (at 100 TB: a
     broadcast-hash probe into the vector store's id index).
@@ -935,6 +935,7 @@ def q_emb_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_emb_pq_topk).
     """
     pq = _pq_pipeline(spark, sf_dir)
+    _, scodes, _, _ = pq
     out = (
         _pq_rerank_topk(pq)
         .filter(F.col("rank") <= TOP_K)
@@ -947,7 +948,7 @@ def q_emb_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("query_id", "rank")
         .localCheckpoint(eager=True)
     )
-    pq[1].unpersist()  # scodes, persisted by pq_train
+    scodes.unpersist()
     return out
 
 

@@ -316,13 +316,15 @@ def test_legacy_string_snapshot_retires_against_plan_hash(monkeypatch):
     assert entry_mod._catalog_order() == sorted(CATALOG)
 
 
-def test_import_resolver_handles_all_package_shapes():
+def test_import_resolver_handles_all_package_shapes(tmp_path, monkeypatch):
     """code-review r7: the dep scanner must resolve (a) `from . import
-    X as Y` — the imported NAME is the submodule (the plans package
-    __init__ pulls plans.similarity this way), (b) relative imports inside a
-    package __init__ (relative to the package itself, not its parent),
-    and (c) plain `import pkg.mod`; missing any of these silently
-    narrows deep-hash coverage."""
+    X` and `from . import X as Y` — the imported NAME is the submodule
+    (the plans package __init__ pulls plans.similarity the plain way; a
+    scratch package tree below covers the aliased form, which no real
+    module uses), (b) relative imports inside a package __init__
+    (relative to the package itself, not its parent), and (c) plain
+    `import pkg.mod`; missing any of these silently narrows deep-hash
+    coverage."""
     pkg = "aircraftutilization_etl_spark"
     deps = entry_mod._module_imports(f"{pkg}.plans")
     assert f"{pkg}.plans.similarity" in deps  # from . import similarity
@@ -343,6 +345,18 @@ def test_import_resolver_handles_all_package_shapes():
     assert m is not None
     items = [x.split(" as ", 1)[0].strip() for x in m.group(1).split(",")]
     assert items == [f"{pkg}.operators.text", f"{pkg}.operators.dedup"]
+    # (a) aliased: `from . import similarity as _sim` must yield the
+    # submodule, not the unresolvable name 'similarity as _sim'
+    sub = tmp_path / pkg / "aliased"
+    sub.mkdir(parents=True)
+    (sub / "similarity.py").write_text("")
+    (sub / "clustering.py").write_text(
+        "from . import similarity as _sim  # noqa\n"
+    )
+    monkeypatch.setattr(entry_mod, "_repo_dir", lambda: str(tmp_path))
+    monkeypatch.setattr(entry_mod, "_FILE_SHA_CACHE", {})
+    deps = entry_mod._module_imports(f"{pkg}.aliased.clustering")
+    assert f"{pkg}.aliased.similarity" in deps
 
 
 def test_deep_hash_covers_plan_source_and_oracle_too(monkeypatch):
