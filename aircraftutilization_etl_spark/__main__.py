@@ -121,6 +121,7 @@ def main(argv: list[str] | None = None) -> int:
             n = run_built_string_migration(spark, args.facts, args.out)
             print(json.dumps({"migrated_rows": n}))
         elif args.cmd == "query":
+            from .operators.distribute import cache_scope
             from .plans import CATALOG
 
             if args.name not in CATALOG:
@@ -129,12 +130,13 @@ def main(argv: list[str] | None = None) -> int:
                     file=sys.stderr,
                 )
                 return 2
-            df = CATALOG[args.name].spark(spark, args.data)
-            if args.out:
-                df.write.mode("overwrite").parquet(args.out)
-                print(json.dumps({"query": args.name, "out": args.out}))
-            else:
-                df.show(args.limit, truncate=False)
+            with cache_scope():
+                df = CATALOG[args.name].spark(spark, args.data)
+                if args.out:
+                    df.write.mode("overwrite").parquet(args.out)
+                    print(json.dumps({"query": args.name, "out": args.out}))
+                else:
+                    df.show(args.limit, truncate=False)
     finally:
         if owns_session:
             spark.stop()

@@ -37,7 +37,13 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .distribute import CORPUS_CACHE, ensure_scan_parallelism, shuffle_width
+from .distribute import (
+    CORPUS_CACHE,
+    cache,
+    cache_scope,
+    ensure_scan_parallelism,
+    shuffle_width,
+)
 from .text import words_expr
 
 HASH_BITS = 12
@@ -72,7 +78,7 @@ def hashed_features(df: DataFrame) -> DataFrame:
     words = df.select(
         F.col("doc_id"),
         F.explode(
-            F.transform(words_expr("text"), lambda w: F.lower(w))
+            F.transform(words_expr(), lambda w: F.lower(w))
         ).alias("__w"),
     )
     bucketed = words.select(
@@ -242,8 +248,6 @@ def train_logreg_hashed(
         features.select("doc_id", "bucket", "c", "t")
         .join(lab, "doc_id")
         .repartition(nparts_eff, "doc_id")
-        # corpus-scale feature rows: serialized + spill (guide §5)
-        .persist(CORPUS_CACHE)
     )
     # The whole round is ONE SQL statement built once (rebuilding the
     # equivalent DataFrame plan in Python cost ~0.35 s of py4j
@@ -299,64 +303,64 @@ def train_logreg_hashed(
     w = [0] * N_BUCKETS
     b = 0
     losses: list[float] = []
-    try:
-        # Materialize the cache INSIDE the guard: a failure during the
-        # cache build (corrupt input partition, OOM) must release the
-        # partially-persisted blocks too, not only failures mid-round.
-        # The exactness-bound scan below doubles as the materializing
-        # action (an aggregate touches every partition of a persisted
-        # frame), so cache build + max(t) are ONE job, not two (r12 —
-        # each driver-blocking job here is fixed per-query-build cost).
-        base.createOrReplaceTempView(base_view)
-        # Exactness precondition for the bit-stable-margin claim
-        # (ADVICE r6): every BIGINT the round SQL casts to DOUBLE must
-        # be < 2^53 — the margin numerator is bounded by
-        # t·(max|w| + |b|) (Σc = t) and the per-row gradient term by
-        # t·1e6·1000 (|r| ≤ 1e6). Checked per round against the cached
-        # corpus's max t so weight growth under higher lr/iterations
-        # fails LOUDLY here instead of surfacing as an unexplained
-        # oracle hash mismatch. The per-round check is driver-side
-        # arithmetic.
-        t_max = int(
-            base.agg(F.max("t").alias("m")).collect()[0]["m"] or 0
-        )
+    # The training cache is the trainer's own: only the returned model
+    # leaves this call, so its scope closes here, on a failed round too.
+    with cache_scope():
+        try:
+            # corpus-scale feature rows: serialized + spill (guide §5)
+            base = cache(base, CORPUS_CACHE)
+            # The exactness-bound scan below doubles as the materializing
+            # action (an aggregate touches every partition of a persisted
+            # frame), so cache build + max(t) are ONE job, not two (r12 —
+            # each driver-blocking job here is fixed per-query-build cost).
+            base.createOrReplaceTempView(base_view)
+            # Exactness precondition for the bit-stable-margin claim
+            # (ADVICE r6): every BIGINT the round SQL casts to DOUBLE must
+            # be < 2^53 — the margin numerator is bounded by
+            # t·(max|w| + |b|) (Σc = t) and the per-row gradient term by
+            # t·1e6·1000 (|r| ≤ 1e6). Checked per round against the cached
+            # corpus's max t so weight growth under higher lr/iterations
+            # fails LOUDLY here instead of surfacing as an unexplained
+            # oracle hash mismatch. The per-round check is driver-side
+            # arithmetic.
+            t_max = int(
+                base.agg(F.max("t").alias("m")).collect()[0]["m"] or 0
+            )
 
-        def _check_exactness_bound():
-            wb = max((abs(x) for x in w), default=0) + abs(b)
-            if t_max * max(wb, 1_000_000_000) >= 2**53:
-                raise ArithmeticError(
-                    "integer-GD exactness bound violated: max(t)="
-                    f"{t_max} with max|w|+|b|={wb} micros puts a "
-                    "casted numerator at or past 2^53; the floored "
-                    "margin/gradient would no longer be bit-stable "
-                    "cross-engine (lower lr/iterations or cap per-doc "
-                    "feature counts)"
-                )
-
-        for _ in range(iterations):
-            _check_exactness_bound()
-            _weights_df(spark, w).createOrReplaceTempView(w_view)
-            rows = spark.sql(round_sql.format(bias=int(b))).collect()
-            for row in rows:
-                g = int(row["__G"])
-                if row["bucket"] == -2:
-                    losses.append(g / MICRO / n)
-                elif row["bucket"] == -1:
-                    b -= math.floor((lr * g) / float(n))
-                else:
-                    w[row["bucket"]] -= math.floor(
-                        (lr * g) / (1000.0 * n)
+            def _check_exactness_bound():
+                wb = max((abs(x) for x in w), default=0) + abs(b)
+                if t_max * max(wb, 1_000_000_000) >= 2**53:
+                    raise ArithmeticError(
+                        "integer-GD exactness bound violated: max(t)="
+                        f"{t_max} with max|w|+|b|={wb} micros puts a "
+                        "casted numerator at or past 2^53; the floored "
+                        "margin/gradient would no longer be bit-stable "
+                        "cross-engine (lower lr/iterations or cap per-doc "
+                        "feature counts)"
                     )
-        # the final update is what predict()/_margins will cast to
-        # DOUBLE — validate the RETURNED model too, not only each
-        # round's entry weights (code-review r7)
-        _check_exactness_bound()
-    finally:
-        # a failed round must not leak the views or pin the training
-        # cache in executor storage for the life of the session
-        spark.catalog.dropTempView(w_view)
-        spark.catalog.dropTempView(base_view)
-        base.unpersist()
+
+            for _ in range(iterations):
+                _check_exactness_bound()
+                _weights_df(spark, w).createOrReplaceTempView(w_view)
+                rows = spark.sql(round_sql.format(bias=int(b))).collect()
+                for row in rows:
+                    g = int(row["__G"])
+                    if row["bucket"] == -2:
+                        losses.append(g / MICRO / n)
+                    elif row["bucket"] == -1:
+                        b -= math.floor((lr * g) / float(n))
+                    else:
+                        w[row["bucket"]] -= math.floor(
+                            (lr * g) / (1000.0 * n)
+                        )
+            # the final update is what predict()/_margins will cast to
+            # DOUBLE — validate the RETURNED model too, not only each
+            # round's entry weights (code-review r7)
+            _check_exactness_bound()
+        finally:
+            # a failed round must not leak the views
+            spark.catalog.dropTempView(w_view)
+            spark.catalog.dropTempView(base_view)
     return w, b, losses
 
 
@@ -409,7 +413,7 @@ def naive_bayes_confusion(df: DataFrame) -> DataFrame:
     tagged = df.select(
         F.col("doc_id"),
         F.col("lang").alias("actual"),
-        words_expr("text").alias("__ws"),
+        words_expr().alias("__ws"),
         (
             F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4) < "cccd"
         ).alias("in_train"),

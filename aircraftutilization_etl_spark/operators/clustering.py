@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .distribute import CORPUS_CACHE, ensure_scan_parallelism
+from .distribute import CORPUS_CACHE, cache, ensure_scan_parallelism
 from .similarity import quantize_embeddings
 
 
@@ -116,10 +116,8 @@ def kmeans_int8(
     # (r12: shared helper — the file-estimate probe replaces the ~60-90
     # ms df.rdd plan-build probe; same decision, same plan.)
     df = ensure_scan_parallelism(df, "vec_id")
-    codes = (
-        quantize_embeddings(df)
-        .select(F.col("vec_id"), "qvec")
-        .persist(CORPUS_CACHE)
+    codes = cache(
+        quantize_embeddings(df).select(F.col("vec_id"), "qvec"), CORPUS_CACHE
     )
     seed_rows = codes.orderBy("vec_id").limit(k).collect()
     centroids = [list(r["qvec"]) for r in seed_rows]
@@ -130,7 +128,6 @@ def kmeans_int8(
         # path passes vec_id through untouched), so a caller with an
         # int/string key gets the same schema on empty and populated
         # inputs (ADVICE r8 #3).
-        codes.unpersist()
         id_type = df.schema["vec_id"].dataType.simpleString()
         out = df.sparkSession.createDataFrame(
             [], f"vec_id {id_type}, cluster int, dist bigint"
@@ -152,15 +149,7 @@ def kmeans_int8(
             new_centroids[row["cluster"]][row["pos"]] = int(row["val"])
         centroids = new_centroids
 
-    # materialize the (narrow: id, cluster, dist) result WHILE the code
-    # cache is hot — otherwise the caller's first action would re-run
-    # quantization from the raw vectors after the unpersist below
-    out = (
-        _assign(codes, centroids)
-        .select(F.col("vec_id"), "cluster", "dist")
-        .localCheckpoint(eager=True)
-    )
-    codes.unpersist()
+    out = _assign(codes, centroids).select(F.col("vec_id"), "cluster", "dist")
     if return_model:
         return out, centroids
     return out
@@ -275,7 +264,7 @@ def pq_train(
     # spread for every downstream PQ pass (encode, LUTs)
     df = ensure_scan_parallelism(df, "vec_id")
     codes = quantize_embeddings(df).select(F.col("vec_id"), "qvec")
-    scodes = _sub_split(codes, m).persist(CORPUS_CACHE)
+    scodes = cache(_sub_split(codes, m), CORPUS_CACHE)
     # every vector has exactly m subvector rows, so the k·m smallest
     # (id, sub) rows are the k seed vectors
     rows = (

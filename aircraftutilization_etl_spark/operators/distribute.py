@@ -18,7 +18,17 @@ engine decides three layout questions itself, and only here:
 - **Exchange width** (``shuffle_width``): the configured
   ``spark.sql.shuffle.partitions``, for operators that pin an exchange
   AQE must not coalesce.
-- **Cache level** (``CORPUS_CACHE`` / ``MODEL_CACHE``), by size class.
+- **Cache level and lifetime** (``CORPUS_CACHE`` / ``MODEL_CACHE``,
+  ``cache`` / ``cache_scope``). The level follows the size class. The
+  lifetime follows the consumer: ``cache`` persists a frame and hands it
+  to the innermost open ``cache_scope``, which unpersists everything it
+  holds when it exits, on an exception too. A query or operator
+  therefore returns a lazy frame that reads its caches, and the
+  consumer that runs the action (a bench rep, the oracle check, a sink
+  write) wraps build and action in one scope. A frame used after its
+  scope has closed recomputes from lineage: slower, never wrong.
+  Outside any scope ``cache`` is a plain persist, which
+  ``spark.catalog.clearCache()`` drops.
 
 Source-scan contract: the spread decision sizes the frame's SOURCE
 scans, not its current partitioning. A frame behind a shuffle (say a
@@ -39,7 +49,9 @@ mirroring ``FilePartition``): one ``inputFiles()`` call plus local
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -58,6 +70,49 @@ SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 # both give identical bytes.
 CORPUS_CACHE = StorageLevel.MEMORY_AND_DISK
 MODEL_CACHE = StorageLevel.MEMORY_AND_DISK_DESER
+
+
+class _Scopes(threading.local):
+    """Per-thread stack of open cache scopes, innermost last; each
+    scope is the list of frames it will unpersist."""
+
+    def __init__(self) -> None:
+        self.stack: list[list[DataFrame]] = []
+
+
+_SCOPES = _Scopes()
+
+
+def cache(df: DataFrame, level: StorageLevel) -> DataFrame:
+    """``df`` persisted at ``level`` and held by the innermost open
+    :func:`cache_scope` of this thread.
+
+    A frame whose plan is already cached is returned as is and not
+    registered again, so an inner scope never releases a cache that an
+    outer one holds.
+    """
+    if df.storageLevel != StorageLevel.NONE:
+        return df
+    df = df.persist(level)
+    if _SCOPES.stack:
+        _SCOPES.stack[-1].append(df)
+    return df
+
+
+@contextlib.contextmanager
+def cache_scope():
+    """Unpersist, on exit, every frame that :func:`cache` persisted
+    while this scope was the innermost open one, also when the block
+    raises. Wrap the build of a frame and the actions that consume it
+    in one scope."""
+    held: list[DataFrame] = []
+    _SCOPES.stack.append(held)
+    try:
+        yield
+    finally:
+        _SCOPES.stack.pop()
+        for df in held:
+            df.unpersist()
 
 
 def _conf_bytes(conf, key: str, default: int) -> int:

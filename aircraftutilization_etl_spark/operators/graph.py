@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .distribute import CORPUS_CACHE
+from .distribute import CORPUS_CACHE, MODEL_CACHE, cache
 
 PPM = 1_000_000
 DAMPING_PPM = 850_000  # 0.85, the canonical damping factor
@@ -66,7 +66,7 @@ def pagerank(
     e = edges.select("src", "dst")
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
     # edge-scale cache, reused every iteration
-    out_edges = e.join(deg, "src").persist(CORPUS_CACHE)
+    out_edges = cache(e.join(deg, "src"), CORPUS_CACHE)
     # derive nodes from the persisted edge table, not the raw input —
     # an expensive upstream (e.g. co-occurrence mining) runs once
     nodes = (
@@ -76,9 +76,9 @@ def pagerank(
     )
     if rank_partitions is not None:
         nodes = nodes.coalesce(rank_partitions)
-    nodes = nodes.persist()
+    nodes = cache(nodes, MODEL_CACHE)
     ranks = nodes.select("node", F.lit(PPM).cast("long").alias("rank_ppm"))
-    for it in range(n_iterations):
+    for _ in range(n_iterations):
         # no broadcast hints here, deliberately: per-iteration broadcast
         # exchanges are built on the driver, and that serial cost GROWS
         # in a long-lived session (measured: hinted variants ~35% slower
@@ -103,18 +103,13 @@ def pagerank(
         if rank_partitions is not None:
             ranks = ranks.coalesce(rank_partitions)
         # truncate lineage: the loop otherwise doubles the plan per
-        # round. Intermediate rounds checkpoint LAZILY — the round count
-        # is fixed, so unlike connected_components_star there is no
-        # per-round convergence check, and materializing each round as
-        # its own job is pure scheduling overhead; lazy marks keep the
-        # whole run one job while still capping the analyzed plan at one
-        # iteration. The LAST round is eager: it drives that one job to
-        # completion WHILE the edge and node caches are still live, so
-        # the unpersist below never strips a cache a pending computation
-        # depends on.
-        ranks = ranks.localCheckpoint(eager=(it == n_iterations - 1))
-    out_edges.unpersist()
-    nodes.unpersist()
+        # round. Rounds checkpoint LAZILY — the round count is fixed, so
+        # unlike connected_components_star there is no per-round
+        # convergence check, and materializing each round as its own
+        # job is pure scheduling overhead; lazy marks leave the whole
+        # run to the consumer's action while still capping the analyzed
+        # plan at one iteration.
+        ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
 
@@ -333,7 +328,7 @@ def bfs_depths(edges: DataFrame, max_depth: int) -> DataFrame:
     frontier is usually the small side, so AQE broadcasts it into the
     edge scan.
     """
-    e = edges.select("src", "dst").persist(CORPUS_CACHE)  # edge-scale
+    e = cache(edges.select("src", "dst"), CORPUS_CACHE)  # edge-scale
     source = e.agg(F.min("src")).collect()[0][0]
     spark = edges.sparkSession
     dist = spark.createDataFrame([(source, 0)], "node long, depth int")
@@ -349,9 +344,7 @@ def bfs_depths(edges: DataFrame, max_depth: int) -> DataFrame:
         )
         dist = dist.unionByName(fresh).localCheckpoint(eager=False)
         frontier = fresh
-    out = dist.localCheckpoint(eager=True)
-    e.unpersist()
-    return out
+    return dist
 
 
 def neighborhood_jaccard(

@@ -61,7 +61,7 @@ def pack_sequences(
         F.substring(md5, 1, 1).alias("bucket"),
         md5.alias("__order"),
         F.col("doc_id"),
-        token_count_expr("text").cast("long").alias("n_tokens"),
+        token_count_expr().cast("long").alias("n_tokens"),
     )
 
     out_schema = (
@@ -161,7 +161,7 @@ def padding_audit(
     sized = df.select(
         F.col("doc_id"),
         md5.alias("__ord"),
-        token_count_expr("text").cast("long").alias("n_tokens"),
+        token_count_expr().cast("long").alias("n_tokens"),
     )
 
     def _audit(batched: DataFrame, policy: str, bucket_col):

@@ -15,7 +15,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .distribute import CORPUS_CACHE, shuffle_width
+from .distribute import CORPUS_CACHE, cache, shuffle_width
 
 # Pin the join's exchange (explicit hash repartition, which AQE will
 # not coalesce) only when the total pair volume Σf² exceeds what one
@@ -144,12 +144,15 @@ def chunked_self_pairs(
         )
     else:
         bucket = Window.partitionBy(*key_cols)
-        sized = keyed.select(
-            F.col(id_col),
-            *key_cols,
-            *payload,
-            F.count(F.lit(1)).over(bucket).alias("__f"),
-        ).persist(CORPUS_CACHE)
+        sized = cache(
+            keyed.select(
+                F.col(id_col),
+                *key_cols,
+                *payload,
+                F.count(F.lit(1)).over(bucket).alias("__f"),
+            ),
+            CORPUS_CACHE,
+        )
         # the chunk construction also carries the pin when max f <= cap
         # (all m = 1, chunk columns provably zero): joining on
         # (keys, __ca, __cb) differs from the cached window layout, so

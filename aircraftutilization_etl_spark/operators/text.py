@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.localrel import inline_values_df
-from .distribute import CORPUS_CACHE, ensure_scan_parallelism
+from .distribute import CORPUS_CACHE, cache, ensure_scan_parallelism
 
 # BPE-ish pre-tokenizer: letter runs, digit runs, or single non-space —
 # the same regex DuckDB's RE2 and Java's regex engine agree on.
@@ -49,7 +49,7 @@ def bpe_token_count_expr() -> Column:
 def stopword_ratio_expr() -> Column:
     """Fraction of ``text``'s whitespace tokens that are English
     stopwords."""
-    words = words_expr("text")
+    words = words_expr()
     hits = F.size(
         F.filter(words, lambda w: F.lower(w).isin(*ENGLISH_STOPWORDS))
     )
@@ -138,7 +138,7 @@ def gopher_metrics() -> dict[str, Column]:
     fold over the distinct words; v is the per-doc vocabulary, so this
     stays cheap even for long documents.
     """
-    words = words_expr("text")
+    words = words_expr()
     words_lower = F.transform(words, F.lower)
     n = F.size(words)
     top_count = F.array_max(
@@ -156,7 +156,7 @@ def gopher_metrics() -> dict[str, Column]:
     )
     return {
         "n_words": n,
-        "mean_word_len": mean_word_length_expr("text"),
+        "mean_word_len": mean_word_length_expr(),
         "top_word_share": top_count / F.greatest(n, F.lit(1)),
         "alpha_word_ratio": alpha / F.greatest(n, F.lit(1)),
         "n_distinct_stopwords": stops,
@@ -247,7 +247,7 @@ def ngram_repetition_expr() -> Column:
     curation. Pure per-row array work (sequence → transform →
     array_distinct): no shuffle, no Python; cost is O(words) per row.
     """
-    words = F.transform(words_expr("text"), lambda w: F.lower(w))
+    words = F.transform(words_expr(), lambda w: F.lower(w))
     # sequence() must be guarded: Spark's sequence(1, 0) DESCENDS to
     # [1, 0] rather than returning empty, so short docs are handled by
     # the when() branch, never by an empty sequence
@@ -282,7 +282,7 @@ def unigram_logprob(df: DataFrame) -> DataFrame:
     words = df.select(
         "doc_id",
         F.explode(
-            F.transform(words_expr("text"), lambda w: F.lower(w))
+            F.transform(words_expr(), lambda w: F.lower(w))
         ).alias("__w"),
     )
     counts = words.groupBy("__w").agg(F.count(F.lit(1)).alias("__c"))
@@ -410,14 +410,14 @@ def bm25_topk(
     words = df.select(
         F.col("doc_id"),
         F.explode(
-            F.transform(words_expr("text"), lambda w: F.lower(w))
+            F.transform(words_expr(), lambda w: F.lower(w))
         ).alias("__w"),
     )
     tf = words.groupBy("doc_id", "__w").agg(F.count(F.lit(1)).alias("__tf"))
     # doc length is size(words) — a shuffle-free per-row projection,
     # NOT a second explode+aggregate pass over the corpus
     dl = df.select(
-        F.col("doc_id"), F.size(words_expr("text")).alias("__dl")
+        F.col("doc_id"), F.size(words_expr()).alias("__dl")
     )
     stats = dl.agg(
         F.count(F.lit(1)).alias("__n"), F.avg("__dl").alias("__avgdl")
@@ -482,7 +482,7 @@ def bigram_logprob(df: DataFrame) -> DataFrame:
     aggregate, model join (AQE broadcasts the head-count side),
     per-doc mean. Documents with < 2 words drop (no transitions).
     """
-    w = df.select(F.col("doc_id"), words_expr("text").alias("__ws"))
+    w = df.select(F.col("doc_id"), words_expr().alias("__ws"))
     pairs = F.transform(
         F.sequence(F.lit(1), F.size("__ws") - 1),
         lambda i: F.struct(
@@ -561,7 +561,7 @@ def _bpe_train(
     """
     words = df.select(
         F.explode(
-            F.transform(words_expr("text"), lambda w: F.lower(w))
+            F.transform(words_expr(), lambda w: F.lower(w))
         ).alias("__w")
     ).filter(F.col("__w").rlike("^[a-z0-9]+$"))
     vocab = (
@@ -637,7 +637,7 @@ def bpe_encode(df: DataFrame, n_merges: int) -> DataFrame:
     doc_words = df.select(
         "doc_id",
         F.explode(
-            F.transform(words_expr("text"), lambda w: F.lower(w))
+            F.transform(words_expr(), lambda w: F.lower(w))
         ).alias("__w"),
     ).filter(F.col("__w").rlike("^[a-z0-9]+$"))
     return (
@@ -739,12 +739,13 @@ def inverted_index(
     words = df.select(
         F.col("doc_id"),
         F.explode(
-            F.transform(words_expr("text"), lambda w: F.lower(w))
+            F.transform(words_expr(), lambda w: F.lower(w))
         ).alias("__w"),
     )
-    tf = words.groupBy("__w", "doc_id").agg(
-        F.count(F.lit(1)).alias("__tf")
-    ).persist(CORPUS_CACHE)
+    tf = cache(
+        words.groupBy("__w", "doc_id").agg(F.count(F.lit(1)).alias("__tf")),
+        CORPUS_CACHE,
+    )
     stats = (
         tf.groupBy("__w")
         .agg(
@@ -819,9 +820,9 @@ def quality_calibrated(df: DataFrame) -> DataFrame:
     raw = df.select(
         F.col("doc_id"),
         F.col("source"),
-        token_count_expr("text").alias("__n_tokens"),
-        mean_word_length_expr("text").alias("__mwl"),
-        punct_ratio_expr("text").alias("__punct"),
+        token_count_expr().alias("__n_tokens"),
+        mean_word_length_expr().alias("__mwl"),
+        punct_ratio_expr().alias("__punct"),
     )
     scored = raw.select(
         "doc_id",
@@ -883,7 +884,7 @@ def dsir_logratio(df: DataFrame, is_target: Column) -> DataFrame:
         "doc_id",
         is_target.alias("__tgt"),
         F.explode(
-            F.transform(words_expr("text"), lambda w: F.lower(w))
+            F.transform(words_expr(), lambda w: F.lower(w))
         ).alias("__w"),
     )
     counts = words.groupBy("__w").agg(
@@ -926,7 +927,7 @@ def source_divergence(df: DataFrame) -> DataFrame:
     words = df.select(
         F.col("source").alias("__g"),
         F.explode(
-            F.transform(words_expr("text"), lambda w: F.lower(w))
+            F.transform(words_expr(), lambda w: F.lower(w))
         ).alias("__w"),
     )
     vocab = words.groupBy("__w").agg(F.count(F.lit(1)).alias("__cc"))
@@ -1012,7 +1013,7 @@ def span_corruption(df: DataFrame) -> DataFrame:
     """
     n_offsets = 7
     w = df.select(
-        F.col("doc_id"), words_expr("text").alias("__words")
+        F.col("doc_id"), words_expr().alias("__words")
     ).withColumn("__nseg", F.size("__words") / 8)
     w = w.withColumn("__nseg", F.floor("__nseg").cast("int"))
     # per-window span starts, materialized once (input AND target read it)
@@ -1120,7 +1121,7 @@ def tfidf_cosine_pairs(df: DataFrame, threshold: float) -> DataFrame:
     words = df.select(
         F.col("doc_id"),
         F.explode(
-            F.transform(words_expr("text"), lambda w: F.lower(w))
+            F.transform(words_expr(), lambda w: F.lower(w))
         ).alias("term"),
     )
     tf = words.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("__tf"))
@@ -1137,10 +1138,8 @@ def tfidf_cosine_pairs(df: DataFrame, threshold: float) -> DataFrame:
         )
     )
     # three consumers (norms + both join sides): persist the index once
-    # instead of re-deriving the corpus scan per branch; the result is
-    # materialized eagerly below so the cache can be dropped before
-    # returning (the kmeans_int8 idiom)
-    weighted = weighted.persist(CORPUS_CACHE)
+    # instead of re-deriving the corpus scan per branch
+    weighted = cache(weighted, CORPUS_CACHE)
     norms = weighted.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("__w") * F.col("__w"))).alias("__norm")
     )
@@ -1164,7 +1163,7 @@ def tfidf_cosine_pairs(df: DataFrame, threshold: float) -> DataFrame:
     )
     na = norms.select(F.col("doc_id").alias("id_a"), F.col("__norm").alias("__na"))
     nb = norms.select(F.col("doc_id").alias("id_b"), F.col("__norm").alias("__nb"))
-    out = (
+    return (
         dots.join(na, "id_a")
         .join(nb, "id_b")
         .select(
@@ -1175,10 +1174,7 @@ def tfidf_cosine_pairs(df: DataFrame, threshold: float) -> DataFrame:
             ),
         )
         .filter(F.col("cosine") >= threshold)
-        .localCheckpoint(eager=True)
     )
-    weighted.unpersist()
-    return out
 
 
 def skipgram_pairs(df: DataFrame, window: int = 2) -> DataFrame:
@@ -1196,7 +1192,7 @@ def skipgram_pairs(df: DataFrame, window: int = 2) -> DataFrame:
     # per document), and a small corpus scans as ONE task (profiled:
     # a 1.4 s single-task stage at sf0.1).
     df = ensure_scan_parallelism(df, "doc_id")
-    w = df.select(F.col("doc_id"), words_expr("text").alias("__words"))
+    w = df.select(F.col("doc_id"), words_expr().alias("__words"))
     pairs = F.flatten(
         F.transform(
             F.sequence(F.lit(0), F.size("__words") - 1),
@@ -1247,13 +1243,13 @@ def skipgram_with_negatives(
     probe rows against the vocab index — broadcast-sized both sides
     after the top-k cut (TakeOrderedAndProject, no global sort).
     """
-    pairs = skipgram_pairs(df, 2)
+    pairs = skipgram_pairs(df)
     top = pairs.orderBy(
         F.desc("n_pairs"), F.col("center"), F.col("context")
     ).limit(top_k)
     words = df.select(
         F.explode(
-            F.transform(words_expr("text"), lambda x: F.lower(x))
+            F.transform(words_expr(), lambda x: F.lower(x))
         ).alias("word")
     )
     vocab = (
@@ -1343,7 +1339,7 @@ def pmi_collocations(
     ~3·10⁹ of each other's product — beyond that, rewrite as a sum of
     logs (same value, overflow-free).
     """
-    w = df.select(F.col("doc_id"), words_expr("text").alias("__ws"))
+    w = df.select(F.col("doc_id"), words_expr().alias("__ws"))
     pairs = F.transform(
         F.sequence(F.lit(1), F.size("__ws") - 1),
         lambda i: F.struct(

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.distribute import CORPUS_CACHE
+from ..operators.distribute import CORPUS_CACHE, cache
 from .catalog import query, table
 
 CLF_ITERATIONS = 6
@@ -171,12 +171,12 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # again — without this the explode/hash/aggregate feature build
     # runs twice per query (measured ~3 s each at sf0.1).
     # corpus-scale feature rows: serialized + spill (VERDICT r11 #3)
-    feats = hashed_features(d).persist(CORPUS_CACHE)
+    feats = cache(hashed_features(d), CORPUS_CACHE)
     w, b, _losses = train_logreg_hashed(
         feats, labels, iterations=CLF_ITERATIONS, lr=CLF_LR
     )
     preds = predict(feats, w, b)
-    out = (
+    return (
         labels.join(preds, "doc_id")
         .groupBy("source")
         .agg(
@@ -187,13 +187,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("mean_pred_micros"),
         )
         .orderBy("source")
-        # materialize the per-source summary (a handful of rows) so the
-        # feature cache can be released before returning — the same
-        # checkpoint-then-unpersist contract as the PQ/kmeans plans
-        .localCheckpoint(eager=True)
     )
-    feats.unpersist()
-    return out
 
 
 @query(

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..operators.clustering import ivfpq_adc_topk, kmeans_int8, pq_adc_topk
-from ..operators.distribute import CORPUS_CACHE
+from ..operators.distribute import CORPUS_CACHE, cache
 from ..operators.graph import connected_components_star
 from ..operators.similarity import cosine_pairs, cosine_topk, ivf_topk, srp_topk
 from .catalog import query, table
@@ -480,11 +480,7 @@ def q_emb_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds driver-side; every run trains its own codebooks.
     """
     _, scodes, encoded, books = _pq_pipeline(spark, sf_dir)
-    out = pq_adc_topk(
-        scodes, encoded, books, N_QUERIES, TOP_K
-    ).localCheckpoint(eager=True)
-    scodes.unpersist()
-    return out
+    return pq_adc_topk(scodes, encoded, books, N_QUERIES, TOP_K)
 
 
 PQ_RECALL_SQL = f"""
@@ -687,11 +683,7 @@ def q_emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = kmeans_int8(e, k=K_CLUSTERS, iterations=KMEANS_ITERS).select(
         "vec_id", "cluster"
     )
-    out = ivfpq_adc_topk(
-        scodes, encoded, books, cells, N_QUERIES, TOP_K
-    ).localCheckpoint(eager=True)
-    scodes.unpersist()
-    return out
+    return ivfpq_adc_topk(scodes, encoded, books, cells, N_QUERIES, TOP_K)
 
 
 IVFPQ_RECALL_SQL = f"""
@@ -934,10 +926,8 @@ def q_emb_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     PQ codebooks are trained per run by _pq_pipeline (see
     q_emb_pq_topk).
     """
-    pq = _pq_pipeline(spark, sf_dir)
-    _, scodes, _, _ = pq
-    out = (
-        _pq_rerank_topk(pq)
+    return (
+        _pq_rerank_topk(_pq_pipeline(spark, sf_dir))
         .filter(F.col("rank") <= TOP_K)
         .select(
             "query_id",
@@ -946,10 +936,7 @@ def q_emb_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("rank").cast("int").alias("rank"),
         )
         .orderBy("query_id", "rank")
-        .localCheckpoint(eager=True)
     )
-    scodes.unpersist()
-    return out
 
 
 PQ_RERANK_RECALL_SQL = f"""
@@ -1139,12 +1126,10 @@ def q_emb_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted per (method, query), then per method; the method list is
     the outer side, so an empty corpus still yields eight rows.
 
-    Cache ownership: the report releases every cache it makes. The four
-    PQ frames are the only readers of scodes (persisted by pq_train)
-    and the encoded codes (persisted here); their union is eagerly
-    localCheckpointed once, and both caches are unpersisted right
-    after. The ground truth is read once by the scoring plan, so it is
-    not persisted.
+    Caches: scodes (persisted by pq_train) and the encoded codes
+    (persisted here) feed the four PQ frames; the consumer's cache
+    scope releases both. The ground truth is read once by the scoring
+    plan, so it is not persisted.
 
     Scale: ground truth is the corpus-streaming GEMM (the audit cost,
     run on a sample at production scale); every approximate leg is
@@ -1154,7 +1139,7 @@ def q_emb_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq = _pq_pipeline(spark, sf_dir)
     e, scodes, encoded, books = pq
     # corpus-scale (one codes row per vector): serialized + spill
-    encoded.persist(CORPUS_CACHE)
+    cache(encoded, CORPUS_CACHE)
     cells, cents = kmeans_int8(
         e, k=K_CLUSTERS, iterations=KMEANS_ITERS, return_model=True
     )
@@ -1168,9 +1153,7 @@ def q_emb_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pq_adc": pq_adc_topk(scodes, encoded, books, N_QUERIES, TOP_K),
             "pq_rerank": _pq_rerank_topk(pq).filter(F.col("rank") <= TOP_K),
         }
-    ).localCheckpoint(eager=True)
-    scodes.unpersist()
-    encoded.unpersist()
+    )
 
     queries = e.filter(F.col("vec_id") < N_QUERIES)
     with_cells = e.select("vec_id", "embedding").join(

@@ -163,7 +163,7 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "n_chars",
-            (quality_score_expr("text") >= QUALITY_MIN).alias("b1_q"),
+            (quality_score_expr() >= QUALITY_MIN).alias("b1_q"),
             (stopword_ratio_expr() > STOP_MIN).alias("__lang"),
             fingerprint_expr().alias("__fp"),
             (F.coalesce(F.col("hit_ppm"), F.lit(0)) < CONTAM_PPM_MAX).alias(

@@ -24,7 +24,7 @@ from ..operators.dedup import (
     with_shingle_array,
     with_simhash,
 )
-from ..operators.distribute import CORPUS_CACHE
+from ..operators.distribute import CORPUS_CACHE, cache
 from ..operators.graph import connected_components_star
 from .catalog import query, table
 
@@ -403,7 +403,7 @@ def q_dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.lower(F.substring(F.trim(F.col("text")), 1, 24)).alias("title"),
     )
-    return edit_distance_pairs(titles, max_dist=2, str_col="title")
+    return edit_distance_pairs(titles)
 
 
 _NEW_BATCH_PRED = "substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) = 'f'"
@@ -616,15 +616,12 @@ def q_dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sides, and its kernel (16 rotation-MIN aggregates) is the same
     # cost the LSH pipeline pays once — (pairs x K)-sized cache.
     # Both kernel caches are corpus-scale (shingle arrays are bigger
-    # than the text; the signature matrix is docs x K rows), and their
-    # lifetime is bounded below: the audit is a single action, so
-    # the result is materialized eagerly and both caches released
-    # before this builder returns — nothing lingers in executor
-    # storage for the life of the session.
-    shingled = with_shingle_array(d).persist(CORPUS_CACHE)
+    # than the text; the signature matrix is docs x K rows); the
+    # consumer's cache scope releases them after its action.
+    shingled = cache(with_shingle_array(d), CORPUS_CACHE)
     candidates = lsh_candidate_pairs(shingled)
     pairs = verify_jaccard_pairs(candidates, shingled, JACCARD_THRESHOLD)
-    sigs = minhash_signatures(shingled).persist(CORPUS_CACHE)
+    sigs = cache(minhash_signatures(shingled), CORPUS_CACHE)
     ma = sigs.select(
         F.col("doc_id").alias("id_a"), "seed", F.col("minhash").alias("__ma")
     )
@@ -641,28 +638,16 @@ def q_dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("n_agree")
         )
     )
-    out = (
-        agree.select(
-            "id_a",
-            "id_b",
-            "jaccard",
-            F.expr(f"n_agree * 1000000 DIV {MINHASH_K}").alias(
-                "estimate_ppm"
-            ),
-            F.expr(
-                f"n_agree * 1000000 DIV {MINHASH_K} "
-                "- CAST(round(jaccard * 1000000) AS BIGINT)"
-            ).alias("err_ppm"),
-        )
-        .orderBy("id_a", "id_b")
-        # materialize the (pairs)-sized audit while the kernel caches
-        # are hot, then release them — the checkpoint-then-unpersist
-        # contract of the PQ/kmeans/classifier plans
-        .localCheckpoint(eager=True)
-    )
-    shingled.unpersist()
-    sigs.unpersist()
-    return out
+    return agree.select(
+        "id_a",
+        "id_b",
+        "jaccard",
+        F.expr(f"n_agree * 1000000 DIV {MINHASH_K}").alias("estimate_ppm"),
+        F.expr(
+            f"n_agree * 1000000 DIV {MINHASH_K} "
+            "- CAST(round(jaccard * 1000000) AS BIGINT)"
+        ).alias("err_ppm"),
+    ).orderBy("id_a", "id_b")
 
 
 @query(

@@ -1106,7 +1106,7 @@ def q_events_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "ts", "event_id", "value")
     )
     sm = ewma(ev, key="user_id", ts_col="ts", value_col="value",
-              tiebreak="event_id", alpha=0.25)
+              tiebreak="event_id")
     return sm.select(
         "user_id",
         "event_id",

@@ -258,4 +258,4 @@ def q_media_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import perceptual_hash, phash_near_dup
 
     media = attach_fake_media(table(spark, sf_dir, "documents"))
-    return phash_near_dup(perceptual_hash(media), max_hamming=3)
+    return phash_near_dup(perceptual_hash(media))

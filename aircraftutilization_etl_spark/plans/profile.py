@@ -55,7 +55,7 @@ def q_profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.distribute import ensure_scan_parallelism
 
     li = ensure_scan_parallelism(table(spark, sf_dir, "lineitem"))
-    return profile_columns(li, _COLS, exact=True).orderBy("col_name")
+    return profile_columns(li, _COLS).orderBy("col_name")
 
 
 @query(

@@ -531,7 +531,7 @@ def q_mix_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     counts = d.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(token_count_expr("text").cast("bigint")).alias("n_tokens"),
+        F.sum(token_count_expr().cast("bigint")).alias("n_tokens"),
     )
     w = counts.withColumn(
         "sqrt_w",

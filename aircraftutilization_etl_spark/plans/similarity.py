@@ -6,7 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators.distribute import MODEL_CACHE
+from ..operators.distribute import MODEL_CACHE, cache
 from ..operators.similarity import (
     cosine_expr,
     cosine_pairs,
@@ -504,7 +504,7 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").alias("query_id"),
             F.explode(
                 F.array_distinct(
-                    F.transform(words_expr("text"), lambda w: F.lower(w))
+                    F.transform(words_expr(), lambda w: F.lower(w))
                 )
             ).alias("term"),
         )
@@ -753,16 +753,15 @@ def q_emb_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = table(spark, sf_dir, "embeddings")
     queries = e.filter(F.col("vec_id") < N_QUERIES)
-    cand = (
-        cosine_topk(queries, e, MMR_CANDIDATES)
-        .select(
+    cand = cache(
+        cosine_topk(queries, e, MMR_CANDIDATES).select(
             "query_id",
             "neighbor_id",
             F.round(F.col("cosine") * 1_000_000)
             .cast("bigint")
             .alias("simq_u"),
-        )
-        .persist(MODEL_CACHE)
+        ),
+        MODEL_CACHE,
     )
     vecs = e.select(
         F.col("vec_id").alias("__vid"),
@@ -774,7 +773,7 @@ def q_emb_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = vecs.select(
         F.col("__vid").alias("other"), F.col("__v").alias("cv")
     )
-    pair = (
+    pair = cache(
         cand.select("query_id", F.col("neighbor_id").alias("cand"))
         .join(
             cand.select(
@@ -796,8 +795,8 @@ def q_emb_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("bigint")
             .alias("sim_u"),
-        )
-        .persist(MODEL_CACHE)
+        ),
+        MODEL_CACHE,
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score_hu"), "neighbor_id"
@@ -864,19 +863,12 @@ def q_emb_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sel = sel.unionByName(pick_r)
         picked = sel.select("query_id", "neighbor_id")
-    out = (
-        sel.select(
-            "query_id",
-            "round",
-            "neighbor_id",
-            F.col("score_hu").cast("bigint").alias("mmr_score_hu"),
-        )
-        .orderBy("query_id", "round")
-        .localCheckpoint(eager=True)
-    )
-    cand.unpersist()
-    pair.unpersist()
-    return out
+    return sel.select(
+        "query_id",
+        "round",
+        "neighbor_id",
+        F.col("score_hu").cast("bigint").alias("mmr_score_hu"),
+    ).orderBy("query_id", "round")
 
 
 KNN_CLS_K = 5

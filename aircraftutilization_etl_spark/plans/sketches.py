@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.localrel import inline_values_df
-from ..operators.distribute import MODEL_CACHE
+from ..operators.distribute import MODEL_CACHE, cache
 from .catalog import query, table
 
 
@@ -212,13 +212,12 @@ def q_sketch_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = table(spark, sf_dir, "events")
     pairs = [("click", "purchase"), ("view", "signup"), ("click", "error")]
-    sketches = (
-        e.groupBy("event_type")
-        .agg(
+    sketches = cache(
+        e.groupBy("event_type").agg(
             F.hll_sketch_agg("user_id").alias("sk"),
             F.count_distinct("user_id").alias("nd"),
-        )
-        .persist(MODEL_CACHE)
+        ),
+        MODEL_CACHE,
     )
     # One broadcast join per side, INNER like the oracle's JOIN nd — a
     # pair whose type is absent from the data yields no row on either
@@ -277,7 +276,7 @@ def q_sketch_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Left + coalesce-to-0: a pair with NO shared users has no row in
     # the inner-join-derived exact table, but the oracle's scalar
     # INTERSECT subquery still returns 0 — both engines must emit 0.
-    result = (
+    return (
         out.join(exact, ["type_a", "type_b"], "left")
         .select(
             "type_a",
@@ -295,7 +294,4 @@ def q_sketch_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("overlap_within_tol"),
         )
         .orderBy("type_a", "type_b")
-        .localCheckpoint(eager=True)
     )
-    sketches.unpersist()
-    return result

@@ -1271,7 +1271,7 @@ def q_curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     scored = d.select(
         "doc_id",
-        token_count_expr("text").cast("bigint").alias("n_tokens"),
+        token_count_expr().cast("bigint").alias("n_tokens"),
         F.round(quality_score_expr(F.col("text")), 4).alias("quality_score"),
     ).withColumn("__negq", -F.col("quality_score"))
     total = scored.count()
@@ -1352,7 +1352,7 @@ def q_text_heldout_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = d.select(
         "doc_id",
         "split",
-        F.explode(words_expr("text")).alias("w0"),
+        F.explode(words_expr()).alias("w0"),
     ).select("doc_id", "split", F.lower("w0").alias("w"))
     model = (
         words.filter(F.col("split") == "train")
@@ -1752,7 +1752,7 @@ def q_text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("doc_id").alias("thr"))
     )
     words = d.select(
-        "doc_id", F.explode(words_expr("text")).alias("w0")
+        "doc_id", F.explode(words_expr()).alias("w0")
     ).select("doc_id", F.lower("w0").alias("w"))
     firsts = words.groupBy("w").agg(F.min("doc_id").alias("fd"))
     vocab = (
@@ -1843,7 +1843,7 @@ def q_text_drift_js(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(F.lit("b"))
         .alias("half"),
-        F.explode(words_expr("text")).alias("w0"),
+        F.explode(words_expr()).alias("w0"),
     ).select("half", F.lower("w0").alias("w"))
     counts = tagged.groupBy("w").agg(
         F.sum(F.when(F.col("half") == "a", 1).otherwise(0)).alias("ca"),

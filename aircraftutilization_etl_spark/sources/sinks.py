@@ -20,6 +20,7 @@ import logging
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.distribute import MODEL_CACHE, cache, cache_scope
 from .parquet_io import hadoop_fs
 
 logger = logging.getLogger(__name__)
@@ -73,8 +74,8 @@ def append_facts(
     out = df.withColumn(PARTITION_COLUMN, F.to_date(F.col(TIME_FIELD)))
     if batch_id is not None:
         out = out.withColumn("batch_id", F.lit(batch_id))
-    out.persist()
-    try:
+    with cache_scope():
+        cache(out, MODEL_CACHE)
         # a global aggregate, not distinct(): on empty input AQE would
         # prune distinct's shuffle and drop an Observation riding on ``df``
         n_rows, touched = out.agg(
@@ -94,8 +95,6 @@ def append_facts(
             logger.warning("All facts already present (replayed batch)")
             return False
         return True
-    finally:
-        out.unpersist()
 
 
 def _landed_keys(

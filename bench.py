@@ -399,15 +399,18 @@ def warm_up(spark, sf_dir: str) -> None:
 
 def timed_rep(spark, qd, sf_dir: str) -> float:
     """Wall seconds of one noop-sink execution of catalog query ``qd``,
-    after the per-rep reset: a query's own persist() calls must not leak
-    into its rerun, and the JVM GC lets the ContextCleaner actually
-    release prior runs' unreferenced persisted blocks (weak-ref cleanup
-    only fires after a collection — without it, storage-memory pressure
-    from dead blocks taxes persist-heavy queries)."""
-    spark.catalog.clearCache()
+    built and run inside one cache scope: every cache the build makes is
+    read by the action and released when the scope exits, so nothing
+    leaks into the rerun. The JVM GC first lets the ContextCleaner
+    release prior runs' unreferenced blocks (weak-ref cleanup only fires
+    after a collection — without it, storage-memory pressure from dead
+    blocks taxes persist-heavy queries)."""
+    from aircraftutilization_etl_spark.operators.distribute import cache_scope
+
     spark.sparkContext._jvm.System.gc()  # noqa: SLF001
     t0 = time.time()
-    qd.spark(spark, sf_dir).write.mode("overwrite").format("noop").save()
+    with cache_scope():
+        qd.spark(spark, sf_dir).write.mode("overwrite").format("noop").save()
     return time.time() - t0
 
 

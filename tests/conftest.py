@@ -3,6 +3,8 @@ import tempfile
 import pytest
 from pyspark.sql import SparkSession
 
+from aircraftutilization_etl_spark.operators.distribute import cache_scope
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -20,6 +22,22 @@ def spark():
     )
     yield session
     session.stop()
+
+
+@pytest.fixture(autouse=True)
+def _drop_unscoped_caches(request):
+    """An operator called outside any cache scope leaves a plain
+    persist; drop it after the test, so no test inherits another's."""
+    yield
+    if "spark" in request.fixturenames:
+        request.getfixturevalue("spark").catalog.clearCache()
+
+
+def query_rows(spark, qd, sf_dir):
+    """Rows of catalog query ``qd`` over ``sf_dir``, built and collected
+    inside one cache scope, as every consumer of the catalog runs it."""
+    with cache_scope():
+        return qd.spark(spark, sf_dir).collect()
 
 
 def rows_sorted(df, *keys):

@@ -19,6 +19,7 @@ import duckdb
 import pytest
 
 from aircraftutilization_etl_spark.plans import CATALOG
+from tests.conftest import query_rows
 
 SEED = 0xD00D
 QUERIES = (
@@ -84,7 +85,7 @@ def test_dedup_family_matches_duckdb_on_mixed_corpora(spark, tmp_path, hot):
             tuple(
                 round(v, 9) if isinstance(v, float) else v for v in r
             )
-            for r in qd.spark(spark, root).collect()
+            for r in query_rows(spark, qd, root)
         )
         want = sorted(
             tuple(

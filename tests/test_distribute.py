@@ -1,15 +1,21 @@
 """Contract of operators/distribute.py: the one module that decides
-spread width, exchange width and cache level."""
+spread width, exchange width, and cache level and lifetime."""
 
+import ast
 import contextlib
 import pathlib
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 import aircraftutilization_etl_spark
 from aircraftutilization_etl_spark.operators.distribute import (
+    CORPUS_CACHE,
+    MODEL_CACHE,
     _estimated_scan_splits,
+    cache,
+    cache_scope,
     ensure_scan_parallelism,
     scan_spread_width,
     shuffle_width,
@@ -104,3 +110,60 @@ def test_layout_decisions_live_only_in_distribute():
         if any(t in line for t in tokens)
     ]
     assert sites == []
+
+
+def test_caches_are_made_only_through_distribute():
+    """No module of the package calls ``.persist(``, ``.unpersist(`` or
+    ``.cache()`` except operators/distribute.py: every cache goes
+    through ``cache``, so a scope releases it."""
+    package = pathlib.Path(aircraftutilization_etl_spark.__file__).parent
+    home = package / "operators" / "distribute.py"
+    sites = [
+        (str(p.relative_to(package)), node.lineno, node.func.attr)
+        for p in sorted(package.rglob("*.py"))
+        if p != home
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and (
+            node.func.attr in ("persist", "unpersist")
+            or (node.func.attr == "cache" and not node.args)
+        )
+    ]
+    assert sites == []
+
+
+def test_scope_releases_its_caches_on_exception(spark):
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError):
+        with cache_scope():
+            df = cache(spark.range(5), CORPUS_CACHE)
+            assert df.count() == 5
+            assert df.storageLevel == CORPUS_CACHE
+            raise RuntimeError("action failed")
+    assert df.storageLevel == StorageLevel.NONE
+
+
+def test_nested_scope_releases_only_its_own_caches(spark):
+    spark.catalog.clearCache()
+    with cache_scope():
+        outer = cache(spark.range(7), MODEL_CACHE)
+        with cache_scope():
+            inner = cache(spark.range(11), CORPUS_CACHE)
+            # an outer scope's cache stays registered with the outer one
+            assert cache(spark.range(7), CORPUS_CACHE).storageLevel == MODEL_CACHE
+        assert inner.storageLevel == StorageLevel.NONE
+        assert outer.storageLevel == MODEL_CACHE
+    assert outer.storageLevel == StorageLevel.NONE
+
+
+def test_cache_outside_a_scope_is_a_plain_persist(spark):
+    spark.catalog.clearCache()
+    with cache_scope():
+        pass
+    df = cache(spark.range(13), CORPUS_CACHE)
+    with cache_scope():
+        assert df.count() == 13
+    assert df.storageLevel == CORPUS_CACHE
+    spark.catalog.clearCache()
+    assert df.storageLevel == StorageLevel.NONE

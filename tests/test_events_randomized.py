@@ -18,6 +18,7 @@ import duckdb
 import pytest
 
 from aircraftutilization_etl_spark.plans import CATALOG
+from tests.conftest import query_rows
 
 SEED = 0xE7E7
 QUERIES = (
@@ -87,7 +88,7 @@ def test_events_family_matches_duckdb_on_boundary_rich_streams(
             tuple(
                 round(v, 9) if isinstance(v, float) else v for v in r
             )
-            for r in qd.spark(spark, root).collect()
+            for r in query_rows(spark, qd, root)
         )
         want = sorted(
             tuple(

@@ -17,6 +17,7 @@ import duckdb
 import pytest
 
 from aircraftutilization_etl_spark.plans import CATALOG
+from tests.conftest import query_rows
 
 SEED = 0x6AF1
 QUERIES = (
@@ -96,7 +97,7 @@ def test_graph_family_matches_duckdb_on_planted_structures(
             tuple(
                 round(v, 9) if isinstance(v, float) else v for v in r
             )
-            for r in qd.spark(spark, root).collect()
+            for r in query_rows(spark, qd, root)
         )
         want = sorted(
             tuple(

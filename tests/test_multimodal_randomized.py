@@ -19,6 +19,7 @@ import duckdb
 import pytest
 
 from aircraftutilization_etl_spark.plans import CATALOG
+from tests.conftest import query_rows
 
 SEED = 0xA0D4
 QUERIES = (
@@ -78,7 +79,7 @@ def test_multimodal_and_chunking_match_duckdb(spark, tmp_path, case):
             tuple(
                 round(v, 9) if isinstance(v, float) else v for v in r
             )
-            for r in qd.spark(spark, root).collect()
+            for r in query_rows(spark, qd, root)
         )
         want = sorted(
             tuple(

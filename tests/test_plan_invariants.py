@@ -16,14 +16,16 @@ Invariants:
 4. Every catalog query builds at sf0.001 and yields a non-empty
    schema. (Build-time driver jobs are not counted here; the benchmark's
    traced run reports them as `plans.build_jobs`.)
-5. A query's build leaves nothing in the cache manager, except the
-   named known leakers (a ratchet: a fix must shrink that set).
+5. Every cache a query makes belongs to its consumer's cache scope:
+   after the scope that wraps the build exits, the cache manager is
+   empty, for every catalog query.
 """
 
 from __future__ import annotations
 
 import pytest
 
+from aircraftutilization_etl_spark.operators.distribute import cache_scope
 from aircraftutilization_etl_spark.plans import CATALOG
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -78,39 +80,22 @@ ARROW_EXEMPT = frozenset(
 )
 
 
-# Queries whose build leaves an entry in the cache manager: a persist
-# that is never released. ROADMAP item 4 owns them; equality below makes
-# each fix shrink this set.
-KNOWN_CACHE_LEAKS = frozenset(
-    {
-        "q_dedup_ngram_jaccard",
-        "q_dedup_minhash_lsh",
-        "q_dedup_clusters",
-        "q_dedup_keep_best",
-        "q_dedup_edit_distance",
-        "q_dedup_containment",
-        "q_dedup_clusters_star",
-        "q_dedup_minhash_estimate",
-        "q_text_inverted_index",
-        "q_split_leakage_report",
-    }
-)
-
-
 @pytest.fixture(scope="module")
 def built(spark):
     """name -> (executed-plan string, result schema, cache left
     non-empty) for every catalog query — built once, shared by the plan
-    sweeps, the output-edge type gate and the cache ratchet. The cache
-    manager is cleared before each build, so each flag is that query's
-    own."""
+    sweeps, the output-edge type gate and the cache-scope check. Each
+    query is built inside its own cache scope after the cache manager
+    is cleared, so each flag is that query's own."""
     cache = spark._jsparkSession.sharedState().cacheManager()
     out = {}
     for name, qd in CATALOG.items():
         spark.catalog.clearCache()
-        df = qd.spark(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        out[name] = (plan, df.schema, not cache.isEmpty())
+        with cache_scope():
+            df = qd.spark(spark, SF_DIR)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            schema = df.schema
+        out[name] = (plan, schema, not cache.isEmpty())
     spark.catalog.clearCache()
     return out
 
@@ -177,11 +162,10 @@ def test_every_query_builds_lazily(built):
 
 
 def test_builds_release_their_caches(built):
-    """Invariant 5: after its build, a query holds nothing in the cache
-    manager — every persist it makes is released once its consumer is
-    done — apart from KNOWN_CACHE_LEAKS."""
+    """Invariant 5: once the cache scope around its build exits, no
+    query holds anything in the cache manager."""
     leaking = {n for n, (_plan, _schema, cached) in built.items() if cached}
-    assert leaking == KNOWN_CACHE_LEAKS
+    assert leaking == set()
 
 
 def _round_calls(sql):

@@ -12,6 +12,7 @@ from aircraftutilization_etl_spark.plans.quota import (
     TOTAL_BUDGET,
     budget_allocate,
 )
+from tests.conftest import query_rows
 
 
 def _md5(s: str) -> str:
@@ -448,7 +449,7 @@ def test_null_strata_catalog_queries_agree_with_oracle(spark, tmp_path):
         "q_quota_recency_decay",
     ):
         got = sorted(
-            tuple(r) for r in CATALOG[name].spark(spark, str(tmp_path)).collect()
+            tuple(r) for r in query_rows(spark, CATALOG[name], str(tmp_path))
         )
         want = sorted(tuple(r) for r in con.execute(CATALOG[name].oracle).fetchall())
         assert got == want, name

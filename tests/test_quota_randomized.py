@@ -24,6 +24,7 @@ import duckdb
 import pytest
 
 from aircraftutilization_etl_spark.plans import CATALOG
+from tests.conftest import query_rows
 
 SEED = 0xBEEF
 DOC_QUERIES = (
@@ -99,7 +100,7 @@ def test_quota_family_matches_duckdb_on_random_corpora(
     for name in DOC_QUERIES + EVENT_QUERIES:
         qd = CATALOG[name]
         got = sorted(
-            tuple(r) for r in qd.spark(spark, root).collect()
+            tuple(r) for r in query_rows(spark, qd, root)
         )
         want = sorted(tuple(r) for r in _duck_rows(root, qd.oracle))
         # recency returns (event_id, event_type); docs queries return

@@ -19,6 +19,7 @@ import duckdb
 import pytest
 
 from aircraftutilization_etl_spark.plans import CATALOG
+from tests.conftest import query_rows
 
 SEED = 0x7C9A
 SRC = "/root/testdata/sf0.001"
@@ -171,7 +172,7 @@ def test_relational_surface_matches_duckdb_on_random_facts(
     _write_tables(spark, root, SEED + case)
     for name in QUERIES:
         qd = CATALOG[name]
-        got = sorted(_canon(r) for r in qd.spark(spark, root).collect())
+        got = sorted(_canon(r) for r in query_rows(spark, qd, root))
         want = sorted(_canon(r) for r in _duck_rows(root, qd.oracle))
         assert got == want, f"{name} diverged on seed {SEED + case}"
         assert got, f"{name} returned empty on a populated warehouse"

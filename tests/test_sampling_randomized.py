@@ -18,6 +18,7 @@ import duckdb
 import pytest
 
 from aircraftutilization_etl_spark.plans import CATALOG
+from tests.conftest import query_rows
 
 SEED = 0xFACE
 QUERIES = (
@@ -86,7 +87,7 @@ def test_placement_family_matches_duckdb_on_random_ids(
             tuple(
                 round(v, 9) if isinstance(v, float) else v for v in r
             )
-            for r in qd.spark(spark, root).collect()
+            for r in query_rows(spark, qd, root)
         )
         want = sorted(
             tuple(

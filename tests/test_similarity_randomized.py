@@ -16,6 +16,7 @@ import duckdb
 import pytest
 
 from aircraftutilization_etl_spark.plans import CATALOG
+from tests.conftest import query_rows
 
 SEED = 0x51A1
 DIM = 64
@@ -88,7 +89,7 @@ def test_similarity_family_matches_duckdb_on_planted_clusters(
             tuple(
                 round(v, 9) if isinstance(v, float) else v for v in r
             )
-            for r in qd.spark(spark, root).collect()
+            for r in query_rows(spark, qd, root)
         )
         want = sorted(
             tuple(

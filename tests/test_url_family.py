@@ -18,6 +18,7 @@ from aircraftutilization_etl_spark.plans.url import (
     DOMAIN_CAP,
     _cdocs,
 )
+from tests.conftest import query_rows
 
 SF = "/root/testdata/sf0.001"
 
@@ -50,7 +51,7 @@ def test_one_source_one_domain_and_suffix_branches(spark):
 
 
 def test_url_dedup_discovers_collisions_and_keeps_min(spark):
-    out = CATALOG["q_url_dedup"].spark(spark, SF).collect()
+    out = query_rows(spark, CATALOG["q_url_dedup"], SF)
     assert any(r.n_docs > 1 for r in out)  # real duplicate groups
     assert sum(r.n_docs for r in out) == 500  # partition of the corpus
     # keeper is the min doc_id of its group: re-derive one group
@@ -67,7 +68,7 @@ def test_url_dedup_discovers_collisions_and_keeps_min(spark):
 
 
 def test_domain_caps_bound_and_subset(spark):
-    kept = CATALOG["q_domain_caps"].spark(spark, SF).collect()
+    kept = query_rows(spark, CATALOG["q_domain_caps"], SF)
     per_dom: dict = {}
     for r in kept:
         per_dom[r.domain] = per_dom.get(r.domain, 0) + 1
@@ -84,7 +85,7 @@ def test_domain_caps_bound_and_subset(spark):
 
 
 def test_blocklist_excludes_both_suffix_branches(spark):
-    out = CATALOG["q_domain_blocklist"].spark(spark, SF).collect()
+    out = query_rows(spark, CATALOG["q_domain_blocklist"], SF)
     doms = {r.domain for r in out}
     assert doms.isdisjoint(set(BLOCKED_DOMAINS))
     # both blocked domains actually exist in the corpus (the filter
@@ -97,7 +98,7 @@ def test_blocklist_excludes_both_suffix_branches(spark):
 
 
 def test_domain_quota_sums_exactly_to_budget(spark):
-    kept = CATALOG["q_domain_quota"].spark(spark, SF).collect()
+    kept = query_rows(spark, CATALOG["q_domain_quota"], SF)
     assert len(kept) == DOMAIN_BUDGET  # no domain runs dry at sf0.001
     per_dom: dict = {}
     for r in kept:

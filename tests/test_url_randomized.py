@@ -28,6 +28,7 @@ import duckdb
 import pytest
 
 from aircraftutilization_etl_spark.plans import CATALOG
+from tests.conftest import query_rows
 
 SEED = 0x0C11
 QUERIES = (
@@ -85,7 +86,7 @@ def test_url_family_matches_duckdb_on_random_corpora(spark, tmp_path, case):
     _write_corpus(spark, root, SEED + case)
     for name in QUERIES:
         qd = CATALOG[name]
-        got = sorted(tuple(r) for r in qd.spark(spark, root).collect())
+        got = sorted(tuple(r) for r in query_rows(spark, qd, root))
         want = sorted(tuple(r) for r in _duck_rows(root, qd.oracle))
         assert got == want, f"{name} diverged on corpus seed {SEED + case}"
         assert got, f"{name} returned empty on a populated corpus"
@@ -102,7 +103,7 @@ def test_monster_domain_is_actually_capped(spark, tmp_path):
     root = str(tmp_path / "corpus")
     _write_corpus(spark, root, SEED)
     for name in ("q_domain_caps", "q_domain_admission"):
-        rows = CATALOG[name].spark(spark, root).collect()
+        rows = query_rows(spark, CATALOG[name], root)
         by_dom = Counter(r.domain for r in rows)
         assert max(by_dom.values()) == DOMAIN_CAP, name
         assert min(by_dom.values()) >= 1, name

@@ -17,6 +17,7 @@ import duckdb
 import pytest
 
 from aircraftutilization_etl_spark.plans import CATALOG
+from tests.conftest import query_rows
 
 SEED = 0x5CD2
 QUERIES = (
@@ -105,7 +106,7 @@ def test_warehouse_family_matches_duckdb_on_temporal_boundaries(
     _write_events(spark, root, SEED + case)
     for name in QUERIES:
         qd = CATALOG[name]
-        got = sorted(canon(r) for r in qd.spark(spark, root).collect())
+        got = sorted(canon(r) for r in query_rows(spark, qd, root))
         want = sorted(canon(r) for r in _duck_rows(root, qd.oracle))
         assert got == want, f"{name} diverged on seed {SEED + case}"
         assert got, f"{name} returned empty on a populated stream"

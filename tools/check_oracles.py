@@ -4,7 +4,9 @@
 Runs every __spark_entry__.queries() entry on Spark and its oracle_sql()
 on DuckDB over the same parquet tables, then compares row count, sorted
 column names, and an order-insensitive value hash (values canonicalized:
-floats via repr of rounded value, timestamps via ISO string).
+floats via repr of rounded value, timestamps via ISO string). Each query
+is built and collected inside one cache scope; a query that leaves an
+entry in the cache manager after its scope exits fails too.
 
 Usage: python tools/check_oracles.py [--sf DIR] [--only name1,name2] [-v]
 """
@@ -128,6 +130,7 @@ def main():
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry_mod
+    from aircraftutilization_etl_spark.operators.distribute import cache_scope
 
     # SPARK_GRAFT_SHUFFLE_PARTITIONS / SPARK_GRAFT_MAX_PARTITION_BYTES
     # let the odd-partitioning robustness sweep (local[5], 13 shuffle
@@ -150,6 +153,7 @@ def main():
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    cached = spark._jsparkSession.sharedState().cacheManager()  # noqa: SLF001
 
     con = duckdb.connect()
     for t in TABLES:
@@ -173,13 +177,19 @@ def main():
             print(f"SKIP {name} (--skip)")
             continue
         t0 = time.time()
+        spark.catalog.clearCache()
         try:
-            sdf = fn(spark, args.sf)
-            scols = sdf.columns
-            sedge = spark_edge_type_problems(sdf.schema)
-            srows = [tuple(r) for r in sdf.collect()]
+            with cache_scope():
+                sdf = fn(spark, args.sf)
+                scols = sdf.columns
+                sedge = spark_edge_type_problems(sdf.schema)
+                srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {e}")
+            n_fail += 1
+            continue
+        if not cached.isEmpty():
+            print(f"FAIL {name}: cache left after its scope")
             n_fail += 1
             continue
         if name not in oracles:

@@ -6,9 +6,11 @@ Usage:
     python tools/opt_profile.py --all-plans --plan-dir DIR   # explain only
 
 Timing uses bench.py's own session, warm-up and per-rep reset (noop
-sink, clearCache + JVM GC between reps, best-of-N) so numbers are
+sink, JVM GC and one cache scope per rep, best-of-N) so numbers are
 comparable; plans are
-``explain("formatted")`` written to ``<plan-dir>/<name>.txt``.
+``explain("formatted")`` written to ``<plan-dir>/<name>.txt``. Each
+query's plan is built after ``clearCache()`` and inside its own cache
+scope, so a dump never shows another query's cache.
 """
 
 from __future__ import annotations
@@ -84,6 +86,7 @@ def main() -> int:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from aircraftutilization_etl_spark.operators.distribute import cache_scope
     from aircraftutilization_etl_spark.plans import CATALOG
     from bench import bench_session, timed_rep, warm_up
 
@@ -99,15 +102,15 @@ def main() -> int:
     for name in names:
         qd = CATALOG[name]
         try:
-            df = qd.spark(spark, sf_dir)
             if args.plan_dir:
                 import contextlib
                 import io
 
                 os.makedirs(args.plan_dir, exist_ok=True)
                 buf = io.StringIO()
-                with contextlib.redirect_stdout(buf):
-                    df.explain("formatted")
+                spark.catalog.clearCache()
+                with cache_scope(), contextlib.redirect_stdout(buf):
+                    qd.spark(spark, sf_dir).explain("formatted")
                 path = os.path.join(
                     args.plan_dir, f"{name}{args.plan_suffix}.txt"
                 )

@@ -6,7 +6,7 @@ table) in the SAME session, and print per-query wall ratios for the
 SCALE.md table.
 
 Methodology is bench.py's own: its session, warm-up and per-rep reset
-(clearCache + JVM GC), a noop-sink write executes the full plan,
+(JVM GC, one cache scope per rep), a noop-sink write executes the full plan,
 best-of-N reps filters the host's transient stalls (N=3 at sf0.1, N=2 at sf1 — the sf1 legs are
 minutes-long, and a stall that survives two full reps would be visible
 as an implausible ratio, re-arbitrated by hand).
