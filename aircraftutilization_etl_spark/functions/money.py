@@ -19,10 +19,11 @@ DECIMAL/HUGEINT stay INTERIOR: the output edge is always the integer
 cents (BIGINT, < 2^63 even for world-GDP-scale totals) divided once by
 100.0 — one double division both engines perform identically.
 
-Rounding to cents is integer half-away-from-zero with operands kept
-non-negative (``(x + 50) DIV 100`` after sign-splitting), so Spark
-``DIV`` (truncates toward zero) and DuckDB ``//`` (floors) cannot
-diverge.
+Rounding to cents is integer half-up on a non-negative sum
+(``(x + 50) DIV 100``; every sum the catalog rounds is a non-negative
+revenue, discount or value), so Spark's floor and DuckDB's ``//``
+(which truncates) cannot diverge: they part only on negative operands.
+A sum already in cents needs no rounding and may be negative.
 """
 
 from __future__ import annotations
@@ -95,14 +96,14 @@ def sum128(unit_col: Column) -> Column:
     return F.sum(hi).cast(_I128) * 1_000_000 + F.sum(lo).cast(_I128)
 
 
-def dollars(sum_col: Column, unit_scale: int, signed: bool = False) -> Column:
-    """2-dp dollars (double) from an exact integer-unit sum.
+def dollars(sum_col: Column, unit_scale: int) -> Column:
+    """2-dp dollars (double) from an exact integer-unit sum, which
+    must be non-negative unless it is already in cents.
 
     ``unit_scale``: units per cent (1 for cents, 100 for tenth-mills,
-    10000 for micros). Half-away-from-zero to integer cents first
-    (sign-split so trunc/floor division semantics agree), then ONE
-    double division by 100 — bit-identical cross-engine because the
-    dividend is the same exact integer on both sides.
+    10000 for micros). Half-up to integer cents first, then ONE double
+    division by 100 — bit-identical cross-engine because the dividend
+    is the same exact integer on both sides.
 
     Exactness envelope: Spark caps decimal division results at 38
     digits; the quotient here needs |digits(s)| + 6 scale digits, so
@@ -116,13 +117,7 @@ def dollars(sum_col: Column, unit_scale: int, signed: bool = False) -> Column:
         return s.cast("long") / 100.0
     half = F.lit(unit_scale // 2).cast(_I128)
     den = F.lit(unit_scale).cast(_I128)
-    pos = F.floor((s + half) / den)
-    if signed:
-        neg = -F.floor((-s + half) / den)
-        cents_out = F.when(s >= 0, pos).otherwise(neg)
-    else:
-        cents_out = pos
-    return cents_out.cast("long") / 100.0
+    return F.floor((s + half) / den).cast("long") / 100.0
 
 
 # --- DuckDB oracle fragments (same units, same rounding) ----------------
@@ -147,20 +142,11 @@ def sql_cents(col: str) -> str:
     return SQL_CENTS.format(col=col)
 
 
-def sql_dollars(sum_expr: str, unit_scale: int, signed: bool = False) -> str:
-    """DuckDB twin of dollars(): integer half-away-from-zero to cents,
-    CAST to BIGINT (collapses the HUGEINT interior before the edge),
-    one double division."""
+def sql_dollars(sum_expr: str, unit_scale: int) -> str:
+    """DuckDB twin of dollars(): integer half-up to cents, CAST to
+    BIGINT (collapses the HUGEINT interior before the edge), one double
+    division."""
     if unit_scale == 1:
         return f"CAST({sum_expr} AS BIGINT) / 100.0"
-    half = unit_scale // 2
-    den = unit_scale
-    if signed:
-        c = (
-            f"CASE WHEN ({sum_expr}) >= 0"
-            f" THEN (({sum_expr}) + {half}) // {den}"
-            f" ELSE -((-({sum_expr}) + {half}) // {den}) END"
-        )
-    else:
-        c = f"(({sum_expr}) + {half}) // {den}"
+    c = f"(({sum_expr}) + {unit_scale // 2}) // {unit_scale}"
     return f"CAST({c} AS BIGINT) / 100.0"

@@ -254,10 +254,10 @@ def pq_train(
     production PQ protocol (Faiss/ScaNN train codebooks on a bounded
     sample whatever the corpus size). It is an id-prefix, not a random
     draw, so the oracle replays it. The sample is model-scale by
-    contract: one collect fetches it together with the seed vectors
-    (inside the sample whenever it holds ≥ k ids), and the Lloyd rounds
-    run driver-side — the cluster touches the corpus only to quantize
-    and, later, to encode it.
+    contract: one collect fetches it, and the Lloyd rounds run
+    driver-side — the cluster touches the corpus only to quantize and,
+    later, to encode it. A sample of ≥ k ids holds every seed; only a
+    thinner one costs a second collect for the seed vectors.
     """
     # distribute an under-partitioned scan before the quantize+split
     # projections — see kmeans_int8; the persisted cache keeps the
@@ -265,25 +265,26 @@ def pq_train(
     df = ensure_scan_parallelism(df, "vec_id")
     codes = quantize_embeddings(df).select(F.col("vec_id"), "qvec")
     scodes = cache(_sub_split(codes, m), CORPUS_CACHE)
-    # every vector has exactly m subvector rows, so the k·m smallest
-    # (id, sub) rows are the k seed vectors
-    rows = (
-        scodes.filter(F.col("vec_id") < train_limit)
-        .unionByName(scodes.orderBy("vec_id", "sub").limit(k * m))
-        .collect()
-    )
     vecs: dict[int, dict[int, list[int]]] = {}
-    for r in rows:
-        vecs.setdefault(r["vec_id"], {})[r["sub"]] = r["svec"]
+
+    def fetch(rows):
+        for r in rows.collect():
+            vecs.setdefault(r["vec_id"], {})[r["sub"]] = r["svec"]
+
+    fetch(scodes.filter(F.col("vec_id") < train_limit))
+    sample = sorted(vecs)
+    if len(sample) < k:
+        # every vector has exactly m subvector rows, so the k·m smallest
+        # (id, sub) rows are the k seed vectors
+        fetch(scodes.orderBy("vec_id", "sub").limit(k * m))
     if not vecs:
         # empty corpus: no codebooks to train; callers get ([], scodes)
         # and must produce their typed empty result
         return [], scodes
-    # a collected id outside the k seeds is a sample id above all of
-    # them, so the k smallest collected ids are the seeds
-    ids = sorted(vecs)
-    sample = [i for i in ids if i < train_limit]
-    return _pq_train_local(vecs, ids[:k], sample, m, iterations), scodes
+    # the sample is an id prefix, so the k smallest collected ids are
+    # the seeds
+    seeds = sorted(vecs)[:k]
+    return _pq_train_local(vecs, seeds, sample, m, iterations), scodes
 
 
 def _pq_train_local(vecs, seeds, sample, m: int, iterations: int):

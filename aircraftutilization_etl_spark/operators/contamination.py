@@ -53,11 +53,10 @@ def benchmark_shingle_set(benchmark: DataFrame) -> DataFrame:
 def contamination_report(
     train: DataFrame,
     benchmark_shingles: DataFrame,
-    min_hits: int = 1,
 ) -> DataFrame:
     """Per-training-document benchmark overlap: (id, n_hits, n_shingles,
-    hit_ppm) for every document with ≥ ``min_hits`` shingles found in the
-    benchmark set.
+    hit_ppm) for every document with ≥ 1 shingle found in the benchmark
+    set.
 
     ``hit_ppm`` = floor(n_hits * 1e6 / n_shingles) in pure integer
     arithmetic — exact, tie-free, and byte-identical across engines.
@@ -77,7 +76,7 @@ def contamination_report(
             F.count(F.lit(1)).alias("n_hits"),
             F.first("n_shingles").alias("n_shingles"),
         )
-        .filter(F.col("n_hits") >= min_hits)
+        .filter(F.col("n_hits") >= 1)
     )
     return hits.select(
         "doc_id",

@@ -506,6 +506,11 @@ def novelty_scores(df: DataFrame) -> DataFrame:
     )
 
 
+# edit_distance_pairs: the Levenshtein radius and the q-gram length of
+# its count filter.
+EDIT_MAX_DIST = 2
+EDIT_GRAM_Q = 3
+
 # Ultra-frequent q-gram drop (VERDICT r9 #2): grams present in more than
 # max(FLOOR, n_strings // DENOM) strings are dropped from the candidate
 # join — a gram shared by f strings owes f²/2 candidate pairs in ONE
@@ -534,22 +539,19 @@ EDIT_UNSAFE_BCAST_ROWS = 4_000_000
 
 
 def edit_distance_pairs(
-    df: DataFrame,
-    max_dist: int = 2,
-    id_col: str = "doc_id",
-    str_col: str = "title",
-    q: int = 3,
-    max_gram_df: int | None = None,
+    df: DataFrame, max_gram_df: int | None = None
 ) -> DataFrame:
-    """All unordered pairs with Levenshtein distance ≤ ``max_dist`` —
+    """All unordered ``doc_id`` pairs whose ``title``s lie within
+    Levenshtein distance ``max_dist`` = ``EDIT_MAX_DIST`` (2) —
     typo-level near-dup (titles, product names, entity mentions).
 
     Sub-quadratic candidate generation by the classic q-gram count
-    filter (Gravano et al., VLDB 2001), hardened against Zipf-head
-    grams. One edit overlaps at most ``q`` gram positions, and distinct
-    grams occupy disjoint position sets, so ``max_dist`` edits destroy
-    at most ``q·max_dist`` DISTINCT grams of a string. Ultra-frequent
-    grams (document frequency > ``max_gram_df``, default
+    filter (Gravano et al., VLDB 2001; q = ``EDIT_GRAM_Q``, 3), hardened
+    against Zipf-head grams. One edit overlaps at most ``q`` gram
+    positions, and distinct grams occupy disjoint position sets, so
+    ``max_dist`` edits destroy at most ``q·max_dist`` DISTINCT grams of
+    a string. Ultra-frequent grams (document frequency >
+    ``max_gram_df``, default
     ``max(EDIT_GRAM_DF_FLOOR, n_strings // EDIT_GRAM_DF_DENOM)``) are
     dropped before the join — they cannot discriminate, and their
     f²-pair blocks are exactly the single-task stragglers the r9 probe
@@ -575,19 +577,20 @@ def edit_distance_pairs(
     Verification is |candidates|.
     """
     s = cache(
-        df.select(F.col(id_col).alias("id"), F.col(str_col).alias("s")),
+        df.select(F.col("doc_id").alias("id"), F.col("title").alias("s")),
         CORPUS_CACHE,
     )
     grams = cache(
-        s.filter(F.length("s") >= q)
+        s.filter(F.length("s") >= EDIT_GRAM_Q)
         .select(
             "id",
             "s",
             F.explode(
                 F.array_distinct(
                     F.expr(
-                        f"transform(sequence(1, length(s) - {q - 1}), "
-                        f"i -> substring(s, i, {q}))"
+                        "transform(sequence(1, length(s) - "
+                        f"{EDIT_GRAM_Q - 1}), "
+                        f"i -> substring(s, i, {EDIT_GRAM_Q}))"
                     )
                 )
             ).alias("gram"),
@@ -625,7 +628,9 @@ def edit_distance_pairs(
     rare_cnt = rare.groupBy("id").agg(F.count(F.lit(1)).alias("__r"))
     unsafe = cache(
         s.join(rare_cnt, "id", "left")
-        .filter(F.coalesce(F.col("__r"), F.lit(0)) <= q * max_dist)
+        .filter(
+            F.coalesce(F.col("__r"), F.lit(0)) <= EDIT_GRAM_Q * EDIT_MAX_DIST
+        )
         .select("id", "s"),
         CORPUS_CACHE,
     )
@@ -646,7 +651,8 @@ def edit_distance_pairs(
         SHINGLE_BUCKET_CAP,
         payload={"s": ("s_a", "s_b")},
     ).filter(
-        F.abs(F.length(F.col("s_a")) - F.length(F.col("s_b"))) <= max_dist
+        F.abs(F.length(F.col("s_a")) - F.length(F.col("s_b")))
+        <= EDIT_MAX_DIST
     )
     # unsafe is persisted and already materialized by the stats job in
     # chunked_self_pairs above, so this count is an O(1) cache read —
@@ -717,7 +723,7 @@ def edit_distance_pairs(
     # distance when ≤ max_dist and -1 past it, so the kept rows and
     # their dist values are bit-identical to the unbounded form
     return (
-        cand.withColumn("dist", F.levenshtein("s_a", "s_b", max_dist))
+        cand.withColumn("dist", F.levenshtein("s_a", "s_b", EDIT_MAX_DIST))
         .filter(F.col("dist") >= 0)
         .select("id_a", "id_b", F.col("dist").cast("int").alias("dist"))
     )

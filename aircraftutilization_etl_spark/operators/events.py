@@ -258,25 +258,27 @@ def resample_interpolate(
     )
 
 
+EWMA_ALPHA = 0.25  # dyadic, so alpha and 1 - alpha are exact doubles
+
+
 def ewma(
     df: DataFrame,
     key: str,
     ts_col: str,
     value_col: str,
     tiebreak: str,
-    alpha: float = 0.25,
 ) -> DataFrame:
-    """Per-key exponential moving average (adjust-free recurrence:
-    y_0 = x_0, y_t = (1-alpha)*y_{t-1} + alpha*x_t) — the smoothing
-    primitive behind rate limiting, anomaly baselines, and metric
-    dashboards, inherently sequential per key.
+    """Per-key exponential moving average with alpha = ``EWMA_ALPHA``
+    (adjust-free recurrence: y_0 = x_0,
+    y_t = (1-alpha)*y_{t-1} + alpha*x_t) — the smoothing primitive
+    behind rate limiting, anomaly baselines, and metric dashboards,
+    inherently sequential per key.
 
     The recurrence evaluates as literally ``(1-alpha)*prev + alpha*x``
     in float64, in (ts, tiebreak) order — the exact op sequence the
     recursive-CTE oracle replays, so IEEE determinism makes results
     bit-identical across engines (pandas' own ``ewm`` is NOT used: its
-    internal op order is an implementation detail). alpha should be a
-    dyadic rational (0.25, 0.5) so both factors are exact doubles.
+    internal op order is an implementation detail).
 
     Scale: one shuffle on the key + one sort within each partition,
     then a SINGLE linear mapInPandas pass per partition — NOT
@@ -287,7 +289,7 @@ def ewma(
     key changes and carries (last_key, last_ewma) across Arrow batch
     boundaries, so batch slicing never splits a recurrence.
     """
-    one_minus = 1.0 - alpha
+    one_minus = 1.0 - EWMA_ALPHA
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     ) + ", ewma double"
@@ -302,7 +304,7 @@ def ewma(
             out = vals.copy()
             for i in range(len(out)):
                 if keys[i] == last_key:
-                    out[i] = one_minus * last_val + alpha * vals[i]
+                    out[i] = one_minus * last_val + EWMA_ALPHA * vals[i]
                 last_key, last_val = keys[i], out[i]
             pdf = pdf.copy()
             pdf["ewma"] = out

@@ -269,6 +269,7 @@ def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
 
 
 PHASH_BLOCKS = 32  # perceptual-hash resolution (bits)
+PHASH_MAX_HAMMING = 3  # near-dup radius of phash_near_dup (bits)
 
 
 def perceptual_hash(media: DataFrame) -> DataFrame:
@@ -344,10 +345,10 @@ def perceptual_hash(media: DataFrame) -> DataFrame:
     )
 
 
-def phash_near_dup(hashed: DataFrame, max_hamming: int = 3) -> DataFrame:
+def phash_near_dup(hashed: DataFrame) -> DataFrame:
     """Near-duplicate asset pairs by perceptual hash: banded LSH
     candidate generation (pairs agreeing exactly on ≥1 of 4
-    hash slices) + exact Hamming verification ≤ ``max_hamming``.
+    hash slices) + exact Hamming verification ≤ ``PHASH_MAX_HAMMING``.
 
     Same shape as the MinHash pipeline: the self-join runs on
     (band, band_key) buckets — only near-identical hashes ever meet —
@@ -396,6 +397,6 @@ def phash_near_dup(hashed: DataFrame, max_hamming: int = 3) -> DataFrame:
     )
     return (
         cand.withColumn("hamming", hamming.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= PHASH_MAX_HAMMING)
         .select("id_a", "id_b", "hamming")
     )

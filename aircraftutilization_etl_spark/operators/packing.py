@@ -40,22 +40,17 @@ from pyspark.sql.window import Window
 
 from .text import token_count_expr
 
-DEFAULT_CAPACITY = 256
+PACK_CAPACITY = 256  # token budget of one packed sequence
 
 
-def pack_sequences(
-    df: DataFrame,
-    capacity: int = DEFAULT_CAPACITY,
-) -> DataFrame:
+def pack_sequences(df: DataFrame) -> DataFrame:
     """Assign every document to (bucket, seq_id, offset) under a greedy
-    token-budget packing; returns one row per document.
+    ``PACK_CAPACITY``-token packing; returns one row per document.
 
     Output: ``bucket`` (md5-prefix hex, 16^prefix_len values), ``seq_id``
     (sequence ordinal within the bucket), ``doc_id``, ``n_tokens``
     (whitespace tokens), ``offset`` (token start within the sequence).
     """
-    if capacity <= 0:
-        raise ValueError(f"capacity must be positive, got {capacity}")
     md5 = F.md5(F.col("doc_id").cast("string"))
     sized = df.select(
         F.substring(md5, 1, 1).alias("bucket"),
@@ -73,7 +68,7 @@ def pack_sequences(
         seq_ids, offsets = [], []
         seq_id, fill = 0, 0
         for tok in pdf["n_tokens"]:
-            if fill > 0 and fill + tok > capacity:
+            if fill > 0 and fill + tok > PACK_CAPACITY:
                 seq_id += 1
                 fill = 0
             seq_ids.append(seq_id)
@@ -92,9 +87,7 @@ def pack_sequences(
     return sized.groupBy("bucket").applyInPandas(_pack, out_schema)
 
 
-def packing_efficiency(
-    packed: DataFrame, capacity: int = DEFAULT_CAPACITY
-) -> DataFrame:
+def packing_efficiency(packed: DataFrame) -> DataFrame:
     """Per-bucket packing audit: sequences produced, mean fill ppm.
 
     ``fill_ppm`` uses integer arithmetic (total tokens vs total budget
@@ -107,14 +100,14 @@ def packing_efficiency(
         F.count(F.lit(1)).alias("n_sequences"),
         F.sum("seq_tokens").alias("n_tokens"),
         F.expr(
-            f"CAST((SUM(seq_tokens) * 1000000) DIV (COUNT(1) * {capacity}) "
-            "AS BIGINT)"
+            "CAST((SUM(seq_tokens) * 1000000) DIV "
+            f"(COUNT(1) * {PACK_CAPACITY}) AS BIGINT)"
         ).alias("fill_ppm"),
     )
 
 
 LENGTH_BUCKET_EDGES = (16, 32, 64)
-DEFAULT_BATCH_SIZE = 8
+PAD_BATCH_SIZE = 8  # documents per batch in padding_audit
 
 
 def length_bucket_expr(n_tokens):
@@ -132,13 +125,11 @@ def length_bucket_expr(n_tokens):
     return expr.otherwise(F.lit(None)).cast("long")
 
 
-def padding_audit(
-    df: DataFrame,
-    batch_size: int = DEFAULT_BATCH_SIZE,
-) -> DataFrame:
+def padding_audit(df: DataFrame) -> DataFrame:
     """Padding-waste audit of length-bucketed batching vs shuffled
-    global batching — the measurement that justifies (or rejects)
-    bucketing a corpus before batch assembly.
+    global batching (``PAD_BATCH_SIZE`` documents per batch) — the
+    measurement that justifies (or rejects) bucketing a corpus before
+    batch assembly.
 
     Dynamic padding pads every batch to its own longest member, so
     waste = sum over batches of (batch_max * batch_size_actual - tokens).
@@ -193,7 +184,7 @@ def padding_audit(
         "bucket", length_bucket_expr(F.col("n_tokens"))
     ).withColumn(
         "batch_id",
-        F.floor((F.row_number().over(w) - 1) / batch_size).cast("bigint"),
+        F.floor((F.row_number().over(w) - 1) / PAD_BATCH_SIZE).cast("bigint"),
     )
     bucketed_audit = _audit(bucketed, "bucketed", F.col("bucket"))
 
@@ -202,7 +193,9 @@ def padding_audit(
         order_cols=["__ord", "doc_id"],
         value_col="__one",
         out_col="__idx",
-    ).withColumn("batch_id", F.expr(f"CAST((__idx - 1) DIV {batch_size} AS BIGINT)"))
+    ).withColumn(
+        "batch_id", F.expr(f"CAST((__idx - 1) DIV {PAD_BATCH_SIZE} AS BIGINT)")
+    )
     global_audit = _audit(indexed, "global", F.lit(None).cast("long"))
 
     return bucketed_audit.unionByName(global_audit)

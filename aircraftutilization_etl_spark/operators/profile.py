@@ -7,14 +7,12 @@ exploding an array of structs driver-side-free. The alternative — one
 query per column — rescans the table |columns| times, which at 100 TB is
 the difference between one pass and a day of passes.
 
-Distinct counts: ``exact=True`` uses COUNT(DISTINCT ...), which Spark
-plans as an Expand (row multiplication by |columns|) — correct, and what
-the DuckDB oracle can replay, but the multiplication is a real cost at
-scale. ``exact=False`` switches to HyperLogLog++
-(``approx_count_distinct``), collapsing the Expand back to a single
-pass; same output shape, rows-only checkable. This mirrors the
-percentile discipline (exact for the oracle, sketch for the 100 TB
-path).
+Distinct counts use COUNT(DISTINCT ...), which Spark plans as an
+Expand (row multiplication by |columns|) — correct, and what the DuckDB
+oracle can replay, but the multiplication is a real cost at scale.
+``audit_approx=True`` adds the HyperLogLog++ estimate
+(``approx_count_distinct``) as a checked certificate beside the exact
+count.
 """
 
 from __future__ import annotations
@@ -31,7 +29,6 @@ APPROX_DISTINCT_RSD = 0.05  # approx_count_distinct default
 def profile_columns(
     df: DataFrame,
     cols: Sequence[str],
-    exact: bool = True,
     audit_approx: bool = False,
 ) -> DataFrame:
     """One row per profiled column: (col_name, n_rows, n_nulls,
@@ -39,31 +36,23 @@ def profile_columns(
     column's native type and cast to string only at the edge (so numeric
     columns order numerically, not lexically).
 
-    ``audit_approx=True`` (implies exact distinct) additionally runs the
-    HLL++ estimator and emits ``distinct_within_tol``:
-    |approx − exact| ≤ 3·rsd·exact + 2. HLL++ registers are
-    max-of-hashes, so the estimate is a deterministic function of the
-    key SET (merge-order free) — the boolean is an engine-stable,
-    oracle-checkable certificate of the sketch the 100 TB path relies
-    on (the ``exact=False`` mode, which profiles without the Expand).
-    The estimator runs in its OWN aggregation joined back on col_name:
+    ``audit_approx=True`` additionally runs the HLL++ estimator and
+    emits ``distinct_within_tol``: |approx − exact| ≤ 3·rsd·exact + 2.
+    HLL++ registers are max-of-hashes, so the estimate is a
+    deterministic function of the key SET (merge-order free) — the
+    boolean is an engine-stable, oracle-checkable certificate of the
+    sketch. The estimator runs in its OWN aggregation joined back on col_name:
     mixed exact+approx distinct in one agg sends the HLL buffer
     through the multi-distinct Expand plan — one register set per
     distinct VALUE group instead of one per profiled column."""
     if not cols:
         raise ValueError("profile_columns needs at least one column")
-    distinct = (
-        (lambda c: F.count_distinct(F.col(c)))
-        if exact or audit_approx
-        else (lambda c: F.approx_count_distinct(c))
-    )
-
     def fields(c: str):
         return [
             F.lit(c).alias("col_name"),
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(F.col(c).isNull().cast("long")).alias("n_nulls"),
-            distinct(c).alias("n_distinct"),
+            F.count_distinct(F.col(c)).alias("n_distinct"),
             F.min(F.col(c)).cast("string").alias("min_value"),
             F.max(F.col(c)).cast("string").alias("max_value"),
         ]

@@ -19,45 +19,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salted_join(
-    skewed: DataFrame,
-    small: DataFrame,
-    on: str,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with the skewed side's hot keys spread over 8 salt
-    sub-keys.
+def salted_join(skewed: DataFrame, small: DataFrame, on: str) -> DataFrame:
+    """Inner equi-join with the skewed side's hot keys spread over 8
+    salt sub-keys.
 
     The skewed side gets a deterministic content-derived salt; the small
     side is replicated once per salt value (explode of a literal range —
     8× a small table, still broadcastable). Joining on (key, salt)
-    splits every hot key's rows across 8 tasks.
-
-    Result set is exactly the plain join's ONLY for join types where the
-    replicated (small) side never contributes unmatched rows: inner,
-    left outer, left semi, left anti. For right/full outer an unmatched
-    small-side row would survive once per salt replica (8
-    copies), so those types are rejected.
+    splits every hot key's rows across 8 tasks. Each skewed row meets
+    exactly one replica of its matching small row, so the result is the
+    plain inner join's.
     """
-    allowed = {
-        "inner", "left", "left_outer", "leftouter",
-        "semi", "left_semi", "leftsemi",
-        "anti", "left_anti", "leftanti",
-    }
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join does not preserve '{how}' semantics: the small "
-            "side is replicated per salt, so unmatched small-side rows "
-            "would be emitted 8 times. Use inner/left/semi/anti."
-        )
     salt = F.pmod(F.xxhash64(*skewed.columns), F.lit(8)).cast("int")
     left = skewed.withColumn("__salt", salt)
     right = small.withColumn(
         "__salt",
         F.explode(F.sequence(F.lit(0), F.lit(7)).cast("array<int>")),
     )
-    joined = left.join(right, on=[on, "__salt"], how=how)
-    return joined.drop("__salt")
+    return left.join(right, on=[on, "__salt"]).drop("__salt")
 
 
 # --- Bloom-filter join pruning -------------------------------------------
@@ -143,28 +122,15 @@ def bloom_might_contain(
     return out
 
 
-def bloom_prune_join(
-    probe: DataFrame,
-    build: DataFrame,
-    on: str,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with the probe side Bloom-pruned before its shuffle.
+def bloom_prune_join(probe: DataFrame, build: DataFrame, on: str) -> DataFrame:
+    """Inner equi-join with the probe side Bloom-pruned before its
+    shuffle.
 
     Two passes over the build side's key column (distinct + filter
-    build), then the pruned exact join. Only join types where dropping
-    guaranteed-non-matching probe rows is semantics-preserving are
-    allowed (inner / right outer / left semi: the pruned rows could
-    never contribute a match; left/full outer must keep them).
+    build), then the pruned exact join. The pruned probe rows could
+    never contribute a match, so the result is the plain inner join's.
     """
-    allowed = {"inner", "semi", "left_semi", "leftsemi", "right", "right_outer", "rightouter"}
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"bloom_prune_join cannot prune the probe side of a '{how}' "
-            "join: pruned probe rows would be missing from its unmatched-"
-            "row output. Use inner/semi/right."
-        )
     m_bits, k_hashes = 1 << 17, 5
     words = bloom_filter_words(build.select(on), on, m_bits, k_hashes)
     pruned = probe.filter(bloom_might_contain(words, on, m_bits, k_hashes))
-    return pruned.join(build, on=on, how=how)
+    return pruned.join(build, on=on)

@@ -1177,9 +1177,12 @@ def tfidf_cosine_pairs(df: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def skipgram_pairs(df: DataFrame, window: int = 2) -> DataFrame:
+SKIPGRAM_WINDOW = 2  # context radius of skipgram_pairs (positions)
+
+
+def skipgram_pairs(df: DataFrame) -> DataFrame:
     """Skip-gram co-occurrence mining: (center, context, n_pairs) for
-    every ordered word pair within ±``window`` positions — the
+    every ordered word pair within ±``SKIPGRAM_WINDOW`` positions — the
     positive-pair extraction of word2vec-style embedding training.
 
     Scale: pair generation is per-row array algebra (flatten of a
@@ -1199,8 +1202,8 @@ def skipgram_pairs(df: DataFrame, window: int = 2) -> DataFrame:
             lambda i: F.filter(
                 F.transform(
                     F.sequence(
-                        F.greatest(i - window, F.lit(0)),
-                        F.least(i + window, F.size("__words") - 1),
+                        F.greatest(i - SKIPGRAM_WINDOW, F.lit(0)),
+                        F.least(i + SKIPGRAM_WINDOW, F.size("__words") - 1),
                     ),
                     lambda j: F.when(
                         j != i,

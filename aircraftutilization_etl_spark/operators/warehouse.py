@@ -40,11 +40,10 @@ def partial_rollup(
     sums: Sequence[str] = (),
     mins: Sequence[str] = (),
     maxs: Sequence[str] = (),
-    count_col: str = "n_rows",
 ) -> DataFrame:
     """Aggregate ``df`` to one row per ``keys`` with mergeable measures.
 
-    Output columns: ``keys..., count_col, sum_<c>, min_<c>, max_<c>``.
+    Output columns: ``keys..., n_rows, sum_<c>, min_<c>, max_<c>``.
     The result can be merged with any other partial rollup of the same
     shape via :func:`merge_rollups` without loss — the defining property
     that makes incremental maintenance exact.
@@ -53,7 +52,7 @@ def partial_rollup(
     aggregation, so shuffle volume is |distinct keys per task|, not
     |rows|.
     """
-    aggs = [F.count(F.lit(1)).alias(count_col)]
+    aggs = [F.count(F.lit(1)).alias("n_rows")]
     aggs += [F.sum(c).alias(f"sum_{c}") for c in sums]
     aggs += [F.min(c).alias(f"min_{c}") for c in mins]
     aggs += [F.max(c).alias(f"max_{c}") for c in maxs]
@@ -66,7 +65,6 @@ def merge_rollups(
     sums: Sequence[str] = (),
     mins: Sequence[str] = (),
     maxs: Sequence[str] = (),
-    count_col: str = "n_rows",
 ) -> DataFrame:
     """Merge partial rollups (same shape, from :func:`partial_rollup`)
     into one consistent aggregate — the incremental-maintenance step.
@@ -82,7 +80,7 @@ def merge_rollups(
     merged = states[0]
     for s in states[1:]:
         merged = merged.unionByName(s)
-    aggs = [F.sum(count_col).alias(count_col)]
+    aggs = [F.sum("n_rows").alias("n_rows")]
     aggs += [F.sum(f"sum_{c}").alias(f"sum_{c}") for c in sums]
     aggs += [F.min(f"min_{c}").alias(f"min_{c}") for c in mins]
     aggs += [F.max(f"max_{c}").alias(f"max_{c}") for c in maxs]

@@ -1095,8 +1095,8 @@ def q_events_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept digit (surfaced at sf0.1); floor of the identical double is
     rounding-rule-free.
 
-    Scale: one shuffle on user_id, then a linear per-key pass
-    (applyInPandas) — group memory is the user's own purchase count.
+    Scale: one shuffle on user_id, then one linear mapInPandas pass
+    over each key-sorted partition — no per-key pandas frame.
     """
     from ..operators.events import ewma
 

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.packing import DEFAULT_CAPACITY, pack_sequences, packing_efficiency
+from ..operators.packing import PACK_CAPACITY, pack_sequences, packing_efficiency
 from .catalog import query, table
 
 # shared CTE chain ending in `packed` = (bucket, rn, doc_id, n_tokens,
@@ -37,11 +37,11 @@ _PACKED_CTES = f"""
         FROM ordered WHERE rn = 1
         UNION ALL
         SELECT o.bucket, o.rn, o.doc_id, o.n_tokens,
-               CASE WHEN p.fill + o.n_tokens <= {DEFAULT_CAPACITY}
+               CASE WHEN p.fill + o.n_tokens <= {PACK_CAPACITY}
                     THEN p.seq_id ELSE p.seq_id + 1 END,
-               CASE WHEN p.fill + o.n_tokens <= {DEFAULT_CAPACITY}
+               CASE WHEN p.fill + o.n_tokens <= {PACK_CAPACITY}
                     THEN p.fill ELSE 0 END,
-               CASE WHEN p.fill + o.n_tokens <= {DEFAULT_CAPACITY}
+               CASE WHEN p.fill + o.n_tokens <= {PACK_CAPACITY}
                     THEN p.fill + o.n_tokens ELSE o.n_tokens END
         FROM packed p JOIN ordered o
           ON o.bucket = p.bucket AND o.rn = p.rn + 1
@@ -86,7 +86,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) AS BIGINT) AS n_sequences,
            CAST(SUM(seq_tokens) AS BIGINT) AS n_tokens,
            CAST(SUM(seq_tokens) * 1000000
-                // (COUNT(*) * {DEFAULT_CAPACITY}) AS BIGINT) AS fill_ppm
+                // (COUNT(*) * {PACK_CAPACITY}) AS BIGINT) AS fill_ppm
     FROM per_seq
     GROUP BY bucket
     ORDER BY bucket

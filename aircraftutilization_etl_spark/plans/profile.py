@@ -45,7 +45,7 @@ def q_profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale note: exact multi-column COUNT(DISTINCT) makes Spark plan an
     Expand (|columns|x row multiplication) — acceptable for audits; the
-    approx twin below is the routine-profiling path.
+    approx twin below certifies the HLL++ estimate against it.
     """
     # Spread the scan before the Expand (r11 opt): exact multi-column
     # COUNT(DISTINCT) multiplies every row |columns|x, and at bench
@@ -79,9 +79,7 @@ def q_profile_lineitem_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the CERTIFICATE runs the two estimators as SEPARATE
     aggregations joined on col_name (mixing them in one agg routes the
     HLL buffer through the multi-distinct Expand — a register set per
-    distinct VALUE); the exact side's Expand is the audit cost. The
-    routine 100 TB path is profile_columns(exact=False): one scan, no
-    Expand, sketch-only.
+    distinct VALUE); the exact side's Expand is the audit cost.
     """
     from ..operators.distribute import ensure_scan_parallelism
 

@@ -1,8 +1,10 @@
+import re
 import tempfile
 
 import pytest
 from pyspark.sql import SparkSession
 
+from aircraftutilization_etl_spark.diagnostics import executed_plan
 from aircraftutilization_etl_spark.operators.distribute import cache_scope
 
 
@@ -46,3 +48,11 @@ def rows_sorted(df, *keys):
         (tuple(row) for row in df.collect()),
         key=lambda t: tuple((v is None, v) for v in t),
     ) if not keys else [tuple(r) for r in df.orderBy(*keys).collect()]
+
+
+def count_exchanges(df):
+    """Number of Exchange (shuffle/broadcast-build) operators in the
+    executed plan; reused exchanges (AQE stage reuse) appear once."""
+    return len(
+        re.findall(r"\bExchange\b|\bBroadcastExchange\b", executed_plan(df))
+    )

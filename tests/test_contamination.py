@@ -38,18 +38,6 @@ def test_contamination_counts_and_ppm(spark):
     }
 
 
-def test_min_hits_threshold(spark):
-    bench = spark.createDataFrame(
-        [(100, "the quick brown fox jumps")], ["doc_id", "text"]
-    )
-    train = spark.createDataFrame(
-        [(1, "a very quick brown fox runs"), (3, "the quick brown fox jumps")],
-        ["doc_id", "text"],
-    )
-    got = contamination_report(
-        train, benchmark_shingle_set(bench), min_hits=2
-    ).collect()
-    assert [r["doc_id"] for r in got] == [3]
 
 
 def test_duplicate_shingles_within_doc_count_once(spark):

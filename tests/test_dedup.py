@@ -278,7 +278,7 @@ def test_edit_distance_pairs_vs_bruteforce(spark):
     df = spark.createDataFrame(vals, "doc_id long, title string")
     got = sorted(
         (r["id_a"], r["id_b"], r["dist"])
-        for r in edit_distance_pairs(df, max_dist=2).collect()
+        for r in edit_distance_pairs(df).collect()
     )
     assert got == want
 
@@ -552,7 +552,7 @@ class TestEditDistanceHotGramDrop:
             if cls._lev(a, b) <= k
         )
 
-    def _run(self, spark, vals, **kw):
+    def _run(self, spark, vals, max_gram_df=None):
         from aircraftutilization_etl_spark.operators.dedup import (
             edit_distance_pairs,
         )
@@ -560,7 +560,7 @@ class TestEditDistanceHotGramDrop:
         df = spark.createDataFrame(vals, "doc_id long, title string")
         return sorted(
             (r["id_a"], r["id_b"], r["dist"])
-            for r in edit_distance_pairs(df, max_dist=2, **kw).collect()
+            for r in edit_distance_pairs(df, max_gram_df=max_gram_df).collect()
         )
 
     def test_auto_cap_engages_above_floor(self, spark):

@@ -7,10 +7,10 @@ from pyspark.sql import functions as F
 
 from aircraftutilization_etl_spark.diagnostics import (
     assert_scalable,
-    count_exchanges,
     python_nodes,
     scan_schemas,
 )
+from tests.conftest import count_exchanges
 
 
 def test_python_nodes_classification(spark):
@@ -54,15 +54,8 @@ def test_assert_scalable_guards(spark):
     with pytest.raises(AssertionError, match="row-at-a-time"):
         assert_scalable(spark.range(10).select(slow("id")))
 
-    arrow = spark.range(10).mapInPandas(lambda it: it, "id long")
-    assert_scalable(arrow)  # arrow allowed by default
-    with pytest.raises(AssertionError, match="pure-JVM"):
-        assert_scalable(arrow, allow_arrow=False)
-
-    shuffly = spark.range(100).groupBy((F.col("id") % 3)).count()
-    with pytest.raises(AssertionError, match="exchanges"):
-        assert_scalable(shuffly, max_exchanges=0)
-    assert_scalable(shuffly, max_exchanges=4)
+    assert_scalable(spark.range(10).mapInPandas(lambda it: it, "id long"))
+    assert_scalable(spark.range(100).groupBy((F.col("id") % 3)).count())
 
 
 class TestAdvise:

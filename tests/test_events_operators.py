@@ -186,7 +186,7 @@ class TestResampleFfill:
         assert out.collect()[0]["value_ffill"] == 7.0
 
     def test_plan_one_exchange_no_join(self, spark):
-        from aircraftutilization_etl_spark.diagnostics import count_exchanges
+        from tests.conftest import count_exchanges
         from aircraftutilization_etl_spark.operators.events import (
             resample_ffill,
         )
@@ -241,7 +241,7 @@ class TestEwma:
         )
         out = {
             (r.user_id, r.ts): r.ewma
-            for r in ewma(df, "user_id", "ts", "value", "event_id", 0.25).collect()
+            for r in ewma(df, "user_id", "ts", "value", "event_id").collect()
         }
         assert out[(1, 1)] == 4.0
         assert out[(1, 2)] == 0.75 * 4.0 + 0.25 * 8.0
@@ -257,11 +257,11 @@ class TestEwma:
         )
         out = {
             r.event_id: r.ewma
-            for r in ewma(df, "user_id", "ts", "value", "event_id", 0.5).collect()
+            for r in ewma(df, "user_id", "ts", "value", "event_id").collect()
         }
         # event 1 first (tiebreak), event 2 smoothed from it
         assert out[1] == 0.0
-        assert out[2] == 50.0
+        assert out[2] == 25.0
 
     def test_partitioning_invariant(self, spark):
         from aircraftutilization_etl_spark.operators.events import ewma

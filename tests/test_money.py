@@ -50,12 +50,6 @@ def test_sql_dollars_literal_values():
         " FROM (VALUES (123456789)) t(u)"
     ).fetchone()[0]
     assert v == 123.46
-    # signed: -12350 tm = -123.50 cents -> half-away-from-zero -124 -> -1.24
-    v = con.sql(
-        f"SELECT {money.sql_dollars('SUM(tm)', 100, signed=True)} AS d"
-        " FROM (VALUES (-12350)) t(tm)"
-    ).fetchone()[0]
-    assert v == -1.24
 
 
 def test_sql_unit_fragments_literal_values():
@@ -72,8 +66,6 @@ def test_sql_unit_fragments_literal_values():
 
 
 def test_spark_dollars_matches_duckdb_literals(spark):
-    from pyspark.sql import functions as F
-
     df = spark.createDataFrame(
         [(151.50, 0.05, 0.08)],
         "l_extendedprice double, l_discount double, l_tax double",
@@ -97,12 +89,6 @@ def test_spark_dollars_matches_duckdb_literals(spark):
     assert got["disc_d"] == 7.58
     # 15150*95*108 micros = 15543.90 cents -> 15544 -> 155.44
     assert got["charge_d"] == 155.44
-    # signed path, negative units through the split sum
-    neg = spark.createDataFrame([(-12350,), (-5,)], "tm long").agg(
-        money.dollars(money.sum128(F.col("tm")), 100, signed=True).alias("d")
-    ).first()["d"]
-    # -12355 tm = -123.55 cents -> half-away-from-zero -124 -> -1.24
-    assert neg == -1.24
     # cents() sign-correctness: the trunc(x*100 + signum*0.5) fast path
     # must round away from zero for negative balances (plain +0.5 with
     # trunc would give -12344)

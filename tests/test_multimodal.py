@@ -153,9 +153,7 @@ def test_phash_near_dup_finds_exact_dup_only(spark):
         [(i, t, "en", "s", len(t)) for i, t in texts],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    pairs = phash_near_dup(
-        perceptual_hash(attach_fake_media(docs)), max_hamming=0
-    ).collect()
+    pairs = phash_near_dup(perceptual_hash(attach_fake_media(docs))).collect()
     assert [(r["id_a"], r["id_b"], r["hamming"]) for r in pairs] == [(0, 1, 0)]
 
 

@@ -1,8 +1,8 @@
 """Source guards against dead code in the package.
 
 Orphans: every public top-level function, class or UPPER_CASE constant
-in the package is reached from outside the test suite. A name counts as reached when
-some module of the package, `tools/`, the non-test `perfbench/` files,
+in the package is reached from outside the test suite. A name counts as
+reached when some module of the package, `tools/`, the non-test `perfbench/` files,
 `bench.py` or `__spark_entry__.py` mentions it as a `Name`, an
 `Attribute` or an imported alias (a definition's mentions of its own
 name do not count), or when it is a catalog query registered through
@@ -10,22 +10,27 @@ name do not count), or when it is a catalog query registered through
 delete it with its tests, or reach it.
 
 Options: every defaulted parameter of a public top-level package
-function is set by some call in the package, `tools/`, `perfbench/`,
-`bench.py`, `__spark_entry__.py` or `tests/`. A call sets a parameter
-when it names it as a keyword, or gives it a position at a direct call
-by the function's name, with an expression other than the parameter's
-own default (the same literal or the same constant name sets nothing).
-A function escapes when something references it other than as the
-callee of a call (a list of legs, an argument, a decorator's target).
-Only an escaping function can be called where the callee cannot be
-named, so only its parameters also count as set by any keyword of an
-unresolved call, or any string key of a dict literal, of that name. An
-option that only ever takes its default is a constant: inline it.
+function is set by some call outside the test suite, in the same files
+that reach orphans. A configuration that only a test runs is one the
+system never runs, so a test call sets nothing. An option that tests
+must still reach is a named seam in `OPTION_ALLOWLIST`, with the reason
+it stays: it reaches a branch that runs at scale, it injects a clock or
+a trigger a test cannot control otherwise, or it is a deployment
+setting. A call sets a parameter when it names it as a keyword, or
+gives it a position at a direct call by the function's name, with an
+expression other than the parameter's own default (the same literal or
+the same constant name sets nothing). A function escapes when something
+outside the tests references it other than as the callee of a call (a
+list of legs, an argument, a decorator's target). Only an escaping
+function can be called where the callee cannot be named, so only its
+parameters also count as set by any keyword of an unresolved call, or
+any string key of a dict literal, of that name. An option that only
+ever takes its default is a constant: inline it.
 
 Private parameters: a private top-level package function that never
-escapes has no parameter that every call fills with the same literal or
-the same UPPER_CASE module constant. Such a parameter is a constant:
-inline it.
+escapes has no parameter that every call outside the tests fills with
+the same literal or the same UPPER_CASE module constant. Such a
+parameter is a constant: inline it.
 
 Imports: no module of the package (``__init__.py`` re-exports aside)
 imports a name it never uses, at module level or inside a function.
@@ -59,12 +64,6 @@ def _reference_files():
     )
     yield ROOT / "bench.py"
     yield ROOT / "__spark_entry__.py"
-
-
-def _call_site_files():
-    yield from _reference_files()
-    yield from (ROOT / "perfbench").rglob("test_*.py")
-    yield from (ROOT / "tests").rglob("*.py")
 
 
 def _mentions(node):
@@ -156,9 +155,30 @@ def test_allowlist_names_existing_definitions():
     assert set(ALLOWLIST) <= defined
 
 
-# "module.function.parameter" -> why the option stays with no caller
-# that sets it.
-OPTION_ALLOWLIST: dict[str, str] = {}
+# "module.function.parameter" -> why the option stays when only tests
+# set it: a test seam.
+OPTION_ALLOWLIST = {
+    "operators.dedup.edit_distance_pairs.max_gram_df": "a fixed gram-"
+    "frequency cap forces every true pair through the unsafe-bucket "
+    "pass that gram-poor corpora take at scale",
+    "operators.similarity.cosine_pairs.block_rows": "small blocks reach "
+    "the multi-block grid that every corpus above one block runs",
+    "operators.sampling.global_running_sum.n_partitions": "a range "
+    "count other than the core count checks that the sum does not "
+    "depend on where the range boundaries fall",
+    "operators.frequency.heavy_hitters.capacity": "a deployment setting: "
+    "a larger Misra-Gries table trades memory for fewer false candidates; "
+    "its guard keeps the no-false-negative bound (capacity >= k)",
+    "operators.geo.proximity_pairs.max_candidates_per_cell": "a deployment "
+    "setting: the dense-airspace cap that bounds each cell's quadratic "
+    "pair output",
+    "sources.sinks.retention_purge.now": "the clock; defaults to the "
+    "wall clock",
+    "streaming.flight_stream.run_flight_stream.available_now": "the "
+    "trigger; a test drains the source once instead of polling",
+    "streaming.flight_stream.run_flight_stream.lateness": "the watermark "
+    "delay, a deployment setting",
+}
 
 
 def _options(fn):
@@ -181,7 +201,7 @@ def _callee(call):
 
 
 def _parse_call_sites():
-    return [ast.parse(path.read_text()) for path in _call_site_files()]
+    return [ast.parse(path.read_text()) for path in _reference_files()]
 
 
 def _escaping_names(trees):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from aircraftutilization_etl_spark.operators.packing import (
+    PACK_CAPACITY,
     pack_sequences,
     packing_efficiency,
 )
@@ -19,8 +20,8 @@ def test_greedy_fill_and_offsets(spark):
     # one bucket (single doc routes per md5, but verify invariants
     # globally): offsets within a sequence are contiguous and fills
     # never exceed capacity except for oversized single docs
-    rows = [(i, "w " * (20 * (i % 4 + 1))) for i in range(40)]
-    packed = pack_sequences(_docs(spark, rows), capacity=100).collect()
+    rows = [(i, "w " * (50 * (i % 4 + 1))) for i in range(40)]
+    packed = pack_sequences(_docs(spark, rows)).collect()
     by_seq: dict[tuple, list] = {}
     for r in packed:
         by_seq.setdefault((r["bucket"], r["seq_id"]), []).append(r)
@@ -30,12 +31,12 @@ def test_greedy_fill_and_offsets(spark):
         for m in members:
             assert m["offset"] == fill
             fill += m["n_tokens"]
-        assert fill <= 100  # no doc here exceeds capacity
+        assert fill <= PACK_CAPACITY  # no doc here exceeds capacity
 
 
 def test_oversized_doc_gets_own_sequence(spark):
     rows = [(1, "w " * 10), (2, "w " * 500), (3, "w " * 10)]
-    packed = pack_sequences(_docs(spark, rows), capacity=100).collect()
+    packed = pack_sequences(_docs(spark, rows)).collect()
     big = [r for r in packed if r["doc_id"] == 2][0]
     assert big["offset"] == 0  # oversized doc always opens a sequence
     peers = [
@@ -47,32 +48,26 @@ def test_oversized_doc_gets_own_sequence(spark):
 
 
 def test_placement_is_partitioning_independent(spark):
-    rows = [(i, "word " * (i % 7 + 3)) for i in range(60)]
+    rows = [(i, "word " * (i % 7 + 3) * 10) for i in range(60)]
     df = _docs(spark, rows)
-    a = {tuple(r) for r in pack_sequences(df, capacity=64).collect()}
-    b = {
-        tuple(r)
-        for r in pack_sequences(df.repartition(13), capacity=64).collect()
-    }
+    a = {tuple(r) for r in pack_sequences(df).collect()}
+    b = {tuple(r) for r in pack_sequences(df.repartition(13)).collect()}
     assert a == b
 
 
 def test_efficiency_audit_exact(spark):
-    rows = [(i, "w " * 50) for i in range(8)]
-    packed = pack_sequences(_docs(spark, rows), capacity=100)
-    audit = packing_efficiency(packed, capacity=100).collect()
+    rows = [(i, "w " * 100) for i in range(8)]
+    packed = pack_sequences(_docs(spark, rows))
+    audit = packing_efficiency(packed).collect()
     total_seqs = sum(r["n_sequences"] for r in audit)
     total_tokens = sum(r["n_tokens"] for r in audit)
-    assert total_tokens == 400
+    assert total_tokens == 800
     for r in audit:
         assert 0 < r["fill_ppm"] <= 1_000_000
     # budget is never under-counted: fill over all buckets ≤ capacity·seqs
-    assert total_tokens <= total_seqs * 100
+    assert total_tokens <= total_seqs * PACK_CAPACITY
 
 
-def test_capacity_validation(spark):
-    with pytest.raises(ValueError):
-        pack_sequences(_docs(spark, [(1, "a b")]), capacity=0)
 
 
 class TestPaddingAudit:
@@ -85,7 +80,7 @@ class TestPaddingAudit:
     def test_conservation_and_policies(self, docs):
         from aircraftutilization_etl_spark.operators.packing import padding_audit
 
-        out = padding_audit(docs, batch_size=4).collect()
+        out = padding_audit(docs).collect()
         policies = {r.policy for r in out}
         assert policies == {"bucketed", "global"}
         total_actual = sum(
@@ -103,7 +98,7 @@ class TestPaddingAudit:
     def test_bucketing_cannot_increase_waste(self, docs):
         from aircraftutilization_etl_spark.operators.packing import padding_audit
 
-        out = padding_audit(docs, batch_size=4).collect()
+        out = padding_audit(docs).collect()
         bucketed_padded = sum(
             r.padded_tokens for r in out if r.policy == "bucketed"
         )
@@ -119,16 +114,13 @@ class TestPaddingAudit:
             [(1, " ".join(["w"] * 100)), (2, "a b")],
             "doc_id long, text string",
         )
-        out = padding_audit(docs, batch_size=4).collect()
+        out = padding_audit(docs).collect()
         overflow = [r for r in out if r.policy == "bucketed" and r.bucket is None]
         assert len(overflow) == 1 and overflow[0].n_docs == 1
 
     def test_partitioning_invariant(self, docs):
         from aircraftutilization_etl_spark.operators.packing import padding_audit
 
-        a = {tuple(r) for r in padding_audit(docs, batch_size=4).collect()}
-        b = {
-            tuple(r)
-            for r in padding_audit(docs.repartition(7), batch_size=4).collect()
-        }
+        a = {tuple(r) for r in padding_audit(docs).collect()}
+        b = {tuple(r) for r in padding_audit(docs.repartition(7)).collect()}
         assert a == b

@@ -183,7 +183,7 @@ class TestRound4PlanShapes:
     scale analysis promises (COVERAGE.md round-4 tables)."""
 
     def test_shard_order_single_data_exchange(self, spark):
-        from aircraftutilization_etl_spark.diagnostics import count_exchanges
+        from tests.conftest import count_exchanges
         from aircraftutilization_etl_spark.operators.sampling import (
             shard_and_order,
         )
@@ -194,7 +194,7 @@ class TestRound4PlanShapes:
         assert count_exchanges(out) == 1
 
     def test_markov_transitions_exchange_budget(self, spark):
-        from aircraftutilization_etl_spark.diagnostics import count_exchanges
+        from tests.conftest import count_exchanges
         from aircraftutilization_etl_spark.plans import CATALOG
 
         df = CATALOG["q_events_markov_transitions"].spark(
@@ -264,9 +264,9 @@ class TestSession3PlanShapes:
 
     def test_span_corruption_is_shuffle_free(self, spark):
         from aircraftutilization_etl_spark.diagnostics import (
-            count_exchanges,
             python_nodes,
         )
+        from tests.conftest import count_exchanges
         from aircraftutilization_etl_spark.plans import CATALOG
 
         df = CATALOG["q_text_span_corruption"].spark(spark, self.SF)
@@ -294,7 +294,7 @@ class TestSession3PlanShapes:
         assert "Join" not in plan  # pure array algebra + one aggregate
 
     def test_ohlc_shares_one_exchange_across_both_rank_passes(self, spark):
-        from aircraftutilization_etl_spark.diagnostics import count_exchanges
+        from tests.conftest import count_exchanges
         from aircraftutilization_etl_spark.plans import CATALOG
 
         df = CATALOG["q_events_ohlc"].spark(spark, self.SF)
@@ -322,9 +322,9 @@ class TestSession4PlanShapes:
 
     def test_welch_is_one_scan_two_aggregates(self, spark):
         from aircraftutilization_etl_spark.diagnostics import (
-            count_exchanges,
             executed_plan,
         )
+        from tests.conftest import count_exchanges
         from aircraftutilization_etl_spark.plans import CATALOG
 
         df = CATALOG["q_events_welch"].spark(spark, self.SF)
@@ -414,9 +414,9 @@ class TestSession5PlanShapes:
         one stream micro-batch costs: one hash exchange on the key into
         a single Arrow-batched group map."""
         from aircraftutilization_etl_spark.diagnostics import (
-            count_exchanges,
             executed_plan,
         )
+        from tests.conftest import count_exchanges
         from aircraftutilization_etl_spark.plans import CATALOG
 
         df = CATALOG["q_stream_flight_sessions"].spark(spark, self.SF)
@@ -492,9 +492,7 @@ class TestRound9NewQueries:
         shuffle."""
         from aircraftutilization_etl_spark.plans import CATALOG
 
-        from aircraftutilization_etl_spark.diagnostics import (
-            count_exchanges,
-        )
+        from tests.conftest import count_exchanges
 
         df = CATALOG["q_quota_per_source"].spark(spark, SF_DIR)
         plan = plan_of(df)

@@ -39,32 +39,22 @@ def test_exact_profile_values(df):
 
 def test_approx_profile_matches_exact_on_small_cardinality(df):
     exact = {r["col_name"]: r["n_distinct"] for r in profile_columns(
-        df, ["k", "v", "s"], exact=True).collect()}
-    approx = {r["col_name"]: r["n_distinct"] for r in profile_columns(
-        df, ["k", "v", "s"], exact=False).collect()}
-    # HLL++ is exact in the sparse regime; identical here
-    assert approx == exact
-
-
-def test_exact_expands_and_approx_does_not(df):
-    plan_exact = (
-        profile_columns(df, ["k", "v"])._jdf.queryExecution()
-        .executedPlan().toString()
-    )
-    plan_approx = (
-        profile_columns(df, ["k", "v"], exact=False)._jdf.queryExecution()
-        .executedPlan().toString()
-    )
-    assert "Expand" in plan_exact
-    assert "Expand" not in plan_approx
+        df, ["k", "v", "s"]).collect()}
+    audited = profile_columns(df, ["k", "v", "s"], audit_approx=True).collect()
+    # the audit keeps the exact counts, and HLL++ is exact in the sparse
+    # regime, so every certificate holds
+    assert {r["col_name"]: r["n_distinct"] for r in audited} == exact
+    assert all(r["distinct_within_tol"] for r in audited)
 
 
 def test_single_scan(df, spark):
-    """The whole profile is one pass: exactly one scan of the source."""
+    """The whole profile is one pass: exactly one scan of the source,
+    whose rows the Expand multiplies for the distinct counts."""
     plan = (
-        profile_columns(df, ["k", "v", "s"], exact=False)
+        profile_columns(df, ["k", "v", "s"])
         ._jdf.queryExecution().executedPlan().toString()
     )
+    assert "Expand" in plan
     assert plan.count("Scan ExistingRDD") + plan.count("LocalTableScan") == 1
 
 

@@ -93,7 +93,7 @@ def test_catalog_constants_bite_at_smallest_sf():
 
 
 def test_budget_plan_is_one_scan_one_window_one_broadcast(spark):
-    from aircraftutilization_etl_spark.diagnostics import count_exchanges
+    from tests.conftest import count_exchanges
     from aircraftutilization_etl_spark.plans import CATALOG
 
     df = CATALOG["q_quota_budget_allocation"].spark(

@@ -24,24 +24,8 @@ def test_salted_join_matches_plain_join(spark):
     )
 
 
-def test_salted_join_left_outer(spark):
-    skewed = spark.createDataFrame([(1, "a"), (9, "b")], "k long, v string")
-    small = spark.createDataFrame([(1, "hit")], "k long, label string")
-    rows = {
-        r["k"]: r["label"]
-        for r in salted_join(skewed, small, "k", how="left").collect()
-    }
-    assert rows == {1: "hit", 9: None}
 
 
-def test_salted_join_rejects_outer_on_replicated_side(spark):
-    import pytest
-
-    skewed = spark.createDataFrame([(1, "a")], "k long, v string")
-    small = spark.createDataFrame([(2, "b")], "k long, label string")
-    for how in ("right", "full_outer", "full", "cross"):
-        with pytest.raises(ValueError, match="salted_join"):
-            salted_join(skewed, small, "k", how=how)
 
 
 def test_salting_spreads_hot_key(spark):
@@ -101,13 +85,3 @@ def test_bloom_filter_prunes_most_non_members(spark):
     # 500 keys in 2^17 bits and 5 hashes the fp rate is ~1e-9 — allow
     # a generous margin and still prove >99% pruning
     assert passed < 500
-
-
-def test_bloom_prune_join_rejects_left_outer(spark):
-    import pytest
-
-    from aircraftutilization_etl_spark.operators.scale import bloom_prune_join
-
-    a = spark.range(10).select(F.col("id").alias("k"))
-    with pytest.raises(ValueError, match="left"):
-        bloom_prune_join(a, a, "k", how="left")

@@ -602,9 +602,9 @@ class TestSpanCorruption:
 
     def test_plan_is_pure_jvm_map(self, spark):
         from aircraftutilization_etl_spark.diagnostics import (
-            count_exchanges,
             python_nodes,
         )
+        from tests.conftest import count_exchanges
         from aircraftutilization_etl_spark.operators.text import span_corruption
 
         df = spark.createDataFrame(
@@ -659,14 +659,19 @@ class TestSkipgramPairs:
         )
         got = {
             (r.center, r.context): r.n_pairs
-            for r in skipgram_pairs(df, window=1).collect()
+            for r in skipgram_pairs(df).collect()
         }
+        # every ordered pair at most 2 positions apart; a-d (3) is out
         assert got == {
             ("a", "b"): 1,
+            ("a", "c"): 1,
             ("b", "a"): 1,
             ("b", "c"): 1,
+            ("b", "d"): 1,
+            ("c", "a"): 1,
             ("c", "b"): 1,
             ("c", "d"): 1,
+            ("d", "b"): 1,
             ("d", "c"): 1,
         }
 

@@ -2,6 +2,10 @@
 """Pre-snapshot gate: the checks every round must pass before snapshot.
 
 Runs, in order, failing fast:
+0. the dead-code guards (tests/test_no_orphans.py — an AST scan of the
+   source that takes seconds: orphaned definitions, options no caller
+   outside the tests sets, constant private parameters, unused
+   imports), so such a regression fails before the long sweeps start;
 1. the plan-invariants sweep (tests/test_plan_invariants.py — bans
    row-at-a-time Python nodes, unpruned fact scans, -0.0-unsafe rounds
    across EVERY catalog query's executed plan);
@@ -68,6 +72,10 @@ def main() -> int:
     )
     args = ap.parse_args()
     py = sys.executable
+    run(
+        "dead-code guards",
+        [py, "-m", "pytest", "tests/test_no_orphans.py", "-q"],
+    )
     run(
         "plan invariants",
         [py, "-m", "pytest", "tests/test_plan_invariants.py", "-q"],
