@@ -9,7 +9,8 @@ them, so the expected value is known exactly with no float reasoning.
 
 Three layers:
 1. hypothesis over the DuckDB SQL fragments (no SparkSession — cheap
-   enough for hundreds of examples, including half-cent boundaries);
+   enough for hundreds of examples, including half-cent boundaries and
+   negative sums already in cents);
 2. one seeded 20k-row Spark job comparing cents/pct/revenue/charge and
    the dollars(sum128(...)) edge against Python integer arithmetic AND
    the DuckDB twins on the same rows;
@@ -56,6 +57,19 @@ unit_sums = st.one_of(
         st.integers(min_value=-1, max_value=1),
     ),
 )
+
+
+@given(st.integers(min_value=-(10**15), max_value=10**15))
+@settings(max_examples=150, deadline=None)
+def test_sql_dollars_signed_matches_integer_contract(s):
+    """A sum already in cents needs no rounding, so it keeps its sign:
+    the edge is the exact integer over 100, negative sums included."""
+    con = duckdb.connect()
+    got = con.sql(
+        f"SELECT {money.sql_dollars('SUM(s)', 1)} AS d"
+        f" FROM (VALUES (CAST({s} AS BIGINT))) t(s)"
+    ).fetchone()[0]
+    assert got == _expected_cents_out(s, 1) / 100.0
 
 
 @given(unit_sums, st.sampled_from([1, 100, 10000]))

@@ -47,6 +47,25 @@ def test_approx_profile_matches_exact_on_small_cardinality(df):
     assert all(r["distinct_within_tol"] for r in audited)
 
 
+def test_exact_expands_and_approx_does_not(df):
+    """The exact distinct counts plan an Expand; the audit's HLL++
+    estimate runs in its own aggregation, outside that Expand."""
+    plan_exact = (
+        profile_columns(df, ["k", "v"])._jdf.queryExecution()
+        .executedPlan().toString()
+    )
+    plan_audit = (
+        profile_columns(df, ["k", "v"], audit_approx=True)._jdf
+        .queryExecution().executedPlan().toString()
+    )
+    assert "Expand" in plan_exact
+    # the estimate is the broadcast side of the join back on col_name
+    approx_leg = plan_audit.split("BroadcastExchange", 1)[1]
+    assert "approx_count_distinct" in approx_leg
+    assert "Expand" not in approx_leg
+    assert plan_audit.count("Expand") == plan_exact.count("Expand")
+
+
 def test_single_scan(df, spark):
     """The whole profile is one pass: exactly one scan of the source,
     whose rows the Expand multiplies for the distinct counts."""
