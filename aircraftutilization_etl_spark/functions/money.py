@@ -20,10 +20,13 @@ cents (BIGINT, < 2^63 even for world-GDP-scale totals) divided once by
 100.0 — one double division both engines perform identically.
 
 Rounding to cents is integer half-up on a non-negative sum
-(``(x + 50) DIV 100``; every sum the catalog rounds is a non-negative
-revenue, discount or value), so Spark's floor and DuckDB's ``//``
-(which truncates) cannot diverge: they part only on negative operands.
-A sum already in cents needs no rounding and may be negative.
+(``(x + 50) DIV 100``; every sum rounded through ``dollars()`` /
+``sql_dollars()`` is a non-negative revenue, discount or value), so
+Spark's floor and DuckDB's ``//`` (which truncates) cannot diverge:
+they part only on negative operands. A sum already in cents needs no
+rounding and may be negative. The one signed rounded sum is q9's
+profit, which rounds half away from zero in its own ``CASE`` on
+non-negative operands in both engines.
 """
 
 from __future__ import annotations

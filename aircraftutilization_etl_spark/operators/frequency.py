@@ -10,7 +10,7 @@ the skew hazard. The classic two-pass remedy:
    sequential scan). MG's deterministic guarantee: a key whose local
    frequency exceeds W_p/(capacity+1) cannot be evicted. By pigeonhole,
    any key with GLOBAL frequency > n/k is a local heavy hitter in at
-   least one partition, so with capacity ≥ k the union of per-partition
+   least one partition, so with capacity = k the union of per-partition
    survivor keys is a SUPERSET of the true heavy hitters — no false
    negatives, ever. Only ≤ capacity × n_partitions tiny summary rows
    leave the executors.
@@ -75,20 +75,14 @@ def misra_gries_partial(
     )
 
 
-def heavy_hitters(
-    df: DataFrame, key_col: str, k: int, capacity: int | None = None
-) -> DataFrame:
+def heavy_hitters(df: DataFrame, key_col: str, k: int) -> DataFrame:
     """Exact keys with frequency > n/k: (key, n_rows, freq_ppm).
 
-    ``capacity`` defaults to ``k`` — the smallest table for which the
-    no-false-negative union guarantee holds; raise it to shrink the
-    false-positive (wasted verify work) rate.
+    The candidate tables hold ``k`` counters each — the smallest table
+    for which the no-false-negative union guarantee holds.
     """
-    capacity = k if capacity is None else capacity
-    if capacity < k:
-        raise ValueError("capacity < k voids the no-false-negative guarantee")
     keyed = df.select(F.col(key_col).cast("long").alias("key"))
-    cands = misra_gries_partial(df, key_col, capacity).select("key").distinct()
+    cands = misra_gries_partial(df, key_col, k).select("key").distinct()
     total = keyed.agg(F.count(F.lit(1)).alias("n_total"))
     return (
         keyed.join(F.broadcast(cands), "key", "left_semi")

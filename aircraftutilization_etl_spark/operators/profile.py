@@ -47,6 +47,7 @@ def profile_columns(
     distinct VALUE group instead of one per profiled column."""
     if not cols:
         raise ValueError("profile_columns needs at least one column")
+
     def fields(c: str):
         return [
             F.lit(c).alias("col_name"),

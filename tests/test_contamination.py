@@ -38,8 +38,6 @@ def test_contamination_counts_and_ppm(spark):
     }
 
 
-
-
 def test_duplicate_shingles_within_doc_count_once(spark):
     # the repeated phrase appears twice in doc 1 but its shingle set is
     # distinct, so the hit counts once

@@ -166,9 +166,6 @@ OPTION_ALLOWLIST = {
     "operators.sampling.global_running_sum.n_partitions": "a range "
     "count other than the core count checks that the sum does not "
     "depend on where the range boundaries fall",
-    "operators.frequency.heavy_hitters.capacity": "a deployment setting: "
-    "a larger Misra-Gries table trades memory for fewer false candidates; "
-    "its guard keeps the no-false-negative bound (capacity >= k)",
     "operators.geo.proximity_pairs.max_candidates_per_cell": "a deployment "
     "setting: the dense-airspace cap that bounds each cell's quadratic "
     "pair output",

@@ -68,8 +68,6 @@ def test_efficiency_audit_exact(spark):
     assert total_tokens <= total_seqs * PACK_CAPACITY
 
 
-
-
 class TestPaddingAudit:
     @pytest.fixture(scope="class")
     def docs(self, spark):

@@ -24,10 +24,6 @@ def test_salted_join_matches_plain_join(spark):
     )
 
 
-
-
-
-
 def test_salting_spreads_hot_key(spark):
     skewed = spark.createDataFrame(
         [(1, f"e{i}") for i in range(200)], "k long, payload string"
